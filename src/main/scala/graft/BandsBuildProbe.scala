@@ -23,6 +23,7 @@ object BandsBuildProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     def timed[T](label: String)(body: => T): T = {
       val t0 = System.nanoTime()
       val out = body

@@ -78,6 +78,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
 
     val textUdf = F.udf(docText _)
     val vecUdf = F.udf(docVec _)
@@ -315,6 +316,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val vecUdf = F.udf(docVec _)
     def vecs(from: Long, count: Long): DataFrame = spark.range(from, from + count)
       .select(F.col("id").as("vec_id"), vecUdf(F.col("id")).as("embedding"))
@@ -454,6 +456,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val dir = java.nio.file.Files.createTempDirectory("graft_shp").toString
     spark.range(n.toLong).select(F.col("id").as("doc_id"),
         F.concat(F.lit("synthetic document "), F.col("id")).as("text"),
@@ -488,6 +491,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val vecUdf = F.udf(docVec _)
     val dir = java.nio.file.Files.createTempDirectory("graft_pb").toString
     spark.range(n.toLong)
@@ -542,6 +546,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val vecUdf = F.udf(docVec _)
     val dir = java.nio.file.Files.createTempDirectory(s"graft_ann_$n").toString
     spark.range(n.toLong)
@@ -691,6 +696,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val vecUdf = F.udf(docVec _)
     val dir = java.nio.file.Files.createTempDirectory(s"graft_ivfpq_$n").toString
     spark.range(n.toLong)
@@ -771,6 +777,7 @@ object ScaleProbe {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val textUdf = F.udf(docText _)
     def docs(from: Long, count: Long): DataFrame = spark.range(from, from + count)
       .select(F.col("id").as("doc_id"), textUdf(F.col("id")).as("text"))

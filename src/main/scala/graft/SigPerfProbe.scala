@@ -19,6 +19,7 @@ object SigPerfProbe {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("sigperf").toString + "/t"
     spark.range(rows).select(F.col("id"),

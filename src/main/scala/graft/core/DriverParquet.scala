@@ -19,8 +19,8 @@ import org.apache.parquet.schema.Type.Repetition
   * rows), so the driver write is scale-safe by construction.
   *
   * The file layout matches what the Spark write produced: one
-  * `part-00000-<uuid>.snappy.parquet` under `dir`, standard 3-level LIST
-  * encoding for arrays — `spark.read.parquet` (IndexMeta.head /
+  * `part-00000-<uuid>.snappy.parquet` and a `_SUCCESS` marker under `dir`,
+  * standard 3-level LIST encoding for arrays — `spark.read.parquet` (IndexMeta.head /
   * schemaFields, IvfCentroids.load, Pq codebook loads) reads it back with
   * the identical Spark schema and the identical Row types. Overwrite
   * clears the dir first, same non-atomicity class as the
@@ -56,7 +56,7 @@ private[graft] object DriverParquet {
   }
 
   /** Overwrite `dir` with one parquet file holding `cols` (all the same
-    * length). Pure driver work — no Spark job. */
+    * length), then `_SUCCESS`. Pure driver work — no Spark job. */
   def overwrite(dir: String, cols: Seq[Col]): Unit = {
     require(cols.nonEmpty, "DriverParquet: no columns")
     val n = cols.head.size
@@ -93,5 +93,8 @@ private[graft] object DriverParquet {
         i += 1
       }
     } finally writer.close()
+    // the commit marker, written only once the part file is complete — as
+    // Spark's committer does; index-reuse checks key on `<table>/_SUCCESS`
+    GraftFs.writeString(s"$dir/_SUCCESS", "")
   }
 }

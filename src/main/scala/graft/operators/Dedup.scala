@@ -15,16 +15,6 @@ object Shingles {
   def tokens(text: Column): Column =
     F.split(F.trim(F.regexp_replace(F.lower(text), "\\s+", " ")), " ")
 
-  /** word n-gram shingles as strings: transform over a sequence of offsets */
-  def wordShingles(text: Column, n: Int): Column = {
-    val toks = tokens(text)
-    F.when(F.size(toks) < n, F.array(F.concat_ws(" ", toks)))
-      .otherwise(
-        F.transform(
-          F.sequence(F.lit(0), F.size(toks) - n),
-          i => F.concat_ws(" ", F.slice(toks, i + 1, F.lit(n)))))
-  }
-
   /** stable FNV-1a over a string — used by the single-pass shingle UDFs;
     * the specific hash does not matter for Jaccard (distinct counts are
     * hash-invariant modulo 64-bit collisions), only determinism does. */
@@ -82,25 +72,13 @@ object Shingles {
   def minhashSignature(hashes: Column, k: Int, seed: Long): Column = {
     // r14: native codegen expression (graft.functions.MinhashSignature) —
     // integer arithmetic identical to the scala UDF it replaced, minus the
-    // per-row Seq[Long] boxing on |shingles| elements per document.
-    graft.functions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
+    // per-row Seq[Long] boxing on |shingles| elements per document. The
+    // caller registers it on its own session
+    // (GraftFunctions.ensureRegistered(ctx.spark)).
     F.call_function("minhash_sig", hashes, F.lit(k), F.lit(seed))
   }
 }
 
-/** Shared LSH candidate→verify machinery for minhash/ngram dedup.
-  *
-  * Scale shape (the part that survives 100 TB):
-  *  1. band-bucket self-join carries ONLY (id, sig) — the k-int signature,
-  *     never the wide shingle arrays, so the candidate shuffle is narrow;
-  *  2. cheap prefilter: minhash signature agreement (unbiased Jaccard
-  *     estimator, k samples) must reach threshold - 0.3 (>= 4 sigma at
-  *     k >= 32) — kills the mid-similarity candidate mass that a shared
-  *     vocabulary produces, without touching shingle arrays;
-  *  3. exact Jaccard verify re-joins shingle arrays BY ID only for the
-  *     few surviving pairs.
-  */
 /** Collapse rows whose similarity KEY (text / vector) is bit-identical to
   * one representative (min id) BEFORE any LSH pairing. Training corpora are
   * dominated by exact copies, and a duplicate group of size g lands in the
@@ -177,13 +155,6 @@ object DedupRank {
   *   distributed.
   */
 object DedupPairs {
-  def dropped(pairs: DataFrame, transitive: Boolean): DataFrame =
-    dropped(pairs, transitive, None)
-
-  def dropped(pairs: DataFrame, transitive: Boolean,
-              ranks: Option[DataFrame]): DataFrame =
-    dropped(pairs, transitive, ranks, StageContext.KeepPinned)
-
   /** `ranks`: optional (id, __rank) survivor keys (DedupRank) — per pair
     * the LARGER rank drops (pairwise), or the component keeps only its
     * rank-minimal member (transitive). Absent = the default min-id
@@ -241,10 +212,7 @@ object DedupPairs {
     labels.filter(F.col("label").getField("i") =!= F.col("id")).select("id")
   }
 
-  def transitiveDropped(pairs0: DataFrame): DataFrame =
-    transitiveDropped(pairs0, StageContext.KeepPinned)
-
-  def transitiveDropped(pairs0: DataFrame,
+  private def transitiveDropped(pairs0: DataFrame,
       release: (() => Unit) => Unit): DataFrame = {
     val pairs = StageContext.pinWith(release, pairs0.select("id_a", "id_b"))
     val edges = StageContext.pinWith(release, pairs.unionByName(
@@ -277,6 +245,18 @@ object DedupPairs {
   }
 }
 
+/** Shared LSH candidate→verify machinery for minhash/ngram dedup.
+  *
+  * Scale shape (the part that survives 100 TB):
+  *  1. band-bucket self-join carries ONLY (id, sig) — the k-int signature,
+  *     never the wide shingle arrays, so the candidate shuffle is narrow;
+  *  2. cheap prefilter: minhash signature agreement (unbiased Jaccard
+  *     estimator, k samples) must reach threshold - 0.3 (>= 4 sigma at
+  *     k >= 32) — kills the mid-similarity candidate mass that a shared
+  *     vocabulary produces, without touching shingle arrays;
+  *  3. exact Jaccard verify re-joins shingle arrays BY ID only for the
+  *     few surviving pairs.
+  */
 object LshVerify {
   /** signature-agreement prefilter headroom: a candidate must estimate at
     * least threshold - this before its shingles are ever touched (>= 4
@@ -336,18 +316,11 @@ object LshVerify {
 
   /** Cross-frame variant: verified near-dup pairs BETWEEN two pre-hashed
     * frames (both (id, shingles, sig) under the same signature config) —
-    * the incremental-dedup probe shape: `left` = the new batch, `right` =
-    * the persisted corpus index. Same banding/prefilter/verify ladder as
-    * the self-join; candidate rows stay narrow (ids + sigs), shingles
-    * join back by id only for surviving candidates. Returns (id_l, id_r). */
-  def verifiedCrossPairs(left: DataFrame, right: DataFrame,
-      bands: Int, r: Int, k: Int, threshold: Double): DataFrame =
-    verifiedCrossPairsScored(left, right, bands, r, k, threshold)
-      .select("id_l", "id_r")
-
-  /** As [[verifiedCrossPairs]] but keeps the exact Jaccard — the
-    * join.similar index-probe shape, where the score is part of the
-    * output rather than just the drop criterion. */
+    * the index-probe shape: `left` = the new batch, `right` = the
+    * persisted corpus index. Same banding/prefilter/verify ladder as the
+    * self-join; candidate rows stay narrow (ids + sigs), shingles join
+    * back by id only for surviving candidates. Returns
+    * (id_l, id_r, jaccard). */
   def verifiedCrossPairsScored(left: DataFrame, right: DataFrame,
       bands: Int, r: Int, k: Int, threshold: Double): DataFrame = {
     val candidates = bandedKeys(left, bands, r, "l")
@@ -357,19 +330,6 @@ object LshVerify {
     verify(candidates, left, right, "id_l", "id_r", k, threshold)
       .select("id_l", "id_r", "jaccard")
   }
-
-  /** exact Jaccard over (already-distinct) hash arrays — hash-set loop
-    * instead of interpreted array_intersect/array_union per pair. */
-  val jaccardUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    F.udf { (a: Seq[Long], b: Seq[Long]) =>
-      val sa = new java.util.HashSet[java.lang.Long](a.length * 2)
-      a.foreach(sa.add(_))
-      val sb = new java.util.HashSet[java.lang.Long](b.length * 2)
-      var inter = 0
-      b.foreach { x => if (sb.add(x) && sa.contains(x)) inter += 1 }
-      val union = sa.size + sb.size - inter
-      if (union == 0) 1.0 else inter.toDouble / union
-    }
 }
 
 /** Spread a (possibly single-partition) input across all cores before a
@@ -769,473 +729,31 @@ private[graft] object DeferredAppend {
   *   rows → band-bucket self-join (candidates) → exact Jaccard verify on
   *   shingle sets → drop the higher-id doc of each verified pair.
   *
-  * Scale: candidates come only from equal (band_idx, band_hash) buckets —
-  * the self-join shuffles on the band key, never crossing the full corpus.
-  * Signature/banding are pure native exprs (codegen). Verification joins
-  * shingle arrays only for candidate pairs. One documented approximation:
-  * duplicate CLUSTERS are resolved pair-wise (no transitive closure) —
-  * a doc is dropped if it near-matches ANY lower-id doc.
-  *
   * Config: id_column, text_column, shingle_size=3, num_hashes=128,
-  * bands=32, threshold=0.8 (Jaccard).
+  * bands=32, threshold=0.8 (Jaccard); `index_path` probes an
+  * `index.build type=minhash` corpus.
   */
-object DedupMinHashOp extends Stage {
-  val name = "dedup.minhash"
-  val kind = StageKind.Transform
-
-  /** ids to drop (one column `id`) — exposed for tests/metrics. */
-  def duplicateIds(ctx: StageContext): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val id = cfg.str("id_column")
-    val text = cfg.str("text_column")
-    val n = cfg.longOr("shingle_size", 3L).toInt
-    val k = cfg.longOr("num_hashes", 128L).toInt
-    val bands = cfg.longOr("bands", 32L).toInt
-    val threshold = cfg.doubleOr("threshold", 0.8)
-    val seed = cfg.longOr("seed", 42L)
-    if (k % bands != 0) throw new GraftConfigError(s"num_hashes=$k must divide evenly into bands=$bands")
-    val r = k / bands
-
-    // small source files arrive as 1-2 partitions; the signature loop is
-    // CPU-bound per row, so spread it across the cluster first
-    val rankKey = DedupRank.keyFor(cfg, "id")
-    val base = Parallelize(ctx).select(
-      Seq(F.col(id).alias("id"), F.col(text).alias("_txt")) ++
-        cfg.strOpt("keep_by").map(F.col): _*)
-    val (reps, exactDups) = ExactCollapse(base, "id", "_txt", rankKey, ctx.deferToCleanup)
-    val hashed = ctx.pin(reps.select(F.col("id"),
-        Shingles.shingleHashes(F.col("_txt"), n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed)))
-
-    exactDups.unionByName(DedupPairs.dropped(
-      LshVerify.verifiedPairs(hashed, bands, r, k, threshold),
-      cfg.boolOr("transitive", false),
-      rankKey.map(DedupRank.ranks(base, "id", _)), ctx.deferToCleanup)).distinct()
-  }
-
-  def apply(ctx: StageContext): DataFrame = {
-    val id = ctx.cfg.str("id_column")
-    val dups = ctx.cfg.strOpt("index_path") match {
-      case Some(path) => incrementalDuplicateIds(ctx, path)
-      case None       => duplicateIds(ctx)
-    }
-    ctx.primary.join(dups, ctx.primary(id) === dups("id"), "left_anti")
-  }
-
-  /** `index_path` mode — dedup THIS batch against a persisted
-    * `index.build type=minhash` corpus (plus within-batch pairs) without
-    * rescanning or re-hashing old text: the incremental-ingestion shape.
-    * Signature parameters come from the index's meta (a conflicting
-    * explicit config fails loud — mixed parameters would silently miss
-    * every cross match). A batch doc drops when it near-matches ANY
-    * indexed doc (the already-ingested corpus always wins — it cannot be
-    * un-ingested) or any lower-id batch doc (the pairwise rule). With
-    * batch ids above index ids this equals the full-corpus pairwise pass
-    * — the correctness gate pins exactly that equivalence. keep_by /
-    * transitive are batch-internal policies that cannot reach into an
-    * immutable index — rejected loudly rather than half-applied.
-    *
-    * `index_append = true` registers a deferred write (fires only after
-    * the surrounding pipeline's sinks succeed, kafka-commit style) adding
-    * the batch's surviving representatives to `corpus/` — the next batch
-    * then dedups against them too. */
-  private def incrementalDuplicateIds(ctx: StageContext, path: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val id = cfg.str("id_column")
-    val text = cfg.str("text_column")
-    // value checks, not key-presence: an explicit transitive = false IS
-    // the behavior this mode implements
-    if (cfg.has("keep_by") || cfg.boolOr("transitive", false))
-      throw new GraftConfigError(
-        "dedup.minhash: keep_by / transitive=true are not supported with index_path " +
-        "(the index is immutable — only the pairwise min-id policy is well-defined)")
-
-    // CLI explain of a pipeline whose EARLIER index.build stage would have
-    // created the index (the barrier is skipped under explain): plan
-    // against an empty placeholder index with config-default parameters
-    // instead of failing — same contract as kafka.consume's missing-topic
-    // placeholder
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val placeholder = explainOnly &&
-      !GraftFs.isDir(s"$path/meta")
-    val (n, k, bands, seed) =
-      if (placeholder)
-        (cfg.longOr("shingle_size", 3L).toInt, cfg.longOr("num_hashes", 128L).toInt,
-         cfg.longOr("bands", 32L).toInt, cfg.longOr("seed", 42L))
-      else {
-        if (!GraftFs.isDir(s"$path/meta"))
-          throw new GraftPlanError(
-            s"dedup.minhash: no minhash index at $path — run index.build type=minhash first")
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        val vals = (meta.getAs[Int]("shingle_size"), meta.getAs[Int]("num_hashes"),
-          meta.getAs[Int]("bands"), meta.getAs[Long]("seed"))
-        Seq(("shingle_size", vals._1.toLong), ("num_hashes", vals._2.toLong),
-            ("bands", vals._3.toLong), ("seed", vals._4)).foreach { case (key, v) =>
-          cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-            throw new GraftConfigError(s"dedup.minhash: $key = $conflicting conflicts with " +
-              s"the index at $path ($key = $v) — cross matches would silently miss"))
-        }
-        vals
-      }
-    val threshold = cfg.doubleOr("threshold", 0.8)
-    val r = k / bands
-
-    val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(text).alias("_txt"))
-    val (reps, exactDups) = ExactCollapse(base, "id", "_txt", None, ctx.deferToCleanup)
-    val hashed = ctx.pin(reps.select(F.col("id"),
-        Shingles.shingleHashes(F.col("_txt"), n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed)))
-
-    // SNAPSHOT the corpus file list now: parquet dir reads re-list at
-    // execution, so an index_append firing before the result is consumed
-    // (direct mode, or a second sink) would otherwise make the batch
-    // match ITSELF in the index and drop everything
-    val streamTag = cfg.strOpt("_stream_batch_tag")
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", hashed.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("shingles",
-        org.apache.spark.sql.types.ArrayType(LongType)),
-      org.apache.spark.sql.types.StructField("sig",
-        org.apache.spark.sql.types.ArrayType(LongType))))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"dedup.minhash: no minhash index at $path — run index.build type=minhash first",
-        corpusSchema, excludeDir = streamTag)
-    val vsIndex = LshVerify.verifiedCrossPairs(hashed, index, bands, r, k, threshold)
-      .select(F.col("id_l").alias("id"))
-    val inBatch = DedupPairs.dropped(
-      LshVerify.verifiedPairs(hashed, bands, r, k, threshold),
-      transitive = false, None, ctx.deferToCleanup)
-    val dropped = exactDups.unionByName(vsIndex).unionByName(inBatch).distinct()
-
-    if (cfg.boolOr("index_append", false)) {
-      IndexSnapshot.claimAppend(ctx, "dedup.minhash", path)
-      // survivors' representatives join the index only once the pipeline
-      // durably wrote its outputs — a failed run must not grow the index
-      if (!cfg.boolOr("_explain_only", false))
-        DeferredAppend(ctx, path, streamTag,
-          hashed.join(dropped, Seq("id"), "left_anti")) { rows =>
-          rows.select(F.col(id).alias("id"),
-              Shingles.shingleHashes(F.col(text), n).alias("shingles"))
-            .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed))
-        }
-    }
-    dropped
-  }
-}
+object DedupMinHashOp extends TextSigDedupOp(TextSigFamily.MinHash)
 
 /** dedup.simhash — near-dup removal via 64-bit SimHash + Hamming-distance
-  * LSH (training-data extension). SimHash bit j = sign of Σ tokens
-  * (weight +1/-1 by token-hash bit j). Pigeonhole blocking: split 64 bits
-  * into (maxDistance+1) blocks — two docs within hamming d share at least
-  * one exact block → candidates come from equal-block buckets only.
-  * Verify with bit_count(xor) <= d. All native exprs except the signature
-  * fold (one scalar UDF per doc — cheap, not per-pair).
+  * LSH (training-data extension). Pigeonhole blocking: split 64 bits into
+  * (max_distance+1) blocks — two docs within hamming d share at least one
+  * exact block — then verify bit_count(xor) <= d. Config: id_column,
+  * text_column, max_distance=3; `index_path` probes an
+  * `index.build type=simhash` corpus.
   */
-object DedupSimHashOp extends Stage {
-  val name = "dedup.simhash"
-  val kind = StageKind.Transform
-
-  private val simhashUdf = F.udf { toks: Seq[String] =>
-    val counts = new Array[Int](64)
-    toks.foreach { t =>
-      // xxhash-free stable 64-bit string hash (FNV-1a)
-      var h = 0xcbf29ce484222325L
-      t.foreach { c => h ^= c.toLong; h *= 0x100000001b3L }
-      var j = 0
-      while (j < 64) { if (((h >>> j) & 1L) == 1L) counts(j) += 1 else counts(j) -= 1; j += 1 }
-    }
-    var sig = 0L
-    var j = 0
-    while (j < 64) { if (counts(j) > 0) sig |= (1L << j); j += 1 }
-    sig
-  }
-
-  def withSignature(df: DataFrame, id: String, text: String): DataFrame =
-    df.select(F.col(id).alias("id"), simhashUdf(Shingles.tokens(F.col(text))).alias("sig"))
-
-  /** pigeonhole (block_idx, block_val) explode of (id, sig) rows —
-    * blocks = maxDist+1, so two sigs within hamming maxDist share at
-    * least one exact block. Shared by the self-join and the index probe
-    * (block j = bits [j·width, (j+1)·width), last block takes the
-    * remainder). */
-  private def blockedSigs(sigs: DataFrame, maxDist: Int, side: String): DataFrame = {
-    val blocks = maxDist + 1
-    val width = 64 / blocks
-    sigs.select(F.col("id").alias(s"id_$side"), F.col("sig").alias(s"sig_$side"),
-      F.posexplode(F.array((0 until blocks).map { j =>
-        val w = if (j == blocks - 1) 64 - j * width else width
-        F.shiftrightunsigned(F.col("sig"), j * width)
-          .bitwiseAND(F.lit(if (w == 64) -1L else (1L << w) - 1L))
-      }: _*)))
-      .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_val")
-  }
-
-  /** verified near-dup pairs (id_a < id_b) of one (id, sig) frame */
-  private def selfNearPairs(sigs: DataFrame, maxDist: Int): DataFrame =
-    blockedSigs(sigs, maxDist, "a").join(blockedSigs(sigs, maxDist, "b"),
-        Seq("block_idx", "block_val"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-      .filter(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= maxDist)
-      .select("id_a", "id_b")
-
-  def duplicateIds(ctx: StageContext): DataFrame = {
-    val cfg = ctx.cfg
-    val id = cfg.str("id_column")
-    val text = cfg.str("text_column")
-    val maxDist = cfg.longOr("max_distance", 3L).toInt
-
-    val rankKey = DedupRank.keyFor(cfg, "id")
-    val base = Parallelize(ctx).select(
-      Seq(F.col(id).alias("id"), F.col(text).alias("_txt")) ++
-        cfg.strOpt("keep_by").map(F.col): _*)
-    val (reps, exactDups) = ExactCollapse(base, "id", "_txt", rankKey, ctx.deferToCleanup)
-    val sigs = withSignature(reps, "id", "_txt")
-    exactDups.unionByName(DedupPairs.dropped(selfNearPairs(sigs, maxDist),
-      cfg.boolOr("transitive", false),
-      rankKey.map(DedupRank.ranks(base, "id", _)), ctx.deferToCleanup)).distinct()
-  }
-
-  /** `index_path` — dedup THIS batch against an `index.build type=simhash`
-    * corpus (plus within-batch pairs): the hamming sibling of the
-    * incremental family — same contract (plan-time corpus snapshot,
-    * success-deferred index_append, streaming batch-tag exclusion).
-    * The signature has no tunable parameters, so there is no param
-    * conflict to reject; `max_distance` is a probe-time knob and may
-    * differ per batch. Candidates come from the pigeonhole cross join
-    * on narrow (id, 64-bit sig) rows — the index is never rescanned. */
-  private def incrementalDuplicateIds(ctx: StageContext, path: String): DataFrame = {
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val id = cfg.str("id_column")
-    val text = cfg.str("text_column")
-    if (cfg.has("keep_by") || cfg.boolOr("transitive", false))
-      throw new GraftConfigError(
-        "dedup.simhash: keep_by / transitive=true are not supported with index_path " +
-        "(the index is immutable — only the pairwise min-id policy is well-defined)")
-    val maxDist = cfg.longOr("max_distance", 3L).toInt
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val placeholder = explainOnly &&
-      !GraftFs.isDir(s"$path/meta")
-    if (!placeholder) {
-      if (!GraftFs.isDir(s"$path/meta"))
-        throw new GraftPlanError(
-          s"dedup.simhash: no simhash index at $path — run index.build type=simhash first")
-      val meta = IndexMeta.head(spark, s"$path/meta")
-      if (!meta.schema.fieldNames.contains("simhash")) throw new GraftConfigError(
-        s"dedup.simhash: the index at $path is not a simhash index — probe it with the " +
-        "matching dedup family")
-    }
-
-    val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(text).alias("_txt"))
-    val (reps, exactDups) = ExactCollapse(base, "id", "_txt", None, ctx.deferToCleanup)
-    val sigs = ctx.pin(withSignature(reps, "id", "_txt"))
-
-    val streamTag = cfg.strOpt("_stream_batch_tag")
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", sigs.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("sig", LongType)))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"dedup.simhash: no simhash index at $path — run index.build type=simhash first",
-        corpusSchema, excludeDir = streamTag)
-    val vsIndex = blockedSigs(sigs, maxDist, "l")
-      .join(blockedSigs(index, maxDist, "r"), Seq("block_idx", "block_val"))
-      .filter(F.bit_count(F.col("sig_l").bitwiseXOR(F.col("sig_r"))) <= maxDist)
-      .select(F.col("id_l").alias("id")).distinct()
-    val inBatch = DedupPairs.dropped(selfNearPairs(sigs, maxDist),
-      transitive = false, None, ctx.deferToCleanup)
-    val dropped = exactDups.unionByName(vsIndex).unionByName(inBatch).distinct()
-
-    if (cfg.boolOr("index_append", false)) {
-      IndexSnapshot.claimAppend(ctx, "dedup.simhash", path)
-      if (!explainOnly)
-        DeferredAppend(ctx, path, streamTag,
-          sigs.join(dropped, Seq("id"), "left_anti")) { rows =>
-          withSignature(rows.select(F.col(id).alias("id"), F.col(text).alias("_txt")),
-            "id", "_txt")
-        }
-    }
-    dropped
-  }
-
-  def apply(ctx: StageContext): DataFrame = {
-    val id = ctx.cfg.str("id_column")
-    val dups = ctx.cfg.strOpt("index_path") match {
-      case Some(path) => incrementalDuplicateIds(ctx, path)
-      case None       => duplicateIds(ctx)
-    }
-    ctx.primary.join(dups, ctx.primary(id) === dups("id"), "left_anti")
-  }
-}
+object DedupSimHashOp extends TextSigDedupOp(TextSigFamily.SimHash)
 
 /** dedup.ngram — n-gram Jaccard near-dup removal. Candidate generation
   * reuses a SMALL minhash signature purely for blocking (bands of the
   * full corpus never cross-join); verification is the EXACT n-gram Jaccard.
   * Differs from dedup.minhash in that the verify set is character n-grams
   * (robust to word-boundary edits) and the threshold applies to the exact
-  * similarity, making blocking purely a recall knob.
+  * similarity, making blocking purely a recall knob. Config: id_column,
+  * text_column, ngram_size=5, bands=8, rows_per_band=6, threshold=0.7;
+  * `index_path` probes an `index.build type=ngram` corpus.
   */
-object DedupNgramOp extends Stage {
-  val name = "dedup.ngram"
-  val kind = StageKind.Transform
-
-  /** distinct character n-gram hashes of whitespace-normalized text — one
-    * rolling pass per doc (the expression form re-normalizes the string per
-    * gram, interpreted). */
-  def charNgramHashes(textCol: String, n: Int): Column = {
-    val udf = F.udf { t: String =>
-      if (t == null) Array.empty[Long]
-      else {
-        val norm = t.toLowerCase.replaceAll("\\s+", " ")
-        val set = new java.util.LinkedHashSet[Long]()
-        if (norm.length <= n) set.add(Shingles.fnv1a(norm))
-        else {
-          var i = 0
-          while (i <= norm.length - n) {
-            set.add(Shingles.fnv1a(norm.subSequence(i, i + n)))
-            i += 1
-          }
-        }
-        val out = new Array[Long](set.size)
-        val it = set.iterator(); var i = 0
-        while (it.hasNext) { out(i) = it.next(); i += 1 }
-        out
-      }
-    }
-    udf(F.col(textCol))
-  }
-
-  def duplicateIds(ctx: StageContext): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val id = cfg.str("id_column")
-    val text = cfg.str("text_column")
-    val n = cfg.longOr("ngram_size", 5L).toInt
-    val threshold = cfg.doubleOr("threshold", 0.7)
-    val bands = cfg.longOr("bands", 8L).toInt
-    // r=6: char n-grams of docs sharing a vocabulary sit at J~0.3-0.5, and
-    // band-collision probability J^r must crush that mass (0.4^6 = 0.4%)
-    // while keeping real near-dups (J>=0.9 -> P_band=53%, over 8 bands
-    // recall ~99.8%).
-    val r = cfg.longOr("rows_per_band", 6L).toInt
-    val seed = cfg.longOr("seed", 7L)
-
-    val rankKey = DedupRank.keyFor(cfg, "id")
-    val base = Parallelize(ctx).select(
-      Seq(F.col(id).alias("id"), F.col(text).alias("_txt")) ++
-        cfg.strOpt("keep_by").map(F.col): _*)
-    val (reps, exactDups) = ExactCollapse(base, "id", "_txt", rankKey, ctx.deferToCleanup)
-    val hashed = ctx.pin(reps.select(F.col("id"),
-      charNgramHashes("_txt", n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), bands * r, seed)))
-    exactDups.unionByName(DedupPairs.dropped(
-      LshVerify.verifiedPairs(hashed, bands, r, bands * r, threshold),
-      cfg.boolOr("transitive", false),
-      rankKey.map(DedupRank.ranks(base, "id", _)), ctx.deferToCleanup)).distinct()
-  }
-
-  /** `index_path` — dedup THIS batch against an `index.build type=ngram`
-    * corpus (plus within-batch pairs): the char-gram sibling of
-    * dedup.minhash index_path — identical contract (plan-time corpus
-    * snapshot, param-conflict rejection, success-deferred index_append,
-    * streaming batch-tag exclusion), same narrow banded cross join via
-    * LshVerify.verifiedCrossPairs; only the shingle function and the
-    * (bands × rows_per_band) signature space differ. */
-  private def incrementalDuplicateIds(ctx: StageContext, path: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val id = cfg.str("id_column")
-    val text = cfg.str("text_column")
-    if (cfg.has("keep_by") || cfg.boolOr("transitive", false))
-      throw new GraftConfigError(
-        "dedup.ngram: keep_by / transitive=true are not supported with index_path " +
-        "(the index is immutable — only the pairwise min-id policy is well-defined)")
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val placeholder = explainOnly &&
-      !GraftFs.isDir(s"$path/meta")
-    val (n, bands, r, seed) =
-      if (placeholder)
-        (cfg.longOr("ngram_size", 5L).toInt, cfg.longOr("bands", 8L).toInt,
-         cfg.longOr("rows_per_band", 6L).toInt, cfg.longOr("seed", 7L))
-      else {
-        if (!GraftFs.isDir(s"$path/meta"))
-          throw new GraftPlanError(
-            s"dedup.ngram: no ngram index at $path — run index.build type=ngram first")
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        if (!meta.schema.fieldNames.contains("ngram_size")) throw new GraftConfigError(
-          s"dedup.ngram: the index at $path is not an ngram index — probe it with the " +
-          "matching dedup family")
-        val vals = (meta.getAs[Int]("ngram_size"), meta.getAs[Int]("bands"),
-          meta.getAs[Int]("rows_per_band"), meta.getAs[Long]("seed"))
-        Seq(("ngram_size", vals._1.toLong), ("bands", vals._2.toLong),
-            ("rows_per_band", vals._3.toLong), ("seed", vals._4)).foreach { case (key, v) =>
-          cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-            throw new GraftConfigError(s"dedup.ngram: $key = $conflicting conflicts with " +
-              s"the index at $path ($key = $v) — cross matches would silently miss"))
-        }
-        vals
-      }
-    val threshold = cfg.doubleOr("threshold", 0.7)
-    val k = bands * r
-
-    val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(text).alias("_txt"))
-    val (reps, exactDups) = ExactCollapse(base, "id", "_txt", None, ctx.deferToCleanup)
-    val hashed = ctx.pin(reps.select(F.col("id"),
-        charNgramHashes("_txt", n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed)))
-
-    val streamTag = cfg.strOpt("_stream_batch_tag")
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", hashed.schema("id").dataType),
-      org.apache.spark.sql.types.StructField("shingles",
-        org.apache.spark.sql.types.ArrayType(LongType)),
-      org.apache.spark.sql.types.StructField("sig",
-        org.apache.spark.sql.types.ArrayType(LongType))))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"dedup.ngram: no ngram index at $path — run index.build type=ngram first",
-        corpusSchema, excludeDir = streamTag)
-    val vsIndex = LshVerify.verifiedCrossPairs(hashed, index, bands, r, k, threshold)
-      .select(F.col("id_l").alias("id"))
-    val inBatch = DedupPairs.dropped(
-      LshVerify.verifiedPairs(hashed, bands, r, k, threshold),
-      transitive = false, None, ctx.deferToCleanup)
-    val dropped = exactDups.unionByName(vsIndex).unionByName(inBatch).distinct()
-
-    if (cfg.boolOr("index_append", false)) {
-      IndexSnapshot.claimAppend(ctx, "dedup.ngram", path)
-      if (!explainOnly)
-        DeferredAppend(ctx, path, streamTag,
-          hashed.join(dropped, Seq("id"), "left_anti")) { rows =>
-          rows.select(F.col(id).alias("id"),
-              charNgramHashes(text, n).alias("shingles"))
-            .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed))
-        }
-    }
-    dropped
-  }
-
-  def apply(ctx: StageContext): DataFrame = {
-    val id = ctx.cfg.str("id_column")
-    val dups = ctx.cfg.strOpt("index_path") match {
-      case Some(path) => incrementalDuplicateIds(ctx, path)
-      case None       => duplicateIds(ctx)
-    }
-    ctx.primary.join(dups, ctx.primary(id) === dups("id"), "left_anti")
-  }
-}
+object DedupNgramOp extends TextSigDedupOp(TextSigFamily.Ngram)
 
 /** dedup.embedding — near-dup removal by embedding cosine similarity
   * (training-data extension). Candidates via random-hyperplane LSH (h
@@ -1314,9 +832,7 @@ object DedupEmbeddingOp extends Stage {
     // r14: native codegen expression (graft.functions.HyperplaneSignature)
     // — bit-identical planes/arithmetic to the scala UDF it replaced, at
     // ~30x less per-row cost (SigPerfProbe; SignatureExpressionSpec pins
-    // value equality). Registered idempotently on the active session.
-    graft.functions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
+    // value equality). The caller registers it on its own session.
     F.call_function("hyperplane_sig", vec.cast("array<float>"),
       F.lit(dim), F.lit(h), F.lit(seed), F.lit(ndExplode))
   }
@@ -1340,9 +856,8 @@ object DedupEmbeddingOp extends Stage {
       ndExplode: Boolean = false): Column = {
     // r14: native codegen expression (graft.functions.BandSignatures) —
     // see hyperplaneSig above; bit-identical values, ~30x less per-row
-    // boundary cost than the scala UDF.
-    graft.functions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
+    // boundary cost than the scala UDF. The caller registers it on its
+    // own session.
     F.call_function("band_sigs", vec.cast("array<float>"),
       F.lit(dim), F.lit(bands), F.lit(r), F.lit(seed), F.lit(ndExplode))
   }

@@ -91,12 +91,12 @@ private[graft] object IndexMaintenance {
       if (fields.contains("ksub")) ("ivfpq", Seq("cell"))
       else if (fields.contains("band_planes")) ("lsh", Seq("band", "pband", "ingest_tag"))
       else if (fields.contains("pbuckets")) ("lsh", Seq("block", "pbucket"))
-      else if (fields.contains("ngram_size")) ("ngram", Seq.empty)
-      else if (fields.contains("shingle_size")) ("minhash", Seq.empty)
-      else if (fields.contains("simhash")) ("simhash", Seq.empty)
-      else if (fields.contains("columns")) ("exact", Seq.empty)
-      else throw new GraftPlanError(
-        s"$op: unrecognized index meta at $path (fields: ${fields.mkString(", ")})")
+      else TextSigFamily.ofFields(fields) match {
+        case Some(family) => (family.name, Seq.empty)
+        case None if fields.contains("columns") => ("exact", Seq.empty)
+        case None => throw new GraftPlanError(
+          s"$op: unrecognized index meta at $path (fields: ${fields.mkString(", ")})")
+      }
     } else if (GraftFs.isDir(s"$path/centroids")) ("ivf", Seq("cell"))
     else throw new GraftPlanError(s"$op: no index at $path — run index.build first")
   }

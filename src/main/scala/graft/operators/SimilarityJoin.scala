@@ -102,20 +102,16 @@ object SimilarJoinOp extends Stage {
     val cfg = ctx.cfg
     val leftText = cfg.strOr("left_text", cfg.strOr("text_column", "text"))
     val rightText = cfg.strOr("right_text", cfg.strOr("text_column", "text"))
-    val n = cfg.longOr("shingle_size", 3L).toInt
-    val k = cfg.longOr("num_hashes", 128L).toInt
-    val bands = cfg.longOr("bands", 32L).toInt
     val threshold = cfg.doubleOr("threshold", 0.8)
-    val seed = cfg.longOr("seed", 42L)
-    if (k % bands != 0) throw new GraftConfigError(s"num_hashes=$k must divide evenly into bands=$bands")
-    val r = k / bands
+    val minhash = TextSigFamily.MinHash
+    val p = minhash.fromConfig(cfg)
+    minhash.problem(p).foreach(m => throw new GraftConfigError(m))
+    val (bands, r) = minhash.bandShape(p)
+    val k = bands * r
 
     def prepare(df: DataFrame, id: String, text: String) = {
       val (reps, mapping) = collapse(df, id, F.col(text), ctx.deferToCleanup)
-      val hashed = ctx.pin(reps.select(F.col("id"),
-          Shingles.shingleHashes(F.col("_key"), n).alias("shingles"))
-        .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed)))
-      (hashed, mapping)
+      (ctx.pin(minhash.signatures(reps.withColumnRenamed("_key", "_txt"), p)), mapping)
     }
     val (hl, mapL) = prepare(left, leftId, leftText)
     val (hr, mapR) = prepare(right, rightId, rightText)
@@ -271,63 +267,21 @@ object SimilarJoinOp extends Stage {
 
   /** `index_path` (method=minhash): the right side is an `index.build
     * type=minhash` corpus — match the left rows against everything
-    * already ingested without rescanning or re-hashing it. Signature
-    * parameters come from the index meta (explicit conflicting keys fail
-    * loud); the left side still exact-collapses to representatives and
-    * expands matches back, the index side is used as-is (it stores every
-    * ingested row). Same snapshot/placeholder contract as the
-    * dedup.minhash index probe. */
+    * already ingested without rescanning or re-hashing it. The index opens
+    * through the dedup families' TextSigDedup.open (family check, meta
+    * parameters, conflict rejection, explain placeholder); the left side
+    * still exact-collapses to representatives and expands matches back,
+    * the index side is used as-is (it stores every ingested row). */
   private def minhashIndexPairs(ctx: StageContext, left: DataFrame, leftId: String,
       path: String): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val leftText = cfg.strOr("left_text", cfg.strOr("text_column", "text"))
-    val threshold = cfg.doubleOr("threshold", 0.8)
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val metaExists = GraftFs.isDir(s"$path/meta")
-    val placeholder = explainOnly && !metaExists
-    if (!placeholder && !metaExists) throw new GraftPlanError(
-      s"join.similar: no minhash index at $path — run index.build type=minhash first")
-    val (n, k, bands, seed) =
-      if (placeholder)
-        (cfg.longOr("shingle_size", 3L).toInt, cfg.longOr("num_hashes", 128L).toInt,
-         cfg.longOr("bands", 32L).toInt, cfg.longOr("seed", 42L))
-      else {
-        val meta = spark.read.parquet(s"$path/meta").head()
-        if (!meta.schema.fieldNames.contains("shingle_size")) throw new GraftConfigError(
-          s"join.similar: the index at $path is not a minhash index — " +
-          "method=minhash probes an index.build type=minhash corpus")
-        val vals = (meta.getAs[Int]("shingle_size"), meta.getAs[Int]("num_hashes"),
-          meta.getAs[Int]("bands"), meta.getAs[Long]("seed"))
-        Seq(("shingle_size", vals._1.toLong), ("num_hashes", vals._2.toLong),
-            ("bands", vals._3.toLong), ("seed", vals._4)).foreach { case (key, v) =>
-          cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-            throw new GraftConfigError(s"join.similar: $key = $conflicting conflicts " +
-              s"with the index at $path ($key = $v) — cross matches would silently miss"))
-        }
-        vals
-      }
-    val r = k / bands
-
+    val leftText = ctx.cfg.strOr("left_text", ctx.cfg.strOr("text_column", "text"))
+    val minhash = TextSigFamily.MinHash
+    val index = TextSigDedup.open(ctx, minhash, "join.similar", path)
     val (reps, mapping) = collapse(left, leftId, F.col(leftText), ctx.deferToCleanup)
-    val hashed = ctx.pin(reps.select(F.col("id"),
-        Shingles.shingleHashes(F.col("_key"), n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed)))
-
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id", left.schema(leftId).dataType),
-      org.apache.spark.sql.types.StructField("shingles",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType)),
-      org.apache.spark.sql.types.StructField("sig",
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType))))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"join.similar: no minhash index at $path — run index.build type=minhash first",
-        corpusSchema)
-    val scored = LshVerify.verifiedCrossPairsScored(hashed, index, bands, r, k, threshold)
+    val hashed = ctx.pin(minhash.signatures(reps.withColumnRenamed("_key", "_txt"), index.params))
+    val scored = minhash.crossPairsScored(hashed, index.corpus(left.schema(leftId).dataType),
+      index.params, ctx.cfg)
     scored.join(mapping, scored("id_l") === mapping("rep_id"))
       .select(F.col("orig_id").alias("left_id"), F.col("id_r").alias("right_id"),
         F.col("jaccard"))

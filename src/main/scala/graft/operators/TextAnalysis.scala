@@ -172,7 +172,7 @@ object FingerprintOp extends Stage {
   def apply(ctx: StageContext): DataFrame = {
     val cfg = ctx.cfg
     val c = F.col(cfg.str("column"))
-    val n = cfg.longOr("shingle_size", 3L).toInt
+    val n = TextSigFamily.wordShingleSize.of(cfg).toInt
     val k = cfg.longOr("sketch_size", 8L).toInt
     ctx.primary
       .withColumn("fingerprint", TextFns.fingerprint(c))

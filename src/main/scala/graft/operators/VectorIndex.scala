@@ -101,6 +101,9 @@ private[operators] object IvfCentroids {
   * blocks, seed, dim, pbuckets) so probes regenerate identical planes
   * and dir keys.
   *
+  * `type = "minhash" | "ngram" | "simhash"` — the flat text-signature
+  * corpus of that dedup family, built by the shared TextSigDedup.build.
+  *
   * Rebuild = re-run with mode=overwrite (default). Pass-through stage:
   * returns its input, so it composes mid-pipeline like table.write.
   */
@@ -157,16 +160,18 @@ object IndexBuildOp extends Stage {
           GraftFs.deleteIfExists(s"$p/compact.gen")
           IndexSnapshot.resetGenerations(p)
         }
+      // the signature expressions resolve against THIS stage's session
+      graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
       cfg.strOr("type", "ivf") match {
         case "ivf" => buildIvf(ctx)
         case "ivfpq" => PqIndex.build(ctx)
         case "lsh" => buildLsh(ctx)
-        case "minhash" => buildMinhash(ctx)
-        case "ngram" => buildNgram(ctx)
-        case "simhash" => buildSimhash(ctx)
         case "exact" => buildExact(ctx)
-        case other => throw new GraftConfigError(
-          s"index.build type must be ivf|ivfpq|lsh|minhash|ngram|simhash|exact, got '$other'")
+        case other => TextSigFamily.byName(other) match {
+          case Some(family) => TextSigDedup.build(ctx, family)
+          case None => throw new GraftConfigError(
+            s"index.build type must be ivf|ivfpq|lsh|minhash|ngram|simhash|exact, got '$other'")
+        }
       }
     }
     // BOTH modes claim the shared writer lease. Append is the same
@@ -186,63 +191,13 @@ object IndexBuildOp extends Stage {
     ctx.primary
   }
 
-  /** `type = "minhash"` — the text-dedup signature index: one pass hashes
-    * every document once (shingles + MinHash signature, the CPU-heavy
-    * step) and persists the narrow (id, sig, shingles) rows under
-    * `corpus/`, with the signature parameters under `meta/` so probes
-    * regenerate identical hashing. `dedup.minhash index_path = ...` then
-    * dedups NEW batches against the corpus without ever rescanning or
-    * re-hashing old text — the incremental-ingestion path at 100 TB.
-    * Indexes ALL input rows (not survivors of any dedup): a future batch
-    * must match documents that were themselves duplicates, exactly as a
-    * full-corpus pairwise pass would. Bands derive from the signature at
-    * probe time (narrow exprs) instead of being stored ×bands. */
-  private def buildMinhash(ctx: StageContext): Unit = {
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val id = cfg.strOr("id_column", "doc_id")
-    val text = cfg.strOr("text_column", "text")
-    val n = cfg.longOr("shingle_size", 3L).toInt
-    val k = cfg.longOr("num_hashes", 128L).toInt
-    val bands = cfg.longOr("bands", 32L).toInt
-    val seed = cfg.longOr("seed", 42L)
-    val mode = cfg.strOr("mode", "overwrite")
-    if (k % bands != 0) throw new GraftConfigError(
-      s"index.build type=minhash: num_hashes=$k must divide evenly into bands=$bands")
-
-    val spark = ctx.spark
-    // append must extend the EXISTING signature space: silently writing new
-    // meta over an old corpus (or appending differently-hashed rows) would
-    // make every cross match against the old portion miss
-    if (mode == "append" &&
-        GraftFs.isDir(IndexSnapshot.corpusDir(path)) &&
-        !GraftFs.isDir(s"$path/meta"))
+  /** mode=append validates against the existing meta: a corpus without
+    * one (a crashed earlier build?) cannot be checked and fails loud. */
+  private[operators] def requireMetaForAppend(path: String, op: String): Unit =
+    if (GraftFs.isDir(IndexSnapshot.corpusDir(path)) && !GraftFs.isDir(s"$path/meta"))
       throw new GraftConfigError(
-        s"index.build type=minhash mode=append: $path has a corpus but no meta (a crashed " +
-        "earlier build?) — parameters cannot be validated; rebuild with mode=overwrite")
-    if (mode == "append" &&
-        GraftFs.isDir(s"$path/meta")) {
-      val m = IndexMeta.head(spark, s"$path/meta")
-      val existing = (m.getAs[Int]("shingle_size"), m.getAs[Int]("num_hashes"),
-        m.getAs[Int]("bands"), m.getAs[Long]("seed"))
-      if (existing != ((n, k, bands, seed))) throw new GraftConfigError(
-        s"index.build type=minhash mode=append: parameters (shingle_size=$n, " +
-        s"num_hashes=$k, bands=$bands, seed=$seed) differ from the existing index " +
-        s"at $path $existing — appending would mix incompatible signatures")
-    }
-
-    Parallelize(ctx)
-      .select(F.col(id).alias("id"),
-        Shingles.shingleHashes(F.col(text), n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), k, seed))
-      .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
-
-    // one-row table the driver already holds — write it driver-side
-    // (DriverParquet) instead of scheduling a Spark job for it
-    DriverParquet.overwrite(s"$path/meta", Seq(
-      DriverParquet.I32("shingle_size", Seq(n)), DriverParquet.I32("num_hashes", Seq(k)),
-      DriverParquet.I32("bands", Seq(bands)), DriverParquet.I64("seed", Seq(seed))))
-  }
+        s"$op mode=append: $path has a corpus but no meta (a crashed earlier build?) — " +
+        "parameters cannot be validated; rebuild with mode=overwrite")
 
   // package-visible: index.compact's retrain_if rebuilds through this
   // entry under its OWN already-held lease (the public apply would
@@ -335,82 +290,13 @@ object IndexBuildOp extends Stage {
     * content keys over `columns` (DedupExactOp.contentKey), for
     * `dedup.exact index_path = ...` — a new batch drops already-ingested
     * rows via one anti-join on narrow keys, never re-reading old data. */
-  /** char-n-gram minhash index (the dedup.ngram signature space): same
-    * flat (id, shingles, sig) corpus as type=minhash, but shingles are
-    * character n-gram hashes and the signature width is bands ×
-    * rows_per_band — meta records (ngram_size, bands, rows_per_band,
-    * seed) so probes regenerate identical signatures. */
-  private def buildNgram(ctx: StageContext): Unit = {
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val id = cfg.strOr("id_column", "doc_id")
-    val text = cfg.strOr("text_column", "text")
-    val n = cfg.longOr("ngram_size", 5L).toInt
-    val bands = cfg.longOr("bands", 8L).toInt
-    val r = cfg.longOr("rows_per_band", 6L).toInt
-    val seed = cfg.longOr("seed", 7L)
-    val mode = cfg.strOr("mode", "overwrite")
-    val spark = ctx.spark
-    if (mode == "append" &&
-        GraftFs.isDir(IndexSnapshot.corpusDir(path)) &&
-        !GraftFs.isDir(s"$path/meta"))
-      throw new GraftConfigError(
-        s"index.build type=ngram mode=append: $path has a corpus but no meta (a crashed " +
-        "earlier build?) — parameters cannot be validated; rebuild with mode=overwrite")
-    if (mode == "append" &&
-        GraftFs.isDir(s"$path/meta")) {
-      val m = IndexMeta.head(spark, s"$path/meta")
-      val existing = (m.getAs[Int]("ngram_size"), m.getAs[Int]("bands"),
-        m.getAs[Int]("rows_per_band"), m.getAs[Long]("seed"))
-      if (existing != ((n, bands, r, seed))) throw new GraftConfigError(
-        s"index.build type=ngram mode=append: parameters (ngram_size=$n, bands=$bands, " +
-        s"rows_per_band=$r, seed=$seed) differ from the existing index at $path " +
-        s"$existing — appending would mix incompatible signatures")
-    }
-    Parallelize(ctx)
-      .select(F.col(id).alias("id"),
-        DedupNgramOp.charNgramHashes(text, n).alias("shingles"))
-      .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), bands * r, seed))
-      .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
-    DriverParquet.overwrite(s"$path/meta", Seq(
-      DriverParquet.I32("ngram_size", Seq(n)), DriverParquet.I32("bands", Seq(bands)),
-      DriverParquet.I32("rows_per_band", Seq(r)), DriverParquet.I64("seed", Seq(seed))))
-  }
-
-  /** simhash index: flat (id, sig) 64-bit signatures — the signature has
-    * no tunable parameters (FNV token hashes, fixed 64 bits), so meta is
-    * just the family marker; max_distance is a PROBE-time knob. */
-  private def buildSimhash(ctx: StageContext): Unit = {
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val id = cfg.strOr("id_column", "doc_id")
-    val text = cfg.strOr("text_column", "text")
-    val mode = cfg.strOr("mode", "overwrite")
-    val spark = ctx.spark
-    if (mode == "append" &&
-        GraftFs.isDir(IndexSnapshot.corpusDir(path)) &&
-        !GraftFs.isDir(s"$path/meta"))
-      throw new GraftConfigError(
-        s"index.build type=simhash mode=append: $path has a corpus but no meta (a crashed " +
-        "earlier build?) — rebuild with mode=overwrite")
-    DedupSimHashOp.withSignature(Parallelize(ctx), id, text)
-      .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
-    DriverParquet.overwrite(s"$path/meta",
-      Seq(DriverParquet.Bool("simhash", Seq(true))))
-  }
-
   private def buildExact(ctx: StageContext): Unit = {
     val cfg = ctx.cfg
     val path = cfg.str("path")
     val cols = cfg.strListOr("columns", ctx.primary.columns.toVector)
     val mode = cfg.strOr("mode", "overwrite")
     val spark = ctx.spark
-    if (mode == "append" &&
-        GraftFs.isDir(IndexSnapshot.corpusDir(path)) &&
-        !GraftFs.isDir(s"$path/meta"))
-      throw new GraftConfigError(
-        s"index.build type=exact mode=append: $path has a corpus but no meta (a crashed " +
-        "earlier build?) — parameters cannot be validated; rebuild with mode=overwrite")
+    if (mode == "append") requireMetaForAppend(path, "index.build type=exact")
     if (mode == "append" &&
         GraftFs.isDir(s"$path/meta")) {
       val m = IndexMeta.head(spark, s"$path/meta")
@@ -468,12 +354,7 @@ object IndexBuildOp extends Stage {
       case None => throw new GraftPlanError("index.build type=lsh: empty input, cannot infer dim")
     }
     val spark = ctx.spark
-    if (mode == "append" &&
-        GraftFs.isDir(IndexSnapshot.corpusDir(path)) &&
-        !GraftFs.isDir(s"$path/meta"))
-      throw new GraftConfigError(
-        s"index.build type=lsh mode=append: $path has a corpus but no meta (a crashed " +
-        "earlier build?) — parameters cannot be validated; rebuild with mode=overwrite")
+    if (mode == "append") requireMetaForAppend(path, "index.build type=lsh")
     if (mode == "append" &&
         GraftFs.isDir(s"$path/meta")) {
       val m = IndexMeta.head(spark, s"$path/meta")
@@ -561,12 +442,7 @@ object IndexBuildOp extends Stage {
       case None    => throw new GraftPlanError("index.build type=lsh: empty input, cannot infer dim")
     }
     val spark = ctx.spark
-    if (mode == "append" &&
-        GraftFs.isDir(IndexSnapshot.corpusDir(path)) &&
-        !GraftFs.isDir(s"$path/meta"))
-      throw new GraftConfigError(
-        s"index.build type=lsh mode=append: $path has a corpus but no meta (a crashed " +
-        "earlier build?) — parameters cannot be validated; rebuild with mode=overwrite")
+    if (mode == "append") requireMetaForAppend(path, "index.build type=lsh")
     if (mode == "append" &&
         GraftFs.isDir(s"$path/meta")) {
       val m = IndexMeta.head(spark, s"$path/meta")

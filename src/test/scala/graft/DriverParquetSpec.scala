@@ -67,6 +67,36 @@ class DriverParquetSpec extends SparkSpec {
     assertSame(sb, db)
   }
 
+  test("overwrite writes the _SUCCESS marker after the part file") {
+    val d = tmp("succ")
+    DriverParquet.overwrite(d, Seq(I32("x", Seq(1, 2))))
+    assert(new java.io.File(s"$d/_SUCCESS").isFile)
+    assert(spark.read.parquet(d).count() === 2)
+  }
+
+  test("knn_ivfpq and knn_ivf_indexed reuse their prebuilt index on a second call") {
+    val sf = java.nio.file.Files.createTempDirectory("graft_dp_sf").toString
+    val rnd = new scala.util.Random(3)
+    (0 until 400).map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian().toFloat), i % 4))
+      .toDF("vec_id", "embedding", "label").write.parquet(s"$sf/embeddings.parquet")
+    val key = sf.replaceAll("[^A-Za-z0-9]", "_")
+    // the index dirs and reuse markers the two gates key on
+    for ((gate, idx, table) <- Seq(
+        ("knn_ivfpq", s"/tmp/graft_ivfpq_u1_$key", "pq"),
+        ("knn_ivf_indexed", s"/tmp/graft_ivf_u1_$key", "centroids"))) {
+      try {
+        def parts() = graft.core.GraftFs.listFilesRec(s"$idx/$table").map(_._1)
+          .filter(_.contains("part-")).sorted
+        assert(SparkEntry.queries(gate)(spark, sf).count() > 0)
+        assert(new java.io.File(s"$idx/$table/_SUCCESS").isFile, gate)
+        val built = parts()
+        assert(SparkEntry.queries(gate)(spark, sf).count() > 0)
+        // a rebuild rewrites the table under fresh part-file names
+        assert(parts() === built, s"$gate rebuilt its index on the second call")
+      } finally graft.core.GraftFs.deleteRec(idx)
+    }
+  }
+
   test("overwrite replaces previous contents") {
     val d = tmp("ow")
     DriverParquet.overwrite(d, Seq(I32("x", Seq(1, 2, 3))))

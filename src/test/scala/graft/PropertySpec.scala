@@ -265,6 +265,7 @@ class PropertySpec extends SparkSpec {
   }
 
   test("banded signatures: identity recall — a vector collides with itself in every band") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val vGen = Gen.listOfN(16, Gen.choose(-5.0, 5.0)).map(_.map(_.toFloat))
     for ((v, i) <- samples(vGen, 10).zipWithIndex) {
       val df = Seq((1L, v.toArray), (2L, v.toArray)).toDF("id", "vec")

@@ -33,6 +33,7 @@ class R14OptimizationSpec extends SparkSpec {
   }
 
   test("ndExplode signature build plan evaluates the UDF exactly once") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     // parquet-backed (a LocalRelation would let ConvertToLocalRelation
     // evaluate the projections at optimization time and hide the shape)
     val dfDir = java.nio.file.Files.createTempDirectory("graft_nde").toString + "/t"

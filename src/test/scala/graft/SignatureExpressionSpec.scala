@@ -73,6 +73,7 @@ class SignatureExpressionSpec extends SparkSpec {
   }
 
   test("hyperplane_sig expression equals the pre-r14 UDF bit-for-bit") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val df = fixture(16)
     for (nd <- Seq(false, true)) {
       val got = df.withColumn("s",
@@ -85,6 +86,7 @@ class SignatureExpressionSpec extends SparkSpec {
   }
 
   test("band_sigs expression equals the pre-r14 UDF bit-for-bit") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     val df = fixture(16)
     for (nd <- Seq(false, true)) {
       val got = df.withColumn("b",
@@ -99,6 +101,7 @@ class SignatureExpressionSpec extends SparkSpec {
   }
 
   test("minhash_sig expression equals the pre-r14 UDF bit-for-bit") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     import graft.operators.Shingles
     val k = 128; val seed = 42L
     val refUdf = {
@@ -136,6 +139,7 @@ class SignatureExpressionSpec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen (nullSafeEval path)") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
     import graft.functions.HyperplaneSignature
     import org.apache.spark.sql.catalyst.expressions.Literal
     import org.apache.spark.sql.catalyst.util.GenericArrayData
