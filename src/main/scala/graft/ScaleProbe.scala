@@ -133,7 +133,7 @@ object ScaleProbe {
       val sigs = v.select(F.col("vec_id").as("id"),
         DedupEmbeddingOp.hyperplaneSig(F.col("embedding"), 64, 32, 11).as("sig"))
       val blocked = sigs.select(F.col("id"), F.posexplode(
-          DedupEmbeddingOp.blockKeys(F.col("sig"), 4, 8)))
+          LshLayout.Pigeonhole.blockKeys(F.col("sig"), 4, 8)))
         .toDF("id", "block", "bucket")
       val cands = blocked.as("a").join(blocked.as("b"),
           F.col("a.block") === F.col("b.block") &&
@@ -251,7 +251,7 @@ object ScaleProbe {
             "index_path" -> idxE, "probe_hamming" -> dH))).count()
         }
         val qb0 = q500.select(F.col("vec_id").as("qid"), F.posexplode(
-            DedupEmbeddingOp.blockKeys(
+            LshLayout.Pigeonhole.blockKeys(
               DedupEmbeddingOp.hyperplaneSig(F.col("embedding"), 64, 32, 11), 4, 8)))
           .toDF("qid", "block", "bucket")
         val qb = if (dH == 0) qb0 else {
@@ -579,7 +579,7 @@ object ScaleProbe {
     // jobs with the timed ones would recompute the n-row signature
     // aggregations once per probe
     val blockedCnt = v.select(F.col("vec_id").as("id"), F.posexplode(
-        DedupEmbeddingOp.blockKeys(
+        LshLayout.Pigeonhole.blockKeys(
           DedupEmbeddingOp.hyperplaneSig(F.col("embedding"), 64, 32, 11), 4, 8)))
       .toDF("id", "block", "bucket")
       .groupBy("block", "bucket").count()
@@ -589,7 +589,7 @@ object ScaleProbe {
       .groupBy("band", "bucket").count()
     val q500 = v.filter(F.col("vec_id") < 500)
     val qBlocked = q500.select(F.col("vec_id").as("qid"), F.posexplode(
-        DedupEmbeddingOp.blockKeys(
+        LshLayout.Pigeonhole.blockKeys(
           DedupEmbeddingOp.hyperplaneSig(F.col("embedding"), 64, 32, 11), 4, 8)))
       .toDF("qid", "block", "bucket")
     val qBands = q500.select(F.col("vec_id").as("qid"), F.posexplode(

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, functions => F}
-import org.apache.spark.sql.types.LongType
 import graft.config._
 import graft.core._
 import scala.jdk.CollectionConverters._
@@ -560,17 +559,19 @@ private[graft] object IndexSnapshot {
       "the index; run the batches as separate pipeline runs (one appender per index per run)")
   }
 
-  /** Append `df` to the flat corpus dir. Batch mode (no tag): a plain
-    * parquet append under the shared batch/maintenance lease — the
-    * success-deferral already guarantees it fires at most once per run;
-    * the lease keeps it out of a concurrent compact's rewrite window (and
-    * off an index a live stream.ingest holds). Streaming mode (tag set):
-    * OVERWRITE of `corpus/<tag>/` — a micro-batch retry re-lands its
-    * append idempotently instead of duplicating it, and the paired
-    * `excludeDir` probe filter keeps the retry from self-matching first;
-    * the streaming query holds the lease for its whole lifetime, so no
-    * per-batch claim here. */
-  def append(df: DataFrame, corpusDir: String, streamTag: Option[String]): Unit = {
+  /** Append `df` to the corpus dir. Batch mode (no tag): a plain append
+    * under the shared batch/maintenance lease — the success-deferral
+    * already guarantees it fires at most once per run; the lease keeps it
+    * out of a concurrent compact's rewrite window (and off an index a live
+    * stream.ingest holds). Streaming mode (tag set): an OVERWRITE of this
+    * batch's own slice — `corpus/<tag>/` for a flat corpus, the tagged
+    * partition dirs (dynamic overwrite) for a partitioned one — so a
+    * micro-batch retry re-lands its append idempotently instead of
+    * duplicating it, and the paired `excludeDir` probe filter keeps the
+    * retry from self-matching first; the streaming query holds the lease
+    * for its whole lifetime, so no per-batch claim here. */
+  def append(df: DataFrame, corpusDir: String, streamTag: Option[String],
+      partitionBy: Seq[String] = Nil): Unit = {
     // appending into the missing-corpus window of a crashed compact would
     // fork a fresh corpus that the repair would then discard — repair
     // first, INSIDE the lease for the batch path (an unleased repairer
@@ -583,13 +584,41 @@ private[graft] object IndexSnapshot {
         val root = if (parent != null) parent.toString else corpusDir
         graft.streaming.IngestLease.withBatchLease(root, "index_append") {
           if (parent != null) IndexMaintenance.recoverSwap(parent.toString)
-          df.write.mode("append").parquet(corpusDir)
+          write(df, corpusDir, "append", partitionBy)
         }
       case Some(tag) =>
         if (parent != null) IndexMaintenance.recoverSwap(parent.toString)
-        df.write.mode("overwrite").parquet(s"$corpusDir/$tag")
+        if (partitionBy.isEmpty) write(df, s"$corpusDir/$tag", "overwrite")
+        else write(df, corpusDir, "overwrite", partitionBy, dynamic = true)
     }
   }
+
+  /** Write corpus rows. A partitioned corpus first co-locates each dir key
+    * (one file per populated dir instead of input_partitions × dirs
+    * droplets); `dynamic` overwrites only the dirs the rows land in. A row
+    * that trips a [[failIf]] guard fails the write with a GraftConfigError
+    * carrying the guard's message. */
+  def write(df: DataFrame, dir: String, mode: String, partitionBy: Seq[String] = Nil,
+      dynamic: Boolean = false): Unit = {
+    val w =
+      if (partitionBy.isEmpty) df.write
+      else df.repartition(partitionBy.map(F.col): _*).write.partitionBy(partitionBy: _*)
+    try (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w).mode(mode).parquet(dir)
+    catch { case e: Exception =>
+      val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
+        case t: org.apache.spark.SparkThrowable
+            if Option(t.getMessageParameters.get("errorMessage")).exists(_.startsWith(Raised)) =>
+          t.getMessageParameters.get("errorMessage").stripPrefix(Raised)
+      }
+      throw raised.map(new GraftConfigError(_)).getOrElse(e)
+    }
+  }
+
+  private val Raised = "GraftConfigError: "
+  /** `value`, except that a row where `bad` holds fails the job; [[write]]
+    * turns that failure into a GraftConfigError carrying `msg`. */
+  def failIf(bad: Column, msg: String, value: Column): Column =
+    F.when(bad, F.raise_error(F.lit(Raised + msg))).otherwise(value)
 
   /** Snapshot-read the corpus as parquet, treating a part-file-less dir as
     * an EMPTY index of `emptySchema` (index.build over empty input writes
@@ -688,21 +717,23 @@ private[graft] object IndexSnapshot {
 }
 
 /** Success-deferred index append with the STREAMING read-back shortcut,
-  * shared by the flat-layout dedup families (exact/minhash/ngram/simhash;
-  * dedup.embedding's banded partitioned write has its own copy of the same
-  * idea). Batch mode pins the plan-side survivors frame and appends it on
-  * success. Streaming mode (`_stream_readback_dir` set by the sink)
-  * instead re-reads the batch's just-written output partition inside the
-  * deferred action — one columnar scan of exactly the survivor rows,
-  * replacing a re-run of the whole probe DAG (the r12 job-count work) —
-  * and re-derives the index rows from it: signatures are deterministic
-  * functions of the content, so derive(written rows) ≡ the plan-side
-  * signature frame. It is also the stronger consistency statement (the
-  * index grows by what the output durably holds), and an all-duplicates
-  * batch (no partition written) appends nothing at zero jobs. */
+  * shared by every index_append: the flat dedup corpora (exact, minhash,
+  * ngram, simhash) and dedup.embedding's partitioned lsh corpus
+  * (`partitionBy` = the layout's partition columns). Batch mode pins the
+  * plan-side survivors frame and appends it on success. Streaming mode
+  * (`_stream_readback_dir` set by the sink) instead re-reads the batch's
+  * just-written output partition inside the deferred action — one
+  * columnar scan of exactly the survivor rows, replacing a re-run of the
+  * whole probe DAG (the r12 job-count work) — and re-derives the index
+  * rows from it: signatures are deterministic functions of the content,
+  * so derive(written rows) ≡ the plan-side index rows. It is also the
+  * stronger consistency statement (the index grows by what the output
+  * durably holds), and an all-duplicates batch (no partition written)
+  * appends nothing at zero jobs. */
 private[graft] object DeferredAppend {
   def apply(ctx: graft.core.StageContext, path: String, streamTag: Option[String],
-      planSurvivors: => DataFrame)(derive: DataFrame => DataFrame): Unit = {
+      planSurvivors: => DataFrame, partitionBy: Seq[String] = Nil)
+      (derive: DataFrame => DataFrame): Unit = {
     val readback = ctx.cfg.strOpt("_stream_readback_dir").filter(_ => streamTag.isDefined)
     readback match {
       case Some(rb) =>
@@ -711,13 +742,14 @@ private[graft] object DeferredAppend {
               GraftFs.listFilesRec(rb).exists(_._1.endsWith(".parquet"))) {
             val rows = ctx.spark.read.parquet(rb)
               .select(ctx.primary.columns.map(F.col).toIndexedSeq: _*)
-            IndexSnapshot.append(derive(rows), IndexSnapshot.corpusDir(path), streamTag)
+            IndexSnapshot.append(derive(rows), IndexSnapshot.corpusDir(path), streamTag,
+              partitionBy)
           }
         }
       case None =>
         val pinned = ctx.pin(planSurvivors)
         ctx.deferToSuccess(() =>
-          IndexSnapshot.append(pinned, IndexSnapshot.corpusDir(path), streamTag))
+          IndexSnapshot.append(pinned, IndexSnapshot.corpusDir(path), streamTag, partitionBy))
     }
   }
 }
@@ -777,6 +809,11 @@ object DedupEmbeddingOp extends Stage {
   val name = "dedup.embedding"
   val kind = StageKind.Transform
 
+  // 32 planes / 4 blocks = 8-bit blocks → 256 buckets per block: keeps
+  // bucket population ~N/256 so the self-join stays near-linear (16-bit
+  // sigs with 4-bit blocks put ~N/16 rows in every bucket → quadratic)
+  private val Defaults = LshDefaults(planes = 32L)
+
   /** tight-loop cosine UDF (double arrays) — kept for spec parity checks;
     * plan-side verification goes through the codegen'd `cosine_sim`
     * Catalyst expression instead (identical math: min-length loop,
@@ -795,23 +832,6 @@ object DedupEmbeddingOp extends Stage {
   /** callers must GraftFunctions.ensureRegistered the session first */
   def cosine(a: Column, b: Column): Column = F.call_function("cosine_sim", a, b)
 
-  /** the `blocks` bucket keys of a signature column — THE block-key
-    * expression: index.build type=lsh, the self-join, the index probe and
-    * index_append must all agree or buckets silently miss. */
-  def blockKeys(sig: Column, blocks: Int, width: Int): Column =
-    F.array((0 until blocks).map { j =>
-      F.shiftrightunsigned(sig, j * width).bitwiseAND(F.lit((1L << width) - 1L))
-    }: _*)
-
-  /** Hamming prefilter bound: a pair at cosine >= threshold differs on an
-    * expected h·acos(cos)/π bits; allow +4σ so recall stays ~1 while a
-    * random pair (expected h/2 differing bits) is almost surely cut
-    * before the exact-cosine verify. */
-  def maxBitsFor(h: Int, threshold: Double): Int = {
-    val expBits = h * (math.acos(math.min(1.0, threshold)) / math.Pi)
-    math.ceil(expBits + 4 * math.sqrt(h) / 2).toInt
-  }
-
   /** h-bit hyperplane signature of a float-array column (seeded, dim known);
     * one pass over the vector computing all h dots.
     *
@@ -820,7 +840,7 @@ object DedupEmbeddingOp extends Stage {
     * between (index builds and appends): InferFiltersFromGenerate infers
     * `size(keys(UDF(v))) > 0 AND isnotnull(...)` below the Generate, and
     * the pushed filter re-evaluates the UDF — measured 3 evaluations per
-    * row on the bands build (guide §4.4; BandsBuildProbe: the sig pass
+    * row on the bands build (guide §4.4; OPTIMIZATION_r14 §1: the sig pass
     * alone 0.6 s, with the explode 1.7-2.0 s on identical data). The
     * values are deterministic either way — the flag only stops the
     * optimizer duplicating the expression. Probe paths keep the default:
@@ -867,51 +887,34 @@ object DedupEmbeddingOp extends Stage {
     val cfg = ctx.cfg
     val id = cfg.str("id_column")
     val vecCol = cfg.str("vector_column")
-    // 32 planes / 4 blocks = 8-bit blocks → 256 buckets per block: keeps
-    // bucket population ~N/256 so the self-join stays near-linear (16-bit
-    // sigs with 4-bit blocks put ~N/16 rows in every bucket → quadratic).
     val threshold = cfg.doubleOr("threshold", 0.95)
-    val h = cfg.longOr("num_planes", 32L).toInt
-    val blocks = cfg.longOr("blocks", 4L).toInt
-    // same loud check as index.build type=lsh / dedup.minhash: a
-    // non-divisible width would silently ignore the trailing plane bits
-    if (cfg.strOr("blocking", "pigeonhole") == "pigeonhole" && h % blocks != 0)
-      throw new GraftConfigError(
-        s"dedup.embedding: num_planes=$h must divide evenly into blocks=$blocks")
-    val seed = cfg.longOr("seed", 11L)
+    val blocking = cfg.strOr("blocking", "pigeonhole")
+    val layout = blocking match {
+      case "ivf" => None
+      case b => Some(LshLayout.byName(b).getOrElse(throw new GraftConfigError(
+        s"dedup.embedding: blocking must be pigeonhole|bands|ivf, got '$b'")))
+    }
     val dim = cfg.longOpt("dim").map(_.toInt).getOrElse(
-      ctx.primary.select(F.size(F.col(vecCol))).head(1)
-        .headOption.map(_.getInt(0)).getOrElse(0))   // empty corpus → no-op
-    val width = h / blocks
-
-    val maxBits = maxBitsFor(h, threshold)
+      LshIndex.firstDim(ctx.primary, F.col(vecCol)).getOrElse(0))   // empty corpus → no-op
 
     val rankKey = DedupRank.keyFor(cfg, "id")
     val base = Parallelize(ctx).select(
       Seq(F.col(id).alias("id"), F.col(vecCol).alias("vec")) ++
         cfg.strOpt("keep_by").map(F.col): _*)
     val (reps, exactDups) = ExactCollapse(base, "id", "vec", rankKey, ctx.deferToCleanup)
-    val nearPairs = cfg.strOr("blocking", "pigeonhole") match {
-      case "pigeonhole" =>
-        val sigs = ctx.pin(reps
-          .withColumn("sig", hyperplaneSig(F.col("vec"), dim, h, seed)))
-        selfNearPairs(sigs, blocks, width, maxBits, threshold)
-      case "bands" =>
-        // the 100 TB blocking (see ScaleProbe / BENCH_NOTES r6): pigeonhole
-        // candidates are N²/2^width with width CAPPED by the recall
-        // guarantee, so at corpus scale buckets go quadratic; banded LSH
-        // trades the guarantee for a free-width knob (random collisions
-        // 2^-r per band; pick band_planes ≈ log2 corpus size)
-        val bands = cfg.longOr("bands", 16L).toInt
-        val r = cfg.longOr("band_planes", 16L).toInt
-        if (bands < 1) throw new GraftConfigError(
-          s"dedup.embedding: bands must be >= 1, got $bands")
-        if (r < 1 || r > 63) throw new GraftConfigError(
-          s"dedup.embedding: band_planes must be in [1, 63], got $r")
-        val sigs = ctx.pin(reps
-          .withColumn("bsig", bandSignatures(F.col("vec"), dim, bands, r, seed)))
-        bandedSelfNearPairs(sigs, threshold)
-      case "ivf" =>
+    val nearPairs = layout match {
+      case Some(l) =>
+        // bands is the 100 TB blocking (see ScaleProbe / BENCH_NOTES r6):
+        // pigeonhole candidates are N²/2^width with width CAPPED by the
+        // recall guarantee, so at corpus scale buckets go quadratic; banded
+        // LSH trades the guarantee for a free-width knob (random collisions
+        // 2^-r per band; pick band_planes ≈ log2 corpus size). Same loud
+        // parameter checks as index.build (e.g. a non-divisible width
+        // would silently ignore the trailing plane bits).
+        val p = LshIndex.configured(name, cfg, Defaults, l, dim)
+        selfNearPairs(l, p, ctx.pin(reps.withColumn("sig", l.signature(F.col("vec"), p))),
+          threshold)
+      case None =>
         // SemDeDup-style cluster blocking (Abbas et al. 2023): candidates
         // are same-cell pairs under a coarse quantizer — Σ n_c² over
         // cells ≈ N²/nlist when balanced, so nlist is the corpus-scale
@@ -923,6 +926,7 @@ object DedupEmbeddingOp extends Stage {
         // type=ivf|ivfpq coarse quantizer (frozen — cells consistent with
         // cluster.assign tags and every knn probe of that index);
         // otherwise seeded in-op Lloyd's on a bounded sample.
+        val seed = cfg.longOr("seed", 11L)
         val nlist = cfg.longOr("nlist", 16L).toInt
         if (nlist < 1) throw new GraftConfigError(
           s"dedup.embedding: nlist must be >= 1, got $nlist")
@@ -954,8 +958,6 @@ object DedupEmbeddingOp extends Stage {
         val sigs = ctx.pin(reps
           .withColumn("cell", assign(F.col("vec").cast("array<float>"))))
         cellSelfNearPairs(sigs, threshold)
-      case other => throw new GraftConfigError(
-        s"dedup.embedding: blocking must be pigeonhole|bands|ivf, got '$other'")
     }
     exactDups.unionByName(DedupPairs.dropped(nearPairs,
       cfg.boolOr("transitive", false),
@@ -963,28 +965,17 @@ object DedupEmbeddingOp extends Stage {
   }
 
   /** blocked self-join over (id, vec, sig) reps → verified cosine pairs
-    * (id_a < id_b). Candidate pairs stay NARROW (ids + 64-bit sigs, no
-    * vectors): the bucket self-join and pair dedup shuffle ~24 B/row
-    * instead of two full embedding payloads per row; vectors re-attach
-    * only to surviving candidates — an equi-join on id that AQE turns
-    * into a broadcast when the corpus is small and a plain hash join
-    * keyed on id when it isn't (never force-broadcast the corpus: at
-    * 100 TB the candidate list is the small side). */
-  private def selfNearPairs(sigs: DataFrame, blocks: Int, width: Int,
-      maxBits: Int, threshold: Double): DataFrame = {
-    val blocked = sigs.select(F.col("id"), F.col("sig"),
-      F.posexplode(blockKeys(F.col("sig"), blocks, width)))
-      .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_val")
-
-    val lhs = blocked.select(F.col("block_idx"), F.col("block_val"), F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    val rhs = blocked.select(F.col("block_idx"), F.col("block_val"), F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    val candidates = lhs.join(rhs, Seq("block_idx", "block_val"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      // cheap codegen'd signature-agreement prefilter before any shuffle
-      .filter(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= maxBits)
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
-    verifyCosine(candidates, sigs.select(F.col("id"), F.col("vec")), threshold)
-  }
+    * (id_a < id_b). Candidate pairs stay NARROW (ids + signatures, no
+    * vectors): the bucket self-join and pair dedup shuffle a few bytes per
+    * row instead of two full embedding payloads; vectors re-attach only to
+    * surviving candidates — an equi-join on id that AQE turns into a
+    * broadcast when the corpus is small and a plain hash join keyed on id
+    * when it isn't (never force-broadcast the corpus: at 100 TB the
+    * candidate list is the small side). */
+  private def selfNearPairs(l: LshLayout, p: SigParams, sigs: DataFrame,
+      threshold: Double): DataFrame =
+    verifyCosine(LshIndex.candidates(l, p, sigs, sigs, "id", "a", "b", threshold, self = true),
+      sigs.select(F.col("id"), F.col("vec")), threshold)
 
   /** cluster-blocked self-join over (id, vec, cell) reps → verified cosine
     * pairs (id_a < id_b). Same narrow-candidate discipline; each row
@@ -997,22 +988,6 @@ object DedupEmbeddingOp extends Stage {
     val candidates = lhs.join(rhs, Seq("cell"))
       .filter(F.col("id_a") < F.col("id_b"))
       .select("id_a", "id_b")
-    verifyCosine(candidates, sigs.select(F.col("id"), F.col("vec")), threshold)
-  }
-
-  /** banded-LSH self-join over (id, vec, bsig) reps → verified cosine
-    * pairs (id_a < id_b). Same narrow-candidate discipline as
-    * selfNearPairs; no Hamming prefilter (exact band agreement IS the
-    * filter — candidates are sparse by construction at any corpus size),
-    * exact cosine verifies every candidate. */
-  private def bandedSelfNearPairs(sigs: DataFrame, threshold: Double): DataFrame = {
-    val blocked = sigs.select(F.col("id"), F.posexplode(F.col("bsig")))
-      .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_val")
-    val lhs = blocked.select(F.col("band_idx"), F.col("band_val"), F.col("id").alias("id_a"))
-    val rhs = blocked.select(F.col("band_idx"), F.col("band_val"), F.col("id").alias("id_b"))
-    val candidates = lhs.join(rhs, Seq("band_idx", "band_val"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b").dropDuplicates("id_a", "id_b")
     verifyCosine(candidates, sigs.select(F.col("id"), F.col("vec")), threshold)
   }
 
@@ -1029,348 +1004,61 @@ object DedupEmbeddingOp extends Stage {
       .select("id_a", "id_b")
 
   /** `index_path` — dedup THIS batch against an `index.build type=lsh`
-    * corpus (plus within-batch pairs): the embedding sibling of
-    * dedup.minhash index_path, completing the incremental-ingestion
-    * triple (exact / minhash / embedding). The batch's block keys join
-    * the (block, bucket)-partitioned index — only colliding buckets are
-    * read — index-side signatures are recomputed ONLY for the rows those
-    * buckets hold (the index stores rows once per block; sigs are
-    * h·dim dot products, cheap next to shipping them ×blocks), the
-    * Hamming prefilter prunes on narrow sigs, and exact cosine verifies
-    * the survivors. Same snapshot / meta-validation / success-deferred
-    * `index_append` / explain-placeholder contract as the minhash path;
+    * corpus of either layout (plus within-batch pairs): the embedding
+    * sibling of dedup.minhash index_path. The batch's keys join ONLY the
+    * colliding index partitions (LshIndex.crossPairs), the layout's
+    * prefilter prunes on narrow signatures, and exact cosine verifies the
+    * survivors. Same snapshot / meta-validation / success-deferred
+    * `index_append` / explain-placeholder contract as the text families;
     * keep_by and transitive=true are rejected (index wins, pairwise only).
-    * Appending requires the batch to carry the index's row columns. */
+    * Appending requires the batch to carry the index's row columns.
+    * Streaming (`_stream_batch_tag` set, bands layout only): the snapshot
+    * excludes this batch's own `ingest_tag=<tag>` dirs (retry self-match
+    * exclusion) and the append dynamically overwrites exactly those dirs —
+    * idempotent, which is what makes dedup=embedding streamable. */
   private def incrementalDuplicateIds(ctx: StageContext, path: String): DataFrame = {
     val cfg = ctx.cfg
+    val id = cfg.str("id_column")
+    val vecCol = cfg.str("vector_column")
+    val threshold = cfg.doubleOr("threshold", 0.95)
     if (cfg.has("keep_by") || cfg.boolOr("transitive", false))
       throw new GraftConfigError(
         "dedup.embedding: keep_by / transitive=true are not supported with index_path " +
         "(the index is immutable — only the pairwise min-id policy is well-defined)")
-    // the index's own meta decides the probe blocking: a `band_planes`
-    // field marks the banded layout (index.build type=lsh blocking=bands),
-    // anything else is the pigeonhole (block, pbucket) layout. An explicit
-    // `blocking` key that contradicts the layout fails loud instead of
-    // silently probing with mismatched signatures.
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val metaExists =
-      GraftFs.isDir(s"$path/meta")
-    if (!metaExists && !explainOnly)
-      throw new GraftPlanError(
-        s"dedup.embedding: no lsh index at $path — run index.build type=lsh first")
-    val bandsLayout =
-      if (!metaExists) cfg.strOr("blocking", "pigeonhole") == "bands" // explain placeholder
-      else IndexMeta.schemaFields(ctx.spark, s"$path/meta").contains("band_planes")
-    cfg.strOpt("blocking").foreach { b =>
-      val layoutName = if (bandsLayout) "bands" else "pigeonhole"
-      if (metaExists && b != layoutName) throw new GraftConfigError(
-        s"dedup.embedding: blocking = $b conflicts with the index at $path, which is " +
-        s"$layoutName-partitioned — the index layout decides the probe blocking")
-    }
-    if (bandsLayout) incrementalBandedIds(ctx, path)
-    else incrementalPigeonholeIds(ctx, path)
-  }
-
-  /** Banded incremental probe — the composition of the two flagship scale
-    * features: `blocking=bands` (candidate reduction 2^band_planes per
-    * band, the corpus-scale knob) probing an `index.build type=lsh
-    * blocking=bands` corpus (probe-don't-rescan, the corpus-lifetime
-    * knob). The batch's band signatures join ONLY the colliding
-    * (band, pband) index partitions on exact band agreement — no Hamming
-    * prefilter needed, band equality IS the filter — and exact cosine
-    * verifies every candidate. Streaming (`_stream_batch_tag` set): the
-    * index snapshot excludes this batch's own `ingest_tag=<tag>` partition
-    * dirs (retry self-match exclusion) and the append lands via dynamic
-    * partition overwrite of exactly those dirs — idempotent, which is what
-    * makes dedup=embedding streamable where the flat append-dir layouts
-    * are not. */
-  private def incrementalBandedIds(ctx: StageContext, path: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val id = cfg.str("id_column")
-    val vecCol = cfg.str("vector_column")
-    val threshold = cfg.doubleOr("threshold", 0.95)
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val placeholder = explainOnly &&
-      !GraftFs.isDir(s"$path/meta")
+    val index = LshIndex.open(ctx, name, path, Defaults, s"batch vectors in '$vecCol'",
+      LshIndex.firstDim(ctx.primary, F.col(vecCol)))
     val streamTag = cfg.strOpt("_stream_batch_tag")
-    val (bands, r, seed, dim, pdirs) =
-      if (placeholder)
-        (cfg.longOr("bands", 16L).toInt, cfg.longOr("band_planes", 16L).toInt,
-         cfg.longOr("seed", 11L),
-         cfg.longOpt("dim").map(_.toInt).getOrElse(
-           ctx.primary.select(F.size(F.col(vecCol))).head(1)
-             .headOption.map(_.getInt(0)).getOrElse(0)),
-         cfg.longOr("partition_dirs", 64L).toInt)
-      else {
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        val vals = (meta.getAs[Int]("bands"), meta.getAs[Int]("band_planes"),
-          meta.getAs[Long]("seed"), meta.getAs[Int]("dim"), meta.getAs[Int]("pbuckets"))
-        Seq(("bands", vals._1.toLong), ("band_planes", vals._2.toLong), ("seed", vals._3),
-            ("dim", vals._4.toLong), ("partition_dirs", vals._5.toLong))
-          .foreach { case (key, v) =>
-            cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-              throw new GraftConfigError(s"dedup.embedding: $key = $conflicting conflicts " +
-                s"with the index at $path ($key = $v) — cross matches would silently miss"))
-          }
-        vals
-      }
-    // batch-dim-vs-index-dim loud failure, same contract as the pigeonhole
-    // probe (bandSignatures truncates at min(dim, v.length)); skipped under
-    // explain (no upstream jobs) and on later micro-batches of a stream
-    // whose first batch already validated (`_dim_checked` — the check is a
-    // one-row sample, so repeating it per batch buys nothing but a job)
-    if (!placeholder && !explainOnly && !cfg.boolOr("_dim_checked", false))
-      ctx.primary.select(F.size(F.col(vecCol)).as("_sz")).filter(F.col("_sz") >= 0)
-        .head(1).headOption.map(_.getInt(0)).filter(_ != dim).foreach(bd =>
-          throw new GraftConfigError(
-            s"dedup.embedding: batch vectors in '$vecCol' have length $bd but the index " +
-            s"at $path was built with dim = $dim — signatures would silently mismatch"))
-
-    val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(vecCol).alias("vec"))
-    val (reps, exactDups) = ExactCollapse(base, "id", "vec", None, ctx.deferToCleanup)
-    val sigs = ctx.pin(reps
-      .withColumn("bsig", bandSignatures(F.col("vec"), dim, bands, r, seed)))
-
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(id, ctx.primary.schema(id).dataType),
-      org.apache.spark.sql.types.StructField(vecCol, ctx.primary.schema(vecCol).dataType),
-      org.apache.spark.sql.types.StructField("bsig", LongType),
-      org.apache.spark.sql.types.StructField("band", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("pband", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("ingest_tag", org.apache.spark.sql.types.StringType)))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"dedup.embedding: no lsh index at $path — run index.build type=lsh first",
-        corpusSchema, basePath = true,
-        excludeDir = streamTag.map(tg => s"ingest_tag=$tg"))
-
-    // same narrow-shape discipline as the pigeonhole probe: the batch (the
-    // small side) carries its vector through the band join, every joined
-    // row verifies directly — no candidate dedup shuffle, no re-attach
-    // joins; a pair colliding in several bands recomputes one cosine per
-    // collision. pband in the join key is redundant given bsig, but it is
-    // the PARTITION column — pruning skips index dirs the batch never hits.
-    val batchBlocked = sigs.select(F.col("id").alias("id_l"), F.col("vec").alias("v_l"),
-        F.posexplode(F.col("bsig")).as(Seq("band", "bsig")))
-      .withColumn("band", F.col("band").cast("int"))
-      .withColumn("pband", (F.col("bsig") % pdirs).cast("int"))
-    val idxSide = index.select(F.col("band"), F.col("pband"), F.col("bsig"),
-      F.col(id).alias("id_r"), F.col(vecCol).alias("v_r"))
-    val crossDropped = batchBlocked.join(idxSide, Seq("band", "pband", "bsig"))
-      .withColumn("cos", cosine(F.col("v_l").cast("array<double>"), F.col("v_r").cast("array<double>")))
-      .filter(F.col("cos") >= threshold)
-      .select(F.col("id_l").alias("id")).distinct()
-
-    val inBatch = DedupPairs.dropped(bandedSelfNearPairs(sigs, threshold),
-      transitive = false, None, ctx.deferToCleanup)
-    val dropped = exactDups.unionByName(crossDropped).unionByName(inBatch).distinct()
-
-    if (cfg.boolOr("index_append", false)) IndexSnapshot.claimAppend(ctx, "dedup.embedding", path)
-    if (cfg.boolOr("index_append", false) && !explainOnly) {
-      val idxCols = index.columns
-        .filterNot(c => c == "band" || c == "pband" || c == "bsig" || c == "ingest_tag")
-        .toVector
-      if (idxCols.sorted != ctx.primary.columns.toVector.sorted) throw new GraftConfigError(
-        s"dedup.embedding index_append: batch columns (${ctx.primary.columns.mkString(", ")}) " +
-        s"must match the index row columns (${idxCols.mkString(", ")})")
-      def blocked(rows: DataFrame) = rows
-        .withColumn("_bsig", bandSignatures(F.col(vecCol), dim, bands, r, seed,
-          ndExplode = true))
-        .select(F.col("*"), F.posexplode(F.col("_bsig")).as(Seq("band", "bsig")))
-        .drop("_bsig")
-        .withColumn("band", F.col("band").cast("int"))
-        .withColumn("pband", (F.col("bsig") % pdirs).cast("int"))
-        .withColumn("ingest_tag", F.lit(streamTag.getOrElse("base")))
-      // STREAMING read-back: by the time the deferred append fires, the
-      // sink has durably written this batch's survivors to its own output
-      // partition — re-reading that partition (one columnar scan of
-      // exactly the survivor rows) replaces re-running the whole probe
-      // DAG (anti-join against the dropped set and everything under it),
-      // which at gate scale was roughly half the micro-batch's Spark
-      // jobs. It is also the stronger consistency statement: the index
-      // grows by what the OUTPUT actually holds. Batch mode keeps the
-      // plan-side anti-join (there is no written partition to read).
-      val readbackDir = cfg.strOpt("_stream_readback_dir").filter(_ => streamTag.isDefined)
-      val pinnedAppend = readbackDir match {
-        case Some(_) => null // built lazily inside the closure, post-write
-        case None => ctx.pin(blocked(ctx.primary.join(dropped,
-          ctx.primary(id) === dropped("id"), "left_anti")))
-      }
-      // batch: plain append (at-most-once via success deferral); streaming:
-      // dynamic partition OVERWRITE of this batch's own (band, pband, tag)
-      // dirs — a replayed micro-batch re-lands identical rows idempotently
-      ctx.deferToSuccess { () =>
-        val co = readbackDir match {
-          case Some(rb) =>
-            // an all-duplicates batch writes no partition at all — and
-            // appends nothing (skips the write job entirely)
-            if (!GraftFs.isDir(rb) ||
-                !GraftFs.listFilesRec(rb).exists(_._1.endsWith(".parquet"))) null
-            else blocked(spark.read.parquet(rb).select(
-              ctx.primary.columns.map(F.col).toIndexedSeq: _*))
-              .repartition(F.col("band"), F.col("pband"))
-          case None => pinnedAppend.repartition(F.col("band"), F.col("pband"))
-        }
-        def land(): Unit = if (co != null) {
-          // crash repair inside the claim (see IndexSnapshot.append)
-          IndexMaintenance.recoverSwap(path)
-          val w = streamTag match {
-            case None    => co.write.mode("append")
-            case Some(_) => co.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-          }
-          w.partitionBy("band", "pband", "ingest_tag").parquet(IndexSnapshot.corpusDir(path))
-        }
-        // batch appends take the shared batch/maintenance lease; a
-        // streaming tag means the query already holds it for its lifetime
-        if (streamTag.isEmpty)
-          graft.streaming.IngestLease.withBatchLease(path, "dedup.embedding index_append")(land())
-        else land()
-      }
-    }
-    dropped
-  }
-
-  private def incrementalPigeonholeIds(ctx: StageContext, path: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val id = cfg.str("id_column")
-    val vecCol = cfg.str("vector_column")
-    if (cfg.strOpt("_stream_batch_tag").isDefined)
+    if (streamTag.isDefined && !index.layout.streamable)
       throw new GraftConfigError(
         "dedup.embedding: streaming ingestion needs a bands-partitioned index " +
-        "(index.build type=lsh blocking=bands) — the pigeonhole layout has no " +
+        s"(index.build type=lsh blocking=bands) — the ${index.layout.name} layout has no " +
         "per-batch idempotent append target")
-    val threshold = cfg.doubleOr("threshold", 0.95)
-
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val placeholder = explainOnly &&
-      !GraftFs.isDir(s"$path/meta")
-    val (h, blocks, seed, dim, pdirs) =
-      if (placeholder)
-        (cfg.longOr("num_planes", 32L).toInt, cfg.longOr("blocks", 4L).toInt,
-         cfg.longOr("seed", 11L),
-         // explicit dim wins; only probe the input when it is absent —
-         // explain should not run upstream jobs the config makes avoidable
-         cfg.longOpt("dim").map(_.toInt).getOrElse(
-           ctx.primary.select(F.size(F.col(vecCol))).head(1).headOption.map(_.getInt(0)).getOrElse(0)),
-         cfg.longOr("partition_dirs", 64L).toInt)
-      else {
-        if (!GraftFs.isDir(s"$path/meta"))
-          throw new GraftPlanError(
-            s"dedup.embedding: no lsh index at $path — run index.build type=lsh first")
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        if (!meta.schema.fieldNames.contains("pbuckets")) throw new GraftConfigError(
-          s"dedup.embedding: the index at $path predates the (block, pbucket) layout — " +
-          "rebuild it with index.build type=lsh mode=overwrite")
-        val vals = (meta.getAs[Int]("num_planes"), meta.getAs[Int]("blocks"),
-          meta.getAs[Long]("seed"), meta.getAs[Int]("dim"), meta.getAs[Int]("pbuckets"))
-        Seq(("num_planes", vals._1.toLong), ("blocks", vals._2.toLong), ("seed", vals._3),
-            ("dim", vals._4.toLong), ("partition_dirs", vals._5.toLong))
-          .foreach { case (key, v) =>
-            cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-              throw new GraftConfigError(s"dedup.embedding: $key = $conflicting conflicts " +
-                s"with the index at $path ($key = $v) — cross matches would silently miss"))
-          }
-        vals
-      }
-    // the batch's actual vector length must equal the index dim:
-    // hyperplaneSig truncates at min(dim, v.length), so a mismatched
-    // batch would silently compute signatures over a prefix and miss
-    // cross matches instead of failing loud. One-row probe, same as the
-    // non-incremental path's dim inference; skipped under explain (no
-    // upstream jobs) — the probe-vs-meta check then runs at execution —
-    // and on later micro-batches of a stream whose first batch validated
-    // (`_dim_checked`; the pigeonhole layout rejects streaming anyway, so
-    // this is for contract symmetry with the banded path).
-    if (!placeholder && !explainOnly && !cfg.boolOr("_dim_checked", false))
-      ctx.primary.select(F.size(F.col(vecCol)).as("_sz")).filter(F.col("_sz") >= 0)
-        .head(1).headOption.map(_.getInt(0)).filter(_ != dim).foreach(bd =>
-          throw new GraftConfigError(
-            s"dedup.embedding: batch vectors in '$vecCol' have length $bd but the index " +
-            s"at $path was built with dim = $dim — signatures would silently mismatch"))
-    val width = h / blocks
-    val maxBits = maxBitsFor(h, threshold)
 
     val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(vecCol).alias("vec"))
     val (reps, exactDups) = ExactCollapse(base, "id", "vec", None, ctx.deferToCleanup)
-    val sigs = ctx.pin(reps.withColumn("sig", hyperplaneSig(F.col("vec"), dim, h, seed)))
-
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(id, ctx.primary.schema(id).dataType),
-      org.apache.spark.sql.types.StructField(vecCol, ctx.primary.schema(vecCol).dataType),
-      org.apache.spark.sql.types.StructField("block", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("pbucket", org.apache.spark.sql.types.IntegerType),
-      org.apache.spark.sql.types.StructField("bucket", LongType)))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"dedup.embedding: no lsh index at $path — run index.build type=lsh first",
-        corpusSchema, basePath = true)
-
-    // the batch side carries its vector THROUGH the bucket join (the batch
-    // is the small side of the incremental shape — vec × blocks rows),
-    // and every joined row is verified directly: no candidate
-    // dropDuplicates (a wide extra shuffle; and deduping (id_l, id_r)
-    // alone would pick an arbitrary vector when an appended index holds
-    // one id twice) and no re-attach joins. A pair colliding in several
-    // blocks recomputes one cosine per collision — cheap next to
-    // shuffling vector payloads again; the only exchange is the bucket
-    // join itself, on the pruned index slice.
-    val batchBlocked = sigs.select(F.col("id").alias("id_l"), F.col("sig").alias("sig_l"),
-      F.col("vec").alias("v_l"),
-      F.posexplode(blockKeys(F.col("sig"), blocks, width)))
-      .withColumnRenamed("pos", "block").withColumnRenamed("col", "bucket")
-      .withColumn("block", F.col("block").cast("int"))
-      .withColumn("pbucket", (F.col("bucket") % pdirs).cast("int"))
-
-    val idxSide = index.select(F.col("block"), F.col("pbucket"), F.col("bucket"),
-      F.col(id).alias("id_r"), F.col(vecCol).alias("v_r"))
-      .withColumn("sig_r", hyperplaneSig(F.col("v_r"), dim, h, seed))
-
-    // pbucket in the join key is redundant given bucket, but it is the
-    // PARTITION column — dynamic pruning can skip index dirs the batch
-    // never touches
-    val crossDropped = batchBlocked.join(idxSide, Seq("block", "pbucket", "bucket"))
-      .filter(F.bit_count(F.col("sig_l").bitwiseXOR(F.col("sig_r"))) <= maxBits)
-      .withColumn("cos", cosine(F.col("v_l").cast("array<double>"), F.col("v_r").cast("array<double>")))
-      .filter(F.col("cos") >= threshold)
+    val sigs = ctx.pin(reps.withColumn("sig", index.signature(F.col("vec"))))
+    val corpus = index.corpus(ctx.primary.schema(id), ctx.primary.schema(vecCol), streamTag)
+    val vsIndex = LshIndex.crossPairs(index, sigs, corpus, id, vecCol, threshold)
       .select(F.col("id_l").alias("id")).distinct()
-
-    val inBatch = DedupPairs.dropped(
-      selfNearPairs(sigs, blocks, width, maxBits, threshold),
+    val inBatch = DedupPairs.dropped(selfNearPairs(index.layout, index.params, sigs, threshold),
       transitive = false, None, ctx.deferToCleanup)
-    val dropped = exactDups.unionByName(crossDropped).unionByName(inBatch).distinct()
+    val dropped = exactDups.unionByName(vsIndex).unionByName(inBatch).distinct()
 
-    if (cfg.boolOr("index_append", false)) IndexSnapshot.claimAppend(ctx, "dedup.embedding", path)
-    if (cfg.boolOr("index_append", false) && !explainOnly) {
-      val idxCols = index.columns
-        .filterNot(c => c == "block" || c == "bucket" || c == "pbucket").toVector
-      if (idxCols.sorted != ctx.primary.columns.toVector.sorted) throw new GraftConfigError(
-        s"dedup.embedding index_append: batch columns (${ctx.primary.columns.mkString(", ")}) " +
-        s"must match the index row columns (${idxCols.mkString(", ")})")
-      val survivorRows = ctx.primary.join(dropped,
-        ctx.primary(id) === dropped("id"), "left_anti")
-      val blockedRows = survivorRows
-        .withColumn("_sig", hyperplaneSig(F.col(vecCol), dim, h, seed,
-          ndExplode = true))
-        .select(F.col("*"), F.posexplode(blockKeys(F.col("_sig"), blocks, width))
-          .as(Seq("block", "bucket")))
-        .drop("_sig")
-        .withColumn("pbucket", (F.col("bucket") % pdirs).cast("int"))
-      val pinnedAppend = ctx.pin(blockedRows)
-      // same dir co-location as index.build type=lsh: one appended file
-      // per populated dir, not one per (task × dir)
-      ctx.deferToSuccess(() =>
-        graft.streaming.IngestLease.withBatchLease(path, "dedup.embedding index_append") {
-          pinnedAppend.repartition(F.col("block"), F.col("pbucket"))
-            .write.mode("append").partitionBy("block", "pbucket").parquet(IndexSnapshot.corpusDir(path))
-        })
+    if (cfg.boolOr("index_append", false)) {
+      IndexSnapshot.claimAppend(ctx, name, path)
+      if (!cfg.boolOr("_explain_only", false)) {
+        val idxCols = corpus.columns.filterNot(index.layout.corpusCols.contains).toVector
+        if (idxCols.sorted != ctx.primary.columns.toVector.sorted) throw new GraftConfigError(
+          s"dedup.embedding index_append: batch columns (${ctx.primary.columns.mkString(", ")}) " +
+          s"must match the index row columns (${idxCols.mkString(", ")})")
+        def rows(df: DataFrame) = LshIndex.corpusRows(index.layout, index.params, df, vecCol,
+          s"$name index_append", streamTag.getOrElse("base"))
+        // survivors join the index only once the pipeline durably wrote
+        // its outputs — a failed run must not grow the index
+        DeferredAppend(ctx, path, streamTag,
+          rows(ctx.primary.join(dropped, ctx.primary(id) === dropped("id"), "left_anti")),
+          index.layout.partitionCols)(rows)
+      }
     }
     dropped
   }

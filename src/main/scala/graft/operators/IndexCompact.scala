@@ -89,17 +89,20 @@ private[graft] object IndexMaintenance {
       // needs no values — and must not throw on a zero-row meta table
       val fields = IndexMeta.schemaFields(spark, s"$path/meta")
       if (fields.contains("ksub")) ("ivfpq", Seq("cell"))
-      else if (fields.contains("band_planes")) ("lsh", Seq("band", "pband", "ingest_tag"))
-      else if (fields.contains("pbuckets")) ("lsh", Seq("block", "pbucket"))
-      else TextSigFamily.ofFields(fields) match {
-        case Some(family) => (family.name, Seq.empty)
-        case None if fields.contains("columns") => ("exact", Seq.empty)
-        case None => throw new GraftPlanError(
-          s"$op: unrecognized index meta at $path (fields: ${fields.mkString(", ")})")
-      }
+      else LshLayout.ofFields(fields).map(l => ("lsh", l.partitionCols))
+        .orElse(TextSigFamily.ofFields(fields).map(f => (f.name, Seq.empty)))
+        .getOrElse {
+          if (fields.contains("columns")) ("exact", Seq.empty)
+          else throw new GraftPlanError(
+            s"$op: unrecognized index meta at $path (fields: ${fields.mkString(", ")})")
+        }
     } else if (GraftFs.isDir(s"$path/centroids")) ("ivf", Seq("cell"))
     else throw new GraftPlanError(s"$op: no index at $path — run index.build first")
   }
+
+  /** The family name of the index at `path`, for errors that name it. */
+  def familyAt(spark: org.apache.spark.sql.SparkSession, path: String, op: String): String =
+    scala.util.Try(layout(spark, path, op)._1).getOrElse("unrecognized")
 }
 
 /** index.compact — physical compaction of an `index.build` index: rewrite
@@ -640,15 +643,11 @@ object IndexStatsOp extends Stage {
     // the SIGNATURE row count (bands rows per vector), so vectors =
     // rows / bands and occupancy = vectors / 2^band_planes.
     val occupancy: Option[Double] =
-      if (!GraftFs.isDir(s"$path/meta")) None
+      if (family != "lsh") None
       else {
         val m = IndexMeta.head(spark, s"$path/meta")
-        if (!m.schema.fieldNames.contains("band_planes")) None
-        else {
-          val bands = m.getAs[Int]("bands").toLong
-          val planes = m.getAs[Int]("band_planes")
-          Some(rows.toDouble / math.max(1L, bands) / (1L << planes))
-        }
+        LshLayout.ofFields(m.schema.fieldNames.toSet)
+          .flatMap(l => l.occupancy(l.fromMeta(m), rows))
       }
     // ivfpq only: measured vector-column bytes / code-column bytes over
     // the corpus footers — the per-index, observable version of the

@@ -122,15 +122,22 @@ object KnnJoinOp extends Stage {
         .alias("cosine"))
     .filter(F.col("cosine").isNotNull && !F.isnan(F.col("cosine")))
 
-  /** batch vectors must match the index dim (the signature UDFs truncate
-    * silently — the dedup.embedding index-probe contract); skipped under
-    * explain (no upstream jobs) */
+  /** query vectors must match the ivf index dim; skipped under explain
+    * (no upstream jobs) — lsh indexes check it in LshIndex.open */
   private def checkQueryDim(qSide: DataFrame, path: String, dim: Int): Unit =
-    qSide.select(F.size(F.col("_qv")).as("_sz")).filter(F.col("_sz") >= 0)
-      .head(1).headOption.map(_.getInt(0)).filter(_ != dim).foreach(bd =>
-        throw new GraftConfigError(
-          s"knn.join: query vectors have length $bd but the index at $path was " +
-          s"built with dim = $dim"))
+    LshIndex.firstDim(qSide, F.col("_qv")).filter(_ != dim).foreach(bd =>
+      throw new GraftConfigError(
+        s"knn.join: query vectors have length $bd but the index at $path was " +
+        s"built with dim = $dim"))
+
+  /** the index corpus must hold `cols`, and an orderable `cId` */
+  private def requireIndexed(corpus: DataFrame, path: String, cId: String,
+      cols: Seq[String]): Unit = {
+    (cId +: cols).foreach(c => if (!corpus.columns.contains(c)) throw new GraftPlanError(
+      s"knn.join: index at $path has no '$c' column (has: ${corpus.columns.mkString(", ")}) " +
+      "— right_id/right_vector must name the indexed columns"))
+    requireOrderable(cId, corpus.schema(cId).dataType)
+  }
 
   def apply(ctx: StageContext): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
@@ -165,13 +172,12 @@ object KnnJoinOp extends Stage {
 
     val (pairs, corpusIdType) = indexPath match {
       case Some(path) =>
-        // index-pruned batch probe — the 100 TB path. Three layouts, each
-        // detected from the index's own metadata: lsh pigeonhole
-        // (block, pbucket), lsh bands (band, pband, ingest_tag), ivf
-        // (cell). CLI `explain` with no index yet (the earlier skipped
+        // index-pruned batch probe — the 100 TB path, the family detected
+        // from the index's own metadata: lsh (either layout), ivf (cell)
+        // or ivfpq. CLI `explain` with no index yet (the earlier skipped
         // index.build barrier would have created it) → empty placeholder
-        // typed by `index_type`/`blocking`, same contract as the
-        // dedup.embedding index probe; with an existing index, explain
+        // typed by `index_type` (and, for lsh, `blocking`), same contract as
+        // the dedup.embedding index probe; with an existing index, explain
         // still reads the tiny meta but never runs query-side jobs.
         val explainOnly = cfg.boolOr("_explain_only", false)
         val hasMeta = GraftFs.exists(s"$path/meta")
@@ -182,27 +188,17 @@ object KnnJoinOp extends Stage {
             s"knn.join: no index at '$path' — run an index.build stage first")
         val family =
           if (placeholder) cfg.strOr("index_type", "lsh") match {
-            case "ivf" => "ivf"
-            case "ivfpq" => "ivfpq"
-            case "lsh" =>
-              if (cfg.strOr("blocking", "pigeonhole") == "bands") "lsh_bands" else "lsh_pigeonhole"
+            case ok @ ("lsh" | "ivf" | "ivfpq") => ok
             case other => throw new GraftConfigError(
               s"knn.join: index_type must be lsh|ivf|ivfpq, got '$other'")
           }
-          else IndexMaintenance.layout(ctx.spark, path, "knn.join") match {
-            case ("lsh", cols) => if (cols.contains("band")) "lsh_bands" else "lsh_pigeonhole"
-            case ("ivf", _)    => "ivf"
-            case ("ivfpq", _)  => "ivfpq"
-            case (fam, _) => throw new GraftConfigError(
-              s"knn.join: the index at $path is a $fam text index, not a vector index")
+          else IndexMaintenance.layout(ctx.spark, path, "knn.join")._1 match {
+            case ok @ ("lsh" | "ivf" | "ivfpq") => ok
+            case fam => throw new GraftConfigError(s"knn.join: the index at $path is a " +
+              s"$fam index, not a vector index (lsh, ivf or ivfpq)")
           }
         family match {
-          case "lsh_pigeonhole" =>
-            lshPigeonholePairs(ctx, path, placeholder, explainOnly, qSide, queries,
-              qId, qVec, cId, cVec)
-          case "lsh_bands" =>
-            lshBandsPairs(ctx, path, placeholder, explainOnly, qSide, queries,
-              qId, qVec, cId, cVec)
+          case "lsh" => lshPairs(ctx, path, qSide, queries, qId, qVec, cId, cVec)
           case "ivf" =>
             ivfPairs(ctx, path, placeholder, explainOnly, qSide, queries,
               qId, qVec, cId, cVec)
@@ -289,177 +285,44 @@ object KnnJoinOp extends Stage {
     }(org.apache.spark.sql.catalyst.encoders.RowEncoder.encoderFor(outSchema))
   }
 
-  /** LSH pigeonhole probe: each query's block keys (optionally widened to
-    * the Hamming-`probe_hamming` bucket neighborhood, the knn.lsh
-    * multi-probe knob) join ONLY the colliding (block, pbucket) index
-    * partitions; the corpus is never fully scanned. Same join shape as
-    * the dedup.embedding index probe. */
-  private def lshPigeonholePairs(ctx: StageContext, path: String, placeholder: Boolean,
-      explainOnly: Boolean, qSide: DataFrame, queries: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String): (DataFrame, DataType) = {
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val (h, blocks, seed, dim, pd) =
-      if (placeholder)
-        (cfg.longOr("num_planes", 16L).toInt, cfg.longOr("blocks", 4L).toInt,
-         cfg.longOr("seed", 11L), cfg.longOr("dim", 0L).toInt,
-         cfg.longOr("partition_dirs", 64L).toInt)
-      else {
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        if (!meta.schema.fieldNames.contains("pbuckets")) throw new GraftConfigError(
-          s"knn.join: the index at $path predates the (block, pbucket) layout — " +
-          "rebuild it with index.build type=lsh mode=overwrite")
-        (meta.getAs[Int]("num_planes"), meta.getAs[Int]("blocks"),
-         meta.getAs[Long]("seed"), meta.getAs[Int]("dim"), meta.getAs[Int]("pbuckets"))
-      }
-    val width = h / blocks
-    if (cfg.has("probe_bands")) throw new GraftConfigError(
-      "knn.join: probe_bands applies only to a bands-layout index " +
-      "(index.build type=lsh blocking=bands) — this index uses the pigeonhole " +
-      "layout, whose scan has no ×bands amplification to bound")
-    val probeD = cfg.longOr("probe_hamming", 0L).toInt
-    if (probeD < 0 || probeD > width) throw new GraftConfigError(
-      s"knn.join: probe_hamming must be in [0, $width] (the block width), got $probeD")
-    if (probeD > 0 && width > 12) throw new GraftConfigError(
-      s"knn.join: probe_hamming > 0 needs an enumerable bucket space (block width " +
-      s"<= 12, index has $width) — rebuild the index with more blocks")
-    if (!explainOnly) checkQueryDim(qSide, path, dim)
-    val qBlocked0 = qSide
-      .withColumn("_sig", DedupEmbeddingOp.hyperplaneSig(F.col("_qv"), dim, h, seed,
-        ndExplode = true))
-      .select(F.col("query_id"), F.col("_qv"),
-        F.posexplode(DedupEmbeddingOp.blockKeys(F.col("_sig"), blocks, width)))
-      .withColumnRenamed("pos", "block").withColumnRenamed("col", "bucket")
-      .withColumn("block", F.col("block").cast("int"))
-    val qBlocked = (if (probeD == 0) qBlocked0 else {
-        // widen each exact bucket to its Hamming-d neighborhood; the
-        // explode keeps the join an equi join on pruned partitions
-        val neighborhood = F.udf { b: Long =>
-          (0L until (1L << width)).filter(x =>
-            java.lang.Long.bitCount(x ^ b) <= probeD).toArray
-        }
-        qBlocked0.withColumn("bucket", F.explode(neighborhood(F.col("bucket"))))
-      }).withColumn("pbucket", (F.col("bucket") % pd).cast("int"))
-    // schema comes from the index's own parquet; the empty-index
-    // fallback types corpus_id like the query id (result is empty
-    // either way)
-    val fallbackSchema = StructType(Seq(
-      StructField(cId, queries.schema(qId).dataType),
-      StructField(cVec, queries.schema(qVec).dataType),
-      StructField("block", IntegerType),
-      StructField("pbucket", IntegerType),
-      StructField("bucket", LongType)))
-    val idxRaw =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], fallbackSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"knn.join: no lsh index at $path — run index.build type=lsh first",
-        fallbackSchema, basePath = true)
-    Seq(cId, cVec).foreach(c => if (!idxRaw.columns.contains(c))
-      throw new GraftPlanError(
-        s"knn.join: index at $path has no '$c' column (has: ${idxRaw.columns.mkString(", ")}) " +
-        "— right_id/right_vector must name the indexed columns"))
-    requireOrderable(cId, idxRaw.schema(cId).dataType)
-    val idx = idxRaw.select(F.col("block"), F.col("pbucket"), F.col("bucket"),
-      F.col(cId).alias("corpus_id"), F.col(cVec).cast("array<double>").alias("_cv"))
-    // a pair colliding in several blocks/probed buckets is scored per
-    // collision; the duplicates carry identical (cosine, corpus_id) and
-    // collapse inside the bounded heaps + on their merged output — no
-    // pair-dedup exchange of the raw candidate stream
-    (scored(qBlocked.join(idx, Seq("block", "pbucket", "bucket"))),
-     idxRaw.schema(cId).dataType)
-  }
-
-  /** Banded-LSH probe (index.build type=lsh blocking=bands): each query's
-    * `bands` band signatures join the colliding (band, pband) index
-    * partitions on exact band agreement — candidate reduction is
-    * 2^band_planes per band, the free corpus-scale knob. `probe_hamming`
-    * widens each band signature to its Hamming-d neighborhood
-    * (enumerable band widths only); d = band_planes provably covers every
-    * bucket of every band, and since the banded layout stores each row
-    * once PER BAND, one fully-probed band already spans the whole corpus
-    * — the exhaustive-parity pin mirrors the pigeonhole gate. */
-  private def lshBandsPairs(ctx: StageContext, path: String, placeholder: Boolean,
-      explainOnly: Boolean, qSide: DataFrame, queries: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String): (DataFrame, DataType) = {
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val (bands, r, seed, dim, pd) =
-      if (placeholder)
-        (cfg.longOr("bands", 16L).toInt, cfg.longOr("band_planes", 16L).toInt,
-         cfg.longOr("seed", 11L), cfg.longOr("dim", 0L).toInt,
-         cfg.longOr("partition_dirs", 64L).toInt)
-      else {
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        (meta.getAs[Int]("bands"), meta.getAs[Int]("band_planes"),
-         meta.getAs[Long]("seed"), meta.getAs[Int]("dim"), meta.getAs[Int]("pbuckets"))
-      }
-    val probeD = cfg.longOr("probe_hamming", 0L).toInt
-    if (probeD < 0 || probeD > r) throw new GraftConfigError(
-      s"knn.join: probe_hamming must be in [0, $r] (band_planes), got $probeD")
-    if (probeD > 0 && r > 12) throw new GraftConfigError(
-      s"knn.join: probe_hamming > 0 needs an enumerable band space (band_planes " +
-      s"<= 12, index has $r) — rebuild the index with narrower bands")
-    // probe_bands = j bounds the bands layout's ×bands scan amplification:
-    // the layout stores each row once PER BAND, so probing the first j
-    // bands scans j/bands of the corpus while a near-exact match (band
-    // collision probability ≈ 1 per band) still collides in every probed
-    // band. j = bands (default) = the full probe ≡ the r7 behavior; the
-    // recall trade at j < bands is the per-band miss probability raised
-    // to the jth power instead of the bands-th (BENCH_NOTES r8 table).
-    val probeBands = cfg.longOr("probe_bands", bands.toLong).toInt
-    if (probeBands < 1 || probeBands > bands) throw new GraftConfigError(
-      s"knn.join: probe_bands must be in [1, $bands] (the index's band count), " +
-      s"got $probeBands")
-    if (!explainOnly) checkQueryDim(qSide, path, dim)
-    val qBlocked0 = {
-      val exploded = qSide
-        .withColumn("_bsig",
-          DedupEmbeddingOp.bandSignatures(F.col("_qv"), dim, bands, r, seed,
-            ndExplode = true))
-        .select(F.col("query_id"), F.col("_qv"),
-          F.posexplode(F.col("_bsig")).as(Seq("band", "bsig")))
-        .withColumn("band", F.col("band").cast("int"))
-      if (probeBands == bands) exploded
-      else exploded.filter(F.col("band") < probeBands)
-    }
-    val qBlocked = (if (probeD == 0) qBlocked0 else {
-        val neighborhood = F.udf { b: Long =>
-          (0L until (1L << r)).filter(x =>
-            java.lang.Long.bitCount(x ^ b) <= probeD).toArray
-        }
-        qBlocked0.withColumn("bsig", F.explode(neighborhood(F.col("bsig"))))
-      }).withColumn("pband", (F.col("bsig") % pd).cast("int"))
-    val fallbackSchema = StructType(Seq(
-      StructField(cId, queries.schema(qId).dataType),
-      StructField(cVec, queries.schema(qVec).dataType),
-      StructField("bsig", LongType),
-      StructField("band", IntegerType),
-      StructField("pband", IntegerType),
-      StructField("ingest_tag", StringType)))
-    val idxRaw =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], fallbackSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"knn.join: no lsh index at $path — run index.build type=lsh first",
-        fallbackSchema, basePath = true)
-    Seq(cId, cVec).foreach(c => if (!idxRaw.columns.contains(c))
-      throw new GraftPlanError(
-        s"knn.join: index at $path has no '$c' column (has: ${idxRaw.columns.mkString(", ")}) " +
-        "— right_id/right_vector must name the indexed columns"))
-    requireOrderable(cId, idxRaw.schema(cId).dataType)
-    // probe_bands < bands: a STATIC `band < j` partition filter on the
-    // corpus side — scan cost is bounded at planning time (j/bands of the
-    // partition dirs), not left to runtime join pruning
-    val idxBounded =
-      if (probeBands == bands) idxRaw else idxRaw.filter(F.col("band") < probeBands)
-    val idx = idxBounded.select(F.col("band"), F.col("pband"), F.col("bsig"),
-      F.col(cId).alias("corpus_id"), F.col(cVec).cast("array<double>").alias("_cv"))
-    // the layout stores each row once per band — multi-band hits are
-    // scored per collision and collapse inside the bounded heaps (see
-    // the heap pass), never through a candidate-stream dedup exchange
-    (scored(qBlocked.join(idx, Seq("band", "pband", "bsig"))),
-     idxRaw.schema(cId).dataType)
+  /** LSH probe, either layout: each query's keys join ONLY the colliding
+    * index partitions (LshIndex.probeKeys — the dedup.embedding probe
+    * join's batch side); the corpus is never fully scanned.
+    * `probe_hamming` widens every key to its Hamming-d neighbourhood
+    * (enumerable key widths only); d = the key width covers every key of
+    * every position, and since the layout stores each row once PER
+    * position, one fully-probed position already spans the corpus — the
+    * knn_join_{lsh,bands}_exhaustive gates pin both layouts. `probe_bands`
+    * = j bounds the bands layout's ×bands scan amplification: a STATIC
+    * `band < j` partition filter on the corpus side scans j/bands of the
+    * dirs while a near-exact match (band collision probability ≈ 1 per
+    * band) still collides in every probed band (BENCH_NOTES r8). A pair
+    * colliding at several positions is scored per collision; the
+    * duplicates carry identical (cosine, corpus_id) and collapse inside
+    * the bounded heaps + on their merged output. */
+  private def lshPairs(ctx: StageContext, path: String, qSide: DataFrame,
+      queries: DataFrame, qId: String, qVec: String, cId: String,
+      cVec: String): (DataFrame, DataType) = {
+    val index = LshIndex.open(ctx, name, path, LshDefaults(), "query vectors",
+      LshIndex.firstDim(qSide, F.col("_qv")))
+    val (l, p) = (index.layout, index.params)
+    val reach = LshIndex.reach(name, ctx.cfg, l, p)
+    if (reach.hamming > 0 && l.keyBits(p) > 12) throw new GraftConfigError(
+      s"knn.join: probe_hamming > 0 needs an enumerable key space (${l.keyBitsName} " +
+      s"<= 12, index has ${l.keyBits(p)}) — rebuild the index with ${l.narrowerHint}")
+    val qKeys = LshIndex.probeKeys(l, p,
+      qSide.withColumn("_sig", index.signature(F.col("_qv"), ndExplode = true)),
+      F.col("_sig"), Seq(F.col("query_id"), F.col("_qv")), Some(reach))
+    // the empty-index fallback types corpus_id like the query id (the
+    // result is empty either way)
+    val corpus = index.corpus(StructField(cId, queries.schema(qId).dataType),
+      StructField(cVec, queries.schema(qVec).dataType))
+    requireIndexed(corpus, path, cId, Seq(cVec))
+    val bounded =
+      if (reach.keys < l.keyCount(p)) corpus.filter(F.col(l.posCol) < reach.keys) else corpus
+    val idx = bounded.select(l.joinCols.map(F.col) ++ Seq(F.col(cId).alias("corpus_id"),
+      F.col(cVec).cast("array<double>").alias("_cv")): _*)
+    (scored(qKeys.join(idx, l.joinCols)), corpus.schema(cId).dataType)
   }
 
   /** IVF probe (index.build type=ivf): each query ranks the nlist
@@ -506,11 +369,7 @@ object KnnJoinOp extends Stage {
     }
     val qCells = qSide.withColumn("cell", F.explode(nearestCells(F.col("_qv"))))
     val corpus0 = spark.read.parquet(IndexSnapshot.corpusDir(path))
-    Seq(cId, cVec).foreach(c => if (!corpus0.columns.contains(c))
-      throw new GraftPlanError(
-        s"knn.join: index at $path has no '$c' column (has: ${corpus0.columns.mkString(", ")}) " +
-        "— right_id/right_vector must name the indexed columns"))
-    requireOrderable(cId, corpus0.schema(cId).dataType)
+    requireIndexed(corpus0, path, cId, Seq(cVec))
     // distinct probed cells (≤ nlist values, one small query-side job —
     // skipped under explain) → static partition pruning on the scan
     val probed: Seq[Int] =
@@ -577,11 +436,8 @@ object KnnJoinOp extends Stage {
     }
     val qCells = qSide.withColumn("cell", F.explode(nearestCells(F.col("_qv"))))
     val corpus0 = spark.read.parquet(IndexSnapshot.corpusDir(path))
-    (Seq(cId, "pq_codes", "pq_vnorm") ++ (if (rerank > 0) Seq(corpusVec) else Nil))
-      .foreach(c => if (!corpus0.columns.contains(c)) throw new GraftPlanError(
-        s"knn.join: index at $path has no '$c' column (has: ${corpus0.columns.mkString(", ")}) " +
-        "— right_id/right_vector must name the indexed columns"))
-    requireOrderable(cId, corpus0.schema(cId).dataType)
+    requireIndexed(corpus0, path, cId,
+      Seq("pq_codes", "pq_vnorm") ++ (if (rerank > 0) Seq(corpusVec) else Nil))
     val probed: Seq[Int] =
       if (explainOnly) Seq.empty
       else qCells.select("cell").distinct().collect().map(_.getInt(0)).toSeq
@@ -656,67 +512,19 @@ object KnnJoinOp extends Stage {
   *
   * Two modes:
   *  - `index_path` (the 100 TB path): probe an [[IndexBuildOp]] type=lsh
-  *    table. The corpus is stored once per block partitioned by
-  *    (block, bucket % partition_dirs) with the exact bucket as a data
-  *    column; the probe prunes to the probed buckets' partition dirs and
-  *    applies the exact bucket predicate inside the pruned scan, dedupes
-  *    candidates on the id, and scores them.
+  *    table of either layout. The corpus is stored once per key position
+  *    partitioned by (position, key % partition_dirs) with the exact key
+  *    as a data column; the query's keys (LshLayout.queryKeys — the
+  *    corpus-side signature expression evaluated on the query) become
+  *    literal predicates that prune to the probed keys' partition dirs and
+  *    apply the exact key inside the pruned scan; candidates dedupe on the
+  *    id and are scored. `probe_bands` bounds a bands index's positions.
   *  - inline: compute every row's signature in the scan and filter — one
   *    full scan but zero index maintenance.
   */
 object KnnLshOp extends Stage {
   val name = "knn.lsh"
   val kind = StageKind.Transform
-
-  /** Query signature from the same seeded plane generation as
-    * DedupEmbeddingOp.hyperplaneSig. The query is rounded through FLOAT
-    * first: indexed signatures are computed after `cast("array<float>")`,
-    * and a near-zero dot computed from the full-double query can flip a
-    * sign bit the float-sourced index signature doesn't have — a stored
-    * vector would then miss its own bucket at probe_hamming = 0. */
-  private def querySig(q: Seq[Double], dim: Int, h: Int, seed: Long): Long = {
-    val qf = q.map(v => v.toFloat.toDouble)
-    val rnd = new scala.util.Random(seed)
-    val planes = Array.fill(h, dim)(rnd.nextGaussian())
-    var qSig = 0L
-    for (i <- 0 until h)
-      if ((0 until dim).map(j => planes(i)(j) * qf(j)).sum >= 0) qSig |= (1L << i)
-    qSig
-  }
-
-  /** All width-bit buckets within Hamming distance `d` of `qb`, when the
-    * bucket space is enumerable (width ≤ 12 → ≤ 4096 values — an isin the
-    * planner turns into partition pruning); None = let the caller fall
-    * back to a residual bit_count filter. */
-  private def bucketsWithin(qb: Long, width: Int, d: Int): Option[Vector[Long]] =
-    if (width > 12) None
-    else Some((0L until (1L << width))
-      .filter(b => java.lang.Long.bitCount(b ^ qb) <= d).toVector)
-
-  /** Query band signatures from the same seeded plane generation as
-    * DedupEmbeddingOp.bandSignatures (band b uses plane rows
-    * [b·r, b·r+r)). Query rounded through FLOAT first — same sign-flip
-    * parity argument as querySig. */
-  private def queryBandSigs(q: Seq[Double], dim: Int, bands: Int, r: Int,
-      seed: Long): Array[Long] = {
-    val qf = q.map(v => v.toFloat.toDouble).toArray
-    val rnd = new scala.util.Random(seed)
-    val planes = Array.fill(bands * r, dim)(rnd.nextGaussian())
-    Array.tabulate(bands) { b =>
-      var sig = 0L
-      var i = 0
-      while (i < r) {
-        var dot = 0.0
-        var j = 0
-        val p = planes(b * r + i)
-        val n = math.min(dim, qf.length)
-        while (j < n) { dot += p(j) * qf(j); j += 1 }
-        if (dot >= 0) sig |= (1L << i)
-        i += 1
-      }
-      sig
-    }
-  }
 
   def apply(ctx: StageContext): DataFrame = {
     val cfg = ctx.cfg
@@ -737,123 +545,50 @@ object KnnLshOp extends Stage {
 
     cfg.strOpt("index_path") match {
       case Some(path) =>
-        val spark = ctx.spark
-        if (!GraftFs.exists(s"$path/meta"))
-          throw new GraftPlanError(
-            s"knn.lsh: no index at '$path' — run an index.build type=lsh stage first " +
-            "(note: the CLI `explain` command never builds indexes)")
-        IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        if (!meta.schema.fieldNames.contains("pbuckets")) throw new GraftConfigError(
-          s"knn.lsh: the index at $path predates the (block, pbucket) layout — " +
-          "rebuild it with index.build type=lsh mode=overwrite")
-        if (meta.schema.fieldNames.contains("band_planes")) {
-          // banded layout (index.build type=lsh blocking=bands): OR over
-          // the query's band signatures — (band, pband) is the partition
-          // key (pruned at planning), the exact band signature rides the
-          // pruned scan as a residual; probe_hamming widens per band
-          // exactly like the pigeonhole multi-probe
-          val bands = meta.getAs[Int]("bands")
-          val r = meta.getAs[Int]("band_planes")
-          val seed = meta.getAs[Long]("seed")
-          val dim = meta.getAs[Int]("dim")
-          val pd = meta.getAs[Int]("pbuckets")
-          val probeD = cfg.longOr("probe_hamming", 0L).toInt
-          if (probeD < 0 || probeD > r) throw new GraftConfigError(
-            s"knn.lsh: probe_hamming must be in [0, $r] (band_planes), got $probeD")
-          // bound the ×bands scan amplification: probe only the first j
-          // bands (each band spans the whole corpus once) — see knn.join
-          val probeBands = cfg.longOr("probe_bands", bands.toLong).toInt
-          if (probeBands < 1 || probeBands > bands) throw new GraftConfigError(
-            s"knn.lsh: probe_bands must be in [1, $bands] (the index's band " +
-            s"count), got $probeBands")
-          val qSigs = queryBandSigs(q, dim, bands, r, seed)
-          val probe = (0 until probeBands).map { b =>
-            val qb = qSigs(b)
-            val pred =
-              if (probeD == 0)
-                F.col("pband") === (qb % pd).toInt && F.col("bsig") === qb
-              else bucketsWithin(qb, r, probeD) match {
-                case Some(bs) =>
-                  val pbs = bs.map(x => (x % pd).toInt).distinct
-                  F.col("pband").isin(pbs.map(_.asInstanceOf[Any]): _*) &&
-                    F.col("bsig").isin(bs.map(_.asInstanceOf[Any]): _*)
-                case None =>
-                  F.bit_count(F.col("bsig").bitwiseXOR(F.lit(qb))) <= probeD
-              }
-            F.col("band") === b && pred
-          }.reduce(_ || _)
-          return topk(spark.read.parquet(IndexSnapshot.corpusDir(path))
-            .filter(probe)
-            .dropDuplicates(idCol) // a candidate can match several bands
-            .drop("band", "bsig", "pband", "ingest_tag"))
-        }
-        val h = meta.getAs[Int]("num_planes")
-        val blocks = meta.getAs[Int]("blocks")
-        val seed = meta.getAs[Long]("seed")
-        val dim = meta.getAs[Int]("dim")
-        val width = h / blocks
-        val mask = (1L << width) - 1L
-        val qSig = querySig(q, dim, h, seed)
-        val pd = meta.getAs[Int]("pbuckets")
-        if (cfg.has("probe_bands")) throw new GraftConfigError(
-          "knn.lsh: probe_bands applies only to a bands-layout index " +
-          "(index.build type=lsh blocking=bands) — this index uses the pigeonhole layout")
-        val probeD = cfg.longOr("probe_hamming", 0L).toInt
-        if (probeD < 0 || probeD > width) throw new GraftConfigError(
-          s"knn.lsh: probe_hamming must be in [0, $width] (the block width), got $probeD")
-        // (block, pbucket) is the partition key — pruned at planning; the
-        // exact bucket predicate is a residual data filter inside the
-        // pruned scan (the layout bounds dir count independently of
-        // signature width). Multi-probe widens each block's bucket set to
-        // Hamming ≤ d: enumerable sets become isin (still pruned);
+        val index = LshIndex.open(ctx, name, path, LshDefaults(), "the query vector",
+          Some(q.length))
+        val (l, p) = (index.layout, index.params)
+        val reach = LshIndex.reach(name, cfg, l, p)
+        val (bits, dirs) = (l.keyBits(p), l.dirs(p))
+        // OR over the query's keys: (position, dir key) is the partition
+        // key — pruned at planning; the exact key predicate is a residual
+        // data filter inside the pruned scan. Multi-probe widens each key
+        // to Hamming ≤ d: enumerable sets become isin (still pruned);
         // un-enumerable widths fall back to a bit_count residual over the
-        // block's dirs.
-        val probe = (0 until blocks).map { j =>
-          val qb = (qSig >>> (j * width)) & mask
-          val bucketPred =
-            if (probeD == 0)
-              F.col("pbucket") === (qb % pd).toInt && F.col("bucket") === qb
-            else bucketsWithin(qb, width, probeD) match {
-              case Some(bs) =>
-                val pbs = bs.map(b => (b % pd).toInt).distinct
-                F.col("pbucket").isin(pbs.map(_.asInstanceOf[Any]): _*) &&
-                  F.col("bucket").isin(bs.map(_.asInstanceOf[Any]): _*)
-              case None =>
-                F.bit_count(F.col("bucket").bitwiseXOR(F.lit(qb))) <= probeD
-            }
-          F.col("block") === j && bucketPred
+        // position's dirs.
+        val probe = l.queryKeys(q, p).take(reach.keys).zipWithIndex.map { case (qk, j) =>
+          val keyPred =
+            if (reach.hamming == 0)
+              F.col(l.dirCol) === (qk % dirs).toInt && F.col(l.keyCol) === qk
+            else if (bits <= 12) {
+              val ks = LshLayout.within(qk, bits, reach.hamming).toSeq
+              F.col(l.dirCol).isin(ks.map(x => (x % dirs).toInt).distinct: _*) &&
+                F.col(l.keyCol).isin(ks: _*)
+            } else F.bit_count(F.col(l.keyCol).bitwiseXOR(F.lit(qk))) <= reach.hamming
+          F.col(l.posCol) === j && keyPred
         }.reduce(_ || _)
-        topk(spark.read.parquet(IndexSnapshot.corpusDir(path))
+        topk(index.scan(ctx.primary.schema(idCol), ctx.primary.schema(vecCol))
           .filter(probe)
-          .dropDuplicates(idCol)   // a candidate can match several blocks
-          .drop("block", "bucket", "pbucket"))
+          .dropDuplicates(idCol) // a candidate can match at several positions
+          .drop(l.corpusCols: _*))
       case None =>
         if (cfg.has("probe_bands")) throw new GraftConfigError(
           "knn.lsh: probe_bands needs an index_path to a bands-layout index " +
           "(the inline signature scan has no per-band storage to bound)")
-        val h = cfg.longOr("num_planes", 16L).toInt
-        val blocks = cfg.longOr("blocks", 4L).toInt
-        val seed = cfg.longOr("seed", 11L)
-        val dim = q.length
-        val width = h / blocks
-        val mask = (1L << width) - 1L
-        // signature of every row (one fused-UDF call, materialized in a
-        // projection BEFORE the filter — referencing the UDF column in
-        // `blocks` OR'd predicates would re-evaluate the h×dim dot loop
-        // per predicate inside FilterExec) + of the query
-        val qSig = querySig(q, dim, h, seed)
-        val probeD = cfg.longOr("probe_hamming", 0L).toInt
-        if (probeD < 0 || probeD > width) throw new GraftConfigError(
-          s"knn.lsh: probe_hamming must be in [0, $width] (the block width), got $probeD")
+        val l = LshLayout.Pigeonhole
+        val p = LshIndex.configured(name, cfg, LshDefaults(), l, q.length)
+        val width = l.keyBits(p)
+        val probeD = LshIndex.reach(name, cfg, l, p).hamming
+        // signature of every row (one fused expression, materialized in a
+        // projection BEFORE the filter — referencing it in `blocks` OR'd
+        // predicates would re-evaluate the h×dim dot loop per predicate
+        // inside FilterExec)
         val withSig = ctx.primary.withColumn("__sig",
-          DedupEmbeddingOp.hyperplaneSig(F.col(vecCol), dim, h, seed,
-            ndExplode = true))
-        val blockMatch = (0 until blocks).map { j =>
-          val qBlock = (qSig >>> (j * width)) & mask
-          val rowBlock = F.shiftrightunsigned(F.col("__sig"), j * width).bitwiseAND(F.lit(mask))
-          if (probeD == 0) rowBlock === F.lit(qBlock)
-          else F.bit_count(rowBlock.bitwiseXOR(F.lit(qBlock))) <= probeD
+          l.signature(F.col(vecCol), p, ndExplode = true))
+        val blockMatch = l.queryKeys(q, p).zipWithIndex.map { case (qk, j) =>
+          val rowBlock = l.blockKey(F.col("__sig"), j, width)
+          if (probeD == 0) rowBlock === F.lit(qk)
+          else F.bit_count(rowBlock.bitwiseXOR(F.lit(qk))) <= probeD
         }.reduce(_ || _)
         topk(withSig.filter(blockMatch).drop("__sig"))
     }

@@ -41,6 +41,7 @@ import graft.core._
 object SimilarJoinOp extends Stage {
   val name = "join.similar"
   val kind = StageKind.Transform
+  private val Defaults = LshDefaults(planes = 32L, seed = 42L, planesKey = "planes")
 
   def apply(ctx: StageContext): DataFrame = {
     val cfg = ctx.cfg
@@ -148,25 +149,16 @@ object SimilarJoinOp extends Stage {
     val leftVec = cfg.strOr("left_vector", cfg.strOr("vector_column", "embedding"))
     val rightVec = cfg.strOr("right_vector", cfg.strOr("vector_column", "embedding"))
     val threshold = cfg.doubleOr("threshold", 0.9)
-    val planes = cfg.longOr("planes", 32L).toInt
-    val blocks = cfg.longOr("blocks", 4L).toInt
-    val seed = cfg.longOr("seed", 42L)
+    val seed = cfg.longOr("seed", Defaults.seed)
     val blocking = cfg.strOr("blocking", "pigeonhole")
-    if (!Set("pigeonhole", "bands", "ivf").contains(blocking))
-      throw new GraftConfigError(
-        s"join.similar: blocking must be pigeonhole|bands|ivf, got '$blocking'")
-    val banded = blocking == "bands"
-    // planes/blocks only shape the pigeonhole layout; a leftover pigeonhole
-    // value must not reject a banded/ivf config that never uses it
-    if (blocking == "pigeonhole" && planes % blocks != 0)
-      throw new GraftConfigError(s"planes=$planes must divide evenly into blocks=$blocks")
-    val bits = if (banded) 0 else planes / blocks
-    val nBands = cfg.longOr("bands", 16L).toInt
-    val bandR = cfg.longOr("band_planes", 16L).toInt
-    if (banded && nBands < 1) throw new GraftConfigError(
-      s"join.similar: bands must be >= 1, got $nBands")
-    if (banded && (bandR < 1 || bandR > 63)) throw new GraftConfigError(
-      s"join.similar: band_planes must be in [1, 63], got $bandR")
+    // only the chosen layout's parameters are checked: a leftover
+    // pigeonhole value must not reject a banded/ivf config that never uses it
+    val layout = blocking match {
+      case "ivf" => None
+      case b => Some(LshLayout.byName(b).getOrElse(throw new GraftConfigError(
+        s"join.similar: blocking must be pigeonhole|bands|ivf, got '$b'")))
+    }
+    val unsized = layout.map(l => (l, LshIndex.configured(name, cfg, Defaults, l, 0)))
     // an EMPTY side is legal input (a benchmark slice filtered to nothing,
     // a first-ever batch) and can produce no pairs — short-circuit before
     // the dimension probe, which needs a row
@@ -214,36 +206,32 @@ object SimilarJoinOp extends Stage {
       Pq.nearest(ivfCents, v.map(_.toDouble).toArray)
     }
 
+    val lsh = unsized.map { case (l, p) => (l, p.updated(LshLayout.Dim, dimL)) }
     // content key for exact collapse = the vector itself (distinct vectors)
     def prepare(df: DataFrame, id: String, vec: String) = {
       val (reps, mapping) = collapse(df, id, F.col(vec).cast("array<float>"), ctx.deferToCleanup)
       val keyed = reps.select(F.col("id"), F.col("_key").alias("vec"))
-      val sigged = ctx.pin(blocking match {
-        case "ivf" => keyed.withColumn("cell", assignCell(F.col("vec")))
-        case "bands" => keyed.withColumn("bsig",
-          DedupEmbeddingOp.bandSignatures(F.col("vec"), dimL, nBands, bandR, seed))
-        case _ => keyed.withColumn("sig",
-          DedupEmbeddingOp.hyperplaneSig(F.col("vec"), dimL, planes, seed))
-      })
-      (sigged, mapping)
+      (ctx.pin(lsh match {
+        case Some((l, p)) => keyed.withColumn("sig", l.signature(F.col("vec"), p))
+        case None => keyed.withColumn("cell", assignCell(F.col("vec")))
+      }), mapping)
     }
     val (sl, mapL) = prepare(left, leftId, leftVec)
     val (sr, mapR) = prepare(right, rightId, rightVec)
 
-    def blocked(sigged: DataFrame, side: String) =
-      if (blocking == "ivf")
-        sigged.select(F.col("id").alias(s"rep_$side"),
-          F.lit(0).alias("block_idx"), F.col("cell").cast("long").alias("block_val"))
-      else sigged.select(F.col("id").alias(s"rep_$side"),
-        if (banded) F.posexplode(F.col("bsig"))
-        else F.posexplode(F.array((0 until blocks).map(b =>
-          F.shiftrightunsigned(F.col("sig"), b * bits)
-            .bitwiseAND(F.lit((1L << bits) - 1))): _*)))
-        .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_val")
-
-    val candidates = blocked(sl, "l").join(blocked(sr, "r"), Seq("block_idx", "block_val"))
-      .dropDuplicates("rep_l", "rep_r")
-      .select("rep_l", "rep_r")
+    // the layout's keys and prefilter, exactly as dedup.embedding's
+    // self-pairs; ivf blocks on the one shared cell
+    val candidates = lsh match {
+      case Some((l, p)) =>
+        LshIndex.candidates(l, p, sl, sr, "rep", "l", "r", threshold, self = false)
+      case None =>
+        def cells(sigged: DataFrame, side: String) =
+          sigged.select(F.col("id").alias(s"rep_$side"),
+            F.lit(0).alias("block_idx"), F.col("cell").cast("long").alias("block_val"))
+        cells(sl, "l").join(cells(sr, "r"), Seq("block_idx", "block_val"))
+          .dropDuplicates("rep_l", "rep_r")
+          .select("rep_l", "rep_r")
+    }
 
     val verified = candidates
       .join(sl.select(F.col("id").alias("rep_l"), F.col("vec").alias("v_l")), "rep_l")
@@ -288,138 +276,30 @@ object SimilarJoinOp extends Stage {
   }
 
   /** `index_path` (method=embedding): the right side is an `index.build
-    * type=lsh` corpus, either layout — pigeonhole (block, pbucket) with
-    * the Hamming prefilter, or bands (band, pband) on exact band
-    * agreement — detected from the index meta, exactly like the
-    * dedup.embedding index probe, but emitting scored PAIRS instead of
-    * dropping ids. `right_id` / `right_vector` name the indexed columns. */
+    * type=lsh` corpus of either layout, opened and probed exactly like the
+    * dedup.embedding index probe (LshIndex.open / crossPairs) but emitting
+    * scored PAIRS instead of dropping ids. `right_id` / `right_vector` name
+    * the indexed columns. */
   private def embeddingIndexPairs(ctx: StageContext, left: DataFrame, leftId: String,
       path: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
     val cfg = ctx.cfg
-    val spark = ctx.spark
     val leftVec = cfg.strOr("left_vector", cfg.strOr("vector_column", "embedding"))
     val rId = cfg.strOr("right_id", cfg.strOr("id_column", "id"))
     val rVec = cfg.strOr("right_vector", cfg.strOr("vector_column", "embedding"))
-    val threshold = cfg.doubleOr("threshold", 0.9)
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val metaExists = GraftFs.isDir(s"$path/meta")
-    val placeholder = explainOnly && !metaExists
-    if (!placeholder && !metaExists) throw new GraftPlanError(
-      s"join.similar: no lsh index at $path — run index.build type=lsh first")
-    val bandsLayout =
-      if (placeholder) cfg.strOr("blocking", "pigeonhole") == "bands"
-      else spark.read.parquet(s"$path/meta").schema.fieldNames.contains("band_planes")
-    cfg.strOpt("blocking").foreach { b =>
-      val layoutName = if (bandsLayout) "bands" else "pigeonhole"
-      if (metaExists && b != layoutName) throw new GraftConfigError(
-        s"join.similar: blocking = $b conflicts with the index at $path, which is " +
-        s"$layoutName-partitioned — the index layout decides the probe blocking")
-    }
-    // placeholder (explain-only) path: an empty left still needs SOME dim
-    // for the signature expression it never evaluates
-    def dimOf: Int = cfg.longOpt("dim").map(_.toInt)
-      .orElse(vecDim(left, leftVec)).getOrElse(1)
-
+    val index = LshIndex.open(ctx, name, path, Defaults, s"left vectors in '$leftVec'",
+      LshIndex.firstDim(left, F.col(leftVec)))
     val (reps, mapping) = collapse(left, leftId, F.col(leftVec).cast("array<float>"),
       ctx.deferToCleanup)
-    val keyed = reps.select(F.col("id"), F.col("_key").alias("vec"))
-
-    import org.apache.spark.sql.types._
-    def emptyIndex(extra: Seq[StructField]): DataFrame = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField(rId, left.schema(leftId).dataType),
-        StructField(rVec, left.schema(leftVec).dataType)) ++ extra))
-
-    val pairs =
-      if (bandsLayout) {
-        val (bands, r, seed, dim, pd) =
-          if (placeholder)
-            (cfg.longOr("bands", 16L).toInt, cfg.longOr("band_planes", 16L).toInt,
-             cfg.longOr("seed", 42L), dimOf, cfg.longOr("partition_dirs", 64L).toInt)
-          else {
-            val meta = spark.read.parquet(s"$path/meta").head()
-            val vals = (meta.getAs[Int]("bands"), meta.getAs[Int]("band_planes"),
-              meta.getAs[Long]("seed"), meta.getAs[Int]("dim"), meta.getAs[Int]("pbuckets"))
-            Seq(("bands", vals._1.toLong), ("band_planes", vals._2.toLong), ("seed", vals._3),
-                ("dim", vals._4.toLong), ("partition_dirs", vals._5.toLong))
-              .foreach { case (key, v) =>
-                cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-                  throw new GraftConfigError(s"join.similar: $key = $conflicting conflicts " +
-                    s"with the index at $path ($key = $v)"))
-              }
-            vals
-          }
-        val sigs = ctx.pin(keyed.withColumn("bsig",
-          DedupEmbeddingOp.bandSignatures(F.col("vec"), dim, bands, r, seed)))
-        val blockedL = sigs.select(F.col("id").alias("id_l"), F.col("vec").alias("v_l"),
-            F.posexplode(F.col("bsig")).as(Seq("band", "bsig")))
-          .withColumn("band", F.col("band").cast("int"))
-          .withColumn("pband", (F.col("bsig") % pd).cast("int"))
-        val index =
-          if (placeholder) emptyIndex(Seq(StructField("bsig", LongType),
-            StructField("band", IntegerType), StructField("pband", IntegerType),
-            StructField("ingest_tag", StringType)))
-          else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-            s"join.similar: no lsh index at $path — run index.build type=lsh first",
-            emptyIndex(Seq.empty).schema, basePath = true)
-        val idxSide = index.select(F.col("band"), F.col("pband"), F.col("bsig"),
-          F.col(rId).alias("id_r"), F.col(rVec).alias("v_r"))
-        blockedL.join(idxSide, Seq("band", "pband", "bsig"))
-          .withColumn("cosine", DedupEmbeddingOp.cosine(
-            F.col("v_l").cast("array<double>"), F.col("v_r").cast("array<double>")))
-          .filter(F.col("cosine") >= threshold)
-          .select("id_l", "id_r", "cosine")
-          .dropDuplicates("id_l", "id_r") // one row per pair across band collisions
-      } else {
-        val (h, blocks, seed, dim, pd) =
-          if (placeholder)
-            (cfg.longOr("planes", 32L).toInt, cfg.longOr("blocks", 4L).toInt,
-             cfg.longOr("seed", 42L), dimOf, cfg.longOr("partition_dirs", 64L).toInt)
-          else {
-            val meta = spark.read.parquet(s"$path/meta").head()
-            if (!meta.schema.fieldNames.contains("pbuckets")) throw new GraftConfigError(
-              s"join.similar: the index at $path predates the (block, pbucket) layout — " +
-              "rebuild it with index.build type=lsh mode=overwrite")
-            val vals = (meta.getAs[Int]("num_planes"), meta.getAs[Int]("blocks"),
-              meta.getAs[Long]("seed"), meta.getAs[Int]("dim"), meta.getAs[Int]("pbuckets"))
-            Seq(("planes", vals._1.toLong), ("blocks", vals._2.toLong), ("seed", vals._3),
-                ("dim", vals._4.toLong), ("partition_dirs", vals._5.toLong))
-              .foreach { case (key, v) =>
-                cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-                  throw new GraftConfigError(s"join.similar: $key = $conflicting conflicts " +
-                    s"with the index at $path ($key = $v)"))
-              }
-            vals
-          }
-        val width = h / blocks
-        val maxBits = DedupEmbeddingOp.maxBitsFor(h, threshold)
-        val sigs = ctx.pin(keyed.withColumn("sig",
-          DedupEmbeddingOp.hyperplaneSig(F.col("vec"), dim, h, seed)))
-        val blockedL = sigs.select(F.col("id").alias("id_l"), F.col("sig").alias("sig_l"),
-            F.col("vec").alias("v_l"),
-            F.posexplode(DedupEmbeddingOp.blockKeys(F.col("sig"), blocks, width)))
-          .withColumnRenamed("pos", "block").withColumnRenamed("col", "bucket")
-          .withColumn("block", F.col("block").cast("int"))
-          .withColumn("pbucket", (F.col("bucket") % pd).cast("int"))
-        val index =
-          if (placeholder) emptyIndex(Seq(StructField("block", IntegerType),
-            StructField("pbucket", IntegerType), StructField("bucket", LongType)))
-          else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-            s"join.similar: no lsh index at $path — run index.build type=lsh first",
-            emptyIndex(Seq.empty).schema, basePath = true)
-        val idxSide = index.select(F.col("block"), F.col("pbucket"), F.col("bucket"),
-          F.col(rId).alias("id_r"), F.col(rVec).alias("v_r"))
-          .withColumn("sig_r", DedupEmbeddingOp.hyperplaneSig(F.col("v_r"), dim, h, seed))
-        blockedL.join(idxSide, Seq("block", "pbucket", "bucket"))
-          .filter(F.bit_count(F.col("sig_l").bitwiseXOR(F.col("sig_r"))) <= maxBits)
-          .withColumn("cosine", DedupEmbeddingOp.cosine(
-            F.col("v_l").cast("array<double>"), F.col("v_r").cast("array<double>")))
-          .filter(F.col("cosine") >= threshold)
-          .select("id_l", "id_r", "cosine")
-          .dropDuplicates("id_l", "id_r")
-      }
+    val sigs = ctx.pin(reps.select(F.col("id"), F.col("_key").alias("vec"))
+      .withColumn("sig", index.signature(F.col("vec"))))
+    // the empty-index fallback types the right side like the left
+    import org.apache.spark.sql.types.StructField
+    val corpus = index.corpus(StructField(rId, left.schema(leftId).dataType),
+      StructField(rVec, left.schema(leftVec).dataType))
+    val pairs = LshIndex.crossPairs(index, sigs, corpus, rId, rVec,
+      cfg.doubleOr("threshold", 0.9))
+      .select("id_l", "id_r", "cosine")
+      .dropDuplicates("id_l", "id_r") // one row per pair across key collisions
     pairs.join(mapping, pairs("id_l") === mapping("rep_id"))
       .select(F.col("orig_id").alias("left_id"), F.col("id_r").alias("right_id"),
         F.col("cosine"))

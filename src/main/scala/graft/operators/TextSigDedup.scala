@@ -158,10 +158,8 @@ private[graft] object TextSigDedup {
   private def requireFamily(spark: SparkSession, f: TextSigFamily, op: String, path: String,
       fields: Set[String], hint: String): Unit =
     if (!fields.contains(f.marker)) {
-      val found = scala.util.Try(IndexMaintenance.layout(spark, path, op)._1)
-        .getOrElse("unrecognized")
-      throw new GraftConfigError(
-        s"$op: the index at $path is a $found index, not a ${f.name} index — $hint")
+      throw new GraftConfigError(s"$op: the index at $path is a " +
+        s"${IndexMaintenance.familyAt(spark, path, op)} index, not a ${f.name} index — $hint")
     }
 
   /** `index.build type=<family>` — hash every document once (the

@@ -5,15 +5,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, S
 import graft.config.Cfg
 import graft.core.DriverParquet
 
-/** One signature parameter of a text index: its config key (which is also
-  * its `meta/` field name), its default, and whether `meta/` stores it as
-  * INT64 (`wide`) or INT32. */
-private[graft] final case class SigParam(key: String, default: Long, wide: Boolean = false) {
+/** One signature parameter of an index: its config key, its default,
+  * whether `meta/` stores it as INT64 (`wide`) or INT32, and its `meta/`
+  * field name (the config key unless given). */
+private[graft] final case class SigParam(key: String, default: Long, wide: Boolean = false,
+    field: Option[String] = None) {
+  def metaField: String = field.getOrElse(key)
   def of(cfg: Cfg): Long = cfg.longOr(key, default)
   private[operators] def metaCol(v: Long): DriverParquet.Col =
-    if (wide) DriverParquet.I64(key, Seq(v)) else DriverParquet.I32(key, Seq(v.toInt))
+    if (wide) DriverParquet.I64(metaField, Seq(v)) else DriverParquet.I32(metaField, Seq(v.toInt))
   private[operators] def fromMeta(meta: Row): Long =
-    if (wide) meta.getAs[Long](key) else meta.getAs[Int](key).toLong
+    if (wide) meta.getAs[Long](metaField) else meta.getAs[Int](metaField).toLong
 }
 
 /** A family's parameter values, in its `meta/` column order. `toString`
@@ -21,6 +23,8 @@ private[graft] final case class SigParam(key: String, default: Long, wide: Boole
 private[graft] final case class SigParams(values: Seq[(SigParam, Long)]) {
   def apply(q: SigParam): Long = values.collectFirst { case (`q`, v) => v }.get
   def int(q: SigParam): Int = apply(q).toInt
+  def updated(q: SigParam, v: Long): SigParams =
+    SigParams(values.map { case (k, old) => k -> (if (k == q) v else old) })
   def describe: String = values.map { case (q, v) => s"${q.key}=$v" }.mkString(", ")
   override def toString: String = values.map(_._2).mkString("(", ",", ")")
 }

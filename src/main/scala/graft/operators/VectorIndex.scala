@@ -90,16 +90,18 @@ private[operators] object IvfCentroids {
   * standard IVF recipe: centroid quality needs a sample, assignment is one
   * broadcast-model map pass over the full corpus.
   *
-  * `type = "lsh"` — the classic multi-probe LSH table layout: each row's
-  * hyperplane signature (num_planes bits, same machinery as
-  * dedup.embedding) splits into `blocks` bucket keys and the row is
-  * written once PER BLOCK, partitioned by (block, bucket % partition_dirs)
-  * with the exact bucket as a data column — storage amplification =
-  * blocks, dir count bounded by blocks × partition_dirs REGARDLESS of
-  * signature width; probes prune on the partition key and apply the exact
-  * bucket equality as a residual scan filter. meta/ records (num_planes,
-  * blocks, seed, dim, pbuckets) so probes regenerate identical planes
-  * and dir keys.
+  * `type = "lsh"` — the classic multi-probe LSH table layout, built by the
+  * shared LshIndex.build: each row's hyperplane signature (same machinery
+  * as dedup.embedding) splits into keys — `blocks` slices of one
+  * num_planes-bit signature (`blocking = "pigeonhole"`, default) or
+  * `bands` independent band_planes-bit signatures (`blocking = "bands"`)
+  * — and the row is written once PER KEY POSITION, partitioned by
+  * (position, key % partition_dirs) with the exact key as a data column:
+  * storage amplification = positions, dir count bounded by positions ×
+  * partition_dirs REGARDLESS of signature width; probes prune on the
+  * partition key and apply the exact key equality as a residual. meta/
+  * records the signature parameters so probes regenerate identical
+  * planes and dir keys (LshLayout).
   *
   * `type = "minhash" | "ngram" | "simhash"` — the flat text-signature
   * corpus of that dedup family, built by the shared TextSigDedup.build.
@@ -165,7 +167,7 @@ object IndexBuildOp extends Stage {
       cfg.strOr("type", "ivf") match {
         case "ivf" => buildIvf(ctx)
         case "ivfpq" => PqIndex.build(ctx)
-        case "lsh" => buildLsh(ctx)
+        case "lsh" => LshIndex.build(ctx)
         case "exact" => buildExact(ctx)
         case other => TextSigFamily.byName(other) match {
           case Some(family) => TextSigDedup.build(ctx, family)
@@ -309,173 +311,5 @@ object IndexBuildOp extends Stage {
       .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
     DriverParquet.overwrite(s"$path/meta",
       Seq(DriverParquet.StrArr("columns", Seq(cols))))
-  }
-
-  private def buildLsh(ctx: StageContext): Unit = ctx.cfg.strOr("blocking", "pigeonhole") match {
-    case "pigeonhole" => buildLshPigeonhole(ctx)
-    case "bands"      => buildLshBands(ctx)
-    case other => throw new GraftConfigError(
-      s"index.build type=lsh: blocking must be pigeonhole|bands, got '$other'")
-  }
-
-  /** `blocking = "bands"` — the banded-LSH corpus layout, composing the two
-    * flagship scale features (corpus-scale blocking × corpus-lifetime
-    * incremental probing): each row's `bands` independent `band_planes`-bit
-    * hyperplane signatures (DedupEmbeddingOp.bandSignatures) write the row
-    * once PER BAND, partitioned by (band, bsig % partition_dirs,
-    * ingest_tag) with the exact band signature as a data column — the same
-    * dir-count-decoupling trick as the pigeonhole layout (partition dirs
-    * bounded by bands × partition_dirs regardless of 2^band_planes), plus a
-    * THIRD partition level `ingest_tag`: batch builds/appends land under
-    * `ingest_tag=base`, and stream.ingest micro-batches land under
-    * `ingest_tag=sb-…` via dynamic partition overwrite — probes still prune
-    * on the leading (band, pband) keys while streaming retries stay
-    * idempotent, which is what lets stream.ingest carry embeddings (the
-    * flat per-batch append dirs of the other families would break banded
-    * partition pruning). meta/ records (bands, band_planes, seed, dim,
-    * pbuckets); probes detect the layout by the `band_planes` field. */
-  private def buildLshBands(ctx: StageContext): Unit = {
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val vecCol = cfg.strOr("vector_column", "embedding")
-    val bands = cfg.longOr("bands", 16L).toInt
-    val r = cfg.longOr("band_planes", 16L).toInt
-    val seed = cfg.longOr("seed", 11L)
-    val mode = cfg.strOr("mode", "overwrite")
-    val pdirs = cfg.longOr("partition_dirs", 64L).toInt
-    if (bands < 1) throw new GraftConfigError(
-      s"index.build type=lsh blocking=bands: bands must be >= 1, got $bands")
-    if (r < 1 || r > 63) throw new GraftConfigError(
-      s"index.build type=lsh blocking=bands: band_planes must be in [1, 63], got $r")
-    if (pdirs < 1) throw new GraftConfigError("partition_dirs must be >= 1")
-
-    val dim = ctx.primary.select(F.size(F.col(vecCol))).head(1).headOption match {
-      case Some(row) => row.getInt(0)
-      case None => throw new GraftPlanError("index.build type=lsh: empty input, cannot infer dim")
-    }
-    val spark = ctx.spark
-    if (mode == "append") requireMetaForAppend(path, "index.build type=lsh")
-    if (mode == "append" &&
-        GraftFs.isDir(s"$path/meta")) {
-      val m = IndexMeta.head(spark, s"$path/meta")
-      if (!m.schema.fieldNames.contains("band_planes")) throw new GraftConfigError(
-        s"index.build type=lsh blocking=bands mode=append: the index at $path is " +
-        "pigeonhole-partitioned — appending banded signatures would mix incompatible " +
-        "layouts; rebuild with mode=overwrite")
-      val existing = (m.getAs[Int]("bands"), m.getAs[Int]("band_planes"),
-        m.getAs[Long]("seed"), m.getAs[Int]("dim"), m.getAs[Int]("pbuckets"))
-      if (existing != ((bands, r, seed, dim, pdirs))) throw new GraftConfigError(
-        s"index.build type=lsh blocking=bands mode=append: parameters (bands=$bands, " +
-        s"band_planes=$r, seed=$seed, dim=$dim, partition_dirs=$pdirs) differ from the " +
-        s"existing index at $path $existing — appending would mix incompatible signatures")
-    }
-
-    val bsig = DedupEmbeddingOp.bandSignatures(F.col(vecCol), dim, bands, r, seed,
-      ndExplode = true)
-    val exploded = ctx.primary.withColumn("_bsig", bsig)
-      .select(F.col("*"), F.posexplode(F.col("_bsig")).as(Seq("band", "bsig")))
-      .drop("_bsig")
-      .withColumn("band", F.col("band").cast("int"))
-      .withColumn("pband", (F.col("bsig") % pdirs).cast("int"))
-      .withColumn("ingest_tag", F.lit("base"))
-    // co-locate each dir key before the partitioned write (see pigeonhole)
-    exploded.repartition(F.col("band"), F.col("pband"))
-      .write.mode(mode).partitionBy("band", "pband", "ingest_tag").parquet(IndexSnapshot.corpusDir(path))
-
-    DriverParquet.overwrite(s"$path/meta", Seq(
-      DriverParquet.I32("bands", Seq(bands)), DriverParquet.I32("band_planes", Seq(r)),
-      DriverParquet.I64("seed", Seq(seed)), DriverParquet.I32("dim", Seq(dim)),
-      DriverParquet.I32("pbuckets", Seq(pdirs))))
-
-    // occupancy guidance (measurement-backed, BENCH_NOTES r11 ANN rungs):
-    // per-bucket candidate growth is LINEAR in corpus size at fixed
-    // band_planes, so a corpus that outgrows its bucket space quietly
-    // turns banded probes into scans. One parquet-footer count (metadata
-    // only, the index.stats trick) prices the whole corpus post-write —
-    // append mode included, since occupancy is a property of the total.
-    // r13: the count comes from the footers DRIVER-SIDE (IndexSnapshot
-    // .footerRows) — the old spark.read.parquet(...).count() scheduled a
-    // full Spark job over every corpus file just to re-learn numbers the
-    // footers already hold (~0.3 s of fixed job cost per build at gate
-    // scale; a listing-priced metadata read at any scale).
-    try {
-      // r14: bounded-sample estimate — the exact footer sum reads EVERY
-      // corpus file's footer on the driver, a metadata storm per build at
-      // 10^5+ files; the advisory threshold only needs the magnitude
-      val files = IndexSnapshot.filesWithLen(IndexSnapshot.corpusDir(path),
-        s"index.build: no corpus at $path")
-      if (files.nonEmpty) {
-        val sigRows = IndexSnapshot.footerRowsEstimate(files)
-        IndexBuildOp.bandsOccupancyWarning(sigRows / math.max(1, bands), r)
-          .foreach(System.err.println)
-      }
-    } catch { case scala.util.control.NonFatal(e) =>
-      System.err.println(s"[graft] index.build occupancy check skipped: ${e.getMessage}") }
-  }
-
-  private def buildLshPigeonhole(ctx: StageContext): Unit = {
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val vecCol = cfg.strOr("vector_column", "embedding")
-    val h = cfg.longOr("num_planes", 16L).toInt
-    val blocks = cfg.longOr("blocks", 4L).toInt
-    val seed = cfg.longOr("seed", 11L)
-    val mode = cfg.strOr("mode", "overwrite")
-    // partition DIRS per block — decoupled from the bucket space: the
-    // exact bucket is a data column and the dir key is bucket % P, so
-    // signature width buys prefilter selectivity without exploding the
-    // file system (2^width dirs of tiny files at small corpora; millions
-    // of dirs at wide signatures). Probes prune on (block, pbucket) and
-    // the residual bucket equality rides the scan.
-    val pdirs = cfg.longOr("partition_dirs", 64L).toInt
-    val width = h / blocks
-    if (h % blocks != 0) throw new GraftConfigError("num_planes must be divisible by blocks")
-    if (h > 64) throw new GraftConfigError(
-      s"num_planes = $h exceeds 64: signatures pack into one 64-bit long, and " +
-      "further planes would silently alias (shift amounts wrap mod 64)")
-    if (width > 16) throw new GraftConfigError(
-      s"num_planes/blocks = $width bits per block; cap is 16 — raise blocks or lower num_planes")
-    if (pdirs < 1) throw new GraftConfigError("partition_dirs must be >= 1")
-
-    val dim = ctx.primary.select(F.size(F.col(vecCol))).head(1).headOption match {
-      case Some(r) => r.getInt(0)
-      case None    => throw new GraftPlanError("index.build type=lsh: empty input, cannot infer dim")
-    }
-    val spark = ctx.spark
-    if (mode == "append") requireMetaForAppend(path, "index.build type=lsh")
-    if (mode == "append" &&
-        GraftFs.isDir(s"$path/meta")) {
-      val m = IndexMeta.head(spark, s"$path/meta")
-      if (m.schema.fieldNames.contains("band_planes")) throw new GraftConfigError(
-        s"index.build type=lsh mode=append: the index at $path is bands-partitioned — " +
-        "append with blocking = \"bands\", or rebuild with mode=overwrite")
-      if (!m.schema.fieldNames.contains("pbuckets")) throw new GraftConfigError(
-        s"index.build type=lsh mode=append: the index at $path predates the " +
-        "(block, pbucket) layout — rebuild with mode=overwrite")
-      val existing = (m.getAs[Int]("num_planes"), m.getAs[Int]("blocks"),
-        m.getAs[Long]("seed"), m.getAs[Int]("dim"), m.getAs[Int]("pbuckets"))
-      if (existing != ((h, blocks, seed, dim, pdirs))) throw new GraftConfigError(
-        s"index.build type=lsh mode=append: parameters (num_planes=$h, blocks=$blocks, " +
-        s"seed=$seed, dim=$dim, partition_dirs=$pdirs) differ from the existing index " +
-        s"at $path $existing — appending would mix incompatible signatures")
-    }
-
-    val sig = DedupEmbeddingOp.hyperplaneSig(F.col(vecCol), dim, h, seed,
-      ndExplode = true)
-    val exploded = ctx.primary.withColumn("_sig", sig)
-      .select(F.col("*"), F.posexplode(
-        DedupEmbeddingOp.blockKeys(F.col("_sig"), blocks, width)).as(Seq("block", "bucket")))
-      .drop("_sig")
-      .withColumn("pbucket", (F.col("bucket") % pdirs).cast("int"))
-    // co-locate each dir key before the partitioned write: without this
-    // every INPUT partition emits a file into every populated dir —
-    // input_partitions × blocks × pdirs tiny files vs one per dir
-    exploded.repartition(F.col("block"), F.col("pbucket"))
-      .write.mode(mode).partitionBy("block", "pbucket").parquet(IndexSnapshot.corpusDir(path))
-
-    DriverParquet.overwrite(s"$path/meta", Seq(
-      DriverParquet.I32("num_planes", Seq(h)), DriverParquet.I32("blocks", Seq(blocks)),
-      DriverParquet.I64("seed", Seq(seed)), DriverParquet.I32("dim", Seq(dim)),
-      DriverParquet.I32("pbuckets", Seq(pdirs))))
   }
 }

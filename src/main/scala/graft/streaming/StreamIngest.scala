@@ -659,7 +659,7 @@ object StreamIngestSink extends Stage {
     // past; the pigeonhole layout has no per-batch append unit, so a
     // pigeonhole index fails loud here instead of silently rotting
     if (cfg.strOr("dedup", "minhash") == "embedding" &&
-        !ctx.spark.read.parquet(s"$indexPath/meta").schema.fieldNames.contains("band_planes"))
+        !graft.operators.LshIndex.layoutAt(ctx.spark, "stream.ingest", indexPath).streamable)
       throw new GraftConfigError(
         s"stream.ingest: dedup=embedding needs a bands-partitioned index — rebuild " +
         s"the index at $indexPath with index.build type=lsh blocking=bands")
