@@ -12,12 +12,12 @@ import graft.core._
   * counts=...` — the stratified exact-k path), and SemDeDup-style
   * within-cluster analysis, all composing with the rest of the registry.
   *
-  * The assignment is the SAME nearest-centroid rule the index family
-  * uses everywhere (IvfCentroids.nearest — euclidean, ties to the lower
-  * cell id), so for rows already in the index the tag provably equals
-  * the index's own cell partition (pinned in ClusterAssignSpec), and a
-  * downstream `knn.ivf nprobe=1` probe of a tagged row's vector scans
-  * exactly its cluster.
+  * The assignment is the index family's one nearest-cell column
+  * (IvfIndex.Quantizer.assign — euclidean, ties to the lower cell id), so
+  * for rows already in the index the tag provably equals the index's own
+  * cell partition (pinned in ClusterAssignSpec), and a downstream
+  * `knn.ivf nprobe=1` probe of a tagged row's vector scans exactly its
+  * cluster. A null vector tags null.
   *
   * Scale shape: centroids are nlist rows loaded driver-side (the same
   * tiny table every ivf probe ranks); assignment is one broadcast-UDF
@@ -31,9 +31,7 @@ object ClusterAssignOp extends Stage {
   val kind = StageKind.Transform
 
   def apply(ctx: StageContext): DataFrame = {
-    import org.apache.spark.ml.linalg.Vectors
     val cfg = ctx.cfg
-    val path = cfg.str("index_path")
     val vecCol = cfg.strOr("vector_column", "embedding")
     val out = cfg.strOr("output_column", "cluster")
     val df = ctx.primary
@@ -41,37 +39,8 @@ object ClusterAssignOp extends Stage {
       s"cluster.assign: column '$vecCol' not found (has: ${df.columns.mkString(", ")})")
     if (df.columns.contains(out)) throw new GraftConfigError(
       s"cluster.assign: output_column '$out' already exists — pick another name")
-    if (cfg.boolOr("_explain_only", false))
-      // explain stays read-only: the plan shape with a placeholder tag
-      return df.withColumn(out, F.lit(-1))
-    if (!GraftFs.exists(s"$path/centroids")) throw new GraftPlanError(
-      s"cluster.assign: no ivf/ivfpq index at '$path' — run an index.build " +
-      "stage first (type=ivf or type=ivfpq)")
-    IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
-    val cents = IvfCentroids.load(ctx.spark, path, "cluster.assign")
-    // dim check against the index, one tiny job (same contract as the
-    // probes); null vectors are legitimate (they tag null) — sample the
-    // first NON-null vector
-    df.select(F.size(F.col(vecCol)).as("_sz")).filter(F.col("_sz").isNotNull)
-      .head(1).headOption.foreach { r =>
-        val dim = cents.head._2.size
-        if (r.getInt(0) != dim) throw new GraftConfigError(
-          s"cluster.assign: input vectors have length ${r.getInt(0)} but the " +
-          s"index at $path was built with dim = $dim")
-      }
-    // broadcast the centroid table instead of closure-shipping it with
-    // every task binary (same math — see IvfCentroids.assignUdf; this UDF
-    // stays local only for its null-tagging variant)
-    val bcCents = ctx.spark.sparkContext.broadcast(cents)
-    val assign = F.udf { v: Seq[Float] =>
-      if (v == null) null
-      else {
-        val arr = new Array[Double](v.length)
-        var i = 0
-        while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-        Int.box(IvfCentroids.nearest(bcCents.value, Vectors.dense(arr), 1)(0))
-      }
-    }
-    df.withColumn(out, assign(F.col(vecCol).cast("array<float>")))
+    val idx = IvfIndex.open(ctx, name, cfg.str("index_path"), "input vectors",
+      _ => LshIndex.firstDim(df, F.col(vecCol)))
+    df.withColumn(out, idx.quantizer.assign(ctx.spark, F.col(vecCol)))
   }
 }

@@ -696,10 +696,16 @@ private[graft] object IndexSnapshot {
     * trick), ZERO Spark jobs. Replaces `spark.read.parquet(...).count()`
     * on advisory paths: a count() plans and schedules a whole Spark job
     * over every file to learn numbers the footers already hold. */
-  def footerRows(files: Seq[String]): Long = {
+  def footerRows(files: Seq[String]): Long = footerRowCounts(files).sum
+
+  /** Row count of each of `files` from its parquet footer. Footer opens
+    * are independent small reads dominated by per-open latency, so they
+    * run on a bounded driver pool instead of one at a time — the same
+    * trick a parquet scan's own footer phase uses. */
+  def footerRowCounts(files: Seq[String],
+      conf: org.apache.hadoop.conf.Configuration = GraftFs.hadoopConf): Seq[Long] = {
     import scala.jdk.CollectionConverters._
-    if (files.isEmpty) return 0L
-    val conf = GraftFs.hadoopConf
+    if (files.isEmpty) return Nil
     def rowsOf(f: String): Long = {
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(f), conf)
@@ -711,7 +717,7 @@ private[graft] object IndexSnapshot {
       math.min(16, files.size))
     try files.map(f => pool.submit(new java.util.concurrent.Callable[Long] {
       def call(): Long = rowsOf(f)
-    })).map(_.get()).sum
+    })).map(_.get())
     finally pool.shutdown()
   }
 }
@@ -922,42 +928,12 @@ object DedupEmbeddingOp extends Stage {
         // cell boundary are missed by design (the documented recall trade
         // of cluster blocking); nlist = 1 is the exhaustive setting — the
         // dedup_embedding_ivf gate pins it against the full-corpus oracle.
-        // Quantizer: `quantizer_path` reuses a prebuilt index.build
-        // type=ivf|ivfpq coarse quantizer (frozen — cells consistent with
-        // cluster.assign tags and every knn probe of that index);
-        // otherwise seeded in-op Lloyd's on a bounded sample.
-        val seed = cfg.longOr("seed", 11L)
-        val nlist = cfg.longOr("nlist", 16L).toInt
-        if (nlist < 1) throw new GraftConfigError(
-          s"dedup.embedding: nlist must be >= 1, got $nlist")
-        val cents: Array[Array[Double]] = cfg.strOpt("quantizer_path") match {
-          case Some(p) =>
-            IndexMaintenance.recoverSwap(p)
-            if (!GraftFs.exists(s"$p/centroids")) throw new GraftPlanError(
-              s"dedup.embedding: no ivf/ivfpq index at '$p' — quantizer_path needs " +
-              "an index.build type=ivf|ivfpq index")
-            IvfCentroids.load(ctx.spark, p, "dedup.embedding blocking=ivf").map(_._2.toArray)
-          case None =>
-            val maxTrain = cfg.longOr("max_train", 10000L).toInt
-            // Pq.trainSample: deterministic uniform draw (a plain limit
-            // would train on the first rows in plan order — one domain's
-            // slice of a sorted corpus)
-            val sample = Pq.trainSample(reps, F.col("vec"), maxTrain, seed)
-            if (sample.isEmpty) Array(Array.fill(math.max(1, dim))(0.0)) // empty corpus: no pairs
-            else Pq.lloyd(sample, nlist, Pq.TrainIters, seed)
-        }
-        // broadcast the centroid table instead of closure-shipping it with
-        // every task binary (same math — see IvfCentroids.assignUdf)
-        val bcCents = ctx.spark.sparkContext.broadcast(cents)
-        val assign = F.udf { v: Seq[Float] =>
-          val arr = new Array[Double](v.length)
-          var i = 0
-          while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-          Pq.nearest(bcCents.value, arr)
-        }
-        val sigs = ctx.pin(reps
-          .withColumn("cell", assign(F.col("vec").cast("array<float>"))))
-        cellSelfNearPairs(sigs, threshold)
+        // A null vector gets a null cell and no candidates.
+        val q = IvfIndex.blockingQuantizer(ctx, name, reps, F.col("vec"), 11L,
+          s"vectors in '$vecCol'", Some(dim).filter(_ > 0))
+        val cells = ctx.pin(reps.withColumn("cell", q.assign(ctx.spark, F.col("vec"))))
+        verifyCosine(IvfIndex.cellPairs(cells, cells, "id", "a", "b", self = true),
+          cells.select(F.col("id"), F.col("vec")), threshold)
     }
     exactDups.unionByName(DedupPairs.dropped(nearPairs,
       cfg.boolOr("transitive", false),
@@ -976,20 +952,6 @@ object DedupEmbeddingOp extends Stage {
       threshold: Double): DataFrame =
     verifyCosine(LshIndex.candidates(l, p, sigs, sigs, "id", "a", "b", threshold, self = true),
       sigs.select(F.col("id"), F.col("vec")), threshold)
-
-  /** cluster-blocked self-join over (id, vec, cell) reps → verified cosine
-    * pairs (id_a < id_b). Same narrow-candidate discipline; each row
-    * carries exactly ONE cell so every candidate pair arises once (no
-    * dedup exchange), and the exact-cosine verify re-attaches vectors to
-    * candidates only. */
-  private def cellSelfNearPairs(sigs: DataFrame, threshold: Double): DataFrame = {
-    val lhs = sigs.select(F.col("cell"), F.col("id").alias("id_a"))
-    val rhs = sigs.select(F.col("cell"), F.col("id").alias("id_b"))
-    val candidates = lhs.join(rhs, Seq("cell"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-    verifyCosine(candidates, sigs.select(F.col("id"), F.col("vec")), threshold)
-  }
 
   /** exact-cosine verify of narrow (id_a, id_b) candidates: vectors
     * re-attach by id only for surviving candidates (AQE broadcasts the

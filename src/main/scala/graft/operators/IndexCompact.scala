@@ -83,22 +83,25 @@ private[graft] object IndexMaintenance {
   /** (family name, corpus partition columns) of the index at `path`, from
     * its own metadata — shared by index.compact and index.stats. */
   def layout(spark: org.apache.spark.sql.SparkSession, path: String,
-      op: String): (String, Seq[String]) = {
-    if (GraftFs.isDir(s"$path/meta")) {
+      op: String): (String, Seq[String]) =
+    IvfLayout.at(spark, path).map(l => (l.name, l.partitionCols)).getOrElse {
+      if (!GraftFs.isDir(s"$path/meta"))
+        throw new GraftPlanError(s"$op: no index at $path — run index.build first")
       // schema-only footer read: layout() dispatches on which fields EXIST,
       // needs no values — and must not throw on a zero-row meta table
       val fields = IndexMeta.schemaFields(spark, s"$path/meta")
-      if (fields.contains("ksub")) ("ivfpq", Seq("cell"))
-      else LshLayout.ofFields(fields).map(l => ("lsh", l.partitionCols))
+      LshLayout.ofFields(fields).map(l => ("lsh", l.partitionCols))
         .orElse(TextSigFamily.ofFields(fields).map(f => (f.name, Seq.empty)))
         .getOrElse {
           if (fields.contains("columns")) ("exact", Seq.empty)
           else throw new GraftPlanError(
             s"$op: unrecognized index meta at $path (fields: ${fields.mkString(", ")})")
         }
-    } else if (GraftFs.isDir(s"$path/centroids")) ("ivf", Seq("cell"))
-    else throw new GraftPlanError(s"$op: no index at $path — run index.build first")
-  }
+    }
+
+  /** Whether any index family has been built at `path`. */
+  def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
+    GraftFs.isDir(s"$path/meta") || IvfLayout.at(spark, path).isDefined
 
   /** The family name of the index at `path`, for errors that name it. */
   def familyAt(spark: org.apache.spark.sql.SparkSession, path: String, op: String): String =
@@ -265,7 +268,7 @@ object IndexCompactOp extends Stage {
     // costing recall. A retrain rewrites every corpus file, so it
     // supersedes the physical compact below.
     val retrainReason: Option[String] = cfg.tblOpt("retrain_if").flatMap(cond =>
-      IndexRetrain.evaluate(ctx, path, family, corpusDir, cond))
+      IndexRetrain.evaluate(ctx, path, family, cond))
     retrainReason.foreach { reason =>
       requireQuiesced()
       IndexRetrain.retrain(ctx, path, family, corpusDir,
@@ -441,7 +444,7 @@ private[operators] object IndexRetrain {
   /** Evaluate retrain_if against the measured index; Some(reason) when a
     * condition trips. Validates the table loud even when nothing trips. */
   def evaluate(ctx: StageContext, path: String, family: String,
-      corpusDir: String, cond: Cfg): Option[String] = {
+      cond: Cfg): Option[String] = {
     val known = Set("recall_below", "cell_skew_above", "nprobe", "k",
       "queries", "seed", "rerank", "id_column", "vector_column", "max_train",
       "corpus_sample")
@@ -458,14 +461,8 @@ private[operators] object IndexRetrain {
     val skew = cond.doubleOpt("cell_skew_above").flatMap { thr =>
       if (thr <= 1.0) throw new GraftConfigError(
         s"index.compact: retrain_if.cell_skew_above must be > 1.0 (1.0 = perfectly balanced), got $thr")
-      val occ = Pq.cellOccupancy(spark, corpusDir)
-      val total = occ.values.sum
-      if (occ.isEmpty || total == 0L) None
-      else {
-        val nlist = IvfCentroids.load(spark, path, "index.compact retrain_if").length
-        val ratio = occ.values.max.toDouble * nlist / total
-        if (ratio > thr) Some(f"cell_skew $ratio%.2f > $thr%.2f") else None
-      }
+      IvfIndex.cellSkew(ctx, path, "index.compact retrain_if").filter(_ > thr)
+        .map(ratio => f"cell_skew $ratio%.2f > $thr%.2f")
     }
     skew.orElse(cond.doubleOpt("recall_below").flatMap { thr =>
       if (thr <= 0.0 || thr > 1.0) throw new GraftConfigError(
@@ -502,10 +499,9 @@ private[operators] object IndexRetrain {
       .parquet(files: _*)
     // drop only the columns the index layout minted; everything else —
     // ids, the vector, user payload — feeds the rebuild unchanged
-    val reserved =
-      if (family == "ivfpq") Set("cell", "pq_codes", "pq_vnorm") else Set("cell")
+    val idx = IvfIndex.open(ctx, "index.compact retrain", path)
     val src = corpus.select(
-      corpus.columns.filterNot(reserved).map(F.col).toSeq: _*)
+      corpus.columns.filterNot(idx.layout.corpusCols.contains).map(F.col).toSeq: _*)
 
     // stage BEFORE any destructive step: the overwrite below reads from
     // this copy, never from the directory it is rewriting
@@ -522,33 +518,13 @@ private[operators] object IndexRetrain {
         s"($before corpus, $after staged) — retrain aborted, index untouched")
     }
 
-    val buildCfg: Seq[(String, Any)] = family match {
-      case "ivfpq" =>
-        val meta = IndexMeta.head(spark, s"$path/meta")
-        Seq("type" -> "ivfpq", "path" -> path,
-          "vector_column" -> PqIndex.metaVectorColumn(meta),
-          "nlist" -> meta.getAs[Int]("nlist").toLong,
-          "m" -> meta.getAs[Int]("m").toLong,
-          "ksub" -> meta.getAs[Int]("ksub").toLong,
-          "seed" -> cond.longOr("seed", meta.getAs[Long]("seed")),
-          "max_train" -> cond.longOr("max_train", 10000L))
-      case _ =>
-        val nlist = IvfCentroids.load(spark, path, "index.compact retrain").length
-        Seq("type" -> "ivf", "path" -> path,
-          "vector_column" -> cond.strOr("vector_column", "embedding"),
-          "nlist" -> nlist.toLong,
-          "seed" -> cond.longOr("seed", 11L),
-          "max_train" -> cond.longOr("max_train", 100000L))
-    }
-
     // index.build mode=overwrite semantics, minus the lease this verb
     // already holds: invalidate the compacted-generation record and any
     // generation-pointer state, then run the same build internals
     GraftFs.deleteIfExists(s"$path/compact.gen")
     IndexSnapshot.resetGenerations(path)
-    val bctx = StageContext.one(spark, staged, Cfg.of(buildCfg: _*))
-    if (family == "ivfpq") PqIndex.build(bctx)
-    else IndexBuildOp.buildIvf(bctx)
+    IvfIndex.build(StageContext.one(spark, staged, Cfg.of(idx.rebuildConfig(cond): _*)),
+      idx.layout)
     GraftFs.deleteRec(stage) // rebuild landed — the recovery copy retires
     System.err.println(s"[graft] index.compact: $path — retrain_if tripped " +
       s"($reason): $family quantizer retrained on the current corpus " +
@@ -654,15 +630,9 @@ object IndexStatsOp extends Stage {
     // BENCH_NOTES scan-bytes claim (an ADC probe reads 1/ratio of the
     // bytes a flat probe would); null for every other family
     val pqScanRatio: Option[Double] =
-      if (family != "ivfpq" || files.isEmpty) None
-      else try {
-        val m = IndexMeta.head(spark, s"$path/meta")
-        val vecCol = PqIndex.metaVectorColumn(m)
-        val vecBytes = PqIndex.columnChunkBytes(spark, files, Set(vecCol))
-        val codeBytes = PqIndex.columnChunkBytes(spark, files, Set("pq_codes", "pq_vnorm"))
-        if (codeBytes <= 0L) None
-        else Some(math.round(vecBytes.toDouble / codeBytes * 10) / 10.0)
-      } catch { case scala.util.control.NonFatal(_) => None }
+      if (files.isEmpty) None
+      else try IvfIndex.pqScanRatio(ctx, path, files)
+      catch { case scala.util.control.NonFatal(_) => None }
     // ivf/ivfpq only: the hottest cell's share of the corpus × nlist —
     // 1.0 = perfectly balanced, ≫ 1 = a skewed quantizer (the observable
     // form of the build-time cell-skew advisory: probes at fixed nprobe
@@ -670,17 +640,8 @@ object IndexStatsOp extends Stage {
     // a maintenance pipeline can watch it drift and trigger a
     // mode=overwrite retrain. Null for non-cell families.
     val cellSkew: Option[Double] =
-      if (family != "ivf" && family != "ivfpq") None
-      else try {
-        // nlist from the centroids table, NOT the populated-cell count —
-        // a fully collapsed quantizer (everything in one cell) must read
-        // as maximal skew (= nlist), not as "balanced"
-        val nlist = IvfCentroids.load(spark, path, "index.stats").length
-        val occ = Pq.cellOccupancy(spark, corpusDir)
-        val total = occ.values.sum
-        if (occ.isEmpty || total == 0L || nlist == 0) None
-        else Some(math.round(occ.values.max.toDouble * nlist / total * 100) / 100.0)
-      } catch { case scala.util.control.NonFatal(_) => None }
+      try IvfIndex.cellSkew(ctx, path, "index.stats").map(r => math.round(r * 100) / 100.0)
+      catch { case scala.util.control.NonFatal(_) => None }
     Seq((path, family, rows, files.size.toLong, bytes, meanKb, appendDirs, partDirs,
         sinceCompact, lease.map(_._1), lease.map(_._2), occupancy, pqScanRatio, cellSkew))
       .toDF("path", "index_type", "rows", "files", "bytes", "mean_file_kb",

@@ -85,9 +85,8 @@ object IndexRecallOp extends Stage {
       s"index.recall: the index at $path is $family — recall is a property of " +
       "cell-pruned ANN probes (ivf/ivfpq); lsh planes are fixed at build and the " +
       "set-membership families have no probe-recall notion")
-    val vecCol =
-      if (family == "ivfpq") PqIndex.metaVectorColumn(IndexMeta.head(spark, s"$path/meta"))
-      else cfg.strOr("vector_column", "embedding")
+    val vecCol = IvfIndex.open(ctx, name, path)
+      .vectorColumn(cfg.strOr("vector_column", "embedding"))
     val corpusDir = IndexSnapshot.corpusDir(path)
     val files = IndexSnapshot.files(corpusDir, s"index.recall: no corpus at $path")
     if (files.isEmpty) throw new GraftPlanError(

@@ -35,23 +35,23 @@ object KnnBruteForceOp extends Stage {
     }
   }
 
+  /** The exact top-k (id, cosine) of `rows` against query `q`: rounded
+    * cosine desc, ties to the lower id — the ranking every single-query
+    * knn op returns. `cosine_sim` must be registered on the session. */
+  def topK(rows: DataFrame, q: Seq[Double], id: String, vec: String, k: Int): DataFrame =
+    rows
+      .withColumn("cosine", F.round(F.call_function("cosine_sim",
+        F.col(vec).cast("array<double>"), F.array(q.map(F.lit): _*)), 6))
+      .select(F.col(id), F.col("cosine"))
+      .orderBy(F.col("cosine").desc, F.col(id).asc)
+      .limit(k)
+
   def apply(ctx: StageContext): DataFrame = {
     val cfg = ctx.cfg
-    val idCol = cfg.strOr("id_column", "vec_id")
-    val vecCol = cfg.strOr("vector_column", "embedding")
-    val k = cfg.longOr("k", 10L).toInt
     val q = queryVector(ctx)
-    val qLit = F.array(q.map(F.lit): _*)
-
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val cos = F.call_function("cosine_sim",
-      F.col(vecCol).cast("array<double>"), qLit)
-
-    ctx.primary
-      .withColumn("cosine", F.round(cos, 6))
-      .select(F.col(idCol), F.col("cosine"))
-      .orderBy(F.col("cosine").desc, F.col(idCol).asc)
-      .limit(k)
+    topK(ctx.primary, q, cfg.strOr("id_column", "vec_id"), cfg.strOr("vector_column", "embedding"),
+      cfg.longOr("k", 10L).toInt)
   }
 }
 
@@ -116,19 +116,11 @@ object KnnJoinOp extends Stage {
   // undefined for a direction-less vector, and the heap's primitive
   // eviction compare and the window's NaN-largest ordering would
   // otherwise disagree on it
-  private def scored(joined: DataFrame): DataFrame = joined
+  private[operators] def scored(joined: DataFrame): DataFrame = joined
     .select(F.col("query_id"), F.col("corpus_id"),
       F.round(F.call_function("cosine_sim", F.col("_qv"), F.col("_cv")), 6)
         .alias("cosine"))
     .filter(F.col("cosine").isNotNull && !F.isnan(F.col("cosine")))
-
-  /** query vectors must match the ivf index dim; skipped under explain
-    * (no upstream jobs) — lsh indexes check it in LshIndex.open */
-  private def checkQueryDim(qSide: DataFrame, path: String, dim: Int): Unit =
-    LshIndex.firstDim(qSide, F.col("_qv")).filter(_ != dim).foreach(bd =>
-      throw new GraftConfigError(
-        s"knn.join: query vectors have length $bd but the index at $path was " +
-        s"built with dim = $dim"))
 
   /** the index corpus must hold `cols`, and an orderable `cId` */
   private def requireIndexed(corpus: DataFrame, path: String, cId: String,
@@ -179,33 +171,21 @@ object KnnJoinOp extends Stage {
         // typed by `index_type` (and, for lsh, `blocking`), same contract as
         // the dedup.embedding index probe; with an existing index, explain
         // still reads the tiny meta but never runs query-side jobs.
-        val explainOnly = cfg.boolOr("_explain_only", false)
-        val hasMeta = GraftFs.exists(s"$path/meta")
-        val hasCentroids = GraftFs.exists(s"$path/centroids")
-        val placeholder = explainOnly && !hasMeta && !hasCentroids
-        if (!placeholder && !hasMeta && !hasCentroids)
-          throw new GraftPlanError(
-            s"knn.join: no index at '$path' — run an index.build stage first")
         val family =
-          if (placeholder) cfg.strOr("index_type", "lsh") match {
-            case ok @ ("lsh" | "ivf" | "ivfpq") => ok
-            case other => throw new GraftConfigError(
-              s"knn.join: index_type must be lsh|ivf|ivfpq, got '$other'")
-          }
+          if (cfg.boolOr("_explain_only", false) && !IndexMaintenance.exists(ctx.spark, path))
+            cfg.strOr("index_type", "lsh") match {
+              case ok @ ("lsh" | "ivf" | "ivfpq") => ok
+              case other => throw new GraftConfigError(
+                s"knn.join: index_type must be lsh|ivf|ivfpq, got '$other'")
+            }
           else IndexMaintenance.layout(ctx.spark, path, "knn.join")._1 match {
             case ok @ ("lsh" | "ivf" | "ivfpq") => ok
             case fam => throw new GraftConfigError(s"knn.join: the index at $path is a " +
               s"$fam index, not a vector index (lsh, ivf or ivfpq)")
           }
-        family match {
-          case "lsh" => lshPairs(ctx, path, qSide, queries, qId, qVec, cId, cVec)
-          case "ivf" =>
-            ivfPairs(ctx, path, placeholder, explainOnly, qSide, queries,
-              qId, qVec, cId, cVec)
-          case "ivfpq" =>
-            ivfpqPairs(ctx, path, placeholder, explainOnly, qSide, queries,
-              qId, qVec, cId, cVec, k)
-        }
+        if (family == "lsh") lshPairs(ctx, path, qSide, queries, qId, qVec, cId, cVec)
+        else ivfPairs(ctx, path, IvfLayout.byName(family).get, qSide, queries, qId, qVec, cId,
+          cVec, k)
 
       case None =>
         val corpus = corpusOpt.get
@@ -258,7 +238,7 @@ object KnnJoinOp extends Stage {
     * |Q|·partitions·k-bounded) heap output at the call site, NOT with a
     * global pair-dedup exchange of the whole candidate stream before the
     * heaps (the r6 finding-3 shape). */
-  private def heapTopK(pairs: DataFrame, k: Int, outSchema: StructType): DataFrame = {
+  private[operators] def heapTopK(pairs: DataFrame, k: Int, outSchema: StructType): DataFrame = {
     @inline def idLt(a: Any, b: Any): Boolean =
       a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
     pairs.mapPartitions { it =>
@@ -325,178 +305,34 @@ object KnnJoinOp extends Stage {
     (scored(qKeys.join(idx, l.joinCols)), corpus.schema(cId).dataType)
   }
 
-  /** IVF probe (index.build type=ivf): each query ranks the nlist
-    * centroids (broadcast into one UDF — nlist rows, tiny) and explodes
-    * to its `nprobe` nearest cells; the distinct probed cells become a
-    * STATIC `cell IN (...)` partition filter on the cell-partitioned
-    * corpus (visible as PartitionFilters in the scan — nprobe/nlist of
-    * the bytes are read), then the cell equi-join scores only the pruned
-    * slice. nprobe = nlist probes every cell ≡ batch brute force (the
-    * knn_join_ivf_exhaustive gate). Each corpus row lives in exactly one
-    * cell and a query probes distinct cells, so no pair dedup is needed. */
-  private def ivfPairs(ctx: StageContext, path: String, placeholder: Boolean,
-      explainOnly: Boolean, qSide: DataFrame, queries: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String): (DataFrame, DataType) = {
-    import org.apache.spark.ml.linalg.Vectors
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val nprobe0 = cfg.longOr("nprobe", 4L).toInt
-    if (nprobe0 < 1) throw new GraftConfigError(
-      s"knn.join: nprobe must be >= 1, got $nprobe0")
-    if (cfg.has("rerank")) throw new GraftConfigError(
-      "knn.join: rerank applies only to an ivfpq index (this index is " +
-      "IVF-flat — its probe already scores exactly); rebuild with " +
-      "index.build type=ivfpq to get the ADC + rerank path")
-    if (placeholder) {
-      // empty probe typed like the query side — the plan shape without
-      // touching (or requiring) the index
-      val emptySchema = StructType(Seq(
-        StructField("query_id", queries.schema(qId).dataType),
-        StructField("corpus_id", queries.schema(qId).dataType),
-        StructField("cosine", DoubleType)))
-      return (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], emptySchema),
-        queries.schema(qId).dataType)
-    }
-    IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
-    val cents = IvfCentroids.load(spark, path, "knn.join mode=ivf")
-    val dim = cents.head._2.size
-    if (!explainOnly) checkQueryDim(qSide, path, dim)
-    val nprobe = math.min(nprobe0, cents.length)
-    // same cell-ranking metric as the index's KMeans assignment
-    // (euclidean); bounded top-nprobe selection, no per-row nlist sort
-    val nearestCells = F.udf { v: Seq[Double] =>
-      IvfCentroids.nearest(cents, Vectors.dense(v.toArray), nprobe).toSeq
-    }
-    val qCells = qSide.withColumn("cell", F.explode(nearestCells(F.col("_qv"))))
-    val corpus0 = spark.read.parquet(IndexSnapshot.corpusDir(path))
-    requireIndexed(corpus0, path, cId, Seq(cVec))
+  /** IVF probe, either layout: each query explodes to its `nprobe`
+    * nearest cells; the distinct probed cells become ONE static `cell IN
+    * (...)` partition filter on the cell-partitioned corpus (visible as
+    * PartitionFilters in the scan — nprobe/nlist of the bytes are read),
+    * and the layout scores the cell equi-join of the pruned slice: exactly
+    * (flat), or by ADC over the code columns with an exact rerank (pq).
+    * nprobe = nlist probes every cell ≡ batch brute force (the
+    * knn_join_{ivf,ivfpq}_exhaustive gates). */
+  private def ivfPairs(ctx: StageContext, path: String, layout: IvfLayout, qSide: DataFrame,
+      queries: DataFrame, qId: String, qVec: String, cId: String, cVec: String,
+      k: Int): (DataFrame, DataType) = {
+    val idx = IvfIndex.open(ctx, name, path, "query vectors",
+      _ => LshIndex.firstDim(qSide, F.col("_qv")), probes = true, expected = layout)
+    // the corpus-side vector column is a fact of the index, unless the
+    // caller explicitly names it with right_vector
+    val corpusVec = if (ctx.cfg.has("right_vector")) cVec else idx.vectorColumn(cVec)
+    val qCells = qSide.withColumn("cell",
+      F.explode(idx.quantizer.probeColumn(F.col("_qv"), idx.nprobe)))
+    // the empty-index fallback types corpus_id like the query id
+    val corpus = idx.scan(StructField(cId, queries.schema(qId).dataType),
+      StructField(corpusVec, queries.schema(qVec).dataType))
+    requireIndexed(corpus, path, cId, idx.layout.probeCols(corpusVec, idx.rerank))
     // distinct probed cells (≤ nlist values, one small query-side job —
     // skipped under explain) → static partition pruning on the scan
-    val probed: Seq[Int] =
-      if (explainOnly) Seq.empty
-      else qCells.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-    val corpusF =
-      if (probed.isEmpty && !explainOnly) corpus0.filter(F.lit(false)) // no queries
-      else if (explainOnly) corpus0
-      else corpus0.filter(F.col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
-    val idx = corpusF.select(F.col("cell"),
-      F.col(cId).alias("corpus_id"), F.col(cVec).cast("array<double>").alias("_cv"))
-    (scored(qCells.join(idx, Seq("cell"))), corpus0.schema(cId).dataType)
-  }
-
-  /** IVFPQ batch probe (index.build type=ivfpq): same cell pruning as the
-    * ivf probe, but the candidate join reads ONLY the m-byte code columns
-    * (parquet column pruning — the scan-I/O win at corpus scale) and
-    * scores pairs approximately from the broadcast codebooks; per-query
-    * bounded heaps keep the top rerank·k candidates, which then re-score
-    * EXACTLY against the vector column of the same pruned cells. rerank·k
-    * ≥ the probed-cell row count makes the result identical to the ivf
-    * probe (the knn_join_ivfpq_exhaustive gate); `rerank = 0` returns the
-    * approximate scores unreranked. Note the batch shape differs from the
-    * single-query ADC: the m×ksub lookup table is per QUERY, so batch
-    * scoring computes the subspace dots inline (2·dim mults/pair instead
-    * of m lookups) — the scan-bytes reduction is the scale win, not the
-    * per-pair arithmetic (measured in ScaleProbe's ivfpq mode). */
-  private def ivfpqPairs(ctx: StageContext, path: String, placeholder: Boolean,
-      explainOnly: Boolean, qSide: DataFrame, queries: DataFrame,
-      qId: String, qVec: String, cId: String, cVec: String, k: Int): (DataFrame, DataType) = {
-    import org.apache.spark.ml.linalg.Vectors
-    val cfg = ctx.cfg
-    val spark = ctx.spark
-    val nprobe0 = cfg.longOr("nprobe", 4L).toInt
-    if (nprobe0 < 1) throw new GraftConfigError(
-      s"knn.join: nprobe must be >= 1, got $nprobe0")
-    val rerank = cfg.longOr("rerank", 4L).toInt
-    if (rerank < 0) throw new GraftConfigError(
-      s"knn.join: rerank must be >= 0 (0 = return ADC scores unreranked), got $rerank")
-    if (placeholder) {
-      val emptySchema = StructType(Seq(
-        StructField("query_id", queries.schema(qId).dataType),
-        StructField("corpus_id", queries.schema(qId).dataType),
-        StructField("cosine", DoubleType)))
-      return (spark.createDataFrame(spark.sparkContext.emptyRDD[Row], emptySchema),
-        queries.schema(qId).dataType)
-    }
-    IndexMaintenance.recoverSwap(path)
-    val meta = IndexMeta.head(spark, s"$path/meta")
-    val m = meta.getAs[Int]("m")
-    val dim = meta.getAs[Int]("dim")
-    val dsub = dim / m
-    // corpus-side vector column is a fact of the index (meta), unless the
-    // caller explicitly overrides with right_vector
-    val corpusVec =
-      if (cfg.has("right_vector")) cVec else PqIndex.metaVectorColumn(meta)
-    val centsT = IvfCentroids.load(spark, path, "knn.join mode=ivfpq")
-    val cents = centsT.map(_._2.toArray)
-    val books = PqIndex.loadCodebooks(spark, path, "knn.join mode=ivfpq")
-    if (!explainOnly) checkQueryDim(qSide, path, dim)
-    val nprobe = math.min(nprobe0, cents.length)
-    val nearestCells = F.udf { v: Seq[Double] =>
-      IvfCentroids.nearest(centsT, Vectors.dense(v.toArray), nprobe).toSeq
-    }
-    val qCells = qSide.withColumn("cell", F.explode(nearestCells(F.col("_qv"))))
-    val corpus0 = spark.read.parquet(IndexSnapshot.corpusDir(path))
-    requireIndexed(corpus0, path, cId,
-      Seq("pq_codes", "pq_vnorm") ++ (if (rerank > 0) Seq(corpusVec) else Nil))
-    val probed: Seq[Int] =
-      if (explainOnly) Seq.empty
-      else qCells.select("cell").distinct().collect().map(_.getInt(0)).toSeq
-    val corpusF =
-      if (probed.isEmpty && !explainOnly) corpus0.filter(F.lit(false))
-      else if (explainOnly) corpus0
-      else corpus0.filter(F.col("cell").isin(probed.map(_.asInstanceOf[Any]): _*))
-
-    // approximate pair score from the broadcast quantizers — reads only
-    // the narrow code columns of the pruned cells
-    val approx = F.udf { (qv: Seq[Double], cell: Int, codes: Array[Byte], vnorm: Double) =>
-      val qa = qv.toArray
-      var qn = 0.0
-      var j = 0
-      while (j < qa.length) { qn += qa(j) * qa(j); j += 1 }
-      if (vnorm == 0.0 || qn == 0.0) 0.0
-      else {
-        val ctr = cents(cell)
-        var dot = 0.0
-        j = 0
-        while (j < qa.length) { dot += qa(j) * ctr(j); j += 1 }
-        var s = 0
-        while (s < m) {
-          val sub = books(s)(codes(s) & 0xFF)
-          var d = 0
-          while (d < dsub) { dot += qa(s * dsub + d) * sub(d); d += 1 }
-          s += 1
-        }
-        dot / (math.sqrt(qn) * vnorm)
-      }
-    }
-    val codesIdx = corpusF.select(F.col("cell"), F.col(cId).alias("corpus_id"),
-      F.col("pq_codes"), F.col("pq_vnorm"))
-    val approxPairs = qCells.join(codesIdx, Seq("cell"))
-      .select(F.col("query_id"), F.col("corpus_id"),
-        approx(F.col("_qv"), F.col("cell"), F.col("pq_codes"), F.col("pq_vnorm"))
-          .alias("cosine"))
-      .filter(F.col("cosine").isNotNull && !F.isnan(F.col("cosine")))
-    val cIdType = corpus0.schema(cId).dataType
-
-    if (rerank == 0)
-      // approximate mode: the shared final heap/window ranks the rounded
-      // ADC scores directly
-      (approxPairs.withColumn("cosine", F.round(F.col("cosine"), 6)), cIdType)
-    else {
-      // candidate bound at rerank·k per query, then exact re-score: the
-      // vector column is read only here, for the candidates' pruned cells
-      val kPrime = math.min(Int.MaxValue.toLong, rerank.toLong * k).toInt
-      val candSchema = StructType(Seq(
-        StructField("query_id", queries.schema(qId).dataType),
-        StructField("corpus_id", cIdType),
-        StructField("cosine", DoubleType)))
-      val cand = heapTopK(approxPairs, kPrime, candSchema)
-        .dropDuplicates("query_id", "corpus_id")
-        .select("query_id", "corpus_id")
-      val cVecs = corpusF.select(F.col(cId).alias("corpus_id"),
-        F.col(corpusVec).cast("array<double>").alias("_cv"))
-      (scored(cand.join(cVecs, Seq("corpus_id")).join(qSide, Seq("query_id"))), cIdType)
-    }
+    val pruned =
+      if (ctx.cfg.boolOr("_explain_only", false)) corpus
+      else IvfIndex.prune(corpus, qCells.select("cell").distinct().collect().map(_.getInt(0)))
+    (idx.layout.pairs(idx, qSide, qCells, pruned, cId, corpusVec, k), corpus.schema(cId).dataType)
   }
 }
 
@@ -534,14 +370,8 @@ object KnnLshOp extends Stage {
     val q = KnnBruteForceOp.queryVector(ctx)
 
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val qLit = F.array(q.map(F.lit): _*)
-    val cos = F.call_function("cosine_sim",
-      F.col(vecCol).cast("array<double>"), qLit)
-    def topk(candidates: DataFrame): DataFrame = candidates
-      .withColumn("cosine", F.round(cos, 6))
-      .select(F.col(idCol), F.col("cosine"))
-      .orderBy(F.col("cosine").desc, F.col(idCol).asc)
-      .limit(k)
+    def topk(candidates: DataFrame): DataFrame =
+      KnnBruteForceOp.topK(candidates, q, idCol, vecCol, k)
 
     cfg.strOpt("index_path") match {
       case Some(path) =>
@@ -595,93 +425,56 @@ object KnnLshOp extends Stage {
   }
 }
 
-/** knn.ivf — IVF-flat approximate nearest neighbor (the brief's IVF scale
+/** knn.ivf — IVF approximate nearest neighbor (the brief's IVF scale
   * path, complementing knn.lsh). A coarse quantizer partitions the corpus
   * into `nlist` cells; a query probes only the `nprobe` cells whose
-  * centroids are nearest, then exact cosine runs on that slice.
+  * centroids are nearest, then scores that slice.
   *
   * Two modes:
   *  - `index_path` (the 100 TB path): probe a PREBUILT index from
-  *    [[IndexBuildOp]]. Centroids (nlist rows) rank driver-side; the
-  *    corpus scan filters `cell IN (probed)` against the cell-partitioned
-  *    layout, so parquet partition pruning reads only nprobe/nlist of the
-  *    bytes (asserted in VectorIndexSpec). No training in the query.
-  *  - inline (exploratory): train the quantizer on a bounded sample inside
-  *    the query — fine at notebook scale, wasteful for repeated queries.
+  *    [[IndexBuildOp]] type=ivf|ivfpq. Centroids (nlist rows) rank
+  *    driver-side; the corpus scan filters `cell IN (probed)` against the
+  *    cell-partitioned layout, so parquet partition pruning reads only
+  *    nprobe/nlist of the bytes (asserted in VectorIndexSpec), and the
+  *    index's layout scores the slice: exact cosine (ivf) or ADC over the
+  *    m-byte codes with an exact rerank of the top `rerank`·k (ivfpq). No
+  *    training in the query.
+  *  - inline (exploratory): train an IVF-flat quantizer on a bounded
+  *    sample inside the query — fine at notebook scale, wasteful for
+  *    repeated queries.
   */
 object KnnIvfOp extends Stage {
   val name = "knn.ivf"
   val kind = StageKind.Transform
 
   def apply(ctx: StageContext): DataFrame = {
-    import org.apache.spark.ml.linalg.Vectors
     val cfg = ctx.cfg
     val idCol = cfg.strOr("id_column", "vec_id")
     val vecCol = cfg.strOr("vector_column", "embedding")
     val k = cfg.longOr("k", 10L).toInt
-    val nprobe0 = cfg.longOr("nprobe", 4L).toInt
     val q = KnnBruteForceOp.queryVector(ctx)
-    val qv = Vectors.dense(q.toArray)
-
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-    val qLit = F.array(q.map(F.lit): _*)
-    val cos = F.call_function("cosine_sim", F.col(vecCol).cast("array<double>"), qLit)
-
-    def topk(cells: DataFrame): DataFrame = cells
-      .withColumn("cosine", F.round(cos, 6))
-      .select(F.col(idCol), F.col("cosine"))
-      .orderBy(F.col("cosine").desc, F.col(idCol).asc)
-      .limit(k)
 
     cfg.strOpt("index_path") match {
       case Some(path) =>
-        val spark = ctx.spark
-        if (!GraftFs.exists(s"$path/centroids"))
-          throw new GraftPlanError(
-            s"knn.ivf: no index at '$path' — run an index.build stage first " +
-            "(note: the CLI `explain` command never builds indexes)")
-        IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
-        if (GraftFs.isDir(s"$path/pq"))
-          // ivfpq layout: ADC over m-byte codes + exact rerank (PqIndex)
-          PqIndex.probeSingle(ctx, path, idCol, k, nprobe0, q)
-        else {
-          if (cfg.has("rerank")) throw new GraftConfigError(
-            "knn.ivf: rerank applies only to an ivfpq index (this index is " +
-            "IVF-flat — its probe already scores exactly); rebuild with " +
-            "index.build type=ivfpq to get the ADC + rerank path")
-          val cents = IvfCentroids.load(spark, path, "knn.ivf")
-          val nprobe = math.min(nprobe0, cents.length)
-          val probed = IvfCentroids.nearest(cents, qv, nprobe)
-          topk(spark.read.parquet(IndexSnapshot.corpusDir(path))
-            .filter(F.col("cell").isin(probed.map(_.asInstanceOf[Any]): _*)))
-        }
+        val idx = IvfIndex.open(ctx, name, path, "the query vector", _ => Some(q.length),
+          probes = true)
+        idx.layout.knn(idx, IvfIndex.prune(idx.scan(ctx.primary.schema(idCol),
+            ctx.primary.schema(vecCol)), idx.quantizer.probe(q.toArray, idx.nprobe)),
+          q, idCol, idx.vectorColumn(vecCol), k)
       case None =>
         if (cfg.has("rerank")) throw new GraftConfigError(
           "knn.ivf: rerank applies only to an index_path probe of an ivfpq " +
           "index; the inline mode trains IVF-flat and scores exactly")
-        val nlist = cfg.longOr("nlist", 16L).toInt
-        val seed = cfg.longOr("seed", 11L)
-        val maxTrain = cfg.longOr("max_train", 10000L).toInt
-        // coarse quantizer trained DRIVER-SIDE on the bounded uniform
-        // draw — same shared Pq.trainSample / Pq.lloyd pair as
-        // index.build type=ivf (r13: the sample is capped at max_train by
-        // construction, so the fit is driver-scale work at any corpus
-        // size; the old distributed MLlib KMeans paid ~18 scheduler jobs
-        // per query against a cached sample). Centroids broadcast inside
-        // one assignment UDF, assignment stays one map pass.
-        val sample = graft.operators.Pq.trainSample(
-          ctx.primary, F.col(vecCol), maxTrain, seed)
-        if (sample.isEmpty) throw new GraftPlanError(
-          "knn.ivf: empty input, nothing to train the quantizer on")
-        val centsArr = graft.operators.Pq.lloyd(
-          sample, nlist, graft.operators.Pq.TrainIters, seed)
-        val cents = centsArr.zipWithIndex.map { case (c, i) => (i, Vectors.dense(c)) }
-        val nprobe = math.min(nprobe0, cents.length)
-        val probed = IvfCentroids.nearest(cents, qv, nprobe)
-        val assign = IvfCentroids.assignUdf(ctx.spark, cents)
-        topk(ctx.primary.select(F.col(idCol), F.col(vecCol))
-          .withColumn("cell", assign(F.col(vecCol).cast("array<float>")))
-          .filter(F.col("cell").isin(probed.map(_.asInstanceOf[Any]): _*)))
+        val nprobe = IvfIndex.nprobe(name, cfg)
+        val quantizer = IvfIndex.train(name, ctx.primary, F.col(vecCol), cfg, 10000L,
+            IvfLayout.Seed.of(cfg)).map(_._2)
+          .getOrElse(throw new GraftPlanError("knn.ivf: empty input, nothing to train the quantizer on"))
+        quantizer.requireDim(name, "the query vector", q.length,
+          s"the quantizer trained on '$vecCol'")
+        KnnBruteForceOp.topK(IvfIndex.prune(ctx.primary.select(F.col(idCol), F.col(vecCol))
+            .withColumn("cell", quantizer.assign(ctx.spark, F.col(vecCol))),
+          quantizer.probe(q.toArray, nprobe)), q, idCol, vecCol, k)
     }
   }
 }

@@ -103,12 +103,9 @@ object SimilarJoinOp extends Stage {
     val cfg = ctx.cfg
     val leftText = cfg.strOr("left_text", cfg.strOr("text_column", "text"))
     val rightText = cfg.strOr("right_text", cfg.strOr("text_column", "text"))
-    val threshold = cfg.doubleOr("threshold", 0.8)
     val minhash = TextSigFamily.MinHash
     val p = minhash.fromConfig(cfg)
     minhash.problem(p).foreach(m => throw new GraftConfigError(m))
-    val (bands, r) = minhash.bandShape(p)
-    val k = bands * r
 
     def prepare(df: DataFrame, id: String, text: String) = {
       val (reps, mapping) = collapse(df, id, F.col(text), ctx.deferToCleanup)
@@ -116,29 +113,10 @@ object SimilarJoinOp extends Stage {
     }
     val (hl, mapL) = prepare(left, leftId, leftText)
     val (hr, mapR) = prepare(right, rightId, rightText)
-
-    def banded(hashed: DataFrame, side: String) =
-      hashed.select(F.col("id").alias(s"rep_$side"), F.col("sig").alias(s"sig_$side"),
-        F.posexplode(F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
-          b => F.xxhash64(F.concat_ws("_", F.slice(F.col("sig"), b * F.lit(r) + 1, F.lit(r)))))))
-        .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
-
-    val agreement = F.aggregate(
-      F.zip_with(F.col("sig_l"), F.col("sig_r"), (x, y) => F.when(x === y, 1).otherwise(0)),
-      F.lit(0), (acc, v) => acc + v).cast("double") / k
-
-    val candidates = banded(hl, "l").join(banded(hr, "r"), Seq("band_idx", "band_hash"))
-      .dropDuplicates("rep_l", "rep_r")
-      .filter(agreement >= math.max(0.0, threshold - 0.3))
-      .select("rep_l", "rep_r")
-
-    val verified = candidates
-      .join(hl.select(F.col("id").alias("rep_l"), F.col("shingles").alias("sh_l")), "rep_l")
-      .join(hr.select(F.col("id").alias("rep_r"), F.col("shingles").alias("sh_r")), "rep_r")
-      .withColumn("jaccard", F.call_function("jaccard_sim", F.col("sh_l"), F.col("sh_r")))
-      .filter(F.col("jaccard") >= threshold)
-      .select("rep_l", "rep_r", "jaccard")
-
+    // the minhash family's cross pairs: the band join on narrow keys, the
+    // signature-agreement prefilter and the exact-Jaccard verify
+    val verified = minhash.crossPairsScored(hl, hr, p, cfg)
+      .select(F.col("id_l").alias("rep_l"), F.col("id_r").alias("rep_r"), F.col("jaccard"))
     expand(verified, mapL, mapR, "jaccard")
   }
 
@@ -149,7 +127,6 @@ object SimilarJoinOp extends Stage {
     val leftVec = cfg.strOr("left_vector", cfg.strOr("vector_column", "embedding"))
     val rightVec = cfg.strOr("right_vector", cfg.strOr("vector_column", "embedding"))
     val threshold = cfg.doubleOr("threshold", 0.9)
-    val seed = cfg.longOr("seed", Defaults.seed)
     val blocking = cfg.strOr("blocking", "pigeonhole")
     // only the chosen layout's parameters are checked: a leftover
     // pigeonhole value must not reject a banded/ivf config that never uses it
@@ -177,35 +154,11 @@ object SimilarJoinOp extends Stage {
     // blocking=ivf (SemDeDup-style cluster blocking, see dedup.embedding):
     // candidates are same-cell cross pairs under ONE shared coarse
     // quantizer — quantizer_path reuses a prebuilt ivf/ivfpq index;
-    // otherwise seeded in-op Lloyd's trained on the RIGHT (corpus) side's
-    // bounded sample, the side the left rows are being matched against.
-    // nlist = 1 is exhaustive (the similar_join_embedding_ivf gate).
-    val ivfCents: Array[Array[Double]] =
-      if (blocking != "ivf") null
-      else cfg.strOpt("quantizer_path") match {
-        case Some(p) =>
-          IndexMaintenance.recoverSwap(p)
-          if (!GraftFs.exists(s"$p/centroids")) throw new GraftPlanError(
-            s"join.similar: no ivf/ivfpq index at '$p' — quantizer_path needs " +
-            "an index.build type=ivf|ivfpq index")
-          IvfCentroids.load(ctx.spark, p, "join.similar blocking=ivf").map(_._2.toArray)
-        case None =>
-          val nlist = cfg.longOr("nlist", 16L).toInt
-          if (nlist < 1) throw new GraftConfigError(
-            s"join.similar: nlist must be >= 1, got $nlist")
-          val maxTrain = cfg.longOr("max_train", 10000L).toInt
-          // Pq.trainSample: deterministic uniform draw (a plain limit
-          // would train on the first rows in plan order — one domain's
-          // slice of a sorted corpus)
-          val sample = Pq.trainSample(
-            right.filter(F.col(rightVec).isNotNull), F.col(rightVec), maxTrain, seed)
-          if (sample.isEmpty) Array(Array.fill(math.max(1, dimL))(0.0))
-          else Pq.lloyd(sample, nlist, Pq.TrainIters, seed)
-      }
-    val assignCell = if (ivfCents == null) null else F.udf { v: Seq[Float] =>
-      Pq.nearest(ivfCents, v.map(_.toDouble).toArray)
-    }
-
+    // otherwise one trained on the RIGHT (corpus) side's bounded draw, the
+    // side the left rows are being matched against. nlist = 1 is
+    // exhaustive (the similar_join_embedding_ivf gate).
+    val cellOf = if (layout.isDefined) None else Some(IvfIndex.blockingQuantizer(ctx, name,
+      right, F.col(rightVec), Defaults.seed, "vectors", Some(dimL)).assign(ctx.spark, F.col("vec")))
     val lsh = unsized.map { case (l, p) => (l, p.updated(LshLayout.Dim, dimL)) }
     // content key for exact collapse = the vector itself (distinct vectors)
     def prepare(df: DataFrame, id: String, vec: String) = {
@@ -213,7 +166,7 @@ object SimilarJoinOp extends Stage {
       val keyed = reps.select(F.col("id"), F.col("_key").alias("vec"))
       (ctx.pin(lsh match {
         case Some((l, p)) => keyed.withColumn("sig", l.signature(F.col("vec"), p))
-        case None => keyed.withColumn("cell", assignCell(F.col("vec")))
+        case None => keyed.withColumn("cell", cellOf.get)
       }), mapping)
     }
     val (sl, mapL) = prepare(left, leftId, leftVec)
@@ -224,13 +177,7 @@ object SimilarJoinOp extends Stage {
     val candidates = lsh match {
       case Some((l, p)) =>
         LshIndex.candidates(l, p, sl, sr, "rep", "l", "r", threshold, self = false)
-      case None =>
-        def cells(sigged: DataFrame, side: String) =
-          sigged.select(F.col("id").alias(s"rep_$side"),
-            F.lit(0).alias("block_idx"), F.col("cell").cast("long").alias("block_val"))
-        cells(sl, "l").join(cells(sr, "r"), Seq("block_idx", "block_val"))
-          .dropDuplicates("rep_l", "rep_r")
-          .select("rep_l", "rep_r")
+      case None => IvfIndex.cellPairs(sl, sr, "rep", "l", "r", self = false)
     }
 
     val verified = candidates

@@ -4,91 +4,19 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.config._
 import graft.core._
 
-/** Shared IVF centroid machinery: one loader (with the loud empty-table
-  * check) and one bounded nearest-cells selection, used by the quantizer
-  * append path and every ivf probe (knn.ivf, knn.join mode=ivf). */
-private[operators] object IvfCentroids {
-  import org.apache.spark.ml.linalg.{Vector, Vectors}
-
-  /** (cell, centroid) sorted by cell. An IVF index whose centroids table
-    * is EMPTY is unusable (appends can't assign, probes would silently
-    * degrade to dim = 0) — fail loud instead. Listing-keyed cached
-    * (IndexMeta): probe loops re-read a table that only a rebuild — which
-    * writes fresh part files — can change; callers treat the array as
-    * read-only. */
-  def load(spark: org.apache.spark.sql.SparkSession, path: String,
-      op: String): Array[(Int, Vector)] =
-    IndexMeta.cached(s"$path/centroids") {
-      val cents = spark.read.parquet(s"$path/centroids")
-        .select("cell", "centroid").collect()
-        .map(r => (r.getInt(0), Vectors.dense(r.getSeq[Double](1).toArray)))
-        .sortBy(_._1)
-      if (cents.isEmpty) throw new GraftConfigError(
-        s"$op: the index at $path has no centroids — rebuild with " +
-        "index.build type=ivf mode=overwrite")
-      cents
-    }
-
-  /** One-nearest-cell assignment UDF over a BROADCAST centroid table —
-    * the corpus-wide map pass of every ivf build/append/inline-probe. The
-    * centroid array used to ride the UDF closure, re-shipped with every
-    * stage's task binary (nlist·dim doubles per launch); a broadcast ships
-    * it once per executor (guide §3.1's small-side discipline applied to
-    * the task payload — r14, VERDICT item 8). The arithmetic is UNCHANGED:
-    * the same [[nearest]] over the same `Vectors.sqdist`, with the
-    * float→double widening done by an exact while-loop instead of the
-    * boxing `v.map(_.toDouble)` — assignments are bit-identical
-    * (IvfAssignSpec pins it). */
-  def assignUdf(spark: org.apache.spark.sql.SparkSession,
-      cents: Array[(Int, Vector)]): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    val bc = spark.sparkContext.broadcast(cents)
-    F.udf { v: Seq[Float] =>
-      val arr = new Array[Double](v.length)
-      var i = 0
-      while (i < arr.length) { arr(i) = v(i).toDouble; i += 1 }
-      nearest(bc.value, Vectors.dense(arr), 1)(0)
-    }
-  }
-
-  /** Cell ids of the `nprobe` euclidean-nearest centroids to `q`, nearest
-    * first — bounded insertion selection (O(nlist·nprobe) with nprobe
-    * tiny), not a full nlist sort per query row. Ties keep the
-    * lower-cell-id centroid, matching the stable sort this replaces. */
-  def nearest(cents: Array[(Int, Vector)], q: Vector, nprobe: Int): Array[Int] = {
-    val n = math.min(nprobe, cents.length)
-    val bestD = Array.fill(n)(Double.MaxValue)
-    val bestId = new Array[Int](n)
-    var i = 0
-    while (i < cents.length) {
-      val d = Vectors.sqdist(cents(i)._2, q)
-      if (d < bestD(n - 1)) {
-        var j = n - 1
-        while (j > 0 && bestD(j - 1) > d) {
-          bestD(j) = bestD(j - 1); bestId(j) = bestId(j - 1); j -= 1
-        }
-        bestD(j) = d; bestId(j) = cents(i)._1
-      }
-      i += 1
-    }
-    bestId
-  }
-}
-
 /** index.build — persist a vector index so ANN probes prune I/O instead of
   * scanning the corpus (round-1 review: knn.ivf re-trained its quantizer
   * inside every query — correct, but the index belongs OUTSIDE the query
   * at 100 TB).
   *
-  * `type = "ivf"` (default) — layout under `path`:
-  *   corpus/    the input rows + `cell` (nearest-centroid id), written
-  *              `partitionBy("cell")` — a probe filtering `cell IN (...)`
-  *              becomes parquet PARTITION PRUNING: nprobe/nlist of the
-  *              bytes are read, visible as PartitionFilters in the scan
-  *   centroids/ (cell INT, centroid ARRAY<DOUBLE>) — nlist rows, tiny;
-  *              probes rank these driver-side to pick cells
-  * The quantizer is MLlib KMeans on a bounded sample (`max_train`), the
-  * standard IVF recipe: centroid quality needs a sample, assignment is one
-  * broadcast-model map pass over the full corpus.
+  * `type = "ivf"` (default) | `"ivfpq"` — the cell-partitioned corpus of
+  * that IvfLayout plus `centroids/` (cell INT, centroid ARRAY<DOUBLE>),
+  * built by the shared IvfIndex.build: a probe filtering `cell IN (...)`
+  * becomes parquet PARTITION PRUNING (nprobe/nlist of the bytes are read,
+  * visible as PartitionFilters in the scan). The quantizer trains
+  * driver-side on a bounded sample (`max_train`), the standard IVF recipe:
+  * centroid quality needs a sample, assignment is one broadcast map pass
+  * over the full corpus.
   *
   * `type = "lsh"` — the classic multi-probe LSH table layout, built by the
   * shared LshIndex.build: each row's hyperplane signature (same machinery
@@ -165,8 +93,7 @@ object IndexBuildOp extends Stage {
       // the signature expressions resolve against THIS stage's session
       graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
       cfg.strOr("type", "ivf") match {
-        case "ivf" => buildIvf(ctx)
-        case "ivfpq" => PqIndex.build(ctx)
+        case ivf @ ("ivf" | "ivfpq") => IvfIndex.build(ctx, IvfLayout.byName(ivf).get)
         case "lsh" => LshIndex.build(ctx)
         case "exact" => buildExact(ctx)
         case other => TextSigFamily.byName(other) match {
@@ -200,93 +127,6 @@ object IndexBuildOp extends Stage {
       throw new GraftConfigError(
         s"$op mode=append: $path has a corpus but no meta (a crashed earlier build?) — " +
         "parameters cannot be validated; rebuild with mode=overwrite")
-
-  // package-visible: index.compact's retrain_if rebuilds through this
-  // entry under its OWN already-held lease (the public apply would
-  // re-claim the same lease file and fail loud against itself)
-  private[operators] def buildIvf(ctx: StageContext): Unit = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.linalg.Vectors
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val vecCol = cfg.strOr("vector_column", "embedding")
-    val mode = cfg.strOr("mode", "overwrite")
-    // mode=append must NOT retrain: a second quantizer would append a
-    // second centroid set (duplicate cell ids pointing at different
-    // centers) and assign the new rows inconsistently with the old —
-    // probes would silently lose recall. Appending re-uses the FROZEN
-    // first-build quantizer: assign to the existing centroids, grow only
-    // the cell-partitioned corpus.
-    if (mode == "append") return appendIvf(ctx)
-    if (mode != "overwrite") throw new GraftConfigError(
-      s"index.build: mode must be overwrite|append, got '$mode'")
-    val nlist = cfg.longOr("nlist", 16L).toInt
-    val seed = cfg.longOr("seed", 11L)
-    val maxTrain = cfg.longOr("max_train", 100000L).toInt
-
-    // r13: the coarse quantizer trains DRIVER-SIDE on the bounded uniform
-    // draw (Pq.trainSample — one shared TakeOrdered job with the pmod key,
-    // footer prefilter, and starved-draw fallback; Pq.lloyd — the same
-    // seeded Lloyd's the ivfpq codebooks already use). The sample is
-    // capped at max_train BY CONSTRUCTION, so training is driver-scale
-    // work at any corpus size (100k × 64 dims ≈ 50 MB), while the old
-    // distributed MLlib KMeans paid ~18 scheduler jobs per fit against a
-    // cached sample — measured 1.2 s of the knn_ivf_exhaustive gate's
-    // 1.66 s job wall (GateAudit r13) that a 2,000-row fixture cannot
-    // amortize and a 100 TB corpus never needed (the draw, not the fit,
-    // is the distributed part). Assignment stays one broadcast map pass.
-    val sample = Pq.trainSample(ctx.primary, F.col(vecCol), maxTrain, seed)
-    if (sample.isEmpty)
-      throw new GraftPlanError("index.build type=ivf: empty input, nothing to train the quantizer on")
-    val centsArr = Pq.lloyd(sample, nlist, Pq.TrainIters, seed)
-    val cents = centsArr.zipWithIndex.map { case (c, i) => (i, Vectors.dense(c)) }
-    val assign = IvfCentroids.assignUdf(ctx.spark, cents)
-    // co-locate cells before the partitioned write (one file per
-    // populated cell instead of input_partitions × cells droplets)
-    ctx.primary.withColumn("cell", assign(F.col(vecCol).cast("array<float>")))
-      .repartition(F.col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(IndexSnapshot.corpusDir(path))
-
-    // nlist driver-held rows — driver-side write, no Spark job
-    DriverParquet.overwrite(s"$path/centroids", Seq(
-      DriverParquet.I32("cell", centsArr.indices),
-      DriverParquet.DblArr("centroid", centsArr.map(_.toSeq).toSeq)))
-    Pq.warnCellSkew(ctx.spark, path, "index.build type=ivf", nlist)
-  }
-
-  /** mode=append for type=ivf: assign new rows to the EXISTING centroids
-    * (broadcast into one UDF — nlist rows) and append to the
-    * cell-partitioned corpus; the quantizer stays frozen at first build,
-    * so old and new rows share one consistent cell space and every probe
-    * (`knn.ivf`, `knn.join`) sees the union. Centroid quality for rows far
-    * from the training distribution is the standard IVF drift trade-off —
-    * rebuild with mode=overwrite to retrain. */
-  private def appendIvf(ctx: StageContext): Unit = {
-    import org.apache.spark.ml.linalg.Vectors
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val vecCol = cfg.strOr("vector_column", "embedding")
-    val spark = ctx.spark
-    if (!GraftFs.isDir(s"$path/centroids"))
-      throw new GraftConfigError(
-        s"index.build type=ivf mode=append: no existing index at $path — the quantizer " +
-        "is frozen at first build (appending re-uses its centroids so cell assignment " +
-        "stays consistent); run mode=overwrite first")
-    val cents = IvfCentroids.load(spark, path, "index.build type=ivf mode=append")
-    val dim = cents.head._2.size
-    ctx.primary.select(F.size(F.col(vecCol))).head(1).headOption.foreach { r =>
-      if (r.getInt(0) != dim) throw new GraftConfigError(
-        s"index.build type=ivf mode=append: input vectors have length ${r.getInt(0)} " +
-        s"but the index at $path was built with dim = $dim")
-    }
-    val assign = IvfCentroids.assignUdf(spark, cents)
-    // the shared batch-appender lease is claimed by the mode=append
-    // dispatch in apply() — one claim for every family's append write
-    ctx.primary.withColumn("cell", assign(F.col(vecCol).cast("array<float>")))
-      .repartition(F.col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(IndexSnapshot.corpusDir(path))
-    Pq.warnCellSkew(spark, path, "index.build type=ivf mode=append", cents.length)
-  }
 
   /** `type = "exact"` — the exact-dedup key set: distinct 128-bit md5
     * content keys over `columns` (DedupExactOp.contentKey), for
