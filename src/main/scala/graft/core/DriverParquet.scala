@@ -20,8 +20,8 @@ import org.apache.parquet.schema.Type.Repetition
   *
   * The file layout matches what the Spark write produced: one
   * `part-00000-<uuid>.snappy.parquet` and a `_SUCCESS` marker under `dir`,
-  * standard 3-level LIST encoding for arrays — `spark.read.parquet` (IndexMeta.head /
-  * schemaFields, the IvfIndex centroid and codebook loads) reads it back with
+  * standard 3-level LIST encoding for arrays — `spark.read.parquet` (IndexMeta.head,
+  * the IvfIndex centroid and codebook loads) reads it back with
   * the identical Spark schema and the identical Row types. Overwrite
   * clears the dir first, same non-atomicity class as the
   * InsertIntoHadoopFsRelation overwrite it replaces.

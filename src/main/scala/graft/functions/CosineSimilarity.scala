@@ -135,7 +135,8 @@ object GraftFunctions {
   }
   private def foldedInt(e: Expression, name: String): Int = folded(e, name) match {
     case i: Int => i
-    case l: Long => l.toInt
+    case l: Long if l.isValidInt => l.toInt
+    case l: Long => throw new IllegalArgumentException(s"$name: $l is outside the int range")
     case o => throw new IllegalArgumentException(s"$name: expected int, got $o")
   }
   private def foldedLong(e: Expression, name: String): Long = folded(e, name) match {

@@ -406,33 +406,10 @@ object DedupExactOp extends Stage {
     * `index_append = true` adds the survivors' keys on pipeline success. */
   private def incremental(ctx: StageContext, path: String, batchDeduped: DataFrame): DataFrame = {
     val cfg = ctx.cfg
-    val spark = ctx.spark
-    val cols = cfg.strListOr("columns", ctx.primary.columns.toVector)
-    // missing index under CLI explain → empty placeholder (the earlier
-    // skipped index.build barrier would have created it); see minhash
-    val placeholder = cfg.boolOr("_explain_only", false) &&
-      !GraftFs.isDir(s"$path/meta")
-    if (!placeholder) {
-      if (!GraftFs.isDir(s"$path/meta"))
-        throw new GraftPlanError(
-          s"dedup.exact: no exact-dedup index at $path — run index.build type=exact first")
-      val metaRow = IndexMeta.head(spark, s"$path/meta")
-      val metaCols = metaRow.getSeq[String](metaRow.fieldIndex("columns")).toVector
-      if (metaCols != cols.toVector) throw new GraftConfigError(
-        s"dedup.exact: columns ${cols.mkString(", ")} conflict with the index at $path " +
-        s"(built over ${metaCols.mkString(", ")}) — keys would never match")
-    }
-
+    val idx = IndexCatalog.open(ctx, name, path, IndexCatalog.Exact)
+    val cols = ExactIndex.columns(ctx, Some(idx))
     val streamTag = cfg.strOpt("_stream_batch_tag")
-    val corpusSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("key",
-        org.apache.spark.sql.types.StringType)))
-    val index =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], corpusSchema)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path),
-        s"dedup.exact: no exact-dedup index at $path — run index.build type=exact first",
-        corpusSchema, excludeDir = streamTag)
+    val index = idx.corpus(ExactIndex.corpusSchema, excludeDir = streamTag)
     val keyed = batchDeduped.withColumn("_key", contentKey(cols))
     val result = keyed
       .join(index.select(F.col("key").alias("_key")), Seq("_key"), "left_anti")
@@ -483,14 +460,8 @@ private[graft] object IndexMeta {
     * only change when a rebuild writes fresh part files — which the
     * listing detects for one driver FS list, no job. A throwing load is
     * not cached (empty-table errors stay loud per call). */
-  def cached[T](dir: String)(load: => T): T =
-    cachedAs(dir, "")(load)
-
-  /** As [[cached]], but namespaced: two different payloads of the SAME
-    * directory (head() Rows vs schema field sets) must not share a cache
-    * slot. The listing key is always taken on the real `dir`. */
-  private def cachedAs[T](dir: String, ns: String)(load: => T): T = {
-    val key = GraftFs.qualified(dir) + ns
+  def cached[T](dir: String)(load: => T): T = {
+    val key = GraftFs.qualified(dir)
     val lst = listing(dir)
     val hit = cache.get(key)
     if (hit != null && hit._1 == lst) hit._2.asInstanceOf[T]
@@ -501,16 +472,10 @@ private[graft] object IndexMeta {
     }
   }
 
+  /** The one row of a `meta/` table (on a cache miss, a schema-inference
+    * job and a head job) */
   def head(spark: org.apache.spark.sql.SparkSession, dir: String): org.apache.spark.sql.Row =
     cached(dir)(spark.read.parquet(dir).head())
-
-  /** Field names of a meta table from the parquet FOOTER alone — a
-    * driver-side schema read, no Spark job and no row materialization, for
-    * callers that dispatch on which fields exist (index family detection)
-    * rather than on values. Works on a zero-row meta table too, where
-    * head() would throw. */
-  def schemaFields(spark: org.apache.spark.sql.SparkSession, dir: String): Set[String] =
-    cachedAs(dir, "#schema")(spark.read.parquet(dir).schema.fieldNames.toSet)
 }
 
 /** Plan-time snapshot of an index corpus directory: parquet dir reads
@@ -818,7 +783,7 @@ object DedupEmbeddingOp extends Stage {
   // 32 planes / 4 blocks = 8-bit blocks → 256 buckets per block: keeps
   // bucket population ~N/256 so the self-join stays near-linear (16-bit
   // sigs with 4-bit blocks put ~N/16 rows in every bucket → quadratic)
-  private val Defaults = LshDefaults(planes = 32L)
+  private[graft] val Defaults = LshDefaults(planes = 32L)
 
   /** tight-loop cosine UDF (double arrays) — kept for spec parity checks;
     * plan-side verification goes through the codegen'd `cosine_sim`
@@ -989,12 +954,8 @@ object DedupEmbeddingOp extends Stage {
         "(the index is immutable — only the pairwise min-id policy is well-defined)")
     val index = LshIndex.open(ctx, name, path, Defaults, s"batch vectors in '$vecCol'",
       LshIndex.firstDim(ctx.primary, F.col(vecCol)))
+    // set by stream.ingest, which admits only a layout with a tag level
     val streamTag = cfg.strOpt("_stream_batch_tag")
-    if (streamTag.isDefined && !index.layout.streamable)
-      throw new GraftConfigError(
-        "dedup.embedding: streaming ingestion needs a bands-partitioned index " +
-        s"(index.build type=lsh blocking=bands) — the ${index.layout.name} layout has no " +
-        "per-batch idempotent append target")
 
     val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(vecCol).alias("vec"))
     val (reps, exactDups) = ExactCollapse(base, "id", "vec", None, ctx.deferToCleanup)

@@ -79,33 +79,6 @@ private[graft] object IndexMaintenance {
       }
     }
   }
-
-  /** (family name, corpus partition columns) of the index at `path`, from
-    * its own metadata — shared by index.compact and index.stats. */
-  def layout(spark: org.apache.spark.sql.SparkSession, path: String,
-      op: String): (String, Seq[String]) =
-    IvfLayout.at(spark, path).map(l => (l.name, l.partitionCols)).getOrElse {
-      if (!GraftFs.isDir(s"$path/meta"))
-        throw new GraftPlanError(s"$op: no index at $path — run index.build first")
-      // schema-only footer read: layout() dispatches on which fields EXIST,
-      // needs no values — and must not throw on a zero-row meta table
-      val fields = IndexMeta.schemaFields(spark, s"$path/meta")
-      LshLayout.ofFields(fields).map(l => ("lsh", l.partitionCols))
-        .orElse(TextSigFamily.ofFields(fields).map(f => (f.name, Seq.empty)))
-        .getOrElse {
-          if (fields.contains("columns")) ("exact", Seq.empty)
-          else throw new GraftPlanError(
-            s"$op: unrecognized index meta at $path (fields: ${fields.mkString(", ")})")
-        }
-    }
-
-  /** Whether any index family has been built at `path`. */
-  def exists(spark: org.apache.spark.sql.SparkSession, path: String): Boolean =
-    GraftFs.isDir(s"$path/meta") || IvfLayout.at(spark, path).isDefined
-
-  /** The family name of the index at `path`, for errors that name it. */
-  def familyAt(spark: org.apache.spark.sql.SparkSession, path: String, op: String): String =
-    scala.util.Try(layout(spark, path, op)._1).getOrElse("unrecognized")
 }
 
 /** index.compact — physical compaction of an `index.build` index: rewrite
@@ -230,8 +203,9 @@ object IndexCompactOp extends Stage {
         .foreach(g => GraftFs.deleteRec(s"$path/$g"))
     }
 
-    // the index family (= corpus layout) from its own metadata
-    val (family, partitionCols) = IndexMaintenance.layout(spark, path, "index.compact")
+    // the index kind (= corpus layout) from its own metadata
+    val kind = IndexCatalog.open(ctx, "index.compact", path, IndexCatalog.Any).kind
+    val partitionCols = kind.partitionCols
 
     val corpusDir = corpusDir0
     val filesLen = IndexSnapshot.filesWithLen(corpusDir,
@@ -268,11 +242,10 @@ object IndexCompactOp extends Stage {
     // costing recall. A retrain rewrites every corpus file, so it
     // supersedes the physical compact below.
     val retrainReason: Option[String] = cfg.tblOpt("retrain_if").flatMap(cond =>
-      IndexRetrain.evaluate(ctx, path, family, cond))
+      IndexRetrain.evaluate(ctx, path, kind, cond))
     retrainReason.foreach { reason =>
       requireQuiesced()
-      IndexRetrain.retrain(ctx, path, family, corpusDir,
-        cfg.tblOpt("retrain_if").get, reason)
+      IndexRetrain.retrain(ctx, path, corpusDir, cfg.tblOpt("retrain_if").get, reason)
     }
 
     // compact_if policy gate: skip the rewrite when nothing tripped. A
@@ -443,7 +416,7 @@ private[operators] object IndexRetrain {
 
   /** Evaluate retrain_if against the measured index; Some(reason) when a
     * condition trips. Validates the table loud even when nothing trips. */
-  def evaluate(ctx: StageContext, path: String, family: String,
+  def evaluate(ctx: StageContext, path: String, kind: IndexKind,
       cond: Cfg): Option[String] = {
     val known = Set("recall_below", "cell_skew_above", "nprobe", "k",
       "queries", "seed", "rerank", "id_column", "vector_column", "max_train",
@@ -453,16 +426,15 @@ private[operators] object IndexRetrain {
     if (cond.doubleOpt("recall_below").isEmpty && cond.doubleOpt("cell_skew_above").isEmpty)
       throw new GraftConfigError(
         "index.compact: retrain_if must name recall_below and/or cell_skew_above")
-    if (family != "ivf" && family != "ivfpq") throw new GraftConfigError(
-      s"index.compact: retrain_if applies to cell-quantized indexes (ivf/ivfpq) — " +
-      s"the index at $path is $family (lsh planes are fixed at build; " +
-      "set-membership families have no quantizer)")
+    IndexCatalog.accept("index.compact retrain_if", path, kind, IndexCatalog.Ivf.copy(hint =
+      Some("retrain_if applies to cell-quantized indexes (lsh planes are fixed at build; " +
+        "the set-membership kinds have no quantizer)")))
     val spark = ctx.spark
     val skew = cond.doubleOpt("cell_skew_above").flatMap { thr =>
       if (thr <= 1.0) throw new GraftConfigError(
         s"index.compact: retrain_if.cell_skew_above must be > 1.0 (1.0 = perfectly balanced), got $thr")
-      IvfIndex.cellSkew(ctx, path, "index.compact retrain_if").filter(_ > thr)
-        .map(ratio => f"cell_skew $ratio%.2f > $thr%.2f")
+      IvfIndex.cellSkew(spark, IvfIndex.open(ctx, "index.compact retrain_if", path))
+        .filter(_ > thr).map(ratio => f"cell_skew $ratio%.2f > $thr%.2f")
     }
     skew.orElse(cond.doubleOpt("recall_below").flatMap { thr =>
       if (thr <= 0.0 || thr > 1.0) throw new GraftConfigError(
@@ -490,8 +462,8 @@ private[operators] object IndexRetrain {
 
   /** Rebuild the quantizer from the current corpus. Caller holds the
     * writer lease and has verified the quiesced contract. */
-  def retrain(ctx: StageContext, path: String, family: String,
-      corpusDir: String, cond: Cfg, reason: String): Unit = {
+  def retrain(ctx: StageContext, path: String, corpusDir: String, cond: Cfg,
+      reason: String): Unit = {
     val spark = ctx.spark
     val files = IndexSnapshot.files(corpusDir,
       s"index.compact retrain: no corpus at $path")
@@ -524,10 +496,10 @@ private[operators] object IndexRetrain {
     GraftFs.deleteIfExists(s"$path/compact.gen")
     IndexSnapshot.resetGenerations(path)
     IvfIndex.build(StageContext.one(spark, staged, Cfg.of(idx.rebuildConfig(cond): _*)),
-      idx.layout)
+      idx.layout, s"index.build type=${idx.layout.name}", path, "overwrite", existing = false)
     GraftFs.deleteRec(stage) // rebuild landed — the recovery copy retires
     System.err.println(s"[graft] index.compact: $path — retrain_if tripped " +
-      s"($reason): $family quantizer retrained on the current corpus " +
+      s"($reason): ${idx.layout.name} quantizer retrained on the current corpus " +
       s"($before rows)")
   }
 }
@@ -536,7 +508,7 @@ private[operators] object IndexRetrain {
   * index: the read-only companion of `index.compact` that answers "should
   * I compact yet?". One output row:
   *
-  *   path, index_type (exact|minhash|ngram|simhash|lsh|ivf), rows, files,
+  *   path, index_type (exact|minhash|ngram|simhash|lsh|ivf|ivfpq), rows, files,
   *   bytes,
   *   mean_file_kb, stream_append_dirs (corpus/sb-* micro-batch dirs from
   *   stream.ingest), partition_dirs (populated (block,pbucket)/cell dirs;
@@ -569,8 +541,8 @@ object IndexStatsOp extends Stage {
           "lease_holder", "lease_age_ms", "mean_bucket_occupancy", "pq_scan_ratio",
           "cell_skew")
 
-    IndexMaintenance.recoverSwap(path)
-    val (family, partitionCols) = IndexMaintenance.layout(spark, path, "index.stats")
+    val index = IndexCatalog.open(ctx, "index.stats", path, IndexCatalog.Any)
+    val (family, partitionCols) = (index.kind.indexType, index.kind.partitionCols)
     val corpusDir = IndexSnapshot.corpusDir(path)
     val filesLen = IndexSnapshot.filesWithLen(corpusDir,
       s"index.stats: index at $path has no corpus directory")
@@ -618,30 +590,26 @@ object IndexStatsOp extends Stage {
     // band_planes rebuild the way compact_if triggers folds. rows here is
     // the SIGNATURE row count (bands rows per vector), so vectors =
     // rows / bands and occupancy = vectors / 2^band_planes.
-    val occupancy: Option[Double] =
-      if (family != "lsh") None
-      else {
-        val m = IndexMeta.head(spark, s"$path/meta")
-        LshLayout.ofFields(m.schema.fieldNames.toSet)
-          .flatMap(l => l.occupancy(l.fromMeta(m), rows))
-      }
-    // ivfpq only: measured vector-column bytes / code-column bytes over
-    // the corpus footers — the per-index, observable version of the
-    // BENCH_NOTES scan-bytes claim (an ADC probe reads 1/ratio of the
-    // bytes a flat probe would); null for every other family
-    val pqScanRatio: Option[Double] =
-      if (files.isEmpty) None
-      else try IvfIndex.pqScanRatio(ctx, path, files)
-      catch { case scala.util.control.NonFatal(_) => None }
-    // ivf/ivfpq only: the hottest cell's share of the corpus × nlist —
-    // 1.0 = perfectly balanced, ≫ 1 = a skewed quantizer (the observable
-    // form of the build-time cell-skew advisory: probes at fixed nprobe
-    // lose recall balance). Footer row counts per cell dir, no data scan;
-    // a maintenance pipeline can watch it drift and trigger a
-    // mode=overwrite retrain. Null for non-cell families.
-    val cellSkew: Option[Double] =
-      try IvfIndex.cellSkew(ctx, path, "index.stats").map(r => math.round(r * 100) / 100.0)
-      catch { case scala.util.control.NonFatal(_) => None }
+    val occupancy: Option[Double] = index.kind match {
+      case l: LshLayout => l.occupancy(index.params, rows)
+      case _ => None
+    }
+    // ivf/ivfpq only (null for every other kind), from the corpus footers,
+    // no data scan: pq_scan_ratio is the measured vector-column bytes /
+    // code-column bytes — the per-index, observable version of the
+    // BENCH_NOTES scan-bytes claim (an ADC probe reads 1/ratio of the bytes
+    // a flat probe would; ivfpq only); cell_skew is the hottest cell's
+    // share of the corpus × nlist — 1.0 = perfectly balanced, ≫ 1 = a
+    // skewed quantizer (the observable form of the build-time cell-skew
+    // advisory: probes at fixed nprobe lose recall balance), which a
+    // maintenance pipeline can watch drift and trigger a mode=overwrite
+    // retrain on.
+    val ivf = index.kind match {
+      case _: IvfLayout => Some(IvfIndex.open(ctx, "index.stats", path))
+      case _ => None
+    }
+    val pqScanRatio = ivf.flatMap(IvfIndex.pqScanRatio(spark, _, files))
+    val cellSkew = ivf.flatMap(IvfIndex.cellSkew(spark, _)).map(r => math.round(r * 100) / 100.0)
     Seq((path, family, rows, files.size.toLong, bytes, meanKb, appendDirs, partDirs,
         sinceCompact, lease.map(_._1), lease.map(_._2), occupancy, pqScanRatio, cellSkew))
       .toDF("path", "index_type", "rows", "files", "bytes", "mean_file_kb",

@@ -79,13 +79,9 @@ object IndexRecallOp extends Stage {
     val sampled = frac < 1.0
     val idCol = cfg.strOr("id_column", "vec_id")
 
-    IndexMaintenance.recoverSwap(path)
-    val family = IndexMaintenance.layout(spark, path, "index.recall")._1
-    if (family != "ivf" && family != "ivfpq") throw new GraftConfigError(
-      s"index.recall: the index at $path is $family — recall is a property of " +
-      "cell-pruned ANN probes (ivf/ivfpq); lsh planes are fixed at build and the " +
-      "set-membership families have no probe-recall notion")
-    val vecCol = IvfIndex.open(ctx, name, path)
+    val vecCol = IvfIndex.open(ctx, name, path, expected = IndexCatalog.Ivf.copy(hint = Some(
+        "recall is a property of cell-pruned ANN probes; lsh planes are fixed at build and " +
+        "the set-membership kinds have no probe-recall notion")))
       .vectorColumn(cfg.strOr("vector_column", "embedding"))
     val corpusDir = IndexSnapshot.corpusDir(path)
     val files = IndexSnapshot.files(corpusDir, s"index.recall: no corpus at $path")

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
 import org.apache.spark.sql.types.StructField
 import graft.config._
 import graft.core._
@@ -56,23 +56,21 @@ private[graft] object IvfIndex {
   /** no centroids: every non-null vector lands in cell 0, a query probes nothing */
   val NoQuantizer = new Quantizer(Array.empty)
 
-  /** An ivf index opened for a consumer: its layout, quantizer and stored
-    * tables — or, under CLI explain of a pipeline whose EARLIER index.build
-    * stage would have created it, the caller's expected layout over no
-    * centroids and an empty placeholder corpus. `nprobe`/`rerank`
-    * are set for a probe. */
-  final class Opened private[IvfIndex] (spark: SparkSession, val path: String,
-      val layout: IvfLayout, val quantizer: Quantizer, val stored: IvfLayout.Stored,
-      val nprobe: Int, val rerank: Int, placeholder: Boolean) {
+  /** An ivf index opened for a consumer: the catalog's
+    * [[IndexCatalog.Opened]] of an ivf layout with its quantizer and stored
+    * tables — no centroids and nothing stored for an explain placeholder.
+    * `nprobe`/`rerank` are set for a probe. */
+  final class Opened private[IvfIndex] (idx: IndexCatalog.Opened[IvfLayout],
+      val quantizer: Quantizer, val stored: IvfLayout.Stored, val nprobe: Int, val rerank: Int) {
+    def path: String = idx.path
+    def layout: IvfLayout = idx.kind
     /** the corpus vector column: the one the index records, else `fallback` */
     def vectorColumn(fallback: String): String = stored.vectorColumn.getOrElse(fallback)
 
     /** the corpus directory as one parquet relation, so a static cell
       * predicate prunes it at planning; `id`/`vec` type the placeholder */
     def scan(id: => StructField, vec: => StructField): DataFrame =
-      if (placeholder)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], layout.corpusSchema(id, vec))
-      else spark.read.parquet(IndexSnapshot.corpusDir(path))
+      idx.scan(layout.corpusSchema(id, vec))
 
     /** the `index.build` config that retrains this index: its recorded
       * parameters, `seed`/`max_train`/`vector_column` overridable by `cond` */
@@ -119,29 +117,20 @@ private[graft] object IvfIndex {
           .fold(NoQuantizer)(_._2)
     }
 
-  /** Open the ivf index at `path` for `op`: the explain placeholder (of
-    * layout `expected`), `recoverSwap`, layout detection (another family's
-    * index fails loud), the listing-cached centroids and stored tables, the
-    * `nprobe`/`rerank` checks of a probe (`probes`), and the batch-vs-index
-    * dim check — the batch's vector length, `batchDim` of the opened index,
-    * named `vectors` in the error (skipped under explain). */
+  /** Open the ivf index at `path` for `op` through the catalog (as one of
+    * the kinds `expected` accepts), then the ivf steps: the tables and the
+    * listing-cached centroids, the `nprobe`/`rerank` checks of a probe
+    * (`probes`), and the batch-vs-index dim check — the batch's vector
+    * length, `batchDim` of the opened index, named `vectors` in the error
+    * (skipped under explain). */
   def open(ctx: StageContext, op: String, path: String, vectors: String = "vectors",
       batchDim: Opened => Option[Int] = _ => None, probes: Boolean = false,
-      expected: IvfLayout = IvfLayout.Flat): Opened = {
+      expected: IndexCatalog.Expected[IvfLayout] = IndexCatalog.Ivf): Opened = {
     val (cfg, spark) = (ctx.cfg, ctx.spark)
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    val found = IvfLayout.at(spark, path)
-    if (found.isEmpty && GraftFs.isDir(s"$path/meta")) throw new GraftConfigError(
-      s"$op: the index at $path is a ${IndexMaintenance.familyAt(spark, path, op)} index, " +
-      "not an ivf/ivfpq index — build one with index.build type=ivf or type=ivfpq")
-    if (found.isEmpty && !explainOnly) throw new GraftPlanError(
-      s"$op: no ivf/ivfpq index at $path — run index.build type=ivf|ivfpq first")
-    val layout = found.getOrElse(expected)
+    val idx = IndexCatalog.open(ctx, op, path, expected)
+    val layout = idx.kind
     val (n, r) = if (probes) (nprobe(op, cfg), layout.rerank(op, cfg)) else (0, 0)
-    if (found.isEmpty)
-      return new Opened(spark, path, layout, NoQuantizer, IvfLayout.NothingStored, n, r,
-        placeholder = true)
-    IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
+    if (idx.placeholder) return new Opened(idx, NoQuantizer, IvfLayout.NothingStored, n, r)
     layout.tables.filterNot(t => GraftFs.isDir(s"$path/$t")).foreach(t =>
       throw new GraftConfigError(s"$op: the ${layout.name} index at $path has no $t/ " +
         s"(a crashed build?) — rebuild with index.build type=${layout.name} mode=overwrite"))
@@ -154,10 +143,10 @@ private[graft] object IvfIndex {
         s"centroids — rebuild with index.build type=${layout.name} mode=overwrite")
       rows.sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
     })
-    val idx = new Opened(spark, path, layout, q, layout.load(spark, path, op, q), n, r,
-      placeholder = false)
-    if (!explainOnly) batchDim(idx).foreach(q.requireDim(op, vectors, _, s"the index at $path"))
-    idx
+    val opened = new Opened(idx, q, layout.load(spark, path, op, q, idx.meta), n, r)
+    if (!cfg.boolOr("_explain_only", false))
+      batchDim(opened).foreach(q.requireDim(op, vectors, _, s"the index at $path"))
+    opened
   }
 
   /** `corpus` restricted to `cells` by one static `cell IN (...)`
@@ -186,36 +175,28 @@ private[graft] object IvfIndex {
     * rows share one cell space; rebuild to retrain. A null vector fails the
     * write job with a GraftConfigError naming the column (the guard rides
     * the assignment projection, no extra job). */
-  def build(ctx: StageContext, layout: IvfLayout): Unit = {
+  def build(ctx: StageContext, layout: IvfLayout, op: String, path: String, mode: String,
+      existing: Boolean): Unit = {
     val (cfg, spark) = (ctx.cfg, ctx.spark)
-    val op = s"index.build type=${layout.name}"
-    val path = cfg.str("path")
-    val mode = cfg.strOr("mode", "overwrite")
     val seed = IvfLayout.Seed.of(cfg)
-    if (mode != "overwrite" && mode != "append") throw new GraftConfigError(
-      s"index.build: mode must be overwrite|append, got '$mode'")
     layout.corpusCols.find(ctx.primary.columns.contains).foreach(c =>
       throw new GraftConfigError(s"$op: input already has a '$c' column — rename it; the " +
         s"index layout reserves ${layout.corpusCols.mkString("/")}"))
     val (what, q, books, vecCol) =
       if (mode == "append") {
         val what = s"$op mode=append"
-        if (!GraftFs.isDir(s"$path/centroids") && !GraftFs.isDir(s"$path/meta"))
-          throw new GraftConfigError(s"$what: no existing index at $path — the quantizer is " +
-            "frozen at first build (appends reuse it so cells stay consistent); run " +
-            "mode=overwrite first")
+        if (!existing) throw new GraftConfigError(s"$what: no existing index at $path — the " +
+          "quantizer is frozen at first build (appends reuse it so cells stay consistent); " +
+          "run mode=overwrite first")
         // the indexed vector column is a fact of the index; explicit config
         // may rename the INPUT's column
         def vecOf(idx: Opened) = cfg.strOpt("vector_column").getOrElse(idx.vectorColumn("embedding"))
         val idx = open(ctx, what, path, "input vectors",
           i => LshIndex.firstDim(ctx.primary, F.col(vecOf(i))))
-        if (idx.layout != layout) throw new GraftConfigError(
-          s"$what: the index at $path is an ${idx.layout.name} index — append with " +
-          s"type=${idx.layout.name}, or rebuild with mode=overwrite")
         layout.frozen.foreach { p =>
           val recorded = idx.stored.params(p)
-          cfg.longOpt(p.key).filter(_ != recorded).foreach(v => throw new GraftConfigError(
-            s"$what: ${p.key}=$v differs from the index at $path (${p.key}=$recorded)"))
+          cfg.longOpt(p.key).filter(_ != recorded).foreach(
+            IndexCatalog.conflict(what, path, p.key, _, recorded))
         }
         (what, idx.quantizer, idx.stored.codebooks, vecOf(idx))
       } else {
@@ -246,25 +227,21 @@ private[graft] object IvfIndex {
       System.err.println(s"[graft] $what cell-skew check skipped: ${e.getMessage}") }
   }
 
-  /** The cell skew of the ivf index at `path` (see Pq.cellSkew) from its
-    * parquet footers; None for another family or an empty corpus. */
-  def cellSkew(ctx: StageContext, path: String, op: String): Option[Double] =
-    IvfLayout.at(ctx.spark, path).flatMap { _ =>
-      // nlist from the centroids, NOT the populated-cell count: a fully
-      // collapsed quantizer must read as maximal skew (= nlist)
-      val nlist = open(ctx, op, path).quantizer.nlist
-      Pq.cellSkew(Pq.cellOccupancy(ctx.spark, IndexSnapshot.corpusDir(path)).values, nlist)
-    }
+  /** The cell skew of the opened index (see Pq.cellSkew) from its parquet
+    * footers; None for an empty corpus. nlist comes from the centroids,
+    * NOT the populated-cell count: a fully collapsed quantizer must read
+    * as maximal skew (= nlist). */
+  def cellSkew(spark: SparkSession, idx: Opened): Option[Double] =
+    Pq.cellSkew(Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(idx.path)).values,
+      idx.quantizer.nlist)
 
   /** ivfpq only: vector-column bytes / code-column bytes over the corpus
     * `files` footers — the bytes a flat probe reads per byte an ADC probe
     * reads. */
-  def pqScanRatio(ctx: StageContext, path: String, files: Seq[String]): Option[Double] =
-    IvfLayout.at(ctx.spark, path).filter(_ == IvfLayout.ProductQuantized).flatMap { _ =>
-      val idx = open(ctx, "index.stats", path)
-      val vecBytes = Pq.columnChunkBytes(ctx.spark, files, Set(idx.vectorColumn("embedding")))
-      val codeBytes = Pq.columnChunkBytes(ctx.spark, files,
-        IvfLayout.ProductQuantized.codeCols.toSet)
+  def pqScanRatio(spark: SparkSession, idx: Opened, files: Seq[String]): Option[Double] =
+    Some(idx.layout).filter(_ == IvfLayout.ProductQuantized && files.nonEmpty).flatMap { _ =>
+      val vecBytes = Pq.columnChunkBytes(spark, files, Set(idx.vectorColumn("embedding")))
+      val codeBytes = Pq.columnChunkBytes(spark, files, IvfLayout.ProductQuantized.codeCols.toSet)
       if (codeBytes <= 0L) None else Some(math.round(vecBytes.toDouble / codeBytes * 10) / 10.0)
     }
 }

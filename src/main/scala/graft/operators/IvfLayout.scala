@@ -1,9 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
 import org.apache.spark.sql.types._
 import graft.config.{Cfg, GraftConfigError}
-import graft.core.{DriverParquet, GraftFs}
+import graft.core.{DriverParquet, StageContext}
 
 /** Everything that differs between the two ivf index layouts: the columns
   * a layout adds to a corpus row and the projection that computes them,
@@ -13,8 +13,14 @@ import graft.core.{DriverParquet, GraftFs}
   * the row's nearest coarse centroid, and keep the input rows whole.
   * [[IvfIndex]] runs every mode from this value alone; the two modules
   * are the only code that knows the ivf tables and corpus columns. */
-private[graft] sealed abstract class IvfLayout(val name: String) {
+private[graft] sealed abstract class IvfLayout(val name: String) extends IndexKind {
   import IvfLayout._
+  def indexType: String = name
+  def marks(fields: Set[String]): Boolean = false
+  def family: IndexCatalog.Expected[IndexKind] = IndexCatalog.Ivf
+  def build(ctx: StageContext, op: String, path: String, mode: String,
+      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit =
+    IvfIndex.build(ctx, this, op, path, mode, existing.isDefined)
   /** every column the layout adds to an indexed row, `cell` first */
   def corpusCols: Seq[String]
   /** the tables an index of this layout has beside corpus/ and centroids/ */
@@ -39,8 +45,9 @@ private[graft] sealed abstract class IvfLayout(val name: String) {
   def writeTables(path: String, books: Codebooks, nlist: Int, dim: Int, seed: Long,
       vecCol: String): Unit = ()
   /** the codebooks, recorded parameters and indexed vector column of the
-    * index at `path`, whose quantizer is `q` */
-  def load(spark: SparkSession, path: String, op: String, q: IvfIndex.Quantizer): Stored
+    * index at `path`, whose quantizer is `q` and `meta/` row `meta` */
+  def load(spark: SparkSession, path: String, op: String, q: IvfIndex.Quantizer,
+      meta: Option[Row]): Stored
   def corpusSchema(id: StructField, vec: StructField): StructType =
     StructType(Seq(id, vec, StructField(Cell, IntegerType)))
   /** the corpus columns, besides the id, a probe with this `rerank` reads */
@@ -83,7 +90,8 @@ private[graft] object IvfLayout {
     def corpusRows(spark: SparkSession, rows: DataFrame, vec: Column, q: IvfIndex.Quantizer,
         books: Codebooks, guard: Column => Column): DataFrame =
       rows.withColumn(Cell, guard(q.assign(spark, vec)))
-    def load(spark: SparkSession, path: String, op: String, q: IvfIndex.Quantizer): Stored =
+    def load(spark: SparkSession, path: String, op: String, q: IvfIndex.Quantizer,
+        meta: Option[Row]): Stored =
       Stored(Array.empty, SigParams(Seq(Nlist -> q.nlist.toLong, Seed -> Seed.default)), None)
     def probeCols(vec: String, rerank: Int): Seq[String] = Seq(vec)
     def knn(idx: IvfIndex.Opened, pruned: DataFrame, q: Seq[Double], id: String, vec: String,
@@ -117,7 +125,7 @@ private[graft] object IvfLayout {
     override val frozen: Seq[SigParam] = Seq(M, Ksub, Seed)
     /** `meta/` columns before `vector_column` */
     private val metaParams = Seq(Nlist, M, Ksub, Dim, Seed)
-    val marker: String = Ksub.metaField
+    override def marks(fields: Set[String]): Boolean = fields.contains(Ksub.metaField)
 
     override def problem(cfg: Cfg, dim: Int): Option[String] = {
       val (m, ksub) = (M.of(cfg), Ksub.of(cfg))
@@ -173,7 +181,8 @@ private[graft] object IvfLayout {
     }
     /** listing-cached like the centroids — a probe loop must not
       * re-collect the m·ksub codebook table per query; read-only */
-    def load(spark: SparkSession, path: String, op: String, q: IvfIndex.Quantizer): Stored = {
+    def load(spark: SparkSession, path: String, op: String, q: IvfIndex.Quantizer,
+        meta: Option[Row]): Stored = {
       val books = IndexMeta.cached(s"$path/pq") {
         val rows = spark.read.parquet(s"$path/pq").select("subspace", "code", "center").collect()
         if (rows.isEmpty) throw new GraftConfigError(
@@ -185,11 +194,11 @@ private[graft] object IvfLayout {
         }
         books
       }
-      val meta = IndexMeta.head(spark, s"$path/meta")
+      val m = meta.get // the catalog detects this layout by its meta
       // indexes predating the vector_column field indexed "embedding"
-      val vec = if (meta.schema.fieldNames.contains("vector_column"))
-        meta.getAs[String]("vector_column") else "embedding"
-      Stored(books, SigParams(metaParams.map(q => q -> q.fromMeta(meta))), Some(vec))
+      val vec = if (m.schema.fieldNames.contains("vector_column"))
+        m.getAs[String]("vector_column") else "embedding"
+      Stored(books, SigParams(metaParams.map(q => q -> q.fromMeta(m))), Some(vec))
     }
     override def corpusSchema(id: StructField, vec: StructField): StructType =
       super.corpusSchema(id, vec)
@@ -304,14 +313,4 @@ private[graft] object IvfLayout {
 
   val all: Seq[IvfLayout] = Seq(Flat, ProductQuantized)
   def byName(name: String): Option[IvfLayout] = all.find(_.name == name)
-
-  /** The ivf layout of the index at `path`, if it is one: an ivfpq `meta/`
-    * carries the `ksub` marker; a flat index has centroids and no meta. */
-  def at(spark: SparkSession, path: String): Option[IvfLayout] =
-    if (GraftFs.isDir(s"$path/meta")) {
-      if (IndexMeta.schemaFields(spark, s"$path/meta").contains(ProductQuantized.marker))
-        Some(ProductQuantized)
-      else None
-    } else if (GraftFs.isDir(s"$path/centroids")) Some(Flat)
-    else None
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession, functions => F}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.types.StructField
 import graft.config._
 import graft.core._
 import graft.functions.GraftFunctions
@@ -18,31 +18,24 @@ private[graft] object LshIndex {
     * the query's, at the first `keys` key positions. */
   final case class Reach(hamming: Int, keys: Int)
 
-  /** An lsh index opened for probing: its layout and parameters, read from
-    * `meta/` — or, under CLI explain of a pipeline whose EARLIER index.build
-    * stage would have created it (the barrier is skipped under explain),
-    * the config's layout and parameters over an empty placeholder corpus. */
-  final class Opened private[LshIndex] (spark: SparkSession, path: String, op: String,
-      val layout: LshLayout, val params: SigParams, placeholder: Boolean) {
+  /** An lsh index opened for probing: the catalog's [[IndexCatalog.Opened]]
+    * of an lsh layout, with the layout's corpus schema and signature. */
+  final class Opened private[LshIndex] (idx: IndexCatalog.Opened[LshLayout]) {
+    def layout: LshLayout = idx.kind
+    def params: SigParams = idx.params
     def signature(vec: Column, ndExplode: Boolean = false): Column =
       layout.signature(vec, params, ndExplode)
-
-    private def empty(id: StructField, vec: StructField): DataFrame =
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], layout.corpusSchema(id, vec))
 
     /** SNAPSHOT of the corpus file list (see IndexSnapshot), partition
       * columns recovered; `excludeTag` skips a streaming batch's own earlier
       * attempt. `id`/`vec` type the empty placeholder. */
     def corpus(id: StructField, vec: StructField, excludeTag: Option[String] = None): DataFrame =
-      if (placeholder) empty(id, vec)
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path), missing(op, path),
-        layout.corpusSchema(id, vec), basePath = true,
+      idx.corpus(layout.corpusSchema(id, vec), basePath = true,
         excludeDir = for (t <- excludeTag; c <- layout.tagCol) yield s"$c=$t")
 
     /** The corpus directory as one parquet relation, for a scan whose
       * literal partition predicates prune it at planning. */
-    def scan(id: StructField, vec: StructField): DataFrame =
-      if (placeholder) empty(id, vec) else spark.read.parquet(IndexSnapshot.corpusDir(path))
+    def scan(id: StructField, vec: StructField): DataFrame = idx.scan(layout.corpusSchema(id, vec))
   }
 
   /** `probe_hamming` / `probe_bands` of a top-k probe, checked against
@@ -62,63 +55,30 @@ private[graft] object LshIndex {
     Reach(d, j)
   }
 
-  private def missing(op: String, path: String): String =
-    s"$op: no lsh index at $path — run index.build type=lsh first"
-
-  private def blockingLayout(op: String, blocking: String): LshLayout =
-    LshLayout.byName(blocking).getOrElse(throw new GraftConfigError(
-      s"$op: blocking must be pigeonhole|bands, got '$blocking'"))
-
-  /** The layout of the lsh index at `path` (its `meta/` must exist): an
-    * index of another family, or a pigeonhole index from before the
-    * (block, pbucket) layout, fails loud. */
-  def layoutAt(spark: SparkSession, op: String, path: String): LshLayout = {
-    val fields = IndexMeta.head(spark, s"$path/meta").schema.fieldNames.toSet
-    LshLayout.ofFields(fields).getOrElse {
-      if (LshLayout.legacy(fields)) throw new GraftConfigError(
-        s"$op: the index at $path predates the (block, pbucket) layout — rebuild it with " +
-        "index.build type=lsh mode=overwrite")
-      throw new GraftConfigError(s"$op: the index at $path is a " +
-        s"${IndexMaintenance.familyAt(spark, path, op)} index, not an lsh index — point " +
-        "index_path at an index.build type=lsh index")
-    }
-  }
-
-  /** Open the lsh index at `path` for `op`. The index's own meta decides
-    * the layout; an explicit `blocking`, a signature parameter or the
-    * batch's vector length (`batchDim`, named `vectors` in the error) that
-    * conflicts with it fails loud — mixed signatures would silently miss
-    * every cross match. The dim check is skipped under explain (no
-    * upstream jobs) and on the later micro-batches of a stream whose first
-    * batch validated it (`_dim_checked`). */
+  /** Open the lsh index at `path` for `op` through the catalog, which
+    * rejects another kind's index and a signature parameter that conflicts
+    * with the meta. An explicit `blocking` or a batch vector length
+    * (`batchDim`, named `vectors` in the error) that conflicts with the
+    * index fails loud too — mixed signatures would silently miss every
+    * cross match. The dim check is skipped under explain (no upstream
+    * jobs) and on the later micro-batches of a stream whose first batch
+    * validated it (`_dim_checked`). */
   def open(ctx: StageContext, op: String, path: String, d: LshDefaults, vectors: String,
       batchDim: => Option[Int]): Opened = {
     GraftFunctions.ensureRegistered(ctx.spark)
     val cfg = ctx.cfg
-    val explainOnly = cfg.boolOr("_explain_only", false)
-    if (!GraftFs.isDir(s"$path/meta")) {
-      if (!explainOnly) throw new GraftPlanError(missing(op, path))
-      val l = LshLayout.byName(cfg.strOr("blocking", "pigeonhole")).getOrElse(LshLayout.Pigeonhole)
-      return new Opened(ctx.spark, path, op, l,
-        l.fromConfig(cfg, d, cfg.longOr("dim", 0L).toInt), placeholder = true)
+    val idx = IndexCatalog.open(ctx, op, path, IndexCatalog.Lsh(d))
+    val (l, p) = (idx.kind, idx.params)
+    if (!idx.placeholder) {
+      cfg.strOpt("blocking").filter(_ != l.name).foreach(b => throw new GraftConfigError(
+        s"$op: blocking = $b conflicts with the index at $path, which is " +
+        s"${l.name}-partitioned — the index layout decides the probe blocking"))
+      if (!cfg.boolOr("_explain_only", false) && !cfg.boolOr("_dim_checked", false))
+        batchDim.filter(_ != l.dim(p)).foreach(bd => throw new GraftConfigError(
+          s"$op: $vectors have length $bd but the index at $path was built with " +
+          s"dim = ${l.dim(p)} — signatures would silently mismatch"))
     }
-    IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
-    val l = layoutAt(ctx.spark, op, path)
-    cfg.strOpt("blocking").filter(_ != l.name).foreach(b => throw new GraftConfigError(
-      s"$op: blocking = $b conflicts with the index at $path, which is " +
-      s"${l.name}-partitioned — the index layout decides the probe blocking"))
-    val p = l.fromMeta(IndexMeta.head(ctx.spark, s"$path/meta"))
-    p.values.foreach { case (q, v) =>
-      val key = l.configKey(q, d)
-      cfg.longOpt(key).filter(_ != v).foreach(conflicting =>
-        throw new GraftConfigError(s"$op: $key = $conflicting conflicts with the index " +
-          s"at $path ($key = $v) — cross matches would silently miss"))
-    }
-    if (!explainOnly && !cfg.boolOr("_dim_checked", false))
-      batchDim.filter(_ != l.dim(p)).foreach(bd => throw new GraftConfigError(
-        s"$op: $vectors have length $bd but the index at $path was built with " +
-        s"dim = ${l.dim(p)} — signatures would silently mismatch"))
-    new Opened(ctx.spark, path, op, l, p, placeholder = false)
+    new Opened(idx)
   }
 
   /** Length of the first non-null vector of `vec` — one single-row job. */
@@ -213,34 +173,19 @@ private[graft] object LshIndex {
     * key position into the layout's partition dirs, and `meta/` records
     * the parameters so probes regenerate identical signatures and dir
     * keys. mode=append must extend the EXISTING layout and signature
-    * space — another family's index, the other layout or other
-    * parameters fail loud before anything is written. */
-  def build(ctx: StageContext): Unit = {
+    * space: the catalog rejects another kind's index or the other layout,
+    * and other parameters fail loud here, before anything is written. */
+  def build(ctx: StageContext, l: LshLayout, op: String, path: String, mode: String,
+      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit = {
     val cfg = ctx.cfg
-    val op = "index.build type=lsh"
-    val path = cfg.str("path")
     val vecCol = cfg.strOr("vector_column", "embedding")
-    val mode = cfg.strOr("mode", "overwrite")
-    val l = blockingLayout(op, cfg.strOr("blocking", "pigeonhole"))
     val d = LshDefaults()
     val unsized = l.fromConfig(cfg, d, 0)
     l.problem(unsized, d, indexed = true).foreach(m => throw new GraftConfigError(s"$op: $m"))
     val dim = firstDim(ctx.primary, F.col(vecCol)).getOrElse(
       throw new GraftPlanError(s"$op: empty input, cannot infer dim"))
     val p = unsized.updated(LshLayout.Dim, dim)
-    if (mode == "append") {
-      IndexBuildOp.requireMetaForAppend(path, op)
-      if (GraftFs.isDir(s"$path/meta")) {
-        val existing = layoutAt(ctx.spark, s"$op mode=append", path)
-        if (existing != l) throw new GraftConfigError(
-          s"$op mode=append: the index at $path is ${existing.name}-partitioned — append " +
-          s"with blocking = \"${existing.name}\", or rebuild with mode=overwrite")
-        val before = l.fromMeta(IndexMeta.head(ctx.spark, s"$path/meta"))
-        if (before != p) throw new GraftConfigError(
-          s"$op mode=append: parameters (${p.describe}) differ from the existing index " +
-          s"at $path $before — appending would mix incompatible signatures")
-      }
-    }
+    existing.foreach(_.requireParams(p))
     val corpus = IndexSnapshot.corpusDir(path)
     IndexSnapshot.write(corpusRows(l, p, ctx.primary, vecCol, op, "base"), corpus, mode,
       l.partitionCols)

@@ -5,14 +5,17 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeArr
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 import graft.config.Cfg
-import graft.core.DriverParquet
+import graft.core.{DriverParquet, StageContext}
 import graft.functions.{BandSignatures, HyperplaneSignature}
 
 /** An operator's lsh parameter defaults: the plane count and the seed
   * differ by operator (index.build 16/11, dedup.embedding 32/11,
   * join.similar 32/42), and join.similar spells num_planes `planes`. */
 private[graft] final case class LshDefaults(planes: Long = 16L, seed: Long = 11L,
-    planesKey: String = "num_planes")
+    planesKey: String = "num_planes") {
+  /** the config key of parameter `q` */
+  def key(q: SigParam): String = if (q == LshLayout.Planes) planesKey else q.key
+}
 
 /** Everything that differs between the two hyperplane-LSH index layouts:
   * the signature and how it splits into keys, the corpus partition columns
@@ -25,12 +28,21 @@ private[graft] final case class LshDefaults(planes: Long = 16L, seed: Long = 11L
   * value alone; this module is the only code that knows the lsh meta
   * format and corpus columns. */
 private[graft] sealed abstract class LshLayout(val name: String, val posCol: String,
-    val keyCol: String, val dirCol: String) {
+    val keyCol: String, val dirCol: String) extends IndexKind {
   import LshLayout._
   /** signature parameters, in `meta/` column order */
   def params: Seq[SigParam]
   /** the `meta/` field whose presence marks an index of this layout */
   def marker: String
+  val indexType = "lsh"
+  override def describe: String = s"$name-partitioned"
+  override def buildConfig: String = s"""type=lsh blocking = "$name""""
+  def marks(fields: Set[String]): Boolean = fields.contains(marker)
+  override def recorded(meta: Row): SigParams = fromMeta(meta)
+  def family: IndexCatalog.Expected[IndexKind] = IndexCatalog.Lsh(LshDefaults())
+  def build(ctx: StageContext, op: String, path: String, mode: String,
+      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit =
+    LshIndex.build(ctx, this, op, path, mode, existing)
   /** the per-batch partition level a streaming append overwrites, if any */
   def tagCol: Option[String] = None
   def streamable: Boolean = tagCol.isDefined
@@ -68,7 +80,6 @@ private[graft] sealed abstract class LshLayout(val name: String, val posCol: Str
 
   def dim(p: SigParams): Int = p.int(Dim)
   def dirs(p: SigParams): Int = p.int(Dirs)
-  def configKey(q: SigParam, d: LshDefaults): String = if (q == Planes) d.planesKey else q.key
   def fromConfig(cfg: Cfg, d: LshDefaults, dim: Int): SigParams = SigParams(params.map {
     case Dim => Dim -> dim.toLong
     case Planes => Planes -> cfg.longOr(d.planesKey, d.planes)
@@ -179,10 +190,6 @@ private[graft] object LshLayout {
 
   val all: Seq[LshLayout] = Seq(Pigeonhole, Bands)
   def byName(blocking: String): Option[LshLayout] = all.find(_.name == blocking)
-  /** the layout an index's `meta/` fields mark (a bands meta also has the
-    * pigeonhole marker, so bands is tested first) */
-  def ofFields(fields: Set[String]): Option[LshLayout] =
-    Seq(Bands, Pigeonhole).find(l => fields.contains(l.marker))
   /** a pigeonhole meta written before the (block, pbucket) layout */
   def legacy(fields: Set[String]): Boolean =
     fields.contains(Planes.metaField) && !fields.contains(Dirs.metaField)

@@ -164,28 +164,18 @@ object KnnJoinOp extends Stage {
 
     val (pairs, corpusIdType) = indexPath match {
       case Some(path) =>
-        // index-pruned batch probe — the 100 TB path, the family detected
-        // from the index's own metadata: lsh (either layout), ivf (cell)
-        // or ivfpq. CLI `explain` with no index yet (the earlier skipped
-        // index.build barrier would have created it) → empty placeholder
-        // typed by `index_type` (and, for lsh, `blocking`), same contract as
-        // the dedup.embedding index probe; with an existing index, explain
-        // still reads the tiny meta but never runs query-side jobs.
-        val family =
-          if (cfg.boolOr("_explain_only", false) && !IndexMaintenance.exists(ctx.spark, path))
-            cfg.strOr("index_type", "lsh") match {
-              case ok @ ("lsh" | "ivf" | "ivfpq") => ok
-              case other => throw new GraftConfigError(
-                s"knn.join: index_type must be lsh|ivf|ivfpq, got '$other'")
-            }
-          else IndexMaintenance.layout(ctx.spark, path, "knn.join")._1 match {
-            case ok @ ("lsh" | "ivf" | "ivfpq") => ok
-            case fam => throw new GraftConfigError(s"knn.join: the index at $path is a " +
-              s"$fam index, not a vector index (lsh, ivf or ivfpq)")
-          }
-        if (family == "lsh") lshPairs(ctx, path, qSide, queries, qId, qVec, cId, cVec)
-        else ivfPairs(ctx, path, IvfLayout.byName(family).get, qSide, queries, qId, qVec, cId,
-          cVec, k)
+        // index-pruned batch probe — the 100 TB path, the kind detected by
+        // the catalog from the index's own metadata: lsh (either layout),
+        // ivf (cell) or ivfpq. CLI `explain` with no index yet (the earlier
+        // skipped index.build barrier would have created it) → empty
+        // placeholder typed by `index_type` (and, for lsh, `blocking`), same
+        // contract as the dedup.embedding index probe; with an existing
+        // index, explain still reads the tiny meta but never runs
+        // query-side jobs.
+        IndexCatalog.open(ctx, name, path, IndexCatalog.Vector).kind match {
+          case _: IvfLayout => ivfPairs(ctx, path, qSide, queries, qId, qVec, cId, cVec, k)
+          case _ => lshPairs(ctx, path, qSide, queries, qId, qVec, cId, cVec)
+        }
 
       case None =>
         val corpus = corpusOpt.get
@@ -313,11 +303,11 @@ object KnnJoinOp extends Stage {
     * (flat), or by ADC over the code columns with an exact rerank (pq).
     * nprobe = nlist probes every cell ≡ batch brute force (the
     * knn_join_{ivf,ivfpq}_exhaustive gates). */
-  private def ivfPairs(ctx: StageContext, path: String, layout: IvfLayout, qSide: DataFrame,
+  private def ivfPairs(ctx: StageContext, path: String, qSide: DataFrame,
       queries: DataFrame, qId: String, qVec: String, cId: String, cVec: String,
       k: Int): (DataFrame, DataType) = {
     val idx = IvfIndex.open(ctx, name, path, "query vectors",
-      _ => LshIndex.firstDim(qSide, F.col("_qv")), probes = true, expected = layout)
+      _ => LshIndex.firstDim(qSide, F.col("_qv")), probes = true)
     // the corpus-side vector column is a fact of the index, unless the
     // caller explicitly names it with right_vector
     val corpusVec = if (ctx.cfg.has("right_vector")) cVec else idx.vectorColumn(cVec)

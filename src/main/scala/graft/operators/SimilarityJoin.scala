@@ -203,7 +203,7 @@ object SimilarJoinOp extends Stage {
   /** `index_path` (method=minhash): the right side is an `index.build
     * type=minhash` corpus — match the left rows against everything
     * already ingested without rescanning or re-hashing it. The index opens
-    * through the dedup families' TextSigDedup.open (family check, meta
+    * through IndexCatalog.open like the dedup families (kind check, meta
     * parameters, conflict rejection, explain placeholder); the left side
     * still exact-collapses to representatives and expands matches back,
     * the index side is used as-is (it stores every ingested row). */
@@ -212,10 +212,11 @@ object SimilarJoinOp extends Stage {
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
     val leftText = ctx.cfg.strOr("left_text", ctx.cfg.strOr("text_column", "text"))
     val minhash = TextSigFamily.MinHash
-    val index = TextSigDedup.open(ctx, minhash, "join.similar", path)
+    val index = IndexCatalog.open(ctx, "join.similar", path, IndexCatalog.Text(minhash))
     val (reps, mapping) = collapse(left, leftId, F.col(leftText), ctx.deferToCleanup)
     val hashed = ctx.pin(minhash.signatures(reps.withColumnRenamed("_key", "_txt"), index.params))
-    val scored = minhash.crossPairsScored(hashed, index.corpus(left.schema(leftId).dataType),
+    val scored = minhash.crossPairsScored(hashed,
+      index.corpus(minhash.corpusSchema(left.schema(leftId).dataType)),
       index.params, ctx.cfg)
     scored.join(mapping, scored("id_l") === mapping("rep_id"))
       .select(F.col("orig_id").alias("left_id"), F.col("id_r").alias("right_id"),

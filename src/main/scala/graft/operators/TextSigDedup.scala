@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.config._
 import graft.core._
 import graft.functions.GraftFunctions
@@ -59,7 +58,7 @@ private[graft] object TextSigDedup {
   /** `index_path` mode — dedup THIS batch against a persisted index corpus
     * (plus within-batch pairs) without rescanning or re-hashing old text:
     * the incremental-ingestion shape. Signature parameters come from the
-    * index meta (see [[open]]). A batch doc drops when it near-matches ANY
+    * index meta (IndexCatalog.open). A batch doc drops when it near-matches ANY
     * indexed doc (the already-ingested corpus always wins — it cannot be
     * un-ingested) or any lower-id batch doc (the pairwise rule). With
     * batch ids above index ids this equals the full-corpus pairwise pass —
@@ -83,7 +82,7 @@ private[graft] object TextSigDedup {
       throw new GraftConfigError(
         s"$op: keep_by / transitive=true are not supported with index_path " +
         "(the index is immutable — only the pairwise min-id policy is well-defined)")
-    val index = open(ctx, f, op, path)
+    val index = IndexCatalog.open(ctx, op, path, IndexCatalog.Text(f))
     val p = index.params
 
     val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(text).alias("_txt"))
@@ -91,7 +90,7 @@ private[graft] object TextSigDedup {
     val sigs = ctx.pin(f.signatures(reps, p))
 
     val streamTag = cfg.strOpt("_stream_batch_tag")
-    val corpus = index.corpus(sigs.schema("id").dataType, excludeDir = streamTag)
+    val corpus = index.corpus(f.corpusSchema(sigs.schema("id").dataType), excludeDir = streamTag)
     val vsIndex = f.crossDropped(sigs, corpus, p, cfg)
     val inBatch = DedupPairs.dropped(f.selfPairs(sigs, p, cfg),
       transitive = false, None, ctx.deferToCleanup)
@@ -109,59 +108,6 @@ private[graft] object TextSigDedup {
     dropped
   }
 
-  /** A text index opened for probing: its family's signature parameters,
-    * read from `meta/` — or, under CLI explain of a pipeline whose EARLIER
-    * index.build stage would have created it (the barrier is skipped under
-    * explain), the config's parameters over an empty placeholder corpus
-    * (same contract as kafka.consume's missing-topic placeholder). */
-  final class Opened private[TextSigDedup] (spark: SparkSession, f: TextSigFamily,
-      path: String, op: String, val params: SigParams, placeholder: Boolean) {
-    /** SNAPSHOT the corpus file list now: parquet dir reads re-list at
-      * execution, so an index_append firing before the result is consumed
-      * (direct mode, or a second sink) would otherwise make the batch match
-      * ITSELF in the index and drop everything. `excludeDir` skips a
-      * streaming batch's own earlier attempt. */
-    def corpus(idType: DataType, excludeDir: Option[String] = None): DataFrame =
-      if (placeholder) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], f.corpusSchema(idType))
-      else IndexSnapshot.read(spark, IndexSnapshot.corpusDir(path), missing(f, op, path),
-        f.corpusSchema(idType), excludeDir = excludeDir)
-  }
-
-  private def missing(f: TextSigFamily, op: String, path: String): String =
-    s"$op: no ${f.name} index at $path — run index.build type=${f.name} first"
-
-  /** Open the index at `path` as family `f` for `op`: an index of another
-    * family fails loud, and so does an explicit config parameter that
-    * conflicts with the meta — mixed parameters would silently miss every
-    * cross match. */
-  def open(ctx: StageContext, f: TextSigFamily, op: String, path: String): Opened = {
-    val cfg = ctx.cfg
-    val metaDir = s"$path/meta"
-    if (!GraftFs.isDir(metaDir)) {
-      if (cfg.boolOr("_explain_only", false))
-        return new Opened(ctx.spark, f, path, op, f.fromConfig(cfg), placeholder = true)
-      throw new GraftPlanError(missing(f, op, path))
-    }
-    val meta = IndexMeta.head(ctx.spark, metaDir)
-    requireFamily(ctx.spark, f, op, path, meta.schema.fieldNames.toSet,
-      "probe it with the matching family")
-    val p = f.fromMeta(meta)
-    p.values.foreach { case (q, v) =>
-      cfg.longOpt(q.key).filter(_ != v).foreach(conflicting =>
-        throw new GraftConfigError(s"$op: ${q.key} = $conflicting conflicts with " +
-          s"the index at $path (${q.key} = $v) — cross matches would silently miss"))
-    }
-    new Opened(ctx.spark, f, path, op, p, placeholder = false)
-  }
-
-  private def requireFamily(spark: SparkSession, f: TextSigFamily, op: String, path: String,
-      fields: Set[String], hint: String): Unit =
-    if (!fields.contains(f.marker)) {
-      throw new GraftConfigError(s"$op: the index at $path is a " +
-        s"${IndexMaintenance.familyAt(spark, path, op)} index, not a ${f.name} index — $hint")
-    }
-
   /** `index.build type=<family>` — hash every document once (the
     * CPU-heavy step) into the narrow corpus rows under `corpus/`, with the
     * signature parameters under `meta/` so probes regenerate identical
@@ -169,30 +115,16 @@ private[graft] object TextSigDedup {
     * documents that were themselves duplicates, exactly as a full-corpus
     * pairwise pass would. LSH bands derive from the signature at probe
     * time instead of being stored ×bands. mode=append must extend the EXISTING signature
-    * space — another family's index or other parameters fail loud before
-    * anything is written. */
-  def build(ctx: StageContext, f: TextSigFamily): Unit = {
-    GraftFunctions.ensureRegistered(ctx.spark)
+    * space: the catalog rejects another kind's index, and other parameters
+    * fail loud here, before anything is written. */
+  def build(ctx: StageContext, f: TextSigFamily, op: String, path: String, mode: String,
+      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit = {
     val cfg = ctx.cfg
-    val path = cfg.str("path")
     val id = cfg.strOr("id_column", "doc_id")
     val text = cfg.strOr("text_column", "text")
-    val mode = cfg.strOr("mode", "overwrite")
-    val op = s"index.build type=${f.name}"
     val p = f.fromConfig(cfg)
     f.problem(p).foreach(m => throw new GraftConfigError(s"$op: $m"))
-    if (mode == "append") {
-      IndexBuildOp.requireMetaForAppend(path, op)
-      if (GraftFs.isDir(s"$path/meta")) {
-        val meta = IndexMeta.head(ctx.spark, s"$path/meta")
-        requireFamily(ctx.spark, f, s"$op mode=append", path, meta.schema.fieldNames.toSet,
-          "appending would mix incompatible signatures; rebuild with mode=overwrite")
-        val existing = f.fromMeta(meta)
-        if (existing != p) throw new GraftConfigError(
-          s"$op mode=append: parameters (${p.describe}) differ from the existing index " +
-          s"at $path $existing — appending would mix incompatible signatures")
-      }
-    }
+    existing.foreach(_.requireParams(p))
     f.signatures(Parallelize(ctx).select(F.col(id).alias("id"), F.col(text).alias("_txt")), p)
       .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
     // one-row table the driver already holds — write it driver-side

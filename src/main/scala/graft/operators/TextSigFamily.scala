@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 import graft.config.Cfg
-import graft.core.DriverParquet
+import graft.core.{DriverParquet, StageContext}
 
 /** One signature parameter of an index: its config key, its default,
   * whether `meta/` stores it as INT64 (`wide`) or INT32, and its `meta/`
@@ -18,15 +18,12 @@ private[graft] final case class SigParam(key: String, default: Long, wide: Boole
     if (wide) meta.getAs[Long](metaField) else meta.getAs[Int](metaField).toLong
 }
 
-/** A family's parameter values, in its `meta/` column order. `toString`
-  * is the bare value tuple, as the append-mismatch errors print it. */
+/** A family's parameter values, in its `meta/` column order. */
 private[graft] final case class SigParams(values: Seq[(SigParam, Long)]) {
   def apply(q: SigParam): Long = values.collectFirst { case (`q`, v) => v }.get
   def int(q: SigParam): Int = apply(q).toInt
   def updated(q: SigParam, v: Long): SigParams =
     SigParams(values.map { case (k, old) => k -> (if (k == q) v else old) })
-  def describe: String = values.map { case (q, v) => s"${q.key}=$v" }.mkString(", ")
-  override def toString: String = values.map(_._2).mkString("(", ",", ")")
 }
 
 /** Everything that differs between the text near-dup families: featurizer
@@ -35,11 +32,19 @@ private[graft] final case class SigParams(values: Seq[(SigParam, Long)]) {
   * index), signature parameters and `meta/` layout. [[TextSigDedup]] runs
   * every mode from this value alone; this module is the only code that
   * knows the text-index meta format. */
-private[graft] sealed abstract class TextSigFamily(val name: String) {
+private[graft] sealed abstract class TextSigFamily(val name: String) extends IndexKind {
   /** signature parameters, in `meta/` column order */
   def params: Seq[SigParam]
   /** the `meta/` field whose presence marks an index of this family */
   def marker: String
+  def indexType: String = name
+  def marks(fields: Set[String]): Boolean = fields.contains(marker)
+  def partitionCols: Seq[String] = Nil
+  override def recorded(meta: Row): SigParams = fromMeta(meta)
+  def family: IndexCatalog.Expected[IndexKind] = IndexCatalog.Text(this)
+  def build(ctx: StageContext, op: String, path: String, mode: String,
+      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit =
+    TextSigDedup.build(ctx, this, op, path, mode, existing)
   def metaCols(p: SigParams): Seq[DriverParquet.Col] = p.values.map { case (q, v) => q.metaCol(v) }
   def fromConfig(cfg: Cfg): SigParams = SigParams(params.map(q => q -> q.of(cfg)))
   def fromMeta(meta: Row): SigParams = SigParams(params.map(q => q -> q.fromMeta(meta)))
@@ -179,10 +184,6 @@ private[graft] object TextSigFamily {
   }
 
   val all: Seq[TextSigFamily] = Seq(MinHash, Ngram, SimHash)
-  def byName(name: String): Option[TextSigFamily] = all.find(_.name == name)
-  /** the text family whose marker is among an index's `meta/` fields */
-  def ofFields(fields: Set[String]): Option[TextSigFamily] =
-    all.find(f => fields.contains(f.marker))
 
   /** distinct character n-gram hashes of whitespace-normalized text — one
     * rolling pass per doc (the expression form re-normalizes the string per

@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, functions => F}
-import graft.config._
+import org.apache.spark.sql.DataFrame
 import graft.core._
 
 /** index.build — persist a vector index so ANN probes prune I/O instead of
@@ -33,6 +32,12 @@ import graft.core._
   *
   * `type = "minhash" | "ngram" | "simhash"` — the flat text-signature
   * corpus of that dedup family, built by the shared TextSigDedup.build.
+  *
+  * `type = "exact"` — the exact-dedup key set of ExactIndex.
+  *
+  * Every type builds through IndexCatalog.build: `mode` is overwrite or
+  * append, under the index's writer lease, and an append must find an
+  * index of the same kind (or none) at `path`.
   *
   * Rebuild = re-run with mode=overwrite (default). Pass-through stage:
   * returns its input, so it composes mid-pipeline like table.write.
@@ -68,88 +73,10 @@ object IndexBuildOp extends Stage {
   }
 
   def apply(ctx: StageContext): DataFrame = {
-    val cfg = ctx.cfg
     // CLI `explain` must stay read-only: skip the eager build (the plan
     // shown is the pass-through input; the probe stage will list whatever
     // index already exists on disk, or fail loudly when run for real)
-    if (cfg.boolOr("_explain_only", false)) return ctx.primary
-    val mode = cfg.strOr("mode", "overwrite")
-    def build(): Unit = {
-      // a previous index.compact may have died mid-swap: repair before any
-      // meta validation or corpus write (an append into the missing-corpus
-      // window would fork a generation the repair would discard). Inside
-      // the lease — an unleased repairer racing a live swap-mode compact's
-      // two-rename window would "repair" a protocol mid-flight.
-      cfg.strOpt("path").foreach(p => IndexMaintenance.recoverSwap(p))
-      // a rebuild invalidates the recorded compacted generation (index.stats
-      // would otherwise count the fresh corpus as zero appends-since-compact)
-      // AND any generation-pointer state (the fresh corpus writes to the
-      // classic dir; a surviving pointer would alias it to a stale gen)
-      if (mode == "overwrite")
-        cfg.strOpt("path").foreach { p =>
-          GraftFs.deleteIfExists(s"$p/compact.gen")
-          IndexSnapshot.resetGenerations(p)
-        }
-      // the signature expressions resolve against THIS stage's session
-      graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
-      cfg.strOr("type", "ivf") match {
-        case ivf @ ("ivf" | "ivfpq") => IvfIndex.build(ctx, IvfLayout.byName(ivf).get)
-        case "lsh" => LshIndex.build(ctx)
-        case "exact" => buildExact(ctx)
-        case other => TextSigFamily.byName(other) match {
-          case Some(family) => TextSigDedup.build(ctx, family)
-          case None => throw new GraftConfigError(
-            s"index.build type must be ivf|ivfpq|lsh|minhash|ngram|simhash|exact, got '$other'")
-        }
-      }
-    }
-    // BOTH modes claim the shared writer lease. Append is the same
-    // batch-appender class as the dedup index_append fires (its write
-    // must not land inside a concurrent compact's rewrite window).
-    // Overwrite is a REBUILD by explicit intent — but rebuilding an index
-    // a live stream is appending to, or whose generational compact is
-    // mid-rewrite, is the same corruption class (resetGenerations would
-    // delete the compact's in-progress generation, and the compact's
-    // later pointer commit would alias the fresh corpus to a deleted
-    // dir) — so it too must fail loud while another writer is live.
-    cfg.strOpt("path") match {
-      case Some(p) =>
-        graft.streaming.IngestLease.withBatchLease(p, s"index.build mode=$mode")(build())
-      case None => build()
-    }
+    if (!ctx.cfg.boolOr("_explain_only", false)) IndexCatalog.build(ctx)
     ctx.primary
-  }
-
-  /** mode=append validates against the existing meta: a corpus without
-    * one (a crashed earlier build?) cannot be checked and fails loud. */
-  private[operators] def requireMetaForAppend(path: String, op: String): Unit =
-    if (GraftFs.isDir(IndexSnapshot.corpusDir(path)) && !GraftFs.isDir(s"$path/meta"))
-      throw new GraftConfigError(
-        s"$op mode=append: $path has a corpus but no meta (a crashed earlier build?) — " +
-        "parameters cannot be validated; rebuild with mode=overwrite")
-
-  /** `type = "exact"` — the exact-dedup key set: distinct 128-bit md5
-    * content keys over `columns` (DedupExactOp.contentKey), for
-    * `dedup.exact index_path = ...` — a new batch drops already-ingested
-    * rows via one anti-join on narrow keys, never re-reading old data. */
-  private def buildExact(ctx: StageContext): Unit = {
-    val cfg = ctx.cfg
-    val path = cfg.str("path")
-    val cols = cfg.strListOr("columns", ctx.primary.columns.toVector)
-    val mode = cfg.strOr("mode", "overwrite")
-    val spark = ctx.spark
-    if (mode == "append") requireMetaForAppend(path, "index.build type=exact")
-    if (mode == "append" &&
-        GraftFs.isDir(s"$path/meta")) {
-      val m = IndexMeta.head(spark, s"$path/meta")
-      val existing = m.getSeq[String](m.fieldIndex("columns")).toVector
-      if (existing != cols.toVector) throw new GraftConfigError(
-        s"index.build type=exact mode=append: columns ${cols.mkString(", ")} differ " +
-        s"from the existing index at $path (${existing.mkString(", ")}) — keys would never match")
-    }
-    ctx.primary.select(DedupExactOp.contentKey(cols).alias("key")).distinct()
-      .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
-    DriverParquet.overwrite(s"$path/meta",
-      Seq(DriverParquet.StrArr("columns", Seq(cols))))
   }
 }

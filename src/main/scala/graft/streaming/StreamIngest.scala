@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.config._
 import graft.core._
 import graft.operators.{DedupEmbeddingOp, DedupExactOp, DedupMinHashOp, DedupNgramOp,
-  DedupSimHashOp, TopKOp}
+  DedupSimHashOp, IndexCatalog, IndexKind, LshLayout, TextSigFamily, TopKOp}
 
 /** stream.ingest — streaming incremental corpus ingestion: each micro-batch
   * dedups against a persisted `index.build` corpus (plus within-batch
@@ -642,27 +642,29 @@ object StreamIngestSink extends Stage {
     val out = cfg.str("path")
     val indexPath = cfg.str("index_path") // fail loud before the query starts
     val checkpoint = cfg.strOr("checkpoint", s"$out/_checkpoint")
-    val op: Stage = cfg.strOr("dedup", "minhash") match {
-      case "minhash"   => DedupMinHashOp
-      case "exact"     => DedupExactOp
-      case "ngram"     => DedupNgramOp
-      case "simhash"   => DedupSimHashOp
-      case "embedding" => DedupEmbeddingOp // bands-layout index only, checked below
-      case other => throw new GraftConfigError(s"stream.ingest: unknown dedup '$other'")
-    }
-    if (!GraftFs.isDir(s"$indexPath/meta"))
-      throw new GraftPlanError(
-        s"stream.ingest: no index at $indexPath — run index.build first")
+    val (op, kinds): (Stage, IndexCatalog.Expected[IndexKind]) =
+      cfg.strOr("dedup", "minhash") match {
+        case "minhash"   => (DedupMinHashOp, IndexCatalog.Text(TextSigFamily.MinHash))
+        case "exact"     => (DedupExactOp, IndexCatalog.Exact)
+        case "ngram"     => (DedupNgramOp, IndexCatalog.Text(TextSigFamily.Ngram))
+        case "simhash"   => (DedupSimHashOp, IndexCatalog.Text(TextSigFamily.SimHash))
+        case "embedding" => (DedupEmbeddingOp, IndexCatalog.Lsh(DedupEmbeddingOp.Defaults))
+        case other => throw new GraftConfigError(s"stream.ingest: unknown dedup '$other'")
+      }
+    // the index kind resolves before the query starts: a missing index,
+    // another kind's index or a conflicting parameter fails loud here, and
+    // every micro-batch's probe re-reads the same listing-cached meta.
     // dedup=embedding streams only against the BANDED lsh layout: its
     // (band, pband, ingest_tag) partitioning gives each micro-batch an
     // idempotent dynamic-overwrite append target that probes still prune
     // past; the pigeonhole layout has no per-batch append unit, so a
     // pigeonhole index fails loud here instead of silently rotting
-    if (cfg.strOr("dedup", "minhash") == "embedding" &&
-        !graft.operators.LshIndex.layoutAt(ctx.spark, "stream.ingest", indexPath).streamable)
-      throw new GraftConfigError(
+    IndexCatalog.open(ctx, "stream.ingest", indexPath, kinds).kind match {
+      case l: LshLayout if !l.streamable => throw new GraftConfigError(
         s"stream.ingest: dedup=embedding needs a bands-partitioned index — rebuild " +
         s"the index at $indexPath with index.build type=lsh blocking=bands")
+      case _ =>
+    }
     // a previous ingest.compact may have died mid-swap on this output —
     // roll it forward before the stream writes new batch partitions
     graft.operators.IngestMaintenance.recoverSwap(out)

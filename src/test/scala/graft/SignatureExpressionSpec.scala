@@ -138,6 +138,22 @@ class SignatureExpressionSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("an int argument given as a long outside the int range fails loud, naming it") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    val cases = Seq(
+      "minhash_sig(array(1L, 2L), 4294967297L, 1L)" -> "k",
+      "hyperplane_sig(array(1f), 1, -4294967295L, 1L, false)" -> "h",
+      "band_sigs(array(1f), 4294967297L, 2, 2, 1L, false)" -> "dim")
+    for ((call, arg) <- cases) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+      assert(msgs.contains(s"$arg: ") && msgs.contains("outside the int range"), s"$call: $msgs")
+    }
+    // an in-range long still folds
+    assert(spark.sql("SELECT size(minhash_sig(array(1L, 2L), 4L, 1L))").head().getInt(0) === 4)
+  }
+
   test("interpreted eval matches codegen (nullSafeEval path)") {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     import graft.functions.HyperplaneSignature
