@@ -730,7 +730,7 @@ object ScaleProbe {
     // would read (per-probe bytes are nprobe/nlist of this; the ratio is
     // the same)
     def chunkBytes(idx: String, cols: Set[String]): Long =
-      Pq.columnChunkBytes(spark,
+      Pq.columnChunkBytes(
         IndexSnapshot.files(IndexSnapshot.corpusDir(idx), s"ivfpq probe: no corpus at $idx"),
         cols)
     val flatScanBytes = chunkBytes(idxFlat, Set("vec_id", "embedding"))

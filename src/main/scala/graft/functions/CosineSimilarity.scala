@@ -117,6 +117,13 @@ object GraftFunctions {
         MinhashSignature(args.head, foldedInt(args(1), "k"),
           foldedLong(args(2), "seed"))
       }),
+    (new FunctionIdentifier("minhash_bands"),
+      new ExpressionInfo(classOf[MinhashBands].getName, "minhash_bands"),
+      (args: Seq[Expression]) => {
+        require(args.length == 3,
+          "minhash_bands(sig, bands, r) requires exactly 3 arguments")
+        MinhashBands(args.head, foldedInt(args(1), "bands"), foldedInt(args(2), "r"))
+      }),
     (new FunctionIdentifier("band_sigs"),
       new ExpressionInfo(classOf[BandSignatures].getName, "band_sigs"),
       (args: Seq[Expression]) => {

@@ -1,10 +1,14 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode,
+  FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Native Catalyst expressions for the LSH signature hot path (r14).
   *
@@ -41,6 +45,50 @@ private[graft] object SignatureExpressions {
     val rnd = new scala.util.Random(seed)
     Array.fill(rows * dim)(rnd.nextGaussian())
   }
+
+  /** [[MinhashBands]]' loop: per band, XXH64 (seed 42, as `xxhash64`) over
+    * the UTF-8 decimal text of its non-null longs joined by '_', written
+    * into one reused byte buffer — no per-band strings. */
+  def bandHashes(sig: ArrayData, bands: Int, r: Int): GenericArrayData = {
+    val n = if (sig == null) 0 else sig.numElements()
+    val out = new Array[Long](bands)
+    val buf = new Array[Byte](r * 21) // 20 digits and a sign, or a separator, per long
+    var b = 0
+    while (b < bands) {
+      var len = 0
+      var i = b * r
+      val end = math.min(i + r, n)
+      while (i < end) {
+        if (!sig.isNullAt(i)) {
+          if (len > 0) { buf(len) = '_'; len += 1 }
+          len = writeDecimal(buf, len, sig.getLong(i))
+        }
+        i += 1
+      }
+      out(b) = XXH64.hashUnsafeBytes(buf, Platform.BYTE_ARRAY_OFFSET, len, 42L)
+      b += 1
+    }
+    new GenericArrayData(out)
+  }
+
+  private val MinLong = Long.MinValue.toString.getBytes("UTF-8")
+
+  /** `v` as decimal ASCII at `buf(pos)`; returns the end position */
+  private def writeDecimal(buf: Array[Byte], pos: Int, v: Long): Int =
+    if (v == Long.MinValue) {
+      System.arraycopy(MinLong, 0, buf, pos, MinLong.length)
+      pos + MinLong.length
+    } else {
+      var p = pos
+      var x = v
+      if (x < 0) { buf(p) = '-'; p += 1; x = -x }
+      var digits = 1
+      var t = x / 10
+      while (t > 0) { digits += 1; t /= 10 }
+      var j = p + digits - 1
+      while (j >= p) { buf(j) = ('0' + x % 10).toByte; x /= 10; j -= 1 }
+      p + digits
+    }
 }
 
 /** MinHash signature over an array<long> of shingle hashes → ARRAY<LONG>
@@ -110,6 +158,44 @@ case class MinhashSignature(child: Expression, k: Int, seed: Long)
          |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($sig);
        """.stripMargin
     })
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+/** The LSH band keys of a minhash signature → ARRAY<LONG> of `bands`
+  * entries: band b hashes the longs at [b·r, b·r + r) — the value of
+  * `transform(sequence(0, bands-1), b -> xxhash64(concat_ws('_',
+  * slice(sig, b*r+1, r))))`, byte for byte (null elements skipped as
+  * `concat_ws` skips them, a short or null signature giving empty bands),
+  * in one loop over the array instead of an interpreted lambda formatting
+  * a string per band.
+  * SignatureExpressionSpec pins the equality; indexes and band joins are
+  * unchanged by it. */
+case class MinhashBands(child: Expression, bands: Int, r: Int) extends UnaryExpression {
+  require(bands >= 1 && r >= 0, s"minhash_bands: bands >= 1 and r >= 0, got $bands, $r")
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"minhash_bands requires array<bigint>, got ${other.simpleString(10)}")
+  }
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "minhash_bands"
+
+  override def eval(input: InternalRow): Any =
+    SignatureExpressions.bandHashes(child.eval(input).asInstanceOf[ArrayData], bands, r)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val sig = child.genCode(ctx)
+    ev.copy(code = code"""
+       |${sig.code}
+       |${CodeGenerator.javaType(dataType)} ${ev.value} =
+       |  graft.functions.SignatureExpressions$$.MODULE$$.bandHashes(
+       |    ${sig.isNull} ? null : ${sig.value}, $bands, $r);
+     """.stripMargin, isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

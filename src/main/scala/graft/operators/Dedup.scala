@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, functions => F}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import graft.config._
 import graft.core._
 import scala.jdk.CollectionConverters._
@@ -270,11 +272,11 @@ object LshVerify {
     * 128-long array (~1 KB) and the join shuffles rows × bands of them,
     * so carrying it multiplied the exchange bytes ~40× over the
     * (band_idx, band_hash, id) key rows; sigs and shingles re-attach by
-    * id only for the candidates that survive the band-collision dedup. */
+    * id only for the candidates that survive the band-collision dedup.
+    * The band hashes come from the one `minhash_bands` kernel. */
   private def bandedKeys(df: DataFrame, bands: Int, r: Int, side: String): DataFrame =
     df.select(F.col("id").alias(s"id_$side"),
-      F.posexplode(F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
-        b => F.xxhash64(F.concat_ws("_", F.slice(F.col("sig"), b * F.lit(r) + 1, F.lit(r)))))))
+      F.posexplode(F.call_function("minhash_bands", F.col("sig"), F.lit(bands), F.lit(r))))
       .withColumnRenamed("pos", "band_idx").withColumnRenamed("col", "band_hash")
       .select(s"id_$side", "band_idx", "band_hash")
 
@@ -568,7 +570,14 @@ private[graft] object IndexSnapshot {
     val w =
       if (partitionBy.isEmpty) df.write
       else df.repartition(partitionBy.map(F.col): _*).write.partitionBy(partitionBy: _*)
-    try (if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w).mode(mode).parquet(dir)
+    raising((if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+      .mode(mode).parquet(dir))
+  }
+
+  /** `body`, with a job failed by a [[failIf]] guard rethrown as a
+    * GraftConfigError carrying the guard's message. */
+  def raising[T](body: => T): T =
+    try body
     catch { case e: Exception =>
       val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
         case t: org.apache.spark.SparkThrowable
@@ -577,32 +586,39 @@ private[graft] object IndexSnapshot {
       }
       throw raised.map(new GraftConfigError(_)).getOrElse(e)
     }
-  }
 
   private val Raised = "GraftConfigError: "
-  /** `value`, except that a row where `bad` holds fails the job; [[write]]
+  /** `value`, except that a row where `bad` holds fails the job; [[raising]]
     * turns that failure into a GraftConfigError carrying `msg`. */
   def failIf(bad: Column, msg: String, value: Column): Column =
     F.when(bad, F.raise_error(F.lit(Raised + msg))).otherwise(value)
 
+  /** [[failIf]] with a per-row message */
+  def failIf(bad: Column, msg: Column, value: Column): Column =
+    F.when(bad, F.raise_error(F.concat(F.lit(Raised), msg))).otherwise(value)
+
   /** Snapshot-read the corpus as parquet, treating a part-file-less dir as
     * an EMPTY index of `emptySchema` (index.build over empty input writes
     * only _SUCCESS; `spark.read.parquet()` with zero paths would fail with
-    * an unrelated 'unable to infer schema'). `basePath` set = recover the
-    * partition dirs' columns (the lsh layout). */
+    * an unrelated 'unable to infer schema'). A non-empty corpus is typed by
+    * its own footer (ParquetSchema, no inference job) — never by
+    * `emptySchema`, which the caller derives from ITS input: an index built
+    * with long ids may be probed by a batch with int ids. `basePath` set =
+    * recover the partition dirs' columns (the lsh layout; Spark infers). */
   def read(spark: org.apache.spark.sql.SparkSession, dir: String, missingMsg: String,
-           emptySchema: org.apache.spark.sql.types.StructType,
+           emptySchema: StructType,
            basePath: Boolean = false, excludeDir: Option[String] = None): DataFrame = {
     val fs = files(dir, missingMsg, excludeDir)
     if (fs.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], emptySchema)
-    else {
-      val reader = spark.read
+    else if (basePath)
       // basePath must be qualified the same way as the listed file paths
       // (which come back fully qualified from the Hadoop listing) or
       // partition-column recovery misses
-      (if (basePath) reader.option("basePath", GraftFs.qualified(dir)) else reader)
-        .parquet(fs: _*)
+      spark.read.option("basePath", GraftFs.qualified(dir)).parquet(fs: _*)
+    else {
+      val reader = spark.read
+      ParquetSchema.ofDataFiles(spark, fs).fold(reader)(reader.schema).parquet(fs: _*)
     }
   }
 
@@ -663,28 +679,115 @@ private[graft] object IndexSnapshot {
     * over every file to learn numbers the footers already hold. */
   def footerRows(files: Seq[String]): Long = footerRowCounts(files).sum
 
-  /** Row count of each of `files` from its parquet footer. Footer opens
-    * are independent small reads dominated by per-open latency, so they
-    * run on a bounded driver pool instead of one at a time — the same
-    * trick a parquet scan's own footer phase uses. */
-  def footerRowCounts(files: Seq[String],
-      conf: org.apache.hadoop.conf.Configuration = GraftFs.hadoopConf): Seq[Long] = {
-    import scala.jdk.CollectionConverters._
-    if (files.isEmpty) return Nil
-    def rowsOf(f: String): Long = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-      finally r.close()
+  /** Row count of each of `files` from its parquet footer. */
+  def footerRowCounts(files: Seq[String]): Seq[Long] =
+    footers(files)(_.getBlocks.asScala.map(_.getRowCount).sum)
+
+  /** `f` of each of `files`' parquet footer — THE driver-side footer
+    * reader (row counts, column-chunk bytes, the Spark row schema), on the
+    * session's cached Hadoop conf: a fresh `newHadoopConf()` per call
+    * re-parses Hadoop's XML default resources. Footer opens are independent
+    * small reads dominated by per-open latency, so several run on a bounded
+    * driver pool — the same trick a parquet scan's own footer phase uses. */
+  def footers[T](files: Seq[String])(f: ParquetMetadata => T): Seq[T] = {
+    val conf = GraftFs.hadoopConf
+    def read(file: String): T = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file), conf))
+      try f(r.getFooter) finally r.close()
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(16, files.size))
-    try files.map(f => pool.submit(new java.util.concurrent.Callable[Long] {
-      def call(): Long = rowsOf(f)
+    if (files.size <= 1) return files.map(read)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, files.size))
+    try files.map(file => pool.submit(new java.util.concurrent.Callable[T] {
+      def call(): T = read(file)
     })).map(_.get())
     finally pool.shutdown()
   }
+}
+
+/** The schema `spark.read.parquet(paths)` (no options) infers, resolved on
+  * the driver from the one footer Spark's inference would read — zero Spark
+  * jobs where inference runs a one-stage job per read. Spark's rule (with
+  * schema merging off): among the leaf files sorted by path, the first
+  * `_common_metadata`, else the first `_metadata`, else the first data
+  * file; from it the Spark row schema stored under [[RowMetadataKey]],
+  * made nullable as every file-source relation is. Anything this does not
+  * reproduce exactly returns None and the caller keeps Spark's own
+  * inference: a footer without that key, schema merging (option or conf),
+  * globs, nested or partition (`key=value`) directories, leaf names Spark's
+  * hidden-file rule treats specially, or a non-`.parquet` data file.
+  * Callers with reader options (`basePath`, `mergeSchema`, …) infer. */
+private[graft] object ParquetSchema {
+  val RowMetadataKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  def apply(spark: SparkSession, paths: Seq[String]): Option[StructType] =
+    if (paths.isEmpty || merging(spark) || paths.exists(_.exists("{}[]*?\\".contains(_)))) None
+    else leaves(paths).flatMap(ofLeaves)
+
+  /** `spark.read.parquet(paths)`, typed by [[apply]] where it resolves */
+  def read(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val reader = spark.read
+    apply(spark, paths).fold(reader)(reader.schema).parquet(paths: _*)
+  }
+
+  /** [[apply]] over a listing already known to hold only committed data
+    * files — the index-corpus snapshot: no stat calls. */
+  def ofDataFiles(spark: SparkSession, files: Seq[String]): Option[StructType] =
+    if (files.isEmpty || merging(spark)) None else ofLeaves(files)
+
+  private def merging(spark: SparkSession): Boolean =
+    spark.conf.get("spark.sql.parquet.mergeSchema", "false").toBoolean
+
+  private val Summaries = Seq("_common_metadata", "_metadata")
+  private def name(f: String) = f.substring(f.lastIndexOf('/') + 1)
+
+  /** The leaf files Spark lists for `paths`, fully qualified — None where
+    * its listing has a shape this does not reproduce. */
+  private def leaves(paths: Seq[String]): Option[Seq[String]] = {
+    val listed = paths.map { p =>
+      val fs = GraftFs.fs(p)
+      val st = try Some(fs.getFileStatus(GraftFs.path(p)))
+        catch { case _: java.io.FileNotFoundException => None }
+      st.flatMap { s =>
+        if (!s.isDirectory) Some(Seq(s))
+        else {
+          val kids = fs.listStatus(s.getPath).toSeq.filterNot { k =>
+            val n = k.getPath.getName
+            // HadoopFSUtils.shouldFilterOutPathName: hidden unless a summary
+            ((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+              n.endsWith("._COPYING_")) && !Summaries.exists(n.startsWith)
+          }
+          if (kids.exists(_.isDirectory)) None else Some(kids)
+        }
+      }
+    }
+    if (listed.exists(_.isEmpty)) None
+    else Some(listed.flatten.flatten.map(_.getPath.toString))
+  }
+
+  private def ofLeaves(files: Seq[String]): Option[StructType] = {
+    val sorted = files.sorted
+    val data = sorted.filterNot(f => Summaries.contains(name(f)))
+    if (data.isEmpty || data.exists(f => !name(f).endsWith(".parquet") ||
+        name(f).startsWith("_") || name(f).startsWith("."))) return None
+    val touched = Summaries.iterator.flatMap(s => sorted.find(name(_) == s))
+      .nextOption().getOrElse(data.head)
+    IndexSnapshot.footers(Seq(touched))(m =>
+      Option(m.getFileMetaData.getKeyValueMetaData.get(RowMetadataKey))).head
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => nullable(s) }
+  }
+
+  /** StructType.asNullable (private to Spark), which file sources apply */
+  private def nullable[T <: DataType](t: T): T = (t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }).asInstanceOf[T]
 }
 
 /** Success-deferred index append with the STREAMING read-back shortcut,
@@ -711,7 +814,7 @@ private[graft] object DeferredAppend {
         ctx.deferToSuccess { () =>
           if (GraftFs.isDir(rb) &&
               GraftFs.listFilesRec(rb).exists(_._1.endsWith(".parquet"))) {
-            val rows = ctx.spark.read.parquet(rb)
+            val rows = ParquetSchema.read(ctx.spark, Seq(rb))
               .select(ctx.primary.columns.map(F.col).toIndexedSeq: _*)
             IndexSnapshot.append(derive(rows), IndexSnapshot.corpusDir(path), streamTag,
               partitionBy)
@@ -952,14 +1055,20 @@ object DedupEmbeddingOp extends Stage {
       throw new GraftConfigError(
         "dedup.embedding: keep_by / transitive=true are not supported with index_path " +
         "(the index is immutable — only the pairwise min-id policy is well-defined)")
-    val index = LshIndex.open(ctx, name, path, Defaults, s"batch vectors in '$vecCol'",
-      LshIndex.firstDim(ctx.primary, F.col(vecCol)))
     // set by stream.ingest, which admits only a layout with a tag level
     val streamTag = cfg.strOpt("_stream_batch_tag")
+    val vectors = s"batch vectors in '$vecCol'"
+    // a batch probe checks one sampled row's length up front (one job); a
+    // micro-batch checks EVERY row inside its signature projection instead
+    // (no job per micro-batch)
+    val index = LshIndex.open(ctx, name, path, Defaults, vectors,
+      if (streamTag.isDefined) None else LshIndex.firstDim(ctx.primary, F.col(vecCol)))
 
     val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(vecCol).alias("vec"))
     val (reps, exactDups) = ExactCollapse(base, "id", "vec", None, ctx.deferToCleanup)
-    val sigs = ctx.pin(reps.withColumn("sig", index.signature(F.col("vec"))))
+    val sig = index.signature(F.col("vec"))
+    val sigs = ctx.pin(reps.withColumn("sig",
+      if (streamTag.isDefined) index.dimChecked(F.col("vec"), vectors, sig) else sig))
     val corpus = index.corpus(ctx.primary.schema(id), ctx.primary.schema(vecCol), streamTag)
     val vsIndex = LshIndex.crossPairs(index, sigs, corpus, id, vecCol, threshold)
       .select(F.col("id_l").alias("id")).distinct()

@@ -433,7 +433,7 @@ private[operators] object IndexRetrain {
     val skew = cond.doubleOpt("cell_skew_above").flatMap { thr =>
       if (thr <= 1.0) throw new GraftConfigError(
         s"index.compact: retrain_if.cell_skew_above must be > 1.0 (1.0 = perfectly balanced), got $thr")
-      IvfIndex.cellSkew(spark, IvfIndex.open(ctx, "index.compact retrain_if", path))
+      IvfIndex.cellSkew(IvfIndex.open(ctx, "index.compact retrain_if", path))
         .filter(_ > thr).map(ratio => f"cell_skew $ratio%.2f > $thr%.2f")
     }
     skew.orElse(cond.doubleOpt("recall_below").flatMap { thr =>
@@ -608,8 +608,8 @@ object IndexStatsOp extends Stage {
       case _: IvfLayout => Some(IvfIndex.open(ctx, "index.stats", path))
       case _ => None
     }
-    val pqScanRatio = ivf.flatMap(IvfIndex.pqScanRatio(spark, _, files))
-    val cellSkew = ivf.flatMap(IvfIndex.cellSkew(spark, _)).map(r => math.round(r * 100) / 100.0)
+    val pqScanRatio = ivf.flatMap(IvfIndex.pqScanRatio(_, files))
+    val cellSkew = ivf.flatMap(IvfIndex.cellSkew(_)).map(r => math.round(r * 100) / 100.0)
     Seq((path, family, rows, files.size.toLong, bytes, meanKb, appendDirs, partDirs,
         sinceCompact, lease.map(_._1), lease.map(_._2), occupancy, pqScanRatio, cellSkew))
       .toDF("path", "index_type", "rows", "files", "bytes", "mean_file_kb",

@@ -221,7 +221,7 @@ private[graft] object IvfIndex {
     }
     // cell-skew advisory after every write, append included: occupancy is a
     // property of the total; guidance never fails a build
-    try Pq.cellSkewWarning(what, Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(path)).values,
+    try Pq.cellSkewWarning(what, Pq.cellOccupancy(IndexSnapshot.corpusDir(path)).values,
       q.nlist).foreach(System.err.println)
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[graft] $what cell-skew check skipped: ${e.getMessage}") }
@@ -231,17 +231,17 @@ private[graft] object IvfIndex {
     * footers; None for an empty corpus. nlist comes from the centroids,
     * NOT the populated-cell count: a fully collapsed quantizer must read
     * as maximal skew (= nlist). */
-  def cellSkew(spark: SparkSession, idx: Opened): Option[Double] =
-    Pq.cellSkew(Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(idx.path)).values,
+  def cellSkew(idx: Opened): Option[Double] =
+    Pq.cellSkew(Pq.cellOccupancy(IndexSnapshot.corpusDir(idx.path)).values,
       idx.quantizer.nlist)
 
   /** ivfpq only: vector-column bytes / code-column bytes over the corpus
     * `files` footers — the bytes a flat probe reads per byte an ADC probe
     * reads. */
-  def pqScanRatio(spark: SparkSession, idx: Opened, files: Seq[String]): Option[Double] =
+  def pqScanRatio(idx: Opened, files: Seq[String]): Option[Double] =
     Some(idx.layout).filter(_ == IvfLayout.ProductQuantized && files.nonEmpty).flatMap { _ =>
-      val vecBytes = Pq.columnChunkBytes(spark, files, Set(idx.vectorColumn("embedding")))
-      val codeBytes = Pq.columnChunkBytes(spark, files, IvfLayout.ProductQuantized.codeCols.toSet)
+      val vecBytes = Pq.columnChunkBytes(files, Set(idx.vectorColumn("embedding")))
+      val codeBytes = Pq.columnChunkBytes(files, IvfLayout.ProductQuantized.codeCols.toSet)
       if (codeBytes <= 0L) None else Some(math.round(vecBytes.toDouble / codeBytes * 10) / 10.0)
     }
 }

@@ -26,6 +26,15 @@ private[graft] object LshIndex {
     def signature(vec: Column, ndExplode: Boolean = false): Column =
       layout.signature(vec, params, ndExplode)
 
+    /** `value`, failing the job on a row whose non-null `vec` is not of the
+      * index dim — the per-row form of [[open]]'s one-row check, riding a
+      * projection the caller already runs (no job of its own). */
+    def dimChecked(vec: Column, vectors: String, value: Column): Column = {
+      val (before, after) = dimMessage(idx.op, vectors, idx.path, layout.dim(params))
+      IndexSnapshot.failIf(vec.isNotNull && F.size(vec) =!= layout.dim(params),
+        F.concat(F.lit(before), F.size(vec).cast("string"), F.lit(after)), value)
+    }
+
     /** SNAPSHOT of the corpus file list (see IndexSnapshot), partition
       * columns recovered; `excludeTag` skips a streaming batch's own earlier
       * attempt. `id`/`vec` type the empty placeholder. */
@@ -61,8 +70,8 @@ private[graft] object LshIndex {
     * (`batchDim`, named `vectors` in the error) that conflicts with the
     * index fails loud too — mixed signatures would silently miss every
     * cross match. The dim check is skipped under explain (no upstream
-    * jobs) and on the later micro-batches of a stream whose first batch
-    * validated it (`_dim_checked`). */
+    * jobs); a caller passing no `batchDim` checks rows itself
+    * ([[Opened.dimChecked]]). */
   def open(ctx: StageContext, op: String, path: String, d: LshDefaults, vectors: String,
       batchDim: => Option[Int]): Opened = {
     GraftFunctions.ensureRegistered(ctx.spark)
@@ -73,13 +82,19 @@ private[graft] object LshIndex {
       cfg.strOpt("blocking").filter(_ != l.name).foreach(b => throw new GraftConfigError(
         s"$op: blocking = $b conflicts with the index at $path, which is " +
         s"${l.name}-partitioned — the index layout decides the probe blocking"))
-      if (!cfg.boolOr("_explain_only", false) && !cfg.boolOr("_dim_checked", false))
-        batchDim.filter(_ != l.dim(p)).foreach(bd => throw new GraftConfigError(
-          s"$op: $vectors have length $bd but the index at $path was built with " +
-          s"dim = ${l.dim(p)} — signatures would silently mismatch"))
+      if (!cfg.boolOr("_explain_only", false))
+        batchDim.filter(_ != l.dim(p)).foreach { bd =>
+          val (before, after) = dimMessage(op, vectors, path, l.dim(p))
+          throw new GraftConfigError(s"$before$bd$after")
+        }
     }
     new Opened(idx)
   }
+
+  /** the dim-mismatch message around the batch vector length */
+  private def dimMessage(op: String, vectors: String, path: String, dim: Int): (String, String) =
+    (s"$op: $vectors have length ",
+      s" but the index at $path was built with dim = $dim — signatures would silently mismatch")
 
   /** Length of the first non-null vector of `vec` — one single-row job. */
   def firstDim(df: DataFrame, vec: Column): Option[Int] =

@@ -93,17 +93,8 @@ object MixOp extends Stage {
       case _ => None
     }
     unwrap(df.queryExecution.analyzed).flatMap { fs =>
-      try {
-        import scala.jdk.CollectionConverters._
-        val conf = df.sparkSession.sessionState.newHadoopConf()
-        Some(fs.location.inputFiles.iterator.map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-          finally r.close()
-        }.sum)
-      } catch { case scala.util.control.NonFatal(_) => None }
+      try Some(IndexSnapshot.footerRows(fs.location.inputFiles.toSeq))
+      catch { case scala.util.control.NonFatal(_) => None }
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions => F}
+import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.config._
 import graft.core._
+import scala.jdk.CollectionConverters._
 
 /** The quantizer arithmetic of the ivf layouts (see [[IvfLayout]]): the
   * seeded training draw, Lloyd's k-means, nearest-center selection, the
@@ -271,14 +272,13 @@ private[graft] object Pq {
     * only, pooled driver reads (IndexSnapshot.footerRowCounts), the same
     * trick as index.stats. Files not under a cell= dir (none in the
     * ivf/ivfpq layout) are ignored. */
-  def cellOccupancy(spark: SparkSession, corpusDir: String): Map[Int, Long] = {
+  def cellOccupancy(corpusDir: String): Map[Int, Long] = {
     val byCell = IndexSnapshot.files(corpusDir, s"cellOccupancy: no corpus at $corpusDir")
       .flatMap { f =>
         GraftFs.relativize(corpusDir, f).split('/')
           .find(_.startsWith("cell=")).map(_.stripPrefix("cell=").toInt -> f)
       }
-    byCell.map(_._1).zip(IndexSnapshot.footerRowCounts(byCell.map(_._2),
-        spark.sessionState.newHadoopConf()))
+    byCell.map(_._1).zip(IndexSnapshot.footerRowCounts(byCell.map(_._2)))
       .groupMapReduce(_._1)(_._2)(_ + _)
   }
 
@@ -287,19 +287,9 @@ private[graft] object Pq {
     * these files actually reads. Used by ScaleProbe's ivfpq rungs and by
     * index.stats' pq_scan_ratio (the per-index, measured version of the
     * BENCH_NOTES scan-bytes claim). O(files) driver footer reads. */
-  def columnChunkBytes(spark: SparkSession, files: Seq[String],
-      cols: Set[String]): Long = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    files.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala
-        .flatMap(_.getColumns.asScala)
-        .filter(c => cols.contains(c.getPath.iterator.next()))
-        .map(_.getTotalSize).sum
-      finally r.close()
-    }.sum
-  }
+  def columnChunkBytes(files: Seq[String], cols: Set[String]): Long =
+    IndexSnapshot.footers(files)(_.getBlocks.asScala
+      .flatMap(_.getColumns.asScala)
+      .filter(c => cols.contains(c.getPath.iterator.next()))
+      .map(_.getTotalSize).sum).sum
 }

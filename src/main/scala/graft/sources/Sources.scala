@@ -74,13 +74,15 @@ object JsonSource extends Stage {
 
 /** parquet.read — native extension (the reference has no parquet source;
   * mandatory for an analytics engine — self-describing schema, column
-  * pruning + predicate pushdown reach the scan).
+  * pruning + predicate pushdown reach the scan). The schema Spark would
+  * infer in a one-stage job is read from the same footer on the driver
+  * where it can be (graft.operators.ParquetSchema).
   */
 object ParquetSource extends Stage {
   val name = "parquet.read"
   val kind = StageKind.Source
   def apply(ctx: StageContext): DataFrame =
-    ctx.spark.read.parquet(ctx.cfg.str("path"))
+    graft.operators.ParquetSchema.read(ctx.spark, Seq(ctx.cfg.str("path")))
 }
 
 /** table.read — load a table: `name` reads from the session catalog

@@ -5,7 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.config._
 import graft.core._
 import graft.operators.{DedupEmbeddingOp, DedupExactOp, DedupMinHashOp, DedupNgramOp,
-  DedupSimHashOp, IndexCatalog, IndexKind, LshLayout, TextSigFamily, TopKOp}
+  DedupSimHashOp, IndexCatalog, IndexKind, IndexSnapshot, LshLayout, TextSigFamily, TopKOp}
 
 /** stream.ingest — streaming incremental corpus ingestion: each micro-batch
   * dedups against a persisted `index.build` corpus (plus within-batch
@@ -91,24 +91,32 @@ import graft.operators.{DedupEmbeddingOp, DedupExactOp, DedupMinHashOp, DedupNgr
   * exactly-once replays converge). COST DISCIPLINE: the r11 bench A/B
   * measured a naive version (read-back count job per batch) at ~0.6 s per
   * micro-batch of pure metrics overhead — so the landed-rows count reads
-  * parquet FOOTERS on the driver (no Spark job), and rows_in comes from
-  * the count the sink already pays for its emptiness check. */
+  * parquet FOOTERS on the driver (no Spark job), and rows_in is counted by
+  * work the batch already runs ([[observedRows]] / the sketch's
+  * emptiness count). */
 private[graft] object IngestMetrics {
-  def landedRows(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
-    import scala.jdk.CollectionConverters._
-    if (!GraftFs.isDir(dir)) return 0L
-    val conf = spark.sessionState.newHadoopConf()
-    GraftFs.listFilesRec(dir).map(_._1).filter { f =>
+  def landedRows(dir: String): Long =
+    IndexSnapshot.footerRows(GraftFs.listFilesRec(dir).map(_._1).filter { f =>
       val n = f.substring(f.lastIndexOf('/') + 1)
       n.startsWith("part-") && n.endsWith(".parquet")
-    }.map { f =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount.toLong).sum
-      finally r.close()
-    }.sum
-  }
+    })
+
+  private val RowsIn = "rows_in"
+
+  /** `batch` with a row count observed as its rows flow through the first
+    * job that reads them — pin the result so that happens once. */
+  def observingRows(batch: DataFrame): DataFrame =
+    batch.observe(RowsIn, F.count(F.lit(1)))
+
+  /** The row count [[observingRows]] took, read after the batch's work
+    * read every pinned row: zero jobs. The metric is present (0 for an
+    * empty batch) once the pin is reachable; a missing one means the
+    * lookup broke, and reading it as 0 would skip a non-empty batch's
+    * index append — so it fails. */
+  def observedRows(pinned: DataFrame): Long =
+    pinned.select("*").queryExecution.observedMetrics.getOrElse(RowsIn,
+      throw new IllegalStateException(s"stream.ingest: '$RowsIn' was not observed"))
+      .getLong(0)
 
   def write(out: String, batchId: Long, rowsIn: Long, landed: Long,
       t0Nanos: Long): Unit = {
@@ -676,12 +684,6 @@ object StreamIngestSink extends Stage {
     val passThrough = cfg.table -- SinkKeys
     val stageId = ctx.stageId
     val queryName = cfg.strOr("query_name", s"graft_${stageId}")
-    // the embedding probes run a one-row batch-dim-vs-index-dim sample
-    // check (an eager head(1) Spark job). Per micro-batch that job is pure
-    // fixed cost repeating the same sample against the same frozen index —
-    // after the first batch validates, later batches of this query skip it
-    // (the check was always a one-row sample, never a per-row guarantee)
-    val dimChecked = new java.util.concurrent.atomic.AtomicBoolean(false)
 
     // single-writer ENFORCEMENT: fail loud before the query starts if
     // another live query holds this index — and the OUTPUT path is
@@ -727,11 +729,13 @@ object StreamIngestSink extends Stage {
         batch0.sparkSession.conf.set(
           "spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
         // pin the micro-batch ONCE: the per-batch work reads it ~5 times
-        // (emptiness check, dim validation, signature build, survivors
-        // write) and each read re-scans the source files without this —
-        // measured as numInputRows = 5× the file rows in the r8 stream
-        // probe. Bounded by the trigger size, released in the finally.
-        val batch = batch0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        // (dedup, signature build, survivors write) and each read re-scans
+        // the source files without this — measured as numInputRows = 5× the
+        // file rows in the r8 stream probe. Bounded by the trigger size,
+        // released in the finally. The pin also counts the rows (rows_in)
+        // as it materializes, inside the survivors write.
+        val batch = IngestMetrics.observingRows(batch0)
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val batchT0 = System.nanoTime()
         // label the per-batch actions (guide §1.5) — descriptions are
         // thread-local to the micro-batch thread, so GateAudit / the UI can
@@ -741,48 +745,47 @@ object StreamIngestSink extends Stage {
           sc.setJobDescription(s"stream.ingest batch=$batchId: $d")
           try body finally sc.setJobDescription(null)
         }
+        val tag = s"sb-$tagBase-$batchId"
+        val deferred = scala.collection.mutable.Buffer[() => Unit]()
+        val cleanups = scala.collection.mutable.Buffer[() => Unit]()
         try {
-          // count, not isEmpty: same one-job emptiness check (the dedup
-          // probe fully materializes the persist anyway) and the count IS
-          // the rows_in metric — per-batch observability at zero extra jobs
-          val rowsIn = described("rows_in count")(batch.count())
+          val batchCfg = Cfg(passThrough ++ Map(
+            "index_append" -> CBool(cfg.boolOr("index_append", true)),
+            "_stream_batch_tag" -> CStr(tag),
+            // lets the deferred index append re-read this batch's
+            // just-written output partition instead of re-running the
+            // probe DAG (see the dedup.embedding read-back)
+            "_stream_readback_dir" -> CStr(s"$out/ingest_batch=$batchId")))
+          val survivors = described("probe compose")(op(StageContext(batch.sparkSession,
+            Seq("batch" -> batch), batchCfg, stageId,
+            deferToSuccess = a => { deferred += a; () },
+            deferToCleanup = a => { cleanups += a; () })))
+          // an empty micro-batch writes no partition here (no rows, no
+          // partition dir) and stops: no index append, no metrics file.
+          // No emptiness job runs first — the write reads every pinned row,
+          // which is what counts them.
+          described("survivors write")(IndexSnapshot.raising(
+            survivors.withColumn("ingest_batch", F.lit(batchId))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("ingest_batch").parquet(out)))
+          val rowsIn = IngestMetrics.observedRows(batch)
           if (rowsIn > 0) {
-            val tag = s"sb-$tagBase-$batchId"
-            val deferred = scala.collection.mutable.Buffer[() => Unit]()
-            val cleanups = scala.collection.mutable.Buffer[() => Unit]()
-            try {
-              val batchCfg = Cfg(passThrough ++ Map(
-                "index_append" -> CBool(cfg.boolOr("index_append", true)),
-                "_stream_batch_tag" -> CStr(tag),
-                // lets the deferred index append re-read this batch's
-                // just-written output partition instead of re-running the
-                // probe DAG (see the dedup.embedding read-back)
-                "_stream_readback_dir" -> CStr(s"$out/ingest_batch=$batchId"),
-                "_dim_checked" -> CBool(dimChecked.get)))
-              val survivors = described("probe compose")(op(StageContext(batch.sparkSession,
-                Seq("batch" -> batch), batchCfg, stageId,
-                deferToSuccess = a => { deferred += a; () },
-                deferToCleanup = a => { cleanups += a; () })))
-              dimChecked.set(true)
-              described("survivors write")(
-              survivors.withColumn("ingest_batch", F.lit(batchId))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("ingest_batch").parquet(out))
-              // the index grows only after the survivors are durably in the
-              // output — the same commit ordering as the batch pipelines'
-              // success-deferred append
-              described("index append")(deferred.foreach(_()))
-              // per-batch metrics (see IngestMetrics): survivors from the
-              // just-written partition's parquet footers — driver-side,
-              // no job, no probe re-run. Surfaced by ingest.stats.
-              IngestMetrics.write(out, batchId, rowsIn,
-                IngestMetrics.landedRows(batch.sparkSession,
-                  s"$out/ingest_batch=$batchId"), batchT0)
-            } finally cleanups.foreach(c => try c() catch { case e: Exception =>
-              System.err.println(s"[graft] stream.ingest cleanup failed: ${e.getMessage}") })
+            // the index grows only after the survivors are durably in the
+            // output — the same commit ordering as the batch pipelines'
+            // success-deferred append
+            described("index append")(deferred.foreach(_()))
+            // per-batch metrics (see IngestMetrics): survivors from the
+            // just-written partition's parquet footers — driver-side,
+            // no job, no probe re-run. Surfaced by ingest.stats.
+            IngestMetrics.write(out, batchId, rowsIn,
+              IngestMetrics.landedRows(s"$out/ingest_batch=$batchId"), batchT0)
           }
-        } finally batch.unpersist()
+        } finally {
+          cleanups.foreach(c => try c() catch { case e: Exception =>
+            System.err.println(s"[graft] stream.ingest cleanup failed: ${e.getMessage}") })
+          batch.unpersist()
+        }
       }
     cfg.strOpt("trigger") match {
       case Some("available_now") => w = w.trigger(Trigger.AvailableNow())
@@ -903,8 +906,7 @@ object StreamSketchSink extends Stage {
                 .partitionBy("ingest_batch").parquet(out)
               // per-batch metrics: "survivors" = summary rows landed
               IngestMetrics.write(out, batchId, rowsIn,
-                IngestMetrics.landedRows(batch.sparkSession,
-                  s"$out/ingest_batch=$batchId"), batchT0)
+                IngestMetrics.landedRows(s"$out/ingest_batch=$batchId"), batchT0)
             } finally cleanups.foreach(c => try c() catch { case e: Exception =>
               System.err.println(s"[graft] stream.sketch cleanup failed: ${e.getMessage}") })
           }

@@ -73,7 +73,7 @@ class QuantizerSampleSpec extends SparkSpec {
     IndexBuildOp(StageContext.one(spark, sortedCorpus, Cfg.of(
       "type" -> "ivf", "path" -> dir, "vector_column" -> "embedding",
       "nlist" -> 12, "max_train" -> PerDomain, "seed" -> 11)))
-    val occ = Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(dir))
+    val occ = Pq.cellOccupancy(IndexSnapshot.corpusDir(dir))
     val total = occ.values.sum
     assert(total === (Domains * PerDomain).toLong)
     val maxShare = occ.values.max.toDouble / total
@@ -91,7 +91,7 @@ class QuantizerSampleSpec extends SparkSpec {
     IndexBuildOp(StageContext.one(spark, sortedCorpus, Cfg.of(
       "type" -> "ivfpq", "path" -> dir, "vector_column" -> "embedding",
       "nlist" -> 12, "m" -> 4, "ksub" -> 16, "max_train" -> PerDomain, "seed" -> 11)))
-    val occ = Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(dir))
+    val occ = Pq.cellOccupancy(IndexSnapshot.corpusDir(dir))
     val total = occ.values.sum
     assert(total === (Domains * PerDomain).toLong)
     val maxShare = occ.values.max.toDouble / total
@@ -127,7 +127,7 @@ class QuantizerSampleSpec extends SparkSpec {
     IndexBuildOp(StageContext.one(spark, corpus, Cfg.of(
       "type" -> "ivf", "path" -> dir, "vector_column" -> "embedding",
       "nlist" -> 4, "max_train" -> maxTrain, "seed" -> seed)))
-    val occ = Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(dir))
+    val occ = Pq.cellOccupancy(IndexSnapshot.corpusDir(dir))
     assert(occ.values.sum === rows.size.toLong,
       "every corpus row must be indexed despite the starved prefiltered draw")
   }

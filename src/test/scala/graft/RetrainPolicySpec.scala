@@ -104,7 +104,7 @@ class RetrainPolicySpec extends SparkSpec {
           "vector_column" -> "embedding", "nlist" -> 4, "seed" -> 11)))
     }
     def skew(): Double = {
-      val occ = Pq.cellOccupancy(spark, IndexSnapshot.corpusDir(path))
+      val occ = Pq.cellOccupancy(IndexSnapshot.corpusDir(path))
       occ.values.max.toDouble * 4 / occ.values.sum
     }
     assert(skew() > 2.5, f"fixture must be skewed: ${skew()}%.2f")

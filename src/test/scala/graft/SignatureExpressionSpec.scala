@@ -138,6 +138,51 @@ class SignatureExpressionSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("minhash_bands equals the xxhash64(concat_ws(slice)) band expression it replaced") {
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    import graft.functions.MinhashBands
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    def reference(bands: Int, r: Int) =
+      F.transform(F.sequence(F.lit(0), F.lit(bands - 1)),
+        b => F.xxhash64(F.concat_ws("_", F.slice(F.col("sig"), b * F.lit(r) + 1, F.lit(r)))))
+    val rnd = new scala.util.Random(17)
+    val edge = Seq(Long.MinValue, Long.MaxValue, 0L, -1L, 2147483646L)
+    // full, short and empty signatures; null elements; one null array
+    val sigs: Seq[Option[Seq[Option[Long]]]] = None +: (0 until 300).map { i =>
+      val len = i % 5 match { case 1 => 0; case 2 => rnd.nextInt(128); case _ => 128 }
+      Some(Seq.fill(len) {
+        if (i % 3 == 0 && rnd.nextInt(10) == 0) None
+        else Some(if (rnd.nextInt(8) == 0) edge(rnd.nextInt(edge.size)) else rnd.nextLong())
+      })
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_mhbands").toString + "/t"
+    sigs.zipWithIndex.map { case (s, i) => (i.toLong, s) }.toDF("id", "sig")
+      .write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    for ((bands, r) <- Seq((32, 4), (5, 3), (1, 128), (40, 4))) {
+      def hashes(c: org.apache.spark.sql.Column) = df.select(F.col("id"), c.as("h")).collect()
+        .map(row => row.getLong(0) -> row.getSeq[Long](1).toVector).toMap
+      val got = hashes(F.call_function("minhash_bands", F.col("sig"), F.lit(bands), F.lit(r)))
+      val want = hashes(reference(bands, r))
+      assert(got.size === sigs.size)
+      assert(got === want, s"bands=$bands r=$r")
+      // the interpreted path agrees with the codegen'd one
+      for (i <- Seq(0, 1, 2, 3, 6)) {
+        val elems = sigs(i).map(_.map(_.fold[Any](null)(x => x)).toArray)
+        val lit = Literal(elems.map(new GenericArrayData(_)).orNull,
+          ArrayType(LongType, containsNull = true))
+        val interpreted = MinhashBands(lit, bands, r).eval(null)
+          .asInstanceOf[GenericArrayData].toLongArray().toVector
+        assert(interpreted === want(i.toLong), s"interpreted, bands=$bands r=$r row $i")
+      }
+    }
+    // the band join's shape is unchanged: (pos, col) rows, `bands` per signature
+    assert(df.select(F.posexplode(F.call_function("minhash_bands", F.col("sig"),
+      F.lit(32), F.lit(4)))).count() === 32L * sigs.size)
+  }
+
   test("an int argument given as a long outside the int range fails loud, naming it") {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     val cases = Seq(

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.{functions => F}
 import graft.config.Cfg
-import graft.core.{GraftPlanError, StageContext}
+import graft.core.{GraftFs, GraftPlanError, StageContext}
 import graft.streaming._
 
 class StreamingSpec extends SparkSpec {
@@ -510,6 +510,122 @@ class StreamingSpec extends SparkSpec {
       s"two micro-batches issued ${jobs.get()} Spark jobs (> 20/batch) — " +
       "the streaming latency floor regressed (AQE on in the batch session, " +
       "or the deferred append is re-running the probe DAG)")
+  }
+
+  /** A minhash index of two docs plus a file.stream over `files` (one
+    * micro-batch per file, in order), ingested by stream.ingest into `out`
+    * with `extra` sink config; returns (index path, output path). */
+  private def ingestMinhash(prefix: String, files: Seq[Seq[(Long, String)]],
+      extra: (String, Any)*): (String, String) = {
+    import spark.implicits._
+    val idx = java.nio.file.Files.createTempDirectory(s"${prefix}_idx").toString
+    graft.operators.IndexBuildOp(StageContext.one(spark, Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "one two three four five six seven eight nine ten")).toDF("doc_id", "text"),
+      Cfg.of("type" -> "minhash", "path" -> idx, "id_column" -> "doc_id",
+        "text_column" -> "text", "num_hashes" -> 64, "bands" -> 16, "seed" -> 7)))
+    val streamDir = java.nio.file.Files.createTempDirectory(s"${prefix}_in").toString
+    files.zipWithIndex.foreach { case (rows, i) =>
+      if (i > 0) Thread.sleep(400) // distinct mtimes pin micro-batch order
+      rows.toDF("doc_id", "text").coalesce(1).write.mode("append").parquet(streamDir)
+    }
+    val stream = FileStreamSource(StageContext(spark, Seq.empty, Cfg.of(
+      "path" -> streamDir, "format" -> "parquet", "max_files_per_trigger" -> 1L)))
+    val out = java.nio.file.Files.createTempDirectory(s"${prefix}_out").toString + "/data"
+    StreamIngestSink(StageContext.one(spark, stream, Cfg.of(Seq[(String, Any)](
+      "path" -> out, "index_path" -> idx, "dedup" -> "minhash",
+      "trigger" -> "available_now", "id_column" -> "doc_id",
+      "text_column" -> "text", "threshold" -> 0.8) ++ extra: _*)))
+    (idx, out)
+  }
+
+  test("stream.ingest minhash: at most 5 Spark jobs per non-empty micro-batch") {
+    // the per-batch budget: the survivors write (its broadcast and probe
+    // jobs) and the index append's write. No emptiness/rows_in count, no
+    // schema inference for the corpus snapshot or the append's read-back.
+    import spark.implicits._
+    val perBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val described = "stream\\.ingest batch=(\\d+):.*".r
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .collect { case described(b) => b }
+          .foreach(b => perBatch.merge(b, 1, (x: Integer, y: Integer) => x + y))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (_, out) = try {
+      val r = ingestMinhash("graft_jobs_mh", Seq(
+        Seq((100L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+          (101L, "brand new streaming document with its own unique vocabulary choices")),
+        Seq((200L, "brand new streaming document with its own unique vocabulary choices"),
+          (201L, "another different novel text unlike anything else ingested before now")),
+        Seq((300L, "a third batch of words that nobody has ingested into this index"))))
+      Thread.sleep(1000) // listener bus drains asynchronously
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.read.parquet(out).select("doc_id").as[Long].collect().sorted.toSeq
+      === Seq(101L, 201L, 300L))
+    import scala.jdk.CollectionConverters._
+    val jobs = perBatch.asScala.map { case (b, n) => b.toInt -> n.intValue }.toMap
+    assert(jobs.keySet === Set(0, 1, 2), jobs.toString)
+    assert(jobs.values.forall(_ <= 5), s"Spark jobs per micro-batch: $jobs")
+  }
+
+  test("stream.ingest: a zero-row micro-batch writes no partition, no metrics, no append") {
+    // with AQE on in the micro-batch (batch_aqe) too: the rows_in count
+    // must read the same through an adaptive plan
+    for (aqe <- Seq(false, true)) {
+      val (idx, out) = ingestMinhash("graft_empty_mb", Seq(
+        Seq((100L, "brand new streaming document with its own unique vocabulary choices")),
+        Seq.empty,
+        Seq((300L, "another different novel text unlike anything else ingested before now"))),
+        "batch_aqe" -> aqe)
+      val parts = GraftFs.listDirNames(out).filter(_.startsWith("ingest_batch=")).toSet
+      assert(parts === Set("ingest_batch=0", "ingest_batch=2"), s"aqe=$aqe")
+      assert(GraftFs.listNames(s"$out/_metrics").filter(_.startsWith("batch-")).toSet ===
+        Set("batch-0.json", "batch-2.json"), s"aqe=$aqe")
+      // the corpus holds the build plus one append dir per non-empty batch
+      val appends = GraftFs.listDirNames(graft.operators.IndexSnapshot.corpusDir(idx))
+        .filter(_.startsWith("sb-")).map(_.split('-').last).toSet
+      assert(appends === Set("0", "2"), s"aqe=$aqe")
+      val stats = graft.operators.IngestStatsOp(StageContext.one(spark,
+        spark.read.parquet(out), Cfg.of("path" -> out))).head()
+      assert(stats.getAs[Long]("rows_in") === 2L, s"aqe=$aqe")
+      assert(stats.getAs[Long]("survivors") === 2L, s"aqe=$aqe")
+    }
+  }
+
+  test("stream.ingest dedup=embedding: every micro-batch's vectors are dim-checked") {
+    // the check used to run once, on a one-row sample of micro-batch 0;
+    // a later batch of the wrong dimension then probed with silently
+    // mismatched signatures
+    import spark.implicits._
+    def vec(n: Int, i: Int): Array[Float] = Array.tabulate(n)(j => if (j == i) 1f else 0f)
+    val idx = java.nio.file.Files.createTempDirectory("graft_emb_dim_idx").toString
+    graft.operators.IndexBuildOp(StageContext.one(spark,
+      Seq((1L, vec(4, 0)), (2L, vec(4, 1))).toDF("vec_id", "embedding"),
+      Cfg.of("type" -> "lsh", "blocking" -> "bands", "path" -> idx,
+        "vector_column" -> "embedding", "bands" -> 4, "band_planes" -> 4,
+        "seed" -> 11, "partition_dirs" -> 8)))
+    val streamDir = java.nio.file.Files.createTempDirectory("graft_emb_dim_in").toString
+    Seq((100L, vec(4, 2))).toDF("vec_id", "embedding")
+      .coalesce(1).write.mode("append").parquet(streamDir)
+    Thread.sleep(400)
+    Seq((200L, vec(3, 0)), (201L, vec(3, 1))).toDF("vec_id", "embedding")
+      .coalesce(1).write.mode("append").parquet(streamDir)
+    val stream = FileStreamSource(StageContext(spark, Seq.empty, Cfg.of(
+      "path" -> streamDir, "format" -> "parquet", "max_files_per_trigger" -> 1L)))
+    val out = java.nio.file.Files.createTempDirectory("graft_emb_dim_out").toString + "/data"
+    val e = intercept[Exception](StreamIngestSink(StageContext.one(spark, stream, Cfg.of(
+      "path" -> out, "index_path" -> idx, "dedup" -> "embedding",
+      "trigger" -> "available_now", "id_column" -> "vec_id",
+      "vector_column" -> "embedding", "threshold" -> 0.95))))
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("have length 3") && msgs.contains("dim = 4"), msgs)
+    // micro-batch 0 committed; micro-batch 1 wrote nothing
+    assert(GraftFs.listDirNames(out).filter(_.startsWith("ingest_batch=")) ===
+      Vector("ingest_batch=0"))
   }
 
   test("stream.ingest embedding: a restarted query resumes its checkpoint, not from scratch") {

@@ -5,9 +5,12 @@ Usage: python3 tools/plan_diff.py <dir>
 
 <dir> holds `<gate>_before.txt` / `<gate>_after.txt` pairs written by
 `graft.PlansDump`. Expression ids (`#123`), `plan_id=N`, `/tmp/...`
-paths and JVM lambda class names (`$$Lambda$6537/0x...@3d65`, printed
-for typed operators such as mapPartitions) change from run to run, so
-they are masked before the pair is compared. Every differing pair prints
+paths, JVM lambda class names (`$$Lambda$6537/0x...@3d65`, printed
+for typed operators such as mapPartitions) and the numbered variables of
+higher-order SQL functions (`lambda x_59L`) and RDD ids
+(`MapPartitionsRDD[1767]`), both numbered per session in creation order,
+change from run to run, so they are masked before the
+pair is compared. Every differing pair prints
 a unified diff of the masked text. Exits 1 if any pair differs or a dump
 has no partner, 0 otherwise.
 """
@@ -21,6 +24,8 @@ MASKS = [
     (re.compile(r"plan_id=\d+"), "plan_id=N"),
     (re.compile(r"/tmp/[^\s,\]\)]*"), "/tmp/..."),
     (re.compile(r"\$\$Lambda\S*"), "$$Lambda"),
+    (re.compile(r"\b(lambda \w+?)_\d+L?\b"), r"\1_N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
 ]
 
 
