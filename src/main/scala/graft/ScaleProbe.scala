@@ -120,7 +120,8 @@ object ScaleProbe {
       val hashed = d.select(F.col("doc_id").as("id"),
           Shingles.shingleHashes(F.col("text"), 3).as("shingles"))
         .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), 128, 42))
-      val pairs = LshVerify.verifiedPairs(hashed, 32, 4, 128, 0.8).count()
+      val pairs = LshVerify.verifiedPairs(hashed, hashed, "a", "b", self = true, 32, 4, 128, 0.8)
+        .count()
       report("dedup.minhash", n, mhSec, "survivors" -> mhKept, "verified_pairs" -> pairs)
 
       // dedup.embedding full pass + bucket-candidate evidence

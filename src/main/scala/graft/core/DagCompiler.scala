@@ -118,7 +118,7 @@ final class DagCompiler(registry: Registry) {
           else st.config
           runWithStrategy(pc, st.id, inputDfs.headOption.map(_._2),
             onSwallowedFailure = () => sinkFailed = true) {
-            stage(StageContext(spark, inputDfs, cfg, st.id))
+            RowGuard.raising(stage(StageContext(spark, inputDfs, cfg, st.id)))
           }
         }
         results(st.id) = plans(st.id)
@@ -189,8 +189,10 @@ final class DagCompiler(registry: Registry) {
           graft.config.Cfg(st.config.table + ("_explain_only" -> graft.config.CBool(true)))
         else st.config
         val t0 = System.nanoTime()
-        val df = stage(StageContext(spark, inputDfs, cfg, st.id,
-          deferToSuccess = defer, deferToCleanup = cleanup, claims = claims))
+        // a row-guard failure (RowGuard.failIf) of a job a stage runs, here
+        // or at a sink below, surfaces as the GraftConfigError it carries
+        val df = RowGuard.raising(stage(StageContext(spark, inputDfs, cfg, st.id,
+          deferToSuccess = defer, deferToCleanup = cleanup, claims = claims)))
         onStage(st.id, st.function, (System.nanoTime() - t0) / 1e9)
         if (outDegree(st.id) > 1 && !df.isStreaming && !explainOnly) {
           df.persist(StorageLevel.MEMORY_AND_DISK)

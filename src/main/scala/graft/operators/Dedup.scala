@@ -90,9 +90,10 @@ object Shingles {
   */
 object ExactCollapse {
   /** df must carry (idCol, keyCol). Returns (representatives, dropped ids
-    * as one column `id`). The collapsed frame is persisted: both outputs
-    * filter the same one-shuffle window pass, and without the persist each
-    * branch would re-execute the scan + key shuffle.
+    * as one column `id`, the (orig_id, rep_id) mapping of every row). The
+    * collapsed frame is persisted: all three outputs filter the same
+    * one-shuffle window pass, and without the persist each branch would
+    * re-execute the scan + key shuffle.
     *
     * `rank`: optional survivor key (smaller struct wins lexicographically,
     * see DedupRank) — the representative becomes the group's BEST member
@@ -100,7 +101,8 @@ object ExactCollapse {
     * best-vs-best. */
   def apply(df: DataFrame, idCol: String, keyCol: String,
             rank: Option[Column] = None,
-            release: (() => Unit) => Unit = StageContext.KeepPinned): (DataFrame, DataFrame) = {
+            release: (() => Unit) => Unit = StageContext.KeepPinned)
+      : (DataFrame, DataFrame, DataFrame) = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(keyCol)
     val withRep = rank match {
       case None => df.withColumn("_rep_id", F.min(idCol).over(w))
@@ -112,7 +114,7 @@ object ExactCollapse {
     val dups = persisted.filter(F.col(idCol) =!= F.col("_rep_id"))
       .select(F.col(idCol).alias("id"))
     val reps = persisted.filter(F.col(idCol) === F.col("_rep_id")).drop("_rep_id")
-    (reps, dups)
+    (reps, dups, persisted.select(F.col(idCol).alias("orig_id"), F.col("_rep_id").alias("rep_id")))
   }
 }
 
@@ -148,9 +150,8 @@ object DedupRank {
   *   survives unless it DIRECTLY matches a lower-id doc. The documented
   *   approximation: in a chain a~c, b~c with a≁b, both a and b survive.
   * - `transitive = true`: connected components over the verified pairs by
-  *   iterative min-label propagation (labels only decrease, so the sum is
-  *   a monotone convergence witness) — exactly one doc (the component's
-  *   min id) survives per near-dup cluster, the semantics large-scale
+  *   iterative min-label propagation until no label changes — exactly
+  *   one doc (the component's min id) survives per near-dup cluster, the semantics large-scale
   *   training-data dedup pipelines standardize on. Iterations ∝ component
   *   diameter (tiny for dup clusters); each is two keyed joins, fully
   *   distributed.
@@ -163,9 +164,8 @@ object DedupPairs {
   def dropped(pairs: DataFrame, transitive: Boolean, ranks: Option[DataFrame],
               release: (() => Unit) => Unit): DataFrame =
     (transitive, ranks) match {
-      case (true, None)     => transitiveDropped(pairs, release)
+      case (true, _)        => transitiveDropped(pairs, ranks, release)
       case (false, None)    => pairs.select(F.col("id_b").alias("id")).distinct()
-      case (true, Some(r))  => transitiveRankedDropped(pairs, r, release)
       case (false, Some(r)) =>
         pairs
           .join(r.select(F.col("id").alias("id_a"), F.col("__rank").alias("__ra")), Seq("id_a"))
@@ -175,19 +175,20 @@ object DedupPairs {
           .distinct()
     }
 
-  /** Connected components with ranked survivors: labels are the rank
-    * structs themselves (min propagates the component's best member);
-    * convergence by changed-row count — rank keys are not numeric, so
-    * the unranked path's monotone checksum does not apply. */
-  private def transitiveRankedDropped(pairs0: DataFrame, ranks: DataFrame,
+  /** Connected components by min-label propagation. Labels are rank
+    * structs (k, i): the `ranks` survivor keys, else (id, id) — so the
+    * component's best member, or its min id, propagates and survives.
+    * Labels only decrease; the loop stops when no label changed. */
+  private def transitiveDropped(pairs0: DataFrame, ranks: Option[DataFrame],
       release: (() => Unit) => Unit): DataFrame = {
     val pairs = StageContext.pinWith(release, pairs0.select("id_a", "id_b"))
     val edges = StageContext.pinWith(release, pairs.unionByName(
       pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))))
-    var labels = StageContext.pinWith(release, pairs.select(F.col("id_a").alias("id"))
+    val ids = pairs.select(F.col("id_a").alias("id"))
       .unionByName(pairs.select(F.col("id_b").alias("id"))).distinct()
-      .join(ranks, Seq("id"))
-      .select(F.col("id"), F.col("__rank").alias("label")))
+    val ranked = ranks.fold(DedupRank.ranks(ids, "id", F.col("id")))(ids.join(_, Seq("id")))
+    var labels = StageContext.pinWith(release,
+      ranked.select(F.col("id"), F.col("__rank").alias("label")))
     var iter = 0
     var done = labels.isEmpty
     while (!done && iter < 30) {
@@ -211,38 +212,6 @@ object DedupPairs {
       iter += 1
     }
     labels.filter(F.col("label").getField("i") =!= F.col("id")).select("id")
-  }
-
-  private def transitiveDropped(pairs0: DataFrame,
-      release: (() => Unit) => Unit): DataFrame = {
-    val pairs = StageContext.pinWith(release, pairs0.select("id_a", "id_b"))
-    val edges = StageContext.pinWith(release, pairs.unionByName(
-      pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))))
-    var labels = StageContext.pinWith(release, pairs.select(F.col("id_a").alias("id"))
-      .unionByName(pairs.select(F.col("id_b").alias("id"))).distinct()
-      .withColumn("label", F.col("id")))
-    def checksum(df: DataFrame): java.math.BigDecimal =
-      Option(df.agg(F.sum(F.col("label").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var sum = checksum(labels)
-    var iter = 0
-    var done = sum.signum() == 0 && labels.isEmpty
-    while (!done && iter < 30) {
-      val nbr = edges
-        .join(labels.select(F.col("id").alias("id_b"), F.col("label").alias("_nbl")), Seq("id_b"))
-        .groupBy("id_a").agg(F.min("_nbl").alias("_nbr"))
-        .withColumnRenamed("id_a", "id")
-      val next = StageContext.pinWith(release, labels.join(nbr, Seq("id"), "left")
-        .select(F.col("id"),
-          F.least(F.col("label"), F.coalesce(F.col("_nbr"), F.col("label"))).alias("label")))
-      val nextSum = checksum(next)
-      labels.unpersist(blocking = false)
-      labels = next
-      done = nextSum.compareTo(sum) == 0
-      sum = nextSum
-      iter += 1
-    }
-    labels.filter(F.col("id") =!= F.col("label")).select("id")
   }
 }
 
@@ -285,51 +254,32 @@ object LshVerify {
     F.aggregate(F.zip_with(a, b, (x, y) => F.when(x === y, 1).otherwise(0)),
       F.lit(0), (acc, v) => acc + v).cast("double") / k
 
-  /** sig + shingles re-attach and the agreement→exact-Jaccard verify
-    * ladder over narrow (idL, idR) candidates. One hash join per side
-    * attaches BOTH columns; the agreement prefilter and the exact verify
-    * land in one codegen'd conjunction (inner filter first — Catalyst's
-    * CombineFilters keeps the evaluation order, so jaccard_sim still only
-    * runs on prefilter survivors). */
-  private def verify(candidates: DataFrame, left: DataFrame, right: DataFrame,
-      lId: String, rId: String, k: Int, threshold: Double): DataFrame =
+  /** Verified near-dup pairs (id_<a>, id_<b>, jaccard) of two pre-hashed
+    * (id, shingles, sig) frames under one signature config: `self` pairs a
+    * frame with itself (id_a < id_b), else e.g. a new batch against the
+    * persisted corpus index. Candidate rows stay narrow (ids + band keys);
+    * sigs and shingles re-attach by id only for the surviving candidates,
+    * one hash join per side attaching BOTH columns, and the agreement
+    * prefilter and the exact verify land in one codegen'd conjunction
+    * (inner filter first — Catalyst's CombineFilters keeps the evaluation
+    * order, so jaccard_sim still only runs on prefilter survivors). */
+  def verifiedPairs(left: DataFrame, right: DataFrame, a: String, b: String, self: Boolean,
+      bands: Int, r: Int, k: Int, threshold: Double): DataFrame = {
+    val (idA, idB) = (s"id_$a", s"id_$b")
+    val joined = bandedKeys(left, bands, r, a)
+      .join(bandedKeys(right, bands, r, b), Seq("band_idx", "band_hash"))
+    val candidates = (if (self) joined.filter(F.col(idA) < F.col(idB)) else joined)
+      .select(idA, idB).dropDuplicates(idA, idB)
     candidates
-      .join(left.select(F.col("id").alias(lId), F.col("sig").alias("_sg_l"),
-        F.col("shingles").alias("sh_l")), lId)
-      .join(right.select(F.col("id").alias(rId), F.col("sig").alias("_sg_r"),
-        F.col("shingles").alias("sh_r")), rId)
+      .join(left.select(F.col("id").alias(idA), F.col("sig").alias("_sg_l"),
+        F.col("shingles").alias("sh_l")), idA)
+      .join(right.select(F.col("id").alias(idB), F.col("sig").alias("_sg_r"),
+        F.col("shingles").alias("sh_r")), idB)
       .filter(sigAgreement(F.col("_sg_l"), F.col("_sg_r"), k) >=
         math.max(0.0, threshold - PrefilterSlack))
       .withColumn("jaccard", F.call_function("jaccard_sim", F.col("sh_l"), F.col("sh_r")))
       .filter(F.col("jaccard") >= threshold)
-
-  /** input: (id, shingles, sig). Returns verified near-dup PAIRS
-    * (id_a < id_b); reduce with DedupPairs.dropped. */
-  def verifiedPairs(hashed: DataFrame, bands: Int, r: Int, k: Int, threshold: Double): DataFrame = {
-    val candidates = bandedKeys(hashed, bands, r, "a")
-      .join(bandedKeys(hashed, bands, r, "b"), Seq("band_idx", "band_hash"))
-      .filter(F.col("id_a") < F.col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
-    verify(candidates, hashed, hashed, "id_a", "id_b", k, threshold)
-      .select("id_a", "id_b")
-  }
-
-  /** Cross-frame variant: verified near-dup pairs BETWEEN two pre-hashed
-    * frames (both (id, shingles, sig) under the same signature config) —
-    * the index-probe shape: `left` = the new batch, `right` = the
-    * persisted corpus index. Same banding/prefilter/verify ladder as the
-    * self-join; candidate rows stay narrow (ids + sigs), shingles join
-    * back by id only for surviving candidates. Returns
-    * (id_l, id_r, jaccard). */
-  def verifiedCrossPairsScored(left: DataFrame, right: DataFrame,
-      bands: Int, r: Int, k: Int, threshold: Double): DataFrame = {
-    val candidates = bandedKeys(left, bands, r, "l")
-      .join(bandedKeys(right, bands, r, "r"), Seq("band_idx", "band_hash"))
-      .select("id_l", "id_r")
-      .dropDuplicates("id_l", "id_r")
-    verify(candidates, left, right, "id_l", "id_r", k, threshold)
-      .select("id_l", "id_r", "jaccard")
+      .select(idA, idB, "jaccard")
   }
 }
 
@@ -415,15 +365,9 @@ object DedupExactOp extends Stage {
     val keyed = batchDeduped.withColumn("_key", contentKey(cols))
     val result = keyed
       .join(index.select(F.col("key").alias("_key")), Seq("_key"), "left_anti")
-
-    if (cfg.boolOr("index_append", false)) {
-      IndexSnapshot.claimAppend(ctx, "dedup.exact", path)
-      if (!cfg.boolOr("_explain_only", false))
-        DeferredAppend(ctx, path, streamTag,
-          result.select(F.col("_key").alias("key")).distinct()) { rows =>
-          rows.withColumn("_key", contentKey(cols))
-            .select(F.col("_key").alias("key")).distinct()
-        }
+    DeferredAppend(ctx, name, path, streamTag)(
+      result.select(F.col("_key").alias("key")).distinct()) { rows =>
+      rows.withColumn("_key", contentKey(cols)).select(F.col("_key").alias("key")).distinct()
     }
     result.drop("_key")
   }
@@ -511,21 +455,6 @@ private[graft] object IndexSnapshot {
       .foreach(g => GraftFs.deleteRec(s"$root/$g"))
   }
 
-  /** One appender per index per pipeline run: each `index_append` stage
-    * snapshots the corpus file list at plan time and fires its append only
-    * after all sinks succeed, so two appenders in one pipeline would each
-    * miss the other's survivors and both append — duplicates would enter
-    * the index with no warning. Claimed at PLAN time so `explain` rejects
-    * the pipeline too. */
-  def claimAppend(ctx: graft.core.StageContext, op: String, path: String): Unit = {
-    val key = "index_append:" + GraftFs.qualified(path)
-    if (!ctx.claimOnce(key)) throw new GraftConfigError(
-      s"$op: two stages in one pipeline register index_append = true for the index at " +
-      s"$path — each snapshots the corpus before the other's deferred append fires, so " +
-      "neither batch dedups against the other's survivors and duplicates silently enter " +
-      "the index; run the batches as separate pipeline runs (one appender per index per run)")
-  }
-
   /** Append `df` to the corpus dir. Batch mode (no tag): a plain append
     * under the shared batch/maintenance lease — the success-deferral
     * already guarantees it fires at most once per run; the lease keeps it
@@ -563,39 +492,16 @@ private[graft] object IndexSnapshot {
   /** Write corpus rows. A partitioned corpus first co-locates each dir key
     * (one file per populated dir instead of input_partitions × dirs
     * droplets); `dynamic` overwrites only the dirs the rows land in. A row
-    * that trips a [[failIf]] guard fails the write with a GraftConfigError
-    * carrying the guard's message. */
+    * that trips a RowGuard.failIf guard fails the write with a
+    * GraftConfigError carrying the guard's message. */
   def write(df: DataFrame, dir: String, mode: String, partitionBy: Seq[String] = Nil,
       dynamic: Boolean = false): Unit = {
     val w =
       if (partitionBy.isEmpty) df.write
       else df.repartition(partitionBy.map(F.col): _*).write.partitionBy(partitionBy: _*)
-    raising((if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
+    RowGuard.raising((if (dynamic) w.option("partitionOverwriteMode", "dynamic") else w)
       .mode(mode).parquet(dir))
   }
-
-  /** `body`, with a job failed by a [[failIf]] guard rethrown as a
-    * GraftConfigError carrying the guard's message. */
-  def raising[T](body: => T): T =
-    try body
-    catch { case e: Exception =>
-      val raised = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collectFirst {
-        case t: org.apache.spark.SparkThrowable
-            if Option(t.getMessageParameters.get("errorMessage")).exists(_.startsWith(Raised)) =>
-          t.getMessageParameters.get("errorMessage").stripPrefix(Raised)
-      }
-      throw raised.map(new GraftConfigError(_)).getOrElse(e)
-    }
-
-  private val Raised = "GraftConfigError: "
-  /** `value`, except that a row where `bad` holds fails the job; [[raising]]
-    * turns that failure into a GraftConfigError carrying `msg`. */
-  def failIf(bad: Column, msg: String, value: Column): Column =
-    F.when(bad, F.raise_error(F.lit(Raised + msg))).otherwise(value)
-
-  /** [[failIf]] with a per-row message */
-  def failIf(bad: Column, msg: Column, value: Column): Column =
-    F.when(bad, F.raise_error(F.concat(F.lit(Raised), msg))).otherwise(value)
 
   /** Snapshot-read the corpus as parquet, treating a part-file-less dir as
     * an EMPTY index of `emptySchema` (index.build over empty input writes
@@ -803,13 +709,29 @@ private[graft] object ParquetSchema {
   * so derive(written rows) ≡ the plan-side index rows. It is also the
   * stronger consistency statement (the index grows by what the output
   * durably holds), and an all-duplicates batch (no partition written)
-  * appends nothing at zero jobs. */
+  * appends nothing at zero jobs.
+  *
+  * Only with `index_append = true`, and one appender per index per
+  * pipeline run: each appending stage snapshots the corpus file list at
+  * plan time and fires its append only after all sinks succeed, so two
+  * appenders in one pipeline would each miss the other's survivors and
+  * both append — duplicates would enter the index with no warning. The
+  * claim is made at PLAN time so `explain` rejects the pipeline too;
+  * explain then registers nothing (and skips `check`). */
 private[graft] object DeferredAppend {
-  def apply(ctx: graft.core.StageContext, path: String, streamTag: Option[String],
-      planSurvivors: => DataFrame, partitionBy: Seq[String] = Nil)
+  def apply(ctx: graft.core.StageContext, op: String, path: String, streamTag: Option[String],
+      partitionBy: Seq[String] = Nil, check: => Unit = ())(planSurvivors: => DataFrame)
       (derive: DataFrame => DataFrame): Unit = {
-    val readback = ctx.cfg.strOpt("_stream_readback_dir").filter(_ => streamTag.isDefined)
-    readback match {
+    val cfg = ctx.cfg
+    if (!cfg.boolOr("index_append", false)) return
+    if (!ctx.claimOnce("index_append:" + GraftFs.qualified(path))) throw new GraftConfigError(
+      s"$op: two stages in one pipeline register index_append = true for the index at " +
+      s"$path — each snapshots the corpus before the other's deferred append fires, so " +
+      "neither batch dedups against the other's survivors and duplicates silently enter " +
+      "the index; run the batches as separate pipeline runs (one appender per index per run)")
+    if (cfg.boolOr("_explain_only", false)) return
+    check
+    cfg.strOpt("_stream_readback_dir").filter(_ => streamTag.isDefined) match {
       case Some(rb) =>
         ctx.deferToSuccess { () =>
           if (GraftFs.isDir(rb) &&
@@ -956,151 +878,45 @@ object DedupEmbeddingOp extends Stage {
       F.lit(dim), F.lit(bands), F.lit(r), F.lit(seed), F.lit(ndExplode))
   }
 
-  def duplicateIds(ctx: StageContext): DataFrame = {
+  /** Self-dedup blocks on `blocking` (pigeonhole, bands or ivf cells),
+    * every vector checked against `dim`, else the first vector's length.
+    * `index_path` probes an `index.build type=lsh` corpus of either
+    * layout, every batch vector checked against the index dim; streaming
+    * (`_stream_batch_tag` set, bands layout only) excludes and overwrites
+    * the batch's own `ingest_tag=<tag>` dirs — idempotent, which is what
+    * makes dedup=embedding streamable. An append requires the batch to
+    * carry the index's row columns. */
+  def apply(ctx: StageContext): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(ctx.spark)
     val cfg = ctx.cfg
-    val id = cfg.str("id_column")
     val vecCol = cfg.str("vector_column")
     val threshold = cfg.doubleOr("threshold", 0.95)
-    val blocking = cfg.strOr("blocking", "pigeonhole")
-    val layout = blocking match {
-      case "ivf" => None
-      case b => Some(LshLayout.byName(b).getOrElse(throw new GraftConfigError(
-        s"dedup.embedding: blocking must be pigeonhole|bands|ivf, got '$b'")))
-    }
-    val dim = cfg.longOpt("dim").map(_.toInt).getOrElse(
-      LshIndex.firstDim(ctx.primary, F.col(vecCol)).getOrElse(0))   // empty corpus → no-op
-
-    val rankKey = DedupRank.keyFor(cfg, "id")
-    val base = Parallelize(ctx).select(
-      Seq(F.col(id).alias("id"), F.col(vecCol).alias("vec")) ++
-        cfg.strOpt("keep_by").map(F.col): _*)
-    val (reps, exactDups) = ExactCollapse(base, "id", "vec", rankKey, ctx.deferToCleanup)
-    val nearPairs = layout match {
-      case Some(l) =>
-        // bands is the 100 TB blocking (see ScaleProbe / BENCH_NOTES r6):
-        // pigeonhole candidates are N²/2^width with width CAPPED by the
-        // recall guarantee, so at corpus scale buckets go quadratic; banded
-        // LSH trades the guarantee for a free-width knob (random collisions
-        // 2^-r per band; pick band_planes ≈ log2 corpus size). Same loud
-        // parameter checks as index.build (e.g. a non-divisible width
-        // would silently ignore the trailing plane bits).
-        val p = LshIndex.configured(name, cfg, Defaults, l, dim)
-        selfNearPairs(l, p, ctx.pin(reps.withColumn("sig", l.signature(F.col("vec"), p))),
-          threshold)
-      case None =>
-        // SemDeDup-style cluster blocking (Abbas et al. 2023): candidates
-        // are same-cell pairs under a coarse quantizer — Σ n_c² over
-        // cells ≈ N²/nlist when balanced, so nlist is the corpus-scale
-        // knob the way band_planes is for bands. Near-dup pairs SPLIT by a
-        // cell boundary are missed by design (the documented recall trade
-        // of cluster blocking); nlist = 1 is the exhaustive setting — the
-        // dedup_embedding_ivf gate pins it against the full-corpus oracle.
-        // A null vector gets a null cell and no candidates.
-        val q = IvfIndex.blockingQuantizer(ctx, name, reps, F.col("vec"), 11L,
-          s"vectors in '$vecCol'", Some(dim).filter(_ > 0))
-        val cells = ctx.pin(reps.withColumn("cell", q.assign(ctx.spark, F.col("vec"))))
-        verifyCosine(IvfIndex.cellPairs(cells, cells, "id", "a", "b", self = true),
-          cells.select(F.col("id"), F.col("vec")), threshold)
-    }
-    exactDups.unionByName(DedupPairs.dropped(nearPairs,
-      cfg.boolOr("transitive", false),
-      rankKey.map(DedupRank.ranks(base, "id", _)), ctx.deferToCleanup)).distinct()
+    NearDup.dedup(ctx, name, "vec", vecCol, selfBlocking(ctx, vecCol, threshold), { path =>
+      val vectors = s"batch vectors in '$vecCol'"
+      new LshProbe(LshIndex.open(ctx, name, path, Defaults, vectors, None), threshold, vectors,
+        ctx.primary.schema(cfg.str("id_column")), ctx.primary.schema(vecCol))
+    })
   }
 
-  /** blocked self-join over (id, vec, sig) reps → verified cosine pairs
-    * (id_a < id_b). Candidate pairs stay NARROW (ids + signatures, no
-    * vectors): the bucket self-join and pair dedup shuffle a few bytes per
-    * row instead of two full embedding payloads; vectors re-attach only to
-    * surviving candidates — an equi-join on id that AQE turns into a
-    * broadcast when the corpus is small and a plain hash join keyed on id
-    * when it isn't (never force-broadcast the corpus: at 100 TB the
-    * candidate list is the small side). */
-  private def selfNearPairs(l: LshLayout, p: SigParams, sigs: DataFrame,
-      threshold: Double): DataFrame =
-    verifyCosine(LshIndex.candidates(l, p, sigs, sigs, "id", "a", "b", threshold, self = true),
-      sigs.select(F.col("id"), F.col("vec")), threshold)
-
-  /** exact-cosine verify of narrow (id_a, id_b) candidates: vectors
-    * re-attach by id only for surviving candidates (AQE broadcasts the
-    * candidate list when small; never force-broadcast the corpus). */
-  private def verifyCosine(candidates: DataFrame, vecs: DataFrame,
-      threshold: Double): DataFrame =
-    candidates
-      .join(vecs.withColumnRenamed("id", "id_a").withColumnRenamed("vec", "v_a"), Seq("id_a"))
-      .join(vecs.withColumnRenamed("id", "id_b").withColumnRenamed("vec", "v_b"), Seq("id_b"))
-      .withColumn("cos", cosine(F.col("v_a").cast("array<double>"), F.col("v_b").cast("array<double>")))
-      .filter(F.col("cos") >= threshold)
-      .select("id_a", "id_b")
-
-  /** `index_path` — dedup THIS batch against an `index.build type=lsh`
-    * corpus of either layout (plus within-batch pairs): the embedding
-    * sibling of dedup.minhash index_path. The batch's keys join ONLY the
-    * colliding index partitions (LshIndex.crossPairs), the layout's
-    * prefilter prunes on narrow signatures, and exact cosine verifies the
-    * survivors. Same snapshot / meta-validation / success-deferred
-    * `index_append` / explain-placeholder contract as the text families;
-    * keep_by and transitive=true are rejected (index wins, pairwise only).
-    * Appending requires the batch to carry the index's row columns.
-    * Streaming (`_stream_batch_tag` set, bands layout only): the snapshot
-    * excludes this batch's own `ingest_tag=<tag>` dirs (retry self-match
-    * exclusion) and the append dynamically overwrites exactly those dirs —
-    * idempotent, which is what makes dedup=embedding streamable. */
-  private def incrementalDuplicateIds(ctx: StageContext, path: String): DataFrame = {
+  /** bands is the 100 TB blocking (see ScaleProbe / BENCH_NOTES r6):
+    * pigeonhole candidates are N²/2^width with width CAPPED by the recall
+    * guarantee, so at corpus scale buckets go quadratic; banded LSH trades
+    * the guarantee for a free-width knob (random collisions 2^-r per band;
+    * pick band_planes ≈ log2 corpus size). ivf is SemDeDup-style cluster
+    * blocking (Abbas et al. 2023): candidates are same-cell pairs under a
+    * coarse quantizer trained on the representatives — Σ n_c² over cells ≈
+    * N²/nlist when balanced, so nlist is the corpus-scale knob; near-dup
+    * pairs SPLIT by a cell boundary are missed by design, and nlist = 1 is
+    * the exhaustive setting the dedup_embedding_ivf gate pins. */
+  private def selfBlocking(ctx: StageContext, vecCol: String, threshold: Double): Blocking = {
     val cfg = ctx.cfg
-    val id = cfg.str("id_column")
-    val vecCol = cfg.str("vector_column")
-    val threshold = cfg.doubleOr("threshold", 0.95)
-    if (cfg.has("keep_by") || cfg.boolOr("transitive", false))
-      throw new GraftConfigError(
-        "dedup.embedding: keep_by / transitive=true are not supported with index_path " +
-        "(the index is immutable — only the pairwise min-id policy is well-defined)")
-    // set by stream.ingest, which admits only a layout with a tag level
-    val streamTag = cfg.strOpt("_stream_batch_tag")
-    val vectors = s"batch vectors in '$vecCol'"
-    // a batch probe checks one sampled row's length up front (one job); a
-    // micro-batch checks EVERY row inside its signature projection instead
-    // (no job per micro-batch)
-    val index = LshIndex.open(ctx, name, path, Defaults, vectors,
-      if (streamTag.isDefined) None else LshIndex.firstDim(ctx.primary, F.col(vecCol)))
-
-    val base = Parallelize(ctx).select(F.col(id).alias("id"), F.col(vecCol).alias("vec"))
-    val (reps, exactDups) = ExactCollapse(base, "id", "vec", None, ctx.deferToCleanup)
-    val sig = index.signature(F.col("vec"))
-    val sigs = ctx.pin(reps.withColumn("sig",
-      if (streamTag.isDefined) index.dimChecked(F.col("vec"), vectors, sig) else sig))
-    val corpus = index.corpus(ctx.primary.schema(id), ctx.primary.schema(vecCol), streamTag)
-    val vsIndex = LshIndex.crossPairs(index, sigs, corpus, id, vecCol, threshold)
-      .select(F.col("id_l").alias("id")).distinct()
-    val inBatch = DedupPairs.dropped(selfNearPairs(index.layout, index.params, sigs, threshold),
-      transitive = false, None, ctx.deferToCleanup)
-    val dropped = exactDups.unionByName(vsIndex).unionByName(inBatch).distinct()
-
-    if (cfg.boolOr("index_append", false)) {
-      IndexSnapshot.claimAppend(ctx, name, path)
-      if (!cfg.boolOr("_explain_only", false)) {
-        val idxCols = corpus.columns.filterNot(index.layout.corpusCols.contains).toVector
-        if (idxCols.sorted != ctx.primary.columns.toVector.sorted) throw new GraftConfigError(
-          s"dedup.embedding index_append: batch columns (${ctx.primary.columns.mkString(", ")}) " +
-          s"must match the index row columns (${idxCols.mkString(", ")})")
-        def rows(df: DataFrame) = LshIndex.corpusRows(index.layout, index.params, df, vecCol,
-          s"$name index_append", streamTag.getOrElse("base"))
-        // survivors join the index only once the pipeline durably wrote
-        // its outputs — a failed run must not grow the index
-        DeferredAppend(ctx, path, streamTag,
-          rows(ctx.primary.join(dropped, ctx.primary(id) === dropped("id"), "left_anti")),
-          index.layout.partitionCols)(rows)
-      }
-    }
-    dropped
-  }
-
-  def apply(ctx: StageContext): DataFrame = {
-    val id = ctx.cfg.str("id_column")
-    val dups = ctx.cfg.strOpt("index_path") match {
-      case Some(path) => incrementalDuplicateIds(ctx, path)
-      case None       => duplicateIds(ctx)
-    }
-    ctx.primary.join(dups, ctx.primary(id) === dups("id"), "left_anti")
+    // an empty corpus has no first vector and nothing to pair
+    val dim = cfg.longOpt("dim").map(_.toInt).getOrElse(
+      LshIndex.firstDim(ctx.primary, F.col(vecCol)).getOrElse(0))
+    val guard = LshIndex.dimGuard(F.col("vec"), dim, s"$name: vectors in '$vecCol' have length ",
+      if (cfg.has("dim")) s" but dim = $dim is configured" else s" but the first has length $dim")
+    VectorBlocking.configured(name, cfg, Defaults, dim, threshold, guard)(reps =>
+      IvfIndex.blockingQuantizer(ctx, name, reps, guard(F.col("vec")), 11L,
+        s"vectors in '$vecCol'", Some(dim).filter(_ > 0)).assign(ctx.spark, F.col("vec")))
   }
 }

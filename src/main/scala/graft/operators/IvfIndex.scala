@@ -206,9 +206,9 @@ private[graft] object IvfIndex {
         layout.problem(cfg, q.dim).foreach(m => throw new GraftConfigError(s"$op: $m"))
         (op, q, layout.codebooks(sample, q.centroids, cfg, seed), vecCol)
       }
-    val guard = (assigned: Column) => IndexSnapshot.failIf(F.col(vecCol).isNull,
-      s"$what: null vector in column '$vecCol' — an ivf index has no cell for it; drop or " +
-      "fill the null rows first", assigned)
+    val guard = (assigned: Column) => RowGuard.failIf(F.col(vecCol).isNull,
+      F.lit(s"$what: null vector in column '$vecCol' — an ivf index has no cell for it; drop " +
+      "or fill the null rows first"), assigned)
     IndexSnapshot.write(layout.corpusRows(spark, ctx.primary, F.col(vecCol), q, books, guard),
       IndexSnapshot.corpusDir(path), mode, layout.partitionCols)
     if (mode == "overwrite") {

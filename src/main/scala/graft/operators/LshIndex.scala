@@ -21,18 +21,17 @@ private[graft] object LshIndex {
   /** An lsh index opened for probing: the catalog's [[IndexCatalog.Opened]]
     * of an lsh layout, with the layout's corpus schema and signature. */
   final class Opened private[LshIndex] (idx: IndexCatalog.Opened[LshLayout]) {
+    def op: String = idx.op
     def layout: LshLayout = idx.kind
     def params: SigParams = idx.params
     def signature(vec: Column, ndExplode: Boolean = false): Column =
       layout.signature(vec, params, ndExplode)
 
-    /** `value`, failing the job on a row whose non-null `vec` is not of the
-      * index dim — the per-row form of [[open]]'s one-row check, riding a
-      * projection the caller already runs (no job of its own). */
-    def dimChecked(vec: Column, vectors: String, value: Column): Column = {
+    /** [[LshIndex.dimGuard]] against the index dim — the per-row form of
+      * [[open]]'s one-row check; the error names `vec` `vectors`. */
+    def dimGuard(vec: Column, vectors: String): Column => Column = {
       val (before, after) = dimMessage(idx.op, vectors, idx.path, layout.dim(params))
-      IndexSnapshot.failIf(vec.isNotNull && F.size(vec) =!= layout.dim(params),
-        F.concat(F.lit(before), F.size(vec).cast("string"), F.lit(after)), value)
+      LshIndex.dimGuard(vec, layout.dim(params), before, after)
     }
 
     /** SNAPSHOT of the corpus file list (see IndexSnapshot), partition
@@ -71,7 +70,7 @@ private[graft] object LshIndex {
     * index fails loud too — mixed signatures would silently miss every
     * cross match. The dim check is skipped under explain (no upstream
     * jobs); a caller passing no `batchDim` checks rows itself
-    * ([[Opened.dimChecked]]). */
+    * ([[Opened.dimGuard]]). */
   def open(ctx: StageContext, op: String, path: String, d: LshDefaults, vectors: String,
       batchDim: => Option[Int]): Opened = {
     GraftFunctions.ensureRegistered(ctx.spark)
@@ -95,6 +94,14 @@ private[graft] object LshIndex {
   private def dimMessage(op: String, vectors: String, path: String, dim: Int): (String, String) =
     (s"$op: $vectors have length ",
       s" but the index at $path was built with dim = $dim — signatures would silently mismatch")
+
+  /** Wraps a value computed from `vec` so that a row whose non-null `vec`
+    * is not `dim` long fails the job with `before` <its length> `after`
+    * (RowGuard.failIf): every row checked inside a projection the caller
+    * already runs, no job of its own. */
+  def dimGuard(vec: Column, dim: Int, before: String, after: String): Column => Column =
+    RowGuard.failIf(vec.isNotNull && F.size(vec) =!= dim,
+      F.concat(F.lit(before), F.size(vec).cast("string"), F.lit(after)), _)
 
   /** Length of the first non-null vector of `vec` — one single-row job. */
   def firstDim(df: DataFrame, vec: Column): Option[Int] =
@@ -176,9 +183,9 @@ private[graft] object LshIndex {
     * between it and the explode. */
   def corpusRows(l: LshLayout, p: SigParams, rows: DataFrame, vecCol: String, op: String,
       tag: String): DataFrame = {
-    val sig = IndexSnapshot.failIf(F.col(vecCol).isNull,
-      s"$op: null vector in column '$vecCol' — an lsh index has no key for it; drop or " +
-      "fill the null rows first", l.signature(F.col(vecCol), p, ndExplode = true))
+    val sig = RowGuard.failIf(F.col(vecCol).isNull,
+      F.lit(s"$op: null vector in column '$vecCol' — an lsh index has no key for it; drop " +
+      "or fill the null rows first"), l.signature(F.col(vecCol), p, ndExplode = true))
     val keyedRows = probeKeys(l, p, rows.withColumn("_sig", sig), F.col("_sig"),
       Seq(F.col("*"))).drop("_sig")
     l.tagCol.fold(keyedRows)(keyedRows.withColumn(_, F.lit(tag)))

@@ -188,14 +188,7 @@ object KnnJoinOp extends Stage {
           case other => throw new GraftConfigError(
             s"knn.join: broadcast must be queries|none, got '$other'")
         }
-        (cSide.crossJoin(qHinted)
-          .select(F.col("query_id"), F.col("corpus_id"),
-            F.round(F.call_function("cosine_sim", F.col("_qv"), F.col("_cv")), 6)
-              .alias("cosine"))
-          // NaN excluded (see the index branch): a zero-norm vector's
-          // cosine is 0/0 and the heap/window orderings disagree on NaN
-          .filter(F.col("cosine").isNotNull && !F.isnan(F.col("cosine"))),
-         corpus.schema(cId).dataType)
+        (scored(cSide.crossJoin(qHinted)), corpus.schema(cId).dataType)
     }
 
     val outSchema = StructType(Seq(

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, functions => F}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
-import graft.config.Cfg
+import graft.config.{Cfg, GraftConfigError}
 import graft.core.{DriverParquet, StageContext}
 
 /** One signature parameter of an index: its config key, its default,
@@ -28,10 +28,10 @@ private[graft] final case class SigParams(values: Seq[(SigParam, Long)]) {
 
 /** Everything that differs between the text near-dup families: featurizer
   * and signature ((id, _txt) rows → corpus rows), corpus schema, self-pairs
-  * (id_a < id_b) and cross-pairs (the batch `id`s that near-match the
-  * index), signature parameters and `meta/` layout. [[TextSigDedup]] runs
-  * every mode from this value alone; this module is the only code that
-  * knows the text-index meta format. */
+  * (id_a < id_b) and scored cross-pairs, signature parameters and `meta/`
+  * layout. [[NearDup]] runs every mode from this value alone (through
+  * [[TextBlocking]]); this module is the only code that knows the
+  * text-index meta format. */
 private[graft] sealed abstract class TextSigFamily(val name: String) extends IndexKind {
   /** signature parameters, in `meta/` column order */
   def params: Seq[SigParam]
@@ -42,18 +42,49 @@ private[graft] sealed abstract class TextSigFamily(val name: String) extends Ind
   def partitionCols: Seq[String] = Nil
   override def recorded(meta: Row): SigParams = fromMeta(meta)
   def family: IndexCatalog.Expected[IndexKind] = IndexCatalog.Text(this)
+  /** `index.build type=<family>` — hash every document once (the
+    * CPU-heavy step) into the narrow corpus rows under `corpus/`, with the
+    * signature parameters under `meta/` so probes regenerate identical
+    * signatures. Indexes ALL input rows: a future batch must match
+    * documents that were themselves duplicates, exactly as a full-corpus
+    * pairwise pass would. LSH bands derive from the signature at probe
+    * time instead of being stored ×bands. mode=append must extend the
+    * EXISTING signature space: the catalog rejects another kind's index,
+    * and other parameters fail loud here, before anything is written. */
   def build(ctx: StageContext, op: String, path: String, mode: String,
-      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit =
-    TextSigDedup.build(ctx, this, op, path, mode, existing)
+      existing: Option[IndexCatalog.Opened[IndexKind]]): Unit = {
+    val cfg = ctx.cfg
+    val p = configured(op, cfg)
+    existing.foreach(_.requireParams(p))
+    signatures(Parallelize(ctx).select(F.col(cfg.strOr("id_column", "doc_id")).alias("id"),
+      F.col(cfg.strOr("text_column", "text")).alias("_txt")), p)
+      .write.mode(mode).parquet(IndexSnapshot.corpusDir(path))
+    // one-row table the driver already holds — write it driver-side
+    // (DriverParquet) instead of scheduling a Spark job for it
+    DriverParquet.overwrite(s"$path/meta", metaCols(p))
+  }
   def metaCols(p: SigParams): Seq[DriverParquet.Col] = p.values.map { case (q, v) => q.metaCol(v) }
   def fromConfig(cfg: Cfg): SigParams = SigParams(params.map(q => q -> q.of(cfg)))
   def fromMeta(meta: Row): SigParams = SigParams(params.map(q => q -> q.fromMeta(meta)))
   /** a parameter combination the signature cannot honour */
   def problem(p: SigParams): Option[String] = None
+  /** the configured parameters, checked; a problem fails `op` */
+  def configured(op: String, cfg: Cfg): SigParams = {
+    val p = fromConfig(cfg)
+    problem(p).foreach(m => throw new GraftConfigError(s"$op: $m"))
+    p
+  }
   def corpusSchema(idType: DataType): StructType
   def signatures(rows: DataFrame, p: SigParams): DataFrame
-  def selfPairs(sigs: DataFrame, p: SigParams, cfg: Cfg): DataFrame
-  def crossDropped(batch: DataFrame, index: DataFrame, p: SigParams, cfg: Cfg): DataFrame
+  /** the score column of [[pairs]] */
+  def score: String
+  /** verified (id_<a>, id_<b>, score) pairs of signature rows `left` and
+    * `right`; `self` pairs a frame with itself, keeping id_a < id_b */
+  def pairs(left: DataFrame, right: DataFrame, a: String, b: String, self: Boolean,
+      p: SigParams, cfg: Cfg): DataFrame
+  /** the `batch` ids that near-match the `index` rows */
+  def crossDropped(batch: DataFrame, index: DataFrame, p: SigParams, cfg: Cfg): DataFrame =
+    pairs(batch, index, "l", "r", self = false, p, cfg).select(F.col("id_l").alias("id"))
 }
 
 /** Shingle-set families: a minhash signature over distinct shingle
@@ -74,16 +105,11 @@ private[graft] final class ShingleFamily(name: String, val params: Seq[SigParam]
   def signatures(rows: DataFrame, p: SigParams): DataFrame =
     rows.select(F.col("id"), shingles(F.col("_txt"), p).alias("shingles"))
       .withColumn("sig", Shingles.minhashSignature(F.col("shingles"), width(p), p(seed)))
-  def selfPairs(sigs: DataFrame, p: SigParams, cfg: Cfg): DataFrame = {
+  val score = "jaccard"
+  def pairs(left: DataFrame, right: DataFrame, a: String, b: String, self: Boolean,
+      p: SigParams, cfg: Cfg): DataFrame = {
     val (bands, r) = bandShape(p)
-    LshVerify.verifiedPairs(sigs, bands, r, width(p), t(cfg))
-  }
-  def crossDropped(batch: DataFrame, index: DataFrame, p: SigParams, cfg: Cfg): DataFrame =
-    crossPairsScored(batch, index, p, cfg).select(F.col("id_l").alias("id"))
-  /** (id_l, id_r, jaccard) — the join.similar index-probe shape */
-  def crossPairsScored(batch: DataFrame, index: DataFrame, p: SigParams, cfg: Cfg): DataFrame = {
-    val (bands, r) = bandShape(p)
-    LshVerify.verifiedCrossPairsScored(batch, index, bands, r, width(p), t(cfg))
+    LshVerify.verifiedPairs(left, right, a, b, self, bands, r, width(p), t(cfg))
   }
 }
 
@@ -167,20 +193,22 @@ private[graft] object TextSigFamily {
         }: _*)))
         .withColumnRenamed("pos", "block_idx").withColumnRenamed("col", "block_val")
     }
-    def selfPairs(sigs: DataFrame, p: SigParams, cfg: Cfg): DataFrame = {
-      val d = maxDist(cfg)
-      blockedSigs(sigs, d, "a").join(blockedSigs(sigs, d, "b"), Seq("block_idx", "block_val"))
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates("id_a", "id_b")
-        .filter(F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))) <= d)
-        .select("id_a", "id_b")
+    val score = "hamming"
+    def pairs(left: DataFrame, right: DataFrame, a: String, b: String, self: Boolean,
+        p: SigParams, cfg: Cfg): DataFrame = {
+      val (d, idA, idB) = (maxDist(cfg), s"id_$a", s"id_$b")
+      val joined = blockedSigs(left, d, a)
+        .join(blockedSigs(right, d, b), Seq("block_idx", "block_val"))
+      // a cross pair found in several blocks repeats; crossDropped's
+      // distinct absorbs it
+      val blocked =
+        if (self) joined.filter(F.col(idA) < F.col(idB)).dropDuplicates(idA, idB) else joined
+      blocked.withColumn(score, F.bit_count(F.col(s"sig_$a").bitwiseXOR(F.col(s"sig_$b"))))
+        .filter(F.col(score) <= d).select(idA, idB, score)
     }
-    def crossDropped(batch: DataFrame, index: DataFrame, p: SigParams, cfg: Cfg): DataFrame = {
-      val d = maxDist(cfg)
-      blockedSigs(batch, d, "l").join(blockedSigs(index, d, "r"), Seq("block_idx", "block_val"))
-        .filter(F.bit_count(F.col("sig_l").bitwiseXOR(F.col("sig_r"))) <= d)
-        .select(F.col("id_l").alias("id")).distinct()
-    }
+    override def crossDropped(batch: DataFrame, index: DataFrame, p: SigParams,
+        cfg: Cfg): DataFrame =
+      super.crossDropped(batch, index, p, cfg).distinct()
   }
 
   val all: Seq[TextSigFamily] = Seq(MinHash, Ngram, SimHash)

@@ -31,7 +31,7 @@ import graft.core._
   * planes and dir keys (LshLayout).
   *
   * `type = "minhash" | "ngram" | "simhash"` — the flat text-signature
-  * corpus of that dedup family, built by the shared TextSigDedup.build.
+  * corpus of that dedup family, built by the shared TextSigFamily.build.
   *
   * `type = "exact"` — the exact-dedup key set of ExactIndex.
   *

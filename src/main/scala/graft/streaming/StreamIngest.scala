@@ -764,7 +764,7 @@ object StreamIngestSink extends Stage {
           // partition dir) and stops: no index append, no metrics file.
           // No emptiness job runs first — the write reads every pinned row,
           // which is what counts them.
-          described("survivors write")(IndexSnapshot.raising(
+          described("survivors write")(RowGuard.raising(
             survivors.withColumn("ingest_batch", F.lit(batchId))
               .write.mode("overwrite")
               .option("partitionOverwriteMode", "dynamic")

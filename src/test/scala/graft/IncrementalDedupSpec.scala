@@ -212,8 +212,9 @@ class IncrementalDedupSpec extends SparkSpec {
     // hyperplaneSig truncates at min(dim, len): a 3-dim batch vs the 4-dim
     // index would silently sign over a prefix and miss cross matches
     val short = Seq((10L, Array(1f, 0f, 0f))).toDF("vec_id", "embedding")
-    val e = intercept[GraftConfigError](DedupEmbeddingOp(StageContext.one(spark, short,
-      Cfg.of("id_column" -> "vec_id", "vector_column" -> "embedding", "index_path" -> idx))))
+    val e = intercept[GraftConfigError](graft.core.RowGuard.raising(
+      DedupEmbeddingOp(StageContext.one(spark, short, Cfg.of("id_column" -> "vec_id",
+        "vector_column" -> "embedding", "index_path" -> idx))).collect()))
     assert(e.getMessage.contains("dim"))
   }
 

@@ -50,7 +50,9 @@ class LshLayoutSpec extends SparkSpec {
     "knn.lsh" -> ((i, b, e) => run("query_id" -> 100, "k" -> 3)(i, b, e)(KnnLshOp(_))))
 
   private def rejects(what: String)(body: => DataFrame): String =
-    withClue(s"$what: ")(intercept[GraftConfigError] { body.collect() }.getMessage)
+    withClue(s"$what: ")(intercept[GraftConfigError] {
+      graft.core.RowGuard.raising(body.collect())
+    }.getMessage)
 
   test("every consumer rejects batch vectors whose length differs from the index dim") {
     for ((layout, _) <- layouts; idx = lshIndex(layout); dim <- Seq(8, 2);
