@@ -81,7 +81,7 @@ object Docs {
     "knn.lsh" -> "ANN via hyperplane-LSH block buckets - query_id, k, num_planes, blocks; index_path probes a prebuilt lsh index (partition-pruned; probe_bands=j bounds a bands-layout scan)",
     "knn.ivf" -> "ANN via IVF coarse quantizer - query_id, k, nprobe; index_path probes a prebuilt index (an ivfpq index is auto-detected: ADC scoring over the m-byte code columns, then the top rerank*k candidates rerank exactly; rerank=0 returns raw ADC scores), else nlist/seed/max_train train inline",
     "index.build" -> "persist a similarity index - path, type=ivf (cell-partitioned corpus + centroids; nlist, max_train) | ivfpq (ivf layout + m-byte product-quantization codes and exact norms beside the vectors; m, ksub<=256 — knn.ivf probes read only the code columns and rerank exactly) | lsh ((block,bucket)-partitioned tables; num_planes, blocks; blocking=bands = banded layout (bands, band_planes) partitioned (band, pband, ingest_tag) — the corpus-scale blocking composed with the incremental path, and the layout stream.ingest dedup=embedding requires) | minhash (text-dedup signature corpus for dedup.minhash index_path; id_column, text_column, shingle_size, num_hashes, bands) | ngram (char-gram signature corpus for dedup.ngram index_path; ngram_size, bands, rows_per_band) | simhash (64-bit sigs for dedup.simhash index_path) | exact (md5 content-key set for dedup.exact index_path; columns), vector_column, seed, mode=overwrite|append (ivf append = frozen-quantizer assignment to the existing centroids — never retrains)",
-    "index.compact" -> "rewrite a fragmented index corpus into right-sized files (crash-safe swap, rows byte-identical, meta untouched; bands layout folds ingest tags to base) - path, target_file_mb=128, compact_if={mean_file_kb_below,files_above,appends_since_compact_above} (policy gate: compact only when fragmented), layout=auto|swap|generations (generations = corpus-NNNNNN dirs committed via a corpus.ptr pointer PUT — the object-store path, auto-selected on stores without atomic rename); run quiesced (no concurrent appender/probe/recovering stream)",
+    "index.compact" -> "rewrite a fragmented index corpus into right-sized files (a corpus-NNNNNN generation committed by one corpus.ptr pointer write, crash-safe on every store; rows byte-identical, meta untouched; bands layout folds ingest tags to base) - path, target_file_mb=128, compact_if={mean_file_kb_below,files_above,appends_since_compact_above} (policy gate: compact only when fragmented); run quiesced (no concurrent appender/probe/recovering stream)",
     "index.stats" -> "one-row index fragmentation report (index_type, rows, files, bytes, mean_file_kb, stream_append_dirs, partition_dirs, appends_since_compact, lease_holder, lease_age_ms) - path; the read-only companion of index.compact; lease columns show a live writer holding the index (null when free)",
     "ingest.compact" -> "fold a stream.ingest OUTPUT's per-micro-batch ingest_batch partitions into one compacted region (ingest_batch=-1) - path, checkpoint, watermark, target_file_mb=128, force, compact_if={mean_file_kb_below,files_above,batch_dirs_above} (policy gate); folds only checkpoint-committed batches (replay-race-safe), crash-safe manifest swap",
     "ingest.stats" -> "one-row stream.ingest output health report (batch_dirs, committed, uncommitted, compacted, files, bytes, mean_file_kb) - path, checkpoint; the read-only companion of ingest.compact",

@@ -19,11 +19,10 @@ import org.apache.spark.sql.SparkSession
   * the seam's point is that cluster stores resolve at all.
   *
   * RENAME SEMANTICS — the load-bearing design point. The two crash-swap
-  * protocols (IndexMaintenance's corpus-generation swap, and the
-  * hold-aside/install moves of IngestMaintenance's manifest protocol)
-  * assume a directory rename is ATOMIC and O(1): a crashed move leaves the
-  * directory wholly at the source or wholly at the destination, never a
-  * partial copy. That holds on file:, hdfs:, viewfs: and the rename-capable
+  * protocols (the hold-aside/install moves of IngestMaintenance's manifest
+  * protocol, and kafka.compact's per-partition swap) assume a directory
+  * rename is ATOMIC and O(1): a crashed move leaves the directory wholly
+  * at the source or wholly at the destination, never a partial copy. That holds on file:, hdfs:, viewfs: and the rename-capable
   * Azure stores — but NOT on S3-style object stores, where "rename" is an
   * object-by-object copy + delete: a crash mid-move leaves BOTH a partial
   * destination and a partial source, states the repair logic would
@@ -145,7 +144,7 @@ object GraftFs {
     * inside the race window and Hadoop nested the move — undo it and
     * report the lost race. The undo test is sound because every caller
     * moves a tree that never contains a child named after itself
-    * (corpus.compact.tmp/.old, partition=N, ingest_batch=N hold names). */
+    * (partition=N, ingest_batch=N hold names). */
   def rename(src: String, dst: String): Boolean = {
     val sp = path(src)
     val dp = path(dst)
@@ -198,10 +197,9 @@ object GraftFs {
       throw new GraftPlanError(
         s"$op: the store at '$s' (scheme '$scheme') has no atomic directory rename — " +
         "the crash-safe swap protocol cannot commit there (a crashed copy-based " +
-        "rename leaves partial generations the repair would misread). Keep index " +
-        "roots on file:/hdfs:/abfs:-class storage, or distcp a compacted index in " +
-        "as a whole generation; see docs/DESIGN_NOTES.md 'Object-store commit " +
-        "semantics'")
+        "rename leaves partial generations the repair would misread). Keep ingest " +
+        "output and kafka log roots on file:/hdfs:/abfs:-class storage; see " +
+        "docs/DESIGN_NOTES.md 'Object-store commit semantics'")
     }
 
   /** Child entry names (not paths) of a directory; empty when absent. */

@@ -428,13 +428,13 @@ private[graft] object IndexMeta {
   * re-list at execution, so an `index_append` firing before the result is
   * consumed would otherwise let a batch match itself. */
 private[graft] object IndexSnapshot {
-  /** Active corpus directory of the index at `root`. Classic layout: the
-    * `corpus` dir. Generation-pointer layout (what `index.compact` commits
-    * on stores WITHOUT atomic rename — see DESIGN_NOTES "Object-store
-    * commit semantics"): `corpus.ptr` names the live `corpus-NNNNNN`
-    * generation, and this resolver is the ONE place every reader, append,
-    * and maintenance verb goes through, so the pointer commit (a single
-    * small-file PUT, atomic everywhere) switches all of them at once. */
+  /** Active corpus directory of the index at `root`. A never-compacted
+    * index (what `index.build` writes): the `corpus` dir. A compacted one:
+    * `corpus.ptr` names the live `corpus-NNNNNN` generation (see
+    * DESIGN_NOTES "Object-store commit semantics"). This resolver is the
+    * ONE place every reader, append, and maintenance verb goes through, so
+    * `index.compact`'s pointer commit (a single small-file PUT, atomic
+    * everywhere) switches all of them at once. */
   def corpusDir(root: String): String = {
     val ptr = s"$root/corpus.ptr"
     if (GraftFs.isFile(ptr)) {
@@ -468,22 +468,14 @@ private[graft] object IndexSnapshot {
     * for its whole lifetime, so no per-batch claim here. */
   def append(df: DataFrame, corpusDir: String, streamTag: Option[String],
       partitionBy: Seq[String] = Nil): Unit = {
-    // appending into the missing-corpus window of a crashed compact would
-    // fork a fresh corpus that the repair would then discard — repair
-    // first, INSIDE the lease for the batch path (an unleased repairer
-    // racing a live swap-mode compact's two-rename window would "repair"
-    // a protocol mid-flight); the streaming path runs under its query's
-    // lease already
-    val parent = GraftFs.path(corpusDir).getParent
     streamTag match {
       case None =>
+        val parent = GraftFs.path(corpusDir).getParent
         val root = if (parent != null) parent.toString else corpusDir
         graft.streaming.IngestLease.withBatchLease(root, "index_append") {
-          if (parent != null) IndexMaintenance.recoverSwap(parent.toString)
           write(df, corpusDir, "append", partitionBy)
         }
       case Some(tag) =>
-        if (parent != null) IndexMaintenance.recoverSwap(parent.toString)
         if (partitionBy.isEmpty) write(df, s"$corpusDir/$tag", "overwrite")
         else write(df, corpusDir, "overwrite", partitionBy, dynamic = true)
     }
@@ -540,12 +532,7 @@ private[graft] object IndexSnapshot {
     * per-directory walk), so fragmentation stats come for free. */
   def filesWithLen(dir: String, missingMsg: String,
       excludeDir: Option[String] = None): Vector[(String, Long)] = {
-    val p = GraftFs.path(dir)
-    // a previous index.compact may have died mid-swap — repair before
-    // listing, so no reader observes a missing/partial corpus generation
-    if (p.getName == "corpus" && p.getParent != null)
-      IndexMaintenance.recoverSwap(p.getParent.toString)
-    if (!GraftFs.isDir(dir)) throw new GraftPlanError(missingMsg)
+    if (!GraftFs.isDir(dir)) throw new GraftPlanError(missingMsg + heldAside(dir))
     GraftFs.listFilesRec(dir).filter { case (f, _) =>
       val name = f.substring(f.lastIndexOf('/') + 1)
       name.startsWith("part-") && name.endsWith(".parquet") &&
@@ -556,6 +543,18 @@ private[graft] object IndexSnapshot {
         s.startsWith("_") || s.startsWith(".") || excludeDir.contains(s)
       }
     }
+  }
+
+  /** A compact of the retired rename-swap protocol that crashed mid-swap
+    * left the classic corpus missing and its complete generations held
+    * aside as `corpus.compact.old` (the pre-compact corpus) and
+    * `corpus.compact.tmp`; nothing repairs that any more, so the
+    * missing-corpus error names them and the rename that restores the
+    * index. Runs on the error path only. */
+  private def heldAside(dir: String): String = {
+    val held = Seq("old", "tmp").map(s => s"$dir.compact.$s").filter(GraftFs.isDir)
+    held.headOption.fold("")(h => s" — an interrupted compact left ${held.mkString(" and ")}; " +
+      s"rename $h to $dir to restore the index (the next index.compact collects the rest)")
   }
 
   /** ADVISORY row-count estimate from a BOUNDED footer sample: read at

@@ -170,10 +170,10 @@ private[graft] object IndexCatalog {
       e.hint.getOrElse(s"use an index built with index.build type=${e.types}")))
 
   /** Open the index at `path` for `op`, as one of the kinds `e` accepts:
-    * the explain placeholder, `recoverSwap`, the listing-cached meta read,
-    * detection, the missing-index and wrong-kind errors, and the check that
-    * no explicit config value contradicts a recorded parameter (mixed
-    * parameters would silently miss every cross match). */
+    * the explain placeholder, the listing-cached meta read, detection, the
+    * missing-index and wrong-kind errors, and the check that no explicit
+    * config value contradicts a recorded parameter (mixed parameters
+    * would silently miss every cross match). */
   def open[K <: IndexKind](ctx: StageContext, op: String, path: String, e: Expected[K]): Opened[K] = {
     val cfg = ctx.cfg
     kindAt(ctx.spark, op, path) match {
@@ -185,7 +185,6 @@ private[graft] object IndexCatalog {
           s"$op: no index at $path — run index.build type=${e.types} first")
       }
       case Some((found, meta)) =>
-        IndexMaintenance.recoverSwap(path) // repair a mid-swap compact crash
         val k = accept(op, path, found, e)
         val p = meta.fold(SigParams(Nil))(k.recorded)
         p.values.foreach { case (q, v) =>
@@ -195,10 +194,10 @@ private[graft] object IndexCatalog {
     }
   }
 
-  /** `index.build`: the one mode check, the writer lease, crash repair and
-    * generation reset, the append precheck (an existing index must be of
-    * the kind being appended; a corpus without meta cannot be checked),
-    * then the kind's build. */
+  /** `index.build`: the one mode check, the writer lease, the generation
+    * reset, the append precheck (an existing index must be of the kind
+    * being appended; a corpus without meta cannot be checked), then the
+    * kind's build. */
   def build(ctx: StageContext): Unit = {
     val cfg = ctx.cfg
     val mode = cfg.strOr("mode", "overwrite")
@@ -218,18 +217,12 @@ private[graft] object IndexCatalog {
     // batch-appender class as the dedup index_append fires (its write
     // must not land inside a concurrent compact's rewrite window).
     // Overwrite is a REBUILD by explicit intent — but rebuilding an index
-    // a live stream is appending to, or whose generational compact is
-    // mid-rewrite, is the same corruption class (resetGenerations would
-    // delete the compact's in-progress generation, and the compact's
-    // later pointer commit would alias the fresh corpus to a deleted
-    // dir) — so it too must fail loud while another writer is live.
+    // a live stream is appending to, or whose compact is mid-rewrite, is
+    // the same corruption class (resetGenerations would delete the
+    // compact's in-progress generation, and the compact's later pointer
+    // commit would alias the fresh corpus to a deleted dir) — so it too
+    // must fail loud while another writer is live.
     graft.streaming.IngestLease.withBatchLease(path, s"index.build mode=$mode") {
-      // a previous index.compact may have died mid-swap: repair before any
-      // meta validation or corpus write (an append into the missing-corpus
-      // window would fork a generation the repair would discard). Inside
-      // the lease — an unleased repairer racing a live swap-mode compact's
-      // two-rename window would "repair" a protocol mid-flight.
-      IndexMaintenance.recoverSwap(path)
       // a rebuild invalidates the recorded compacted generation (index.stats
       // would otherwise count the fresh corpus as zero appends-since-compact)
       // AND any generation-pointer state (the fresh corpus writes to the

@@ -4,86 +4,9 @@ import org.apache.spark.sql.{DataFrame, functions => F}
 import graft.config._
 import graft.core._
 
-/** Shared crash-swap repair for `index.compact`: the swap holds the old
-  * corpus generation aside as `corpus.compact.old` before installing the
-  * compacted `corpus.compact.tmp`, so a crash at any point leaves at least
-  * one complete generation on disk — and every corpus READER runs this
-  * repair first, so no probe ever observes the partial-swap window (the
-  * same contract kafka.consume/stream got for kafka.compact's mid-swap
-  * crashes). Synchronized within one JVM; ACROSS processes (concurrent
-  * readers from separate graft runs are allowed) the repair is idempotent
-  * by retry — a lost directory-move race re-stats and converges on the
-  * winner's completed repair instead of surfacing the move failure.
-  */
-private[graft] object IndexMaintenance {
-  /** Repair a compact that died mid-swap under `<path>/`. Idempotent, two
-    * directory stats in the no-crash common case.
-    *
-    * `cleanTmp` — only index.compact itself passes true: a leftover
-    * `corpus.compact.tmp` with the corpus intact is just a stale artifact
-    * of a crash BEFORE the swap began, but an active compaction's tmp
-    * write looks identical, so readers must leave it alone (the
-    * maintenance contract says compact runs quiesced, but a reader
-    * deleting a writer's half-written tmp turns a contract violation into
-    * data loss).
-    */
-  def recoverSwap(path: String, cleanTmp: Boolean = false): Unit = synchronized {
-    val corpus = s"$path/corpus"
-    val hold = s"$path/corpus.compact.old"
-    val tmp = s"$path/corpus.compact.tmp"
-    // true = this attempt's view converged; false = a rename reported a
-    // lost race (source vanished / destination appeared under us)
-    def repair(): Boolean =
-      if (GraftFs.isDir(hold)) {
-        if (!GraftFs.isDir(corpus)) {
-          // died between hold-aside and install. The tmp write commits
-          // BEFORE the swap starts, so if tmp exists it is the complete new
-          // generation — finish the install; tmp missing (external
-          // tampering) falls back to restoring the held old generation.
-          if (GraftFs.isDir(tmp)) {
-            if (!GraftFs.rename(tmp, corpus)) false
-            else { GraftFs.deleteRec(hold); true }
-          } else GraftFs.rename(hold, corpus)
-        } else {
-          // died after install, before the held generation's delete
-          GraftFs.deleteRec(hold); true
-        }
-      } else if (cleanTmp && GraftFs.isDir(tmp)) {
-        GraftFs.deleteRec(tmp); true
-      } else true
-    // the lock serializes repairs within one JVM, but concurrent READER
-    // processes are allowed (only compact itself must be quiesced), and
-    // after a crashed compact every reader races the same moves — the
-    // loser's rename reports failure (Hadoop FS rename returns false on a
-    // vanished source / appeared destination rather than throwing); the
-    // repair is idempotent over directory states, so re-stat and re-run
-    // until the winner's result is visible. A crashed-compact repair can
-    // only exist where compact ran, and compact's entry point guards
-    // atomic-rename capability — so these moves never run on a
-    // copy-rename object store.
-    var attempts = 0
-    var done = false
-    while (!done) {
-      if (repair()) done = true
-      else {
-        attempts += 1
-        if (attempts >= 5) {
-          // converged iff a complete generation is installed and no held
-          // generation remains — then the race partner finished the job
-          if (GraftFs.isDir(corpus) && !GraftFs.isDir(hold)) done = true
-          else throw new GraftPlanError(
-            s"index maintenance: crash-swap repair at $path did not converge " +
-            s"after $attempts attempts (corpus=${GraftFs.isDir(corpus)}, " +
-            s"held=${GraftFs.isDir(hold)})")
-        } else Thread.sleep(20L * attempts)
-      }
-    }
-  }
-}
-
 /** index.compact — physical compaction of an `index.build` index: rewrite
-  * the corpus into few right-sized files, byte-identical rows, then swap
-  * the new generation in crash-safely. Incremental ingestion GROWS an
+  * the corpus into few right-sized files, byte-identical rows, then commit
+  * the new generation crash-safely. Incremental ingestion GROWS an
   * index one small append at a time — `dedup.* index_append = true` adds a
   * few part files per pipeline run, and `stream.ingest` adds one
   * `corpus/sb-<ckpt>-<batch>/` subdir per micro-batch — so after thousands
@@ -105,15 +28,17 @@ private[graft] object IndexMaintenance {
   * no re-hashing) and `meta/`/`centroids/` are untouched, so probe results
   * are bit-identical before and after — the spec and the
   * index_compact_parity gate pin this. A row-count check between the
-  * snapshot and the written tmp aborts the swap on any mismatch (the swap
-  * deletes the old generation; never trade durability for one count scan).
+  * snapshot and the written generation aborts the commit on any mismatch
+  * (the commit deletes the old generation; never trade durability for one
+  * count scan).
   *
-  * Crash-safe swap, same discipline as kafka.compact: (1) write
-  * `corpus.compact.tmp` fully, (2) rename `corpus` →
-  * `corpus.compact.old`, (3) rename tmp → `corpus`, (4) delete the held
-  * old generation LAST. Every reader (IndexSnapshot + the knn probes) runs
-  * IndexMaintenance.recoverSwap first, so a crash at any point repairs to
-  * a complete generation before any file listing.
+  * Generation-pointer commit, on every store: (1) write the rewrite fully
+  * to a fresh `corpus-NNNNNN` dir, (2) record it in `compact.gen`, (3)
+  * replace `corpus.ptr` with its name — THE commit, one small-file write,
+  * atomic everywhere — (4) delete the old generation. Every reader
+  * resolves the active corpus through IndexSnapshot.corpusDir, so a crash
+  * before (3) leaves the old generation active and one after it the new;
+  * the next compact collects every `corpus*` dir the pointer does not name.
   *
   * Maintenance contract (same single-writer rule as the kafka log and
   * index_append): run compact QUIESCED — no concurrent appender, probe, or
@@ -156,61 +81,37 @@ object IndexCompactOp extends Stage {
     val path = cfg.str("path")
     val targetMb = cfg.longOr("target_file_mb", 128L)
     if (targetMb < 1) throw new GraftConfigError("index.compact: target_file_mb must be >= 1")
+    if (cfg.has("layout")) throw new GraftConfigError(
+      "index.compact: layout is no longer an option — every compact commits through " +
+      "corpus.ptr (a corpus-NNNNNN generation named by one pointer write); drop the key")
     val spark = ctx.spark
 
     // THE WHOLE VERB runs under the shared batch/maintenance lease —
-    // including the mode decision, crash repair, generation GC, and the
-    // snapshot listing, not just the rewrite: a batch index_append landing
-    // between an unleased listing and a leased rewrite would be invisible
-    // to the snapshot and deleted by the swap (the silent-miss class the
-    // lease exists for), and the generational GC must never see — or
-    // collect — another compact's in-progress generation. A live
-    // stream.ingest holding the index fails this claim loud: the
-    // quiesced contract, enforced.
+    // including the generation GC and the snapshot listing, not just the
+    // rewrite: a batch index_append landing between an unleased listing
+    // and a leased rewrite would be invisible to the snapshot and deleted
+    // by the commit (the silent-miss class the lease exists for), and the
+    // GC must never see — or collect — another compact's in-progress
+    // generation. A live stream.ingest holding the index fails this claim
+    // loud: the quiesced contract, enforced.
     graft.streaming.IngestLease.withBatchLease(path, "index.compact") {
-
-    // COMMIT MODE. "swap" (the classic protocol) installs the rewritten
-    // corpus by two directory renames and is only sound where rename is an
-    // atomic metadata op; "generations" writes the rewrite to a fresh
-    // `corpus-NNNNNN` dir and commits by REPLACING the `corpus.ptr`
-    // pointer file — a single small-file PUT, atomic on every store — so
-    // index.compact works on S3-class stores too (see DESIGN_NOTES
-    // "Object-store commit semantics"). auto = generations when the store
-    // lacks atomic rename OR the index is already generational; swap
-    // otherwise (keeps the measured local behavior and its crash-repair
-    // machinery byte-identical).
-    val corpusDir0 = IndexSnapshot.corpusDir(path)
-    val generational = cfg.strOr("layout", "auto") match {
-      case "swap" =>
-        GraftFs.requireAtomicRename(path, "index.compact layout=swap")
-        if (corpusDir0 != s"$path/corpus") throw new GraftConfigError(
-          s"index.compact: the index at $path is generation-pointer committed " +
-          "(corpus.ptr present) — layout=swap cannot apply; use layout=generations or auto")
-        false
-      case "generations" => true
-      case "auto" => corpusDir0 != s"$path/corpus" || !GraftFs.renameIsAtomic(path)
-      case other => throw new GraftConfigError(
-        s"index.compact: layout must be swap|generations|auto, got '$other'")
-    }
-    if (!generational) {
-      IndexMaintenance.recoverSwap(path, cleanTmp = true)
-    } else {
-      // quiesced-maintenance contract ⇒ any corpus-* dir the pointer does
-      // not reference is a crashed rewrite's garbage — collect it now
-      val active = GraftFs.path(corpusDir0).getName
-      GraftFs.listDirNames(path)
-        .filter(g => g.startsWith("corpus-") && g != active)
-        .foreach(g => GraftFs.deleteRec(s"$path/$g"))
-    }
 
     // the index kind (= corpus layout) from its own metadata
     val kind = IndexCatalog.open(ctx, "index.compact", path, IndexCatalog.Any).kind
     val partitionCols = kind.partitionCols
 
-    val corpusDir = corpusDir0
+    val corpusDir = IndexSnapshot.corpusDir(path)
     val filesLen = IndexSnapshot.filesWithLen(corpusDir,
       s"index.compact: index at $path has no corpus directory")
     val files = filesLen.map(_._1)
+    // the active generation is present, so (quiesced-maintenance
+    // contract) every other corpus* dir is garbage: a crashed rewrite's
+    // generation, the classic corpus/ a crash between the pointer commit
+    // and its delete left behind, or a legacy swap's .old/.tmp dirs
+    val active = GraftFs.path(corpusDir).getName
+    GraftFs.listDirNames(path)
+      .filter(g => g.startsWith("corpus") && g != active)
+      .foreach(g => GraftFs.deleteRec(s"$path/$g"))
     if (files.nonEmpty) { // empty index — nothing to rewrite
 
     // a stream.ingest query crashed mid-batch may hold an UNCOMMITTED
@@ -303,78 +204,57 @@ object IndexCompactOp extends Stage {
     val corpus = if (partitionCols.contains("ingest_tag"))
       corpus0.withColumn("ingest_tag", F.lit("base")) else corpus0
 
-    // generations mode writes the rewrite STRAIGHT to the next
-    // generation dir (a crash leaves an unreferenced dir the next compact
-    // garbage-collects — never a partial active corpus); swap mode stages
-    // it in the .tmp dir the repair protocol knows
-    val tmp =
-      if (!generational) s"$path/corpus.compact.tmp"
-      else {
-        val next = 1L + GraftFs.listDirNames(path)
-          .filter(_.startsWith("corpus-"))
-          .flatMap(_.stripPrefix("corpus-").toLongOption)
-          .foldLeft(0L)(math.max)
-        f"$path/corpus-$next%06d"
-      }
+    // the rewrite goes STRAIGHT to the next generation dir (a crash leaves
+    // an unreferenced dir the next compact garbage-collects — never a
+    // partial active corpus)
+    val next = 1L + GraftFs.listDirNames(path)
+      .filter(_.startsWith("corpus-"))
+      .flatMap(_.stripPrefix("corpus-").toLongOption)
+      .foldLeft(0L)(math.max)
+    val genName = f"corpus-$next%06d"
+    val gen = s"$path/$genName"
     if (partitionCols.nonEmpty)
       corpus.repartition(partitionCols.map(F.col): _*)
-        .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(tmp)
+        .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(gen)
     else {
       val targetBytes = targetMb * 1024L * 1024L
       val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-      corpus.repartition(nOut).write.mode("overwrite").parquet(tmp)
+      corpus.repartition(nOut).write.mode("overwrite").parquet(gen)
     }
 
-    // refuse to install a generation that lost (or invented) rows: the
-    // swap deletes the old corpus, so this is the last cheap moment to
+    // refuse to commit a generation that lost (or invented) rows: the
+    // commit deletes the old corpus, so this is the last cheap moment to
     // notice a rewrite bug before it becomes data loss
     val before = corpus.count()
-    val after = spark.read.parquet(tmp).count()
+    val after = spark.read.parquet(gen).count()
     if (before != after) {
-      GraftFs.deleteRec(tmp)
+      GraftFs.deleteRec(gen)
       throw new GraftPlanError(
         s"index.compact: rewrite row count mismatch at $path ($before before, $after " +
         "after) — compacted generation discarded, index left untouched")
     }
 
     // record the compacted generation's file list (for index.stats'
-    // appends_since_compact) BEFORE the commit, from the new generation's
-    // listing — in swap mode the relative part-file names are identical
-    // post-install, and writing it here means a crash between the commit
-    // and this write can't leave stats over-reporting the whole corpus as
-    // fresh appends. A crash between this write and the commit leaves
-    // compact.gen naming a discarded generation — stats then over-report
-    // (reads as "never compacted"), which only triggers an early
-    // re-compact, never skips one.
-    val tmpFiles = IndexSnapshot.files(tmp, s"index.compact: $tmp vanished")
-    val rel = tmpFiles.map(f => GraftFs.relativize(tmp, f))
+    // appends_since_compact) BEFORE the commit, so a crash between the
+    // commit and this write can't leave stats over-reporting the whole
+    // corpus as fresh appends. A crash between this write and the commit
+    // leaves compact.gen naming a discarded generation — stats then
+    // over-report (reads as "never compacted"), which only triggers an
+    // early re-compact, never skips one.
+    val genFiles = IndexSnapshot.files(gen, s"index.compact: $gen vanished")
+    val rel = genFiles.map(f => GraftFs.relativize(gen, f))
     GraftFs.writeStringCommit(s"$path/compact.gen", rel.mkString("\n"))
 
-    if (!generational) {
-      val hold = s"$path/corpus.compact.old"
-      if (!GraftFs.rename(corpusDir, hold))
-        throw new GraftPlanError(
-          s"index.compact: could not hold the corpus generation aside at $path — " +
-          "another maintenance process is racing this compact (compact must run quiesced)")
-      if (!GraftFs.rename(tmp, corpusDir))
-        // recoverable: the next corpus reader's recoverSwap installs tmp
-        throw new GraftPlanError(
-          s"index.compact: install rename lost a race at $path — the next corpus " +
-          "reader repairs the swap; re-run compact quiesced")
-      GraftFs.deleteRec(hold)
-    } else {
-      // THE commit point: replace the pointer (single small-file PUT —
-      // atomic everywhere); every reader resolves through
-      // IndexSnapshot.corpusDir, so the switch is all-or-nothing. The old
-      // generation is garbage after this line — best-effort delete, with
-      // the next compact's GC as the backstop.
-      GraftFs.writeStringCommit(s"$path/corpus.ptr", GraftFs.path(tmp).getName)
-      GraftFs.deleteRec(corpusDir)
-    }
+    // THE commit point: replace the pointer (single small-file PUT —
+    // atomic everywhere); every reader resolves through
+    // IndexSnapshot.corpusDir, so the switch is all-or-nothing. The old
+    // generation is garbage after this line — best-effort delete, with
+    // the next compact's GC as the backstop.
+    GraftFs.writeStringCommit(s"$path/corpus.ptr", genName)
+    GraftFs.deleteRec(corpusDir)
 
     System.err.println(s"[graft] index.compact: $path — ${files.size} files " +
-      s"(${bytes / 1048576} MiB) → ${tmpFiles.size} files" +
-      (if (generational) s" [generation ${GraftFs.path(tmp).getName}]" else ""))
+      s"(${bytes / 1048576} MiB) → ${genFiles.size} files [generation $genName]")
 
     } // !policySkipped
     } // files.nonEmpty
@@ -516,8 +396,8 @@ private[operators] object IndexRetrain {
   *
   * `rows` is a parquet-metadata count over the corpus snapshot (footers
   * only — no data scan); everything else is directory listing. Safe to
-  * run any time (repairs a crashed compact swap first, like every other
-  * corpus reader); wire `files` / `mean_file_kb` into a maintenance
+  * run any time (it reads the generation corpus.ptr names, like every
+  * other corpus reader); wire `files` / `mean_file_kb` into a maintenance
   * pipeline's filter to trigger `index.compact` conditionally.
   *
   * MATERIALIZATION SEMANTICS: a plain transform — the stats frame IS the
@@ -568,7 +448,7 @@ object IndexStatsOp extends Stage {
     // its generation's file list in compact.gen) — the direct "appends
     // since last compact" trigger signal; never compacted → every file.
     // Self-healing heuristic: a compact crashed between its gen-write and
-    // its swap leaves gen naming a discarded generation, which reads here
+    // its pointer commit leaves gen naming a discarded generation, which reads here
     // as "everything is a fresh append" — an early re-compact, never a
     // skipped one.
     val gen = s"$path/compact.gen"

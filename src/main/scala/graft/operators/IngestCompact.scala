@@ -5,7 +5,7 @@ import graft.config._
 import graft.core._
 
 /** Crash-swap repair for `ingest.compact` (the OUTPUT-side sibling of
-  * IndexMaintenance): the compaction protocol commits through a manifest —
+  * `index.compact`): the compaction protocol commits through a manifest —
   * (1) write the complete folded generation under `_ingest_compact_tmp/`
   * (invisible to readers: `_` prefix), (2) write
   * `_ingest_compact_manifest.json` naming every source partition dir (THE
@@ -25,9 +25,8 @@ private[graft] object IngestMaintenance {
     // stream.ingest start racing a crashed compact's repair from another
     // graft run) the repair is idempotent over directory states — a lost
     // rename race (Hadoop FS rename returns false rather than throwing)
-    // re-stats and re-runs until the winner's result is visible, the same
-    // contract IndexMaintenance.recoverSwap got in r6. These dir moves
-    // only exist where ingest.compact ran, whose entry point guards
+    // re-stats and re-runs until the winner's result is visible. These dir
+    // moves only exist where ingest.compact ran, whose entry point guards
     // atomic-rename capability, so they never run on a copy-rename store.
     var attempts = 0
     var done = false

@@ -359,16 +359,15 @@ object ExtensionQueries {
       d1.unionByName(d2)
     },
 
-    // ---- index.compact layout=generations (r8 — the object-store commit
-    // path): build an exact-key index in two halves, compact it TWICE
-    // through the generation-pointer commit (with an index_append between,
-    // so the second generation folds appended files), then probe a batch
-    // of known duplicates + novel rows. Deterministic by construction:
-    // batch texts are distinct (per-text MIN doc_id base) and keep=first
-    // over doc_id pins any residual tie; the oracle is plain key
-    // membership against the whole corpus. Hash-green means the pointer
-    // layout is probe-equivalent to the classic dir under the driver's
-    // own gate, not just in ScalaTest. ----
+    // ---- index.compact's generation-pointer commit (r8): build an
+    // exact-key index in two halves, compact it TWICE (with an
+    // index_append between, so the second generation folds appended
+    // files), then probe a batch of known duplicates + novel rows.
+    // Deterministic by construction: batch texts are distinct (per-text
+    // MIN doc_id base) and keep=first over doc_id pins any residual tie;
+    // the oracle is plain key membership against the whole corpus.
+    // Hash-green means the pointer layout is probe-equivalent to the
+    // classic dir under the driver's own gate, not just in ScalaTest. ----
     QueryDef("index_compact_generations",
       """WITH base AS (SELECT text, MIN(doc_id) AS src_id FROM documents
         |  WHERE doc_id < 200 GROUP BY text),
@@ -386,8 +385,7 @@ object ExtensionQueries {
         Cfg.of(exCfg: _*)))
       IndexBuildOp(StageContext.one(s, docs.filter(F.col("doc_id") % 2 =!= 0),
         Cfg.of((exCfg :+ ("mode" -> "append")): _*)))
-      IndexCompactOp(StageContext.one(s, docs,
-        Cfg.of("path" -> idx, "layout" -> "generations")))
+      IndexCompactOp(StageContext.one(s, docs, Cfg.of("path" -> idx)))
       // grow the FIRST generation via the resolver, then fold it into a
       // second generation — appends must follow the pointer for this to
       // hash-match (keys 'qq-extra-*' never collide with batch texts)
@@ -396,8 +394,7 @@ object ExtensionQueries {
         (0 until 5).map(i => (90000L + i, s"qq-extra-$i")).toDF("doc_id", "text"),
         Cfg.of("columns" -> Seq("text"), "index_path" -> idx,
           "index_append" -> true))).count()
-      IndexCompactOp(StageContext.one(s, docs,
-        Cfg.of("path" -> idx, "layout" -> "generations")))
+      IndexCompactOp(StageContext.one(s, docs, Cfg.of("path" -> idx)))
       val base = docs.filter(F.col("doc_id") < 200)
         .groupBy("text").agg(F.min("doc_id").as("src_id"))
       val batch = base.select((F.col("src_id") + 50000).as("doc_id"), F.col("text"))

@@ -804,10 +804,9 @@ object StreamIngestSink extends Stage {
     ctx.deferToCleanup(() => releaseAll())
     if (!cfg.boolOr("_defer_await", false)) {
       try {
-        (cfg.longOpt("timeout_ms"), cfg.strOpt("trigger")) match {
-          case (Some(ms), _) => q.awaitTermination(ms); q.stop()
-          case (None, Some("available_now")) => q.awaitTermination()
-          case (None, _) => q.awaitTermination()
+        cfg.longOpt("timeout_ms") match {
+          case Some(ms) => q.awaitTermination(ms); q.stop()
+          case None     => q.awaitTermination()
         }
       } finally releaseAll()
     }

@@ -117,7 +117,7 @@ object StreamWriteSink extends Stage {
     var w = df.writeStream
       .outputMode(cfg.strOr("output_mode", "append"))
       .queryName(cfg.strOr("query_name", s"graft_${ctx.stageId}"))
-    cfg.strOpt("trigger_ms").foreach(ms => w = w.trigger(Trigger.ProcessingTime(ms.toLong)))
+    cfg.longOpt("trigger_ms").foreach(ms => w = w.trigger(Trigger.ProcessingTime(ms)))
     cfg.strOpt("checkpoint").foreach(p => w = w.option("checkpointLocation", p))
     val q = cfg.strOr("format", "console") match {
       case "console" => w.format("console")

@@ -7,14 +7,11 @@ import graft.core.StageContext
 import graft.operators.{DedupMinHashOp, IndexBuildOp, IndexCompactOp, IndexSnapshot,
   IndexStatsOp}
 
-/** The generation-pointer commit mode of index.compact (the object-store
-  * path): instead of the rename swap, the rewrite lands in a fresh
-  * `corpus-NNNNNN` dir and commits by replacing `corpus.ptr` — a single
-  * small-file write, atomic on stores without atomic rename. Every
-  * reader/append resolves the active corpus through
-  * IndexSnapshot.corpusDir, so the pointer switch is all-or-nothing.
-  * Forced locally via layout=generations (auto picks it on object-store
-  * schemes). */
+/** The generation-pointer commit of index.compact, on every store: the
+  * rewrite lands in a fresh `corpus-NNNNNN` dir and commits by replacing
+  * `corpus.ptr` — a single small-file write, atomic even on stores without
+  * atomic rename. Every reader/append resolves the active corpus through
+  * IndexSnapshot.corpusDir, so the pointer switch is all-or-nothing. */
 class GenerationLayoutSpec extends SparkSpec {
   import spark.implicits._
 
@@ -53,8 +50,7 @@ class GenerationLayoutSpec extends SparkSpec {
     val before = probe(idx, batch)
     assert(before === Seq(202L))
 
-    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of(
-      "path" -> idx, "layout" -> "generations")))
+    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
     assert(GraftFs.readString(s"$idx/corpus.ptr").trim === "corpus-000001")
     assert(!GraftFs.isDir(s"$idx/corpus"), "old classic dir is garbage after the commit")
     assert(IndexSnapshot.corpusDir(idx).endsWith("corpus-000001"))
@@ -71,23 +67,21 @@ class GenerationLayoutSpec extends SparkSpec {
       (300L, "third append after the generational compact lands correctly"),
       (301L, "still newer text appearing nowhere in the corpus at all"))) === Seq(301L))
 
-    // second generational compact: gen increments, pointer flips, old gen GC'd
-    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of(
-      "path" -> idx, "layout" -> "generations")))
+    // second compact: gen increments, pointer flips, old gen GC'd
+    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
     assert(GraftFs.readString(s"$idx/corpus.ptr").trim === "corpus-000002")
     assert(!GraftFs.isDir(s"$idx/corpus-000001"))
     assert(probe(idx, batch) === before)
 
-    // auto mode on an already-generational index stays generational even
-    // on the (rename-atomic) local store
+    // and again
     append(idx, 103L, "a fourth appended line of text to fragment the corpus again")
     IndexCompactOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
     assert(GraftFs.readString(s"$idx/corpus.ptr").trim === "corpus-000003")
 
-    // layout=swap cannot apply to a generational index — loud
+    // the retired layout option is rejected, not silently ignored
     val e = intercept[GraftConfigError](IndexCompactOp(StageContext.one(spark, corpus,
       Cfg.of("path" -> idx, "layout" -> "swap"))))
-    assert(e.getMessage.contains("generation-pointer"))
+    assert(e.getMessage.contains("corpus.ptr"))
   }
 
   test("generational compact preserves partitioned layouts: bands probe + ivf pruning") {
@@ -114,8 +108,7 @@ class GenerationLayoutSpec extends SparkSpec {
         .select("vec_id").as[Long].collect().sorted.toSeq
     val before = bandsProbe()
     assert(before === Seq(101L), "copy of vec 3 drops, novel survives")
-    IndexCompactOp(StageContext.one(spark, vecs, Cfg.of(
-      "path" -> bidx, "layout" -> "generations")))
+    IndexCompactOp(StageContext.one(spark, vecs, Cfg.of("path" -> bidx)))
     assert(GraftFs.isFile(s"$bidx/corpus.ptr"))
     assert(bandsProbe() === before, "banded partition join identical under the generation dir")
     val lshTop = KnnLshOp(StageContext.one(spark, vecs, Cfg.of(
@@ -134,8 +127,7 @@ class GenerationLayoutSpec extends SparkSpec {
         "k" -> 5, "nprobe" -> 4, "index_path" -> iidx)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val ivfBefore = ivfTop()
-    IndexCompactOp(StageContext.one(spark, vecs, Cfg.of(
-      "path" -> iidx, "layout" -> "generations")))
+    IndexCompactOp(StageContext.one(spark, vecs, Cfg.of("path" -> iidx)))
     assert(GraftFs.isFile(s"$iidx/corpus.ptr"))
     assert(ivfTop() === ivfBefore, "ivf probe identical under the generation dir")
   }
@@ -144,8 +136,7 @@ class GenerationLayoutSpec extends SparkSpec {
     val idx = java.nio.file.Files.createTempDirectory("genlay_gc").toString
     build(idx)
     append(idx, 100L, "fragmenting append so the compact has work to fold here")
-    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of(
-      "path" -> idx, "layout" -> "generations")))
+    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
     // a rewrite that crashed before its pointer commit leaves an
     // unreferenced generation dir — the next compact collects it and
     // still numbers past it correctly? No: GC removes it first, so
@@ -167,5 +158,34 @@ class GenerationLayoutSpec extends SparkSpec {
       (400L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
       (401L, "fragmenting append so the compact has work to fold here"))) === Seq(401L),
       "rebuilt index holds only the rebuilt corpus — pre-rebuild appends are gone")
+  }
+
+  test("a crash between the pointer commit and the old corpus delete") {
+    val idx = java.nio.file.Files.createTempDirectory("genlay_crash").toString
+    build(idx)
+    append(idx, 100L, "fragmenting append so the compact has work to fold here")
+    val batch = Seq(
+      (200L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (201L, "wholly original material never indexed in any generation"))
+    val before = probe(idx, batch)
+    // keep a copy of the classic corpus, compact, then put the copy back:
+    // the state a crash right after the pointer commit leaves
+    val saved = java.nio.file.Files.createTempDirectory("genlay_saved").toString + "/corpus"
+    spark.read.parquet(s"$idx/corpus").write.parquet(saved)
+    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
+    spark.read.parquet(saved).write.parquet(s"$idx/corpus")
+    assert(GraftFs.isDir(s"$idx/corpus") && GraftFs.isFile(s"$idx/corpus.ptr"))
+
+    // readers see the committed generation, not the leftover
+    assert(IndexSnapshot.corpusDir(idx).endsWith("corpus-000001"))
+    assert(probe(idx, batch) === before)
+    val files = IndexStatsOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
+      .select("files").as[Long].head()
+    assert(files === 1L, "stats count the active generation only")
+    // the next compact collects the old classic corpus/
+    IndexCompactOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx)))
+    assert(!GraftFs.isDir(s"$idx/corpus"), "leftover classic corpus/ collected")
+    assert(GraftFs.readString(s"$idx/corpus.ptr").trim === "corpus-000002")
+    assert(probe(idx, batch) === before)
   }
 }

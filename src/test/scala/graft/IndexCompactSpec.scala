@@ -3,13 +3,15 @@ package graft
 import org.apache.spark.sql.{functions => F}
 import graft.config.{Cfg, GraftConfigError}
 import graft.core.{GraftPlanError, StageContext}
+import graft.core.GraftFs
 import graft.operators.{DedupEmbeddingOp, DedupMinHashOp, IndexBuildOp, IndexCompactOp,
-  IndexSnapshot, IndexMaintenance, IndexStatsOp}
+  IndexSnapshot, IndexStatsOp}
 
 /** index.compact: the physical rewrite must be invisible to probes (same
   * survivors, bit-identical semantics), shrink the file count that
-  * incremental appends fragment, and survive a crash at any point of the
-  * swap — readers repair a half-finished swap before listing. */
+  * incremental appends fragment, and commit through `corpus.ptr` on every
+  * store. Indexes an older rename-swap compact left mid-swap fail loud
+  * instead of being repaired behind the reader's back. */
 class IndexCompactSpec extends SparkSpec {
   import spark.implicits._
 
@@ -30,7 +32,7 @@ class IndexCompactSpec extends SparkSpec {
       Cfg.of((Seq[(String, Any)]("path" -> path) ++ extra): _*)))
 
   private def corpusFiles(path: String): Vector[String] =
-    IndexSnapshot.files(s"$path/corpus", "no corpus")
+    IndexSnapshot.files(IndexSnapshot.corpusDir(path), "no corpus")
 
   test("minhash: appends fragment, compact coalesces, probes see identical survivors") {
     val idx = java.nio.file.Files.createTempDirectory("ic_mh").toString
@@ -75,7 +77,7 @@ class IndexCompactSpec extends SparkSpec {
     assert(after.size < before.size, s"${before.size} files must shrink, got ${after.size}")
     assert(after.size === 1, "gate-scale corpus fits one 128 MiB target file")
     assert(!java.nio.file.Files.isDirectory(
-      java.nio.file.Paths.get(s"$idx/corpus/sb-ff-0")),
+      java.nio.file.Paths.get(s"${IndexSnapshot.corpusDir(idx)}/sb-ff-0")),
       "streaming per-batch dirs fold into the flat generation")
     val rowsAfter = spark.read.parquet(after: _*)
       .select("id").as[Long].collect().sorted.toSeq
@@ -163,43 +165,72 @@ class IndexCompactSpec extends SparkSpec {
     assert(probe() === survivorsBefore, "pruned probe identical across compaction")
   }
 
-  test("crash recovery: every mid-swap state repairs to a complete generation") {
-    import java.nio.file.{Files, Paths}
-    val idx = java.nio.file.Files.createTempDirectory("ic_crash").toString
+  test("a local compact commits through corpus.ptr") {
+    val idx = java.nio.file.Files.createTempDirectory("ic_ptr").toString
     buildMinhash(idx)
     val rows = spark.read.parquet(corpusFiles(idx): _*)
       .select("id").as[Long].collect().sorted.toSeq
-
-    // state 1: died between hold-aside and install (corpus missing,
-    // .old = old gen, .tmp = complete new gen) → install completes
-    val corpusP = Paths.get(s"$idx/corpus")
-    spark.read.parquet(corpusFiles(idx): _*).write.parquet(s"$idx/corpus.compact.tmp")
-    Files.move(corpusP, Paths.get(s"$idx/corpus.compact.old"))
-    val recovered = corpusFiles(idx) // listing repairs first
-    assert(spark.read.parquet(recovered: _*)
-      .select("id").as[Long].collect().sorted.toSeq === rows)
-    assert(!Files.isDirectory(Paths.get(s"$idx/corpus.compact.old")))
-    assert(!Files.isDirectory(Paths.get(s"$idx/corpus.compact.tmp")))
-
-    // state 2: died after install, before the held delete → held gen drops
-    Files.createDirectories(Paths.get(s"$idx/corpus.compact.old"))
-    Files.writeString(Paths.get(s"$idx/corpus.compact.old/stale"), "x")
-    assert(corpusFiles(idx).nonEmpty)
-    assert(!Files.isDirectory(Paths.get(s"$idx/corpus.compact.old")))
-
-    // state 3: died before the swap began (corpus intact, stale .tmp) —
-    // readers must NOT touch the tmp (it is indistinguishable from an
-    // active compaction's half-written output); only compact cleans it
-    Files.createDirectories(Paths.get(s"$idx/corpus.compact.tmp"))
-    Files.writeString(Paths.get(s"$idx/corpus.compact.tmp/stale"), "x")
-    corpusFiles(idx)
-    assert(Files.isDirectory(Paths.get(s"$idx/corpus.compact.tmp")),
-      "a reader leaves tmp alone")
     compact(idx)
-    assert(!Files.isDirectory(Paths.get(s"$idx/corpus.compact.tmp")),
-      "compact itself cleans the stale tmp")
+    assert(GraftFs.readString(s"$idx/corpus.ptr").trim === "corpus-000001")
+    assert(GraftFs.listDirNames(idx).filter(_.startsWith("corpus")) === Vector("corpus-000001"),
+      "no classic corpus/ and no swap staging dirs beside the committed generation")
     assert(spark.read.parquet(corpusFiles(idx): _*)
       .select("id").as[Long].collect().sorted.toSeq === rows)
+    val e = intercept[GraftConfigError](compact(idx, "layout" -> "swap"))
+    assert(e.getMessage.contains("corpus.ptr"))
+  }
+
+  test("legacy mid-swap states: missing corpus fails loud, leftovers collected") {
+    import java.nio.file.{Files, Paths}
+    def ids(files: Seq[String]) =
+      spark.read.parquet(files: _*).select("id").as[Long].collect().sorted.toSeq
+    def probe(idx: String) = DedupMinHashOp(StageContext.one(spark, corpus, Cfg.of(
+      "id_column" -> "doc_id", "text_column" -> "text",
+      "threshold" -> 0.8, "index_path" -> idx))).count()
+    // a complete copy of the corpus under `name`, as the swap staged them
+    def hold(idx: String, name: String): Unit =
+      spark.read.parquet(corpusFiles(idx): _*).write.parquet(s"$idx/$name")
+
+    // died between hold-aside and install: no corpus/, the old generation
+    // held as .old and the new one complete in .tmp. Every reader and
+    // compact fail loud naming both and the restoring rename; nothing is
+    // deleted
+    val idx = Files.createTempDirectory("ic_legacy").toString
+    buildMinhash(idx)
+    val rows = ids(corpusFiles(idx))
+    hold(idx, "corpus.compact.tmp")
+    Files.move(Paths.get(s"$idx/corpus"), Paths.get(s"$idx/corpus.compact.old"))
+    Seq[() => Any](() => corpusFiles(idx), () => probe(idx), () => compact(idx),
+        () => IndexStatsOp(StageContext.one(spark, corpus, Cfg.of("path" -> idx))))
+      .foreach { read =>
+        val m = intercept[GraftPlanError](read()).getMessage
+        assert(m.contains(s"$idx/corpus.compact.old") && m.contains(s"$idx/corpus.compact.tmp"), m)
+        assert(m.contains(s"rename $idx/corpus.compact.old to $idx/corpus"), m)
+      }
+    assert(Files.isDirectory(Paths.get(s"$idx/corpus.compact.old")))
+    assert(Files.isDirectory(Paths.get(s"$idx/corpus.compact.tmp")))
+    // the named rename restores the index; the next compact collects .tmp
+    Files.move(Paths.get(s"$idx/corpus.compact.old"), Paths.get(s"$idx/corpus"))
+    assert(ids(corpusFiles(idx)) === rows)
+    compact(idx)
+    assert(!Files.isDirectory(Paths.get(s"$idx/corpus.compact.tmp")))
+    assert(ids(corpusFiles(idx)) === rows)
+
+    // died after install (held .old left) or before the swap began (stale
+    // .tmp left), beside an intact corpus: readers work and leave the dirs
+    // alone; compact collects them
+    for (left <- Seq(Seq("corpus.compact.old"), Seq("corpus.compact.tmp"),
+        Seq("corpus.compact.old", "corpus.compact.tmp"))) {
+      val idx = Files.createTempDirectory("ic_legacy").toString
+      buildMinhash(idx)
+      left.foreach(hold(idx, _))
+      assert(ids(corpusFiles(idx)) === rows, left)
+      assert(probe(idx) === 0L, left)
+      assert(left.forall(d => Files.isDirectory(Paths.get(s"$idx/$d"))), left)
+      compact(idx)
+      assert(left.forall(d => !Files.isDirectory(Paths.get(s"$idx/$d"))), left)
+      assert(ids(corpusFiles(idx)) === rows, left)
+    }
   }
 
   test("ivf: append fragments cells, compact coalesces, knn probe identical") {
@@ -230,7 +261,7 @@ class IndexCompactSpec extends SparkSpec {
     assert(corpusFiles(idx).size < filesBefore, "compaction must reduce file count")
     assert(probe() === before, "ivf probe identical across compaction")
     // layout survived: cell dirs still prune (partition columns intact)
-    assert(spark.read.parquet(s"$idx/corpus").columns.contains("cell"))
+    assert(spark.read.parquet(IndexSnapshot.corpusDir(idx)).columns.contains("cell"))
   }
 
   test("index.stats reports fragmentation before/after compact") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.config.Cfg
+import graft.config.{Cfg, GraftConfigError}
 import graft.core.{GraftFs, GraftPlanError, StageContext}
 import graft.operators.{DedupExactOp, IndexBuildOp, IndexCompactOp, IndexStatsOp,
   IngestCompactOp, KafkaCompactOp, KafkaProduceSink}
@@ -90,15 +90,13 @@ class ObjectStoreSpec extends SparkSpec {
       Cfg.of("columns" -> Seq("text"), "index_path" -> idx, "index_append" -> true)))
       .select("doc_id").as[Long].collect().sorted.toSeq
     assert(s1 === Seq(11L))
-    // layout=swap is refused loud — its two directory renames cannot
-    // commit on a copy-rename store
-    val eSwap = intercept[GraftPlanError](IndexCompactOp(StageContext.one(spark, docs,
+    // the retired layout option is rejected, not silently ignored
+    val eLayout = intercept[GraftConfigError](IndexCompactOp(StageContext.one(spark, docs,
       Cfg.of("path" -> idx, "layout" -> "swap"))))
-    assert(eSwap.getMessage.contains("mocks3"))
-    assert(eSwap.getMessage.contains("atomic"))
-    // layout=auto on the mock store picks the generation-pointer commit
+    assert(eLayout.getMessage.contains("corpus.ptr"))
+    // compact commits through the pointer file, which needs no atomic rename
     IndexCompactOp(StageContext.one(spark, docs, Cfg.of("path" -> idx)))
-    assert(GraftFs.isFile(s"$idx/corpus.ptr"), "auto picked the pointer-file commit")
+    assert(GraftFs.isFile(s"$idx/corpus.ptr"), "committed through the pointer file")
     val gen = GraftFs.readString(s"$idx/corpus.ptr").trim
     assert(gen.startsWith("corpus-"))
     assert(GraftFs.isDir(s"$idx/$gen"), "pointer names an installed generation")

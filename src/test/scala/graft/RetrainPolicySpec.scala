@@ -153,11 +153,10 @@ class RetrainPolicySpec extends SparkSpec {
   }
 
   test("retrain on a generation-pointer index: stages from the live generation, resets to classic") {
-    // a pointer-committed corpus (what index.compact layout=generations
-    // leaves on object-store-class roots) must retrain from the LIVE
-    // generation, and the rebuild — mode=overwrite semantics — drops the
-    // pointer state and writes the classic corpus dir, exactly like a
-    // manual rebuild would
+    // a pointer-committed corpus (what every index.compact leaves) must
+    // retrain from the LIVE generation, and the rebuild — mode=overwrite
+    // semantics — drops the pointer state and writes the classic corpus
+    // dir, exactly like a manual rebuild would
     val path = tmp("rt_gen") + "/idx"
     IndexBuildOp(StageContext.one(spark, domain(0, 0), Cfg.of(
       "type" -> "ivf", "path" -> path, "vector_column" -> "embedding",
@@ -169,7 +168,7 @@ class RetrainPolicySpec extends SparkSpec {
     }
     // pointer-commit the fragmented corpus, then verify the layout took
     IndexCompactOp(StageContext.one(spark, Seq((1L, "x")).toDF("a", "b"),
-      Cfg.of("path" -> path, "layout" -> "generations")))
+      Cfg.of("path" -> path)))
     assert(graft.core.GraftFs.isFile(s"$path/corpus.ptr"), "precondition: pointer layout")
     val before = recallAt(path, nprobe = 1)
     assert(before < 0.85, f"drifted fixture survives the generational rewrite: $before%.3f")

@@ -946,6 +946,21 @@ class StreamingSpec extends SparkSpec {
     assert(free.isNullAt(0), "stats report a free index as lease_holder = null")
   }
 
+  test("stream.write reads trigger_ms as an integer, like stream.ingest") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_trigger").toString
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$dir/a.json"),
+      "{\"id\": 1, \"v\": 10}\n{\"id\": 2, \"v\": 20}\n")
+    val src = FileStreamSource(StageContext(spark, Seq.empty, Cfg.of(
+      "path" -> dir, "format" -> "jsonl"), "src"))
+    StreamWriteSink(StageContext.one(spark, src, Cfg.of("format" -> "memory",
+      "query_name" -> "trigger_out", "trigger_ms" -> 50L, "_defer_await" -> true)))
+    val q = spark.streams.active.find(_.name == "trigger_out").get
+    try {
+      q.processAllAvailable()
+      assert(spark.sql("SELECT count(*) FROM trigger_out").head().getLong(0) === 2L)
+    } finally q.stop()
+  }
+
   test("stream.write rejects batch input; gap connectors raise actionable errors") {
     intercept[GraftPlanError](StreamWriteSink(StageContext.one(spark, salesDf, Cfg.empty)))
     val e = intercept[GraftPlanError](graft.operators.KafkaConsumeSource(

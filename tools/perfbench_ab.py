@@ -45,9 +45,14 @@ REPO = pathlib.Path(__file__).resolve().parent.parent
 def export(rev, dest):
     dest.mkdir(parents=True)
     if rev == ".":
-        files = subprocess.run(
-            ["git", "ls-files", "-z", "--cached", "--others", "--exclude-standard"],
-            cwd=REPO, check=True, capture_output=True).stdout
+        def ls(*flags):
+            return subprocess.run(["git", "ls-files", "-z", *flags], cwd=REPO, check=True,
+                                  capture_output=True).stdout.split(b"\0")
+        # a path deleted from the working tree but not from the index is
+        # still --cached; tar would abort on it with "Cannot stat"
+        deleted = set(ls("--deleted"))
+        files = b"\0".join(f for f in ls("--cached", "--others", "--exclude-standard")
+                           if f not in deleted)
         tar = subprocess.run(["tar", "-c", "--null", "-T", "-", "-f", "-"], cwd=REPO,
                              input=files, check=True, capture_output=True).stdout
     else:
